@@ -1,6 +1,92 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** One timed run of a query: elapsed seconds, and whether it completed. */
+  private[graft] final case class Run(sec: Double, ok: Boolean)
+
+  /** Time `body`. A throw is reported on stderr and recorded as a failed
+    * run, never as a timing. */
+  private[graft] def timeRun(name: String)(body: => Unit): Run = {
+    val t0 = System.nanoTime()
+    val ok = try { body; true } catch {
+      case t: Throwable =>
+        System.err.println(s"GRAFT_BENCH_FAIL $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
+        false
+    }
+    Run((System.nanoTime() - t0) / 1e9, ok)
+  }
+
+  /** What the passes measured. A query with any failed run is listed in
+    * `failed` and left out of `results` (and so of the total, the tier
+    * subtotals and the recheck); `results` holds the recorded time of
+    * every query whose runs all completed. */
+  private[graft] final case class Measured(raw: Seq[(String, (Run, Run))],
+      recheck: Map[String, Run], results: Map[String, Double],
+      failed: Seq[String]) {
+    def total: Double = results.values.sum
+    def tiers: Seq[(String, Double)] = {
+      val tierOf = Registry.tierOf
+      results.toSeq.groupBy { case (n, _) => tierOf.getOrElse(n, "other") }
+        .map { case (t, xs) => t -> xs.map(_._2).sum }.toSeq.sortBy(_._1)
+    }
+  }
+
+  /** The measurement protocol (since round 8): each query runs TWICE and
+    * the recorded time is the MIN of the pair. A single-shot run conflates
+    * the plan's cost with box noise (GC pauses, page-cache state, JIT
+    * warmth) — round 7 saw untouched queries drift ±5x between rounds,
+    * exceeding the per-round signal. min-of-2 bounds one-sided noise; the
+    * raw pair is kept in the JSON ("raw") so a reader can audit run-to-run
+    * spread. Pass 1 runs in `names` order (first consumers absorb memoized
+    * builds the same way every round), then pass 2 in the same order, then
+    * the pass-3 recheck of flagged queries against `prior` (baseline
+    * seconds per query). */
+  private[graft] def measure(names: Seq[String], prior: Map[String, Double])(
+      run: String => Run): Measured = {
+    val pass1 = names.map(n => n -> run(n))
+    val pass2 = names.map(n => n -> run(n))
+    val raw = pass1.zip(pass2).map { case ((n, r1), (_, r2)) => n -> (r1, r2) }
+    val minOf2: Map[String, Double] = raw.collect {
+      case (n, (r1, r2)) if r1.ok && r2.ok => n -> math.min(r1.sec, r2.sec)
+    }.toMap
+    // Pass 3 — targeted regression re-check. A shared box under transient
+    // contention (page-cache churn, a concurrent build) inflates BOTH runs
+    // of a min-of-2 pair for whatever queries happen to execute during the
+    // squeeze; round 11 recorded a 13-query "regression" cluster that
+    // re-measured at its round-10 times in isolation. Queries whose
+    // min-of-2 still exceeds 1.5x the durable baseline get ONE more run
+    // each, after the bulk sweep's memory/IO pressure has passed; the
+    // recorded time is the min of all three. A real plan regression
+    // reproduces in pass 3; a contention artifact does not. Cost: one run
+    // per flagged query, not a third full sweep.
+    val ratioFlagged = minOf2.toSeq.collect {
+      case (n, cur) if cur > 0.5 &&
+        prior.get(n).exists(p => p > 0 && cur / p > 1.5) => n
+    }
+    // Cost-aware recheck (round 17): the ratio trigger alone never
+    // rechecks the most expensive queries when a whole run is uniformly
+    // inflated (box-wide contention lifts every ratio below 1.5x while
+    // the absolute seconds at the top of the cost table — the ones that
+    // dominate the round total — are judged by a single contended pair).
+    // The top-5 by min-of-2 cost get the third run unconditionally, so
+    // the round's biggest line items never depend on box luck.
+    val costFlagged = minOf2.toSeq.sortBy(-_._2).take(5).map(_._1)
+    val flagged = (ratioFlagged ++ costFlagged).distinct.sorted
+    val recheck = flagged.map(n => n -> run(n)).toMap
+    val failed = (raw.collect { case (n, (r1, r2)) if !(r1.ok && r2.ok) => n } ++
+      recheck.collect { case (n, r) if !r.ok => n }).distinct.sorted
+    val results = minOf2.collect { case (n, t) if !failed.contains(n) =>
+      n -> recheck.get(n).fold(t)(r => math.min(t, r.sec))
+    }
+    Measured(raw, recheck, results, failed)
+  }
+
+  /** The bench's LAST stdout line. Callers that parse it may keep only the
+    * last 2,000 chars of stdout, so this stays compact (~120 chars); the
+    * full form goes to a file and to stderr. */
+  private[graft] def compactLine(m: Measured, sfDir: String): String =
+    s"""{"metric":"total","value":${m.total},"unit":"sec","n_failed":${m.failed.size},"sf":"$sfDir"}"""
+
   def main(args: Array[String]): Unit = {
     // Box-state telemetry (r17): every round's regression triage starts
     // with "was the box busy?" — r11 chased a phantom 13-query cluster
@@ -13,22 +99,9 @@ object Bench {
         .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = load1m
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle-compression codec knob (r21, guide §2.3 "Compression"):
-    // spark.io.compression.codec is a core conf fixed at context start,
-    // so it is parameterized by env rather than hardcoded. UNSET by
-    // default — the bench then runs Spark's stock lz4 and stays
-    // protocol-comparable with every prior round's numbers; the measured
-    // zstd trade-off on the byte-heavy exchanges is documented in
-    // OPTIMIZATION_r21.md (production guidance, not a local[32] tune).
-    val ioCodec = sys.env.get("SPARK_GRAFT_IO_CODEC")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    ioCodec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Spark's stock lz4 shuffle codec: zstd lost wall time on one box
+    // (OPTIMIZATION_r21.md §5)
+    val spark = GraftSession.buildLocal("graft-bench")
     // Per-query task-metrics attribution (r21, verdict r20 item 8):
     // a cumulative SparkListener whose between-queries deltas localize a
     // regression to the operator class (compute vs shuffle vs spill vs
@@ -121,48 +194,26 @@ object Bench {
           }
       }
     }
-    // Measurement protocol (since round 8): each query runs TWICE and the
-    // recorded time is the MIN of the pair. A single-shot run conflates the
-    // plan's cost with box noise (GC pauses, page-cache state, JIT warmth)
-    // — round 7 saw untouched queries drift ±5x between rounds, exceeding
-    // the per-round signal. min-of-2 bounds one-sided noise; the raw pair
-    // is kept in the JSON ("raw") so a reader can audit run-to-run spread,
-    // and per-tier subtotals ("tiers") attribute drift to a module.
     // per-query task-metric deltas: keep the snapshot pair of the FASTEST
-    // run of each query (the run whose time the JSON records), so the
-    // attribution describes the measured pass, not a contended one
+    // completed run of each query (the run whose time the JSON records),
+    // so the attribution describes the measured pass, not a contended one
     val tmBest = scala.collection.mutable.Map[String, (Double, Seq[Long])]()
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timed(name: String, fn: (SparkSession, String) => DataFrame): Run = {
       spark.sparkContext.setJobDescription(name)
       val s0 = tm.snap
-      val t0 = System.nanoTime()
       // Execute the RETURNED Dataset's own (already-planned) physical plan:
       // Dataset.count() would build a fresh QueryExecution from the logical
       // plan, re-planned under the session's current confs — which would
       // silently discard the CBO-reordered plan q_cbo_star_join froze under
       // its scoped conf block. toRdd reuses the frozen executedPlan and
       // counts on the executors (no driver-side row collection).
-      try { fn(spark, sfDir).queryExecution.toRdd.count() } catch {
-        case t: Throwable =>
-          // a failure still records its elapsed time; make it visible
-          System.err.println(s"GRAFT_BENCH_FAIL $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
-          -1L
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val r = timeRun(name)(fn(spark, sfDir).queryExecution.toRdd.count())
       val delta = tm.snap.zip(s0).map { case (a, b) => a - b }
-      if (!tmBest.get(name).exists(_._1 <= sec)) tmBest(name) = (sec, delta)
-      sec
+      if (r.ok && !tmBest.get(name).exists(_._1 <= r.sec)) tmBest(name) = (r.sec, delta)
+      r
     }
     val benched = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => subset.forall(_.contains(name)) }
-    // Pass 1 in registry order (first consumers absorb memoized builds the
-    // same way every round), then pass 2 in the same order.
-    val pass1 = benched.map { case (name, fn) => name -> timed(name, fn) }
-    val pass2 = benched.map { case (name, fn) => name -> timed(name, fn) }
-    val raw: Seq[(String, (Double, Double))] =
-      pass1.zip(pass2).map { case ((n, t1), (_, t2)) => n -> (t1, t2) }
-    val minOf2: Map[String, Double] =
-      raw.map { case (n, (t1, t2)) => n -> math.min(t1, t2) }.toMap
     // Regression-baseline resolution (durable form, round 12): an explicit
     // env override wins; otherwise the HIGHEST-numbered committed
     // bench_baseline_r*.json snapshot of a driver-protocol run. Dev sweeps
@@ -195,57 +246,31 @@ object Bench {
         case _ => Map.empty
       }
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    // Pass 3 — targeted regression re-check. A shared box under transient
-    // contention (page-cache churn, a concurrent build) inflates BOTH runs
-    // of a min-of-2 pair for whatever queries happen to execute during the
-    // squeeze; round 11 recorded a 13-query "regression" cluster that
-    // re-measured at its round-10 times in isolation. Queries whose
-    // min-of-2 still exceeds 1.5x the durable baseline get ONE more run
-    // each, after the bulk sweep's memory/IO pressure has passed; the
-    // recorded time is the min of all three. A real plan regression
-    // reproduces in pass 3; a contention artifact does not. Cost: one run
-    // per flagged query, not a third full sweep.
-    val ratioFlagged = minOf2.toSeq.collect {
-      case (n, cur) if cur > 0.5 &&
-        prior.get(n).exists(p => p > 0 && cur / p > 1.5) => n
-    }
-    // Cost-aware recheck (round 17): the ratio trigger alone never
-    // rechecks the most expensive queries when a whole run is uniformly
-    // inflated (box-wide contention lifts every ratio below 1.5x while
-    // the absolute seconds at the top of the cost table — the ones that
-    // dominate the round total — are judged by a single contended pair).
-    // The top-5 by min-of-2 cost get the third run unconditionally, so
-    // the round's biggest line items never depend on box luck.
-    val costFlagged = minOf2.toSeq.sortBy(-_._2).take(5).map(_._1)
-    val flagged = (ratioFlagged ++ costFlagged).distinct.sorted
     val byName = benched.toMap
-    val pass3: Map[String, Double] =
-      flagged.flatMap(n => byName.get(n).map(fn => n -> timed(n, fn))).toMap
-    val results: Map[String, Double] =
-      minOf2.map { case (n, t) =>
-        n -> math.min(t, pass3.getOrElse(n, Double.MaxValue)) }
+    val m = measure(benched.map(_._1), prior)(n => timed(n, byName(n)))
+    val (results, total) = (m.results, m.total)
+    // a failed run shows as null, never as a time
+    def runJson(r: Run): String = if (r.ok) r.sec.toString else "null"
     val qs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val rawJson = raw.sortBy(_._1)
-      .map { case (k, (t1, t2)) => s"\"" + k + "\":[" + t1 + "," + t2 + "]" }
+    val rawJson = m.raw.sortBy(_._1)
+      .map { case (k, (r1, r2)) => s"\"" + k + "\":[" + runJson(r1) + "," + runJson(r2) + "]" }
       .mkString("{", ",", "}")
-    val tierOf = Registry.tierOf
-    val tiers = results.toSeq
-      .groupBy { case (n, _) => tierOf.getOrElse(n, "other") }
-      .map { case (t, xs) => t -> xs.map(_._2).sum }
-      .toSeq.sortBy(_._1)
+    // per-tier subtotals attribute drift to a module
+    val tiers = m.tiers
       .map { case (t, v) => s"\"" + t + "\":" + v }
       .mkString("{", ",", "}")
+    val failedJson = m.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Queries whose pass-1 time absorbed a session-memoized shared build
     // (jump state, trained IVF index, minhash pairs, per-doc scorers):
     // flagged heuristically from the raw pair so cross-round per-query
     // deltas can be interpreted — a large pass1/pass2 gap on a memo
     // consumer is build cost, not plan drift.
-    val absorbers = raw.collect {
-      case (n, (t1, t2)) if t1 - t2 > 1.0 && t2 > 0 && t1 / t2 > 3.0 => n
+    val absorbers = m.raw.collect {
+      case (n, (Run(t1, true), Run(t2, true)))
+        if t1 - t2 > 1.0 && t2 > 0 && t1 / t2 > 3.0 => n
     }.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
     // Bench self-defense: any single query consuming an outsized share of
     // the round's whole budget is flagged in the JSON itself (share >10%
     // of total or >10 s absolute), so a pathological plan is caught by the
@@ -274,14 +299,14 @@ object Bench {
       }.mkString("[", ",", "]")
     // Full form (with the per-query map, ~3.5 KB) goes to the file and the
     // stderr sentinel; the driver's stdout tail capture is only 2,000 chars,
-    // so the LAST stdout line must be the compact form (~90 chars) or the
-    // captured tail starts mid-number and can never parse.
+    // so the LAST stdout line must be the compact form or the captured
+    // tail starts mid-number and can never parse.
     // note: since round 5 the bench executes each query's frozen physical
     // plan in full (toRdd.count); rounds 1-4 timed Dataset.count(), which
     // let Catalyst prune unreferenced expensive columns — per-query times
     // are NOT comparable across that boundary.
-    val recheckJson = pass3.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }
+    val recheckJson = m.recheck.toSeq.sortBy(_._1)
+      .map { case (k, r) => s"\"" + k + "\":" + runJson(r) }
       .mkString("{", ",", "}")
     // Subset runs are NOT protocol-comparable to full-sweep baselines: a
     // subsetted memo consumer's pass-1 absorbs builds the full sweep
@@ -301,11 +326,9 @@ object Bench {
         s"\"shuf_write_b\":${d(3)},\"spill_b\":${d(4)}," +
         s"\"fetch_wait_ms\":${d(5)},\"n_tasks\":${d(6)}}"
     }.mkString("{", ",", "}")
-    val codecJson = ioCodec.map(c => "\"" + c + "\"").getOrElse("null")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","method":"full-plan-execution-min-of-2-plus-recheck","subset_run":${subset.nonEmpty},"subset":$subsetJson,"io_codec":$codecJson,"load_1m_start":$loadStart,"load_1m_end":$loadEnd,"queries":$qs,"raw":$rawJson,"recheck":$recheckJson,"baseline":"${priorFile.replace("\\", "/")}","tiers":$tiers,"warmup_absorbers":$absorbers,"slow_outliers":$slowOutliers,"regressions":$regressions,"task_metrics":$tmJson,"sf":"$sfDir"}"""
-    val compactJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","method":"full-plan-execution-min-of-2-plus-recheck","subset_run":${subset.nonEmpty},"subset":$subsetJson,"load_1m_start":$loadStart,"load_1m_end":$loadEnd,"queries":$qs,"raw":$rawJson,"recheck":$recheckJson,"n_failed":${m.failed.size},"failed":$failedJson,"baseline":"${priorFile.replace("\\", "/")}","tiers":$tiers,"warmup_absorbers":$absorbers,"slow_outliers":$slowOutliers,"regressions":$regressions,"task_metrics":$tmJson,"sf":"$sfDir"}"""
+    val compactJson = compactLine(m, sfDir)
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outFile),

@@ -9,21 +9,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** Recommended session for this library. `shufflePartitions` should match
-    * cluster parallelism (cores × executors in real deployments). */
+  /** The session confs graft runs under — the one place they live.
+    * [[build]] applies them; the test session applies them without the
+    * extensions. `shufflePartitions` should match cluster parallelism
+    * (cores × executors in real deployments). */
+  def confs(shufflePartitions: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** Recommended session for this library: [[confs]] plus
+    * [[plans.GraftExtensions]] (SQL functions and optimizer rules). */
   def build(master: String = "local[*]", shufflePartitions: Int = 32,
       appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
       .master(master)
       .appName(appName)
       .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(confs(shufflePartitions))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** [[build]] sized for a local run: `local[n]` and n shuffle partitions,
+    * n from `SPARK_GRAFT_CPUS` (default 4). Used by every main in this
+    * repo (Bench, Verify, the dev tools). */
+  def buildLocal(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    build(s"local[$cpus]", cpus, appName)
   }
 
   /** Register every test-lake table as a temp view (plus graft functions on
@@ -160,8 +175,7 @@ object GraftSession {
     * should enable `spark.cleaner.referenceTracking.cleanCheckpoints=true`
     * (files are then removed when the checkpointed RDD is GC'd) or point
     * the dir at storage with a retention/TTL policy. */
-  def ckpt(df: DataFrame, eager: Boolean = true,
-      level: Option[org.apache.spark.storage.StorageLevel] = None): DataFrame = {
+  def ckpt(df: DataFrame, eager: Boolean = true): DataFrame = {
     planAuditor.foreach(_(df.queryExecution.analyzed))
     val s = df.sparkSession
     s.conf.getOption("spark.graft.checkpoint.dir").filter(_.nonEmpty) match {
@@ -178,18 +192,15 @@ object GraftSession {
               s"${sc.getCheckpointDir.get}; SparkContext offers no reset — " +
               "reliable checkpoints keep writing to the established dir")
         df.checkpoint(eager)
-      case None => level match {
-        case Some(l) => df.localCheckpoint(eager, l)
-        case None => df.localCheckpoint(eager)
-      }
+      case None => df.localCheckpoint(eager)
     }
   }
 
-  /** Materialize-then-sort presentation helper (r21). A GLOBAL sort's
+  /** Materialize-then-sort presentation helper. A GLOBAL sort's
     * RangePartitioner SAMPLES its child to pick partition bounds, so when
     * nothing below the sort is a shuffle (narrow pipelines, broadcast
     * joins, memo scans) the ENTIRE upstream executes twice — once for the
-    * sampler, once for the real shuffle. One [[ckpt]] barrier before the
+    * sampler, once for the real shuffle. One local checkpoint before the
     * sort makes both passes read materialized rows instead. Use where the
     * upstream is expensive per row (decode, regex, folds, joins) and the
     * sorted relation is the query's own output (which must materialize
@@ -197,16 +208,19 @@ object GraftSession {
     * aggregate/shuffle (AQE reuses the materialized stage) or a bare
     * cheap scan. Measured (sf1, local[32]): q_tokens_per_doc 10.95 →
     * 6.5 s, q_token_ids 28.6 → 20.9 s — the double fold was the whole
-    * difference. */
+    * difference (OPTIMIZATION_r21.md §1).
+    *
+    * Always a LOCAL checkpoint, even when `spark.graft.checkpoint.dir`
+    * opts [[ckpt]] into reliable mode: the barrier only serves the
+    * sampler and the sort, so writing every query's whole output to
+    * durable storage would buy no recovery. The [[planAuditor]] still
+    * sees the plan, as it would through [[ckpt]]. */
   def presentSorted(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame = {
-    // session-conf kill switch (default on) — exists so the A/B harness
-    // can measure both forms in one JVM; results identical either way
-    val on = df.sparkSession.conf
-      .getOption("spark.graft.presort.ckpt").forall(_.toBoolean)
-    // LAZY checkpoint: the range-sampler's pass is the one that computes
-    // and materializes the blocks, the sort's shuffle re-reads them — two
-    // jobs total, upstream computed once. (An eager ckpt costs a third
-    // job, which at sub-second query sizes erased the win.)
+    planAuditor.foreach(_(df.queryExecution.analyzed))
+    // LAZY: the range-sampler's pass is the one that computes and
+    // materializes the blocks, the sort's shuffle re-reads them — two
+    // jobs total, upstream computed once. (An eager checkpoint costs a
+    // third job, which at sub-second query sizes erased the win.)
     // DISK_ONLY: a corpus-sized sorted output (the tokenized corpus at the
     // 100× tier is ~10 GB of blocks) stored at the default
     // MEMORY_AND_DISK level OOMed the 32 g bench JVM — each bench pass
@@ -215,11 +229,9 @@ object GraftSession {
     // the storage pool. Disk blocks stream in and out without unroll
     // memory, are bounded by disk (not heap), and at the small tiers ride
     // the page cache — the sf0.1/sf1 wins re-measured unchanged.
-    if (on)
-      ckpt(df, eager = false,
-        level = Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-        .orderBy(cols: _*)
-    else df.orderBy(cols: _*)
+    df.localCheckpoint(eager = false,
+      storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .orderBy(cols: _*)
   }
 
   private val cboLock = new Object

@@ -846,8 +846,8 @@ object EventQueries {
     * partitioned on day, the dim side carries the selective filter
     * (Mondays), and Catalyst inserts a dynamic-pruning subquery into the
     * fact scan's PartitionFilters — only matching partitions are read, with
-    * the dim's broadcast reused as the filter source. PlanAudit/ExtSpec
-    * assert `dynamicpruning` is really in the scan. The oracle runs the
+    * the dim's broadcast reused as the filter source. ExtSpec asserts
+    * `dynamicpruning` is really in the scan. The oracle runs the
     * semantically-equal day-of-week filter on the unpartitioned table. */
   def joinDppPruned(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

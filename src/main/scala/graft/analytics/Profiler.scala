@@ -41,16 +41,8 @@ object Profiler {
   }
 
   /** Profile all non-array columns of a table (see object doc for the
-    * two-pass shape). `splitStringMinMax` (r21, default OFF — measured,
-    * rejected) moves the string columns' min/max into their OWN zero-key
-    * aggregate crossed back onto the 1-row result, leaving the numeric
-    * pass on a codegen'd HashAggregate. Interleaved A/B (verdict r20
-    * item 9): sf0.1 a wash (2.001 vs 1.997 s min over 8 reps), sf1
-    * slightly WORSE (3.156 vs 3.388 s min over 4 reps) — pass 2's melt
-    * dominates the query and the split's second scan + 1×1-row BNLJ cost
-    * more than the interpreted zero-key SortAggregate saves. The flag
-    * stays so the A/B is reproducible; both forms are row-identical. */
-  def profile(df: DataFrame, splitStringMinMax: Boolean = false): DataFrame = {
+    * two-pass shape). */
+  def profile(df: DataFrame): DataFrame = {
     val cols = df.schema.fields.toSeq.filterNot(_.dataType.isInstanceOf[ArrayType])
     // r20 optimization note: moving the string min/max out of pass 1
     // (whose string buffers demote the wide aggregate to a zero-key
@@ -67,48 +59,17 @@ object Profiler {
     // blocking PushDownPredicates + RemoveRedundantAggregates (both
     // legally split the consumers onto different exchanges, re-melting
     // the corpus) — see OPTIMIZATION_r20.md for the full measurement.
+    // Splitting the string min/max into their own scan was measured and
+    // rejected too: a wash at sf0.1, slower at sf1 (OPTIMIZATION_r21.md §6).
     // pass 1: narrow regular aggregates, single scan, no Expand.
-    // r21 (verdict r20 item 9): the STRING columns' min/max buffers are
-    // the only non-mutable fields in the wide aggregate, and one immutable
-    // buffer field demotes the ENTIRE 44-expression aggregate to a
-    // zero-key SortAggregate (no sort — zero keys — but row-at-a-time
-    // interpreted evaluation, no codegen). Splitting exactly those
-    // min/max pairs into their own zero-key aggregate leaves the numeric
-    // pass on a codegen'd HashAggregate and confines the SortAggregate to
-    // a scan of just the string columns (parquet column pruning makes
-    // that second scan read only those — typically short dictionary
-    // columns). The two 1-row results cross back with a single-row BNLJ.
-    // Unlike the r20 dictionary-grain attempt (measured, rejected), there
-    // is no shared exchange for the optimizer to split: both sides are
-    // independent scans, so PushDownPredicates/RemoveRedundantAggregates
-    // have nothing to re-melt.
-    val isStr = (dt: DataType) => dt.isInstanceOf[StringType]
-    val aggsOf = (fs: Seq[StructField]) => fs.flatMap { f =>
+    val aggs = cols.flatMap { f =>
       val (mn, mx) = minMaxStr(f.name, f.dataType)
       Seq(
         count(col(f.name)).as(s"${f.name}__n"),
         count(lit(1)).minus(count(col(f.name))).as(s"${f.name}__nulls"),
         mn.as(s"${f.name}__min"), mx.as(s"${f.name}__max"))
     }
-    val strCols = cols.filter(f => isStr(f.dataType))
-    val wide = if (!splitStringMinMax || strCols.isEmpty) {
-      val aggs = aggsOf(cols)
-      df.agg(aggs.head, aggs.tail: _*)
-    } else {
-      val mainAggs = cols.flatMap { f =>
-        val (mn, mx) = minMaxStr(f.name, f.dataType)
-        Seq(count(col(f.name)).as(s"${f.name}__n"),
-          count(lit(1)).minus(count(col(f.name))).as(s"${f.name}__nulls")) ++
-          (if (isStr(f.dataType)) Nil
-           else Seq(mn.as(s"${f.name}__min"), mx.as(s"${f.name}__max")))
-      }
-      val strAggs = strCols.flatMap { f =>
-        val (mn, mx) = minMaxStr(f.name, f.dataType)
-        Seq(mn.as(s"${f.name}__min"), mx.as(s"${f.name}__max"))
-      }
-      df.agg(mainAggs.head, mainAggs.tail: _*)
-        .crossJoin(df.agg(strAggs.head, strAggs.tail: _*))
-    }
+    val wide = df.agg(aggs.head, aggs.tail: _*)
     // pass 2: melt → hash-dedup → per-column distinct counts. The melt
     // keeps each value in its NATIVE type family (long / double /
     // string) instead of rendering everything to strings — the distinct

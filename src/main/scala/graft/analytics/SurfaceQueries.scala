@@ -281,11 +281,15 @@ object SurfaceQueries {
     * lexicographically the shorter (prefix) string is smaller — packing
     * the length into the low 5 bits breaks exactly that tie the right
     * way. Range: v < 10^17, so (v << 5) + len < 3.3·10^18 < 2^63 — exact.
-    * 10^k is double-exact for k ≤ 22, so the power/cast is exact too. */
+    * 10^k is double-exact for k ≤ 22, so the power/cast is exact too.
+    * "0" is in the contract (it encodes to the smallest value). Inputs
+    * outside it (empty, leading zero, 18+ digits, any non-digit) encode to
+    * null rather than to a mis-ordered long. */
   private[graft] def digitStrEnc(c: Column): Column =
-    shiftleft(c.cast(LongType) *
-      pow(lit(10.0), lit(17) - length(c)).cast(LongType), 5) +
-      length(c).cast(LongType)
+    when(c.rlike("^(0|[1-9][0-9]{0,16})$"),
+      shiftleft(c.cast(LongType) *
+        pow(lit(10.0), lit(17) - length(c)).cast(LongType), 5) +
+        length(c).cast(LongType))
 
   /** Exact inverse of [[digitStrEnc]] without integer division: the
     * left-aligned value v = enc >> 5 always renders as exactly 17 digits

@@ -732,12 +732,8 @@ object DedupQueries {
     ngramJaccardOf(Tables.documents(s, dir))
 
   /** [[dedupNgramJaccard]] over an arbitrary (doc_id, lang, text) relation
-    * — factored for the ContractAndPropertySpec reference pin.
-    * `admitQueryShingles` (default on, r21) gates the query-shingle
-    * admission semi-join below; the flag exists only so the A/B harness
-    * can run both forms in one JVM. */
-  private[graft] def ngramJaccardOf(docs0: DataFrame,
-      admitQueryShingles: Boolean = true): DataFrame = {
+    * — factored for the ContractAndPropertySpec reference pin. */
+  private[graft] def ngramJaccardOf(docs0: DataFrame): DataFrame = {
     import docs0.sparkSession.implicits._
     // r21: shingling is narrow over the raw scan — spread (§2.5)
     val docs = Tables.spread(docs0)
@@ -769,10 +765,9 @@ object DedupQueries {
     // own (lang, sh) row puts sh in qsh. Deriving qsh from the raw `sh`
     // (not shOk) keeps it one narrow 1%-scan; the superset (it may name
     // hot shingles) is harmless — hot rows are already gone from shOk.
+    // Measured 1.5x faster than the unadmitted form (OPTIMIZATION_r21.md §3).
     val qsh = sh.filter($"doc_id" % 97 === 0).select($"lang", $"sh").distinct()
-    val admitted = if (admitQueryShingles)
-      shOk.join(qsh, Seq("lang", "sh"), "left_semi") else shOk
-    val postings = admitted
+    val postings = shOk.join(qsh, Seq("lang", "sh"), "left_semi")
       .groupBy($"lang", $"sh")
       .agg(collect_list($"doc_id").as("docs"))
       .filter(size($"docs") >= 2)
@@ -1158,57 +1153,11 @@ object DedupQueries {
       .groupBy($"win_h").agg(count(lit(1)).as("n"))
       .filter($"n" > 1)
       .select($"win_h")
-    // Bloom pre-filter BEFORE the probe exchange (r19 verdict item 4) —
-    // implemented, A/B-MEASURED at two tiers, and left OFF by default.
-    // The theory: the semi-join shuffles the corpus-chars-grain
-    // (doc_id, p, win_h) relation (24 B/row × total chars — the 4.7 GB
-    // exchange the 100× tier measured spilling) while only ~9% of
-    // positions are candidates (measured at sf0.1), so a bloom over the
-    // dup fingerprints as a SCALAR SUBQUERY (the InjectRuntimeFilter
-    // shape — never a single-row join, the r18 span-scrub lesson)
-    // should cut the exchange ~10×. The measurement: bloom ON doubles
-    // the query at sf0.1 (2.98 s → 5.3 s; 4.5 s with dupH checkpointed
-    // so the chars-grain reduce runs once) and at the sf10 tier turned
-    // 15.6× into 31× — on THIS corpus the probe exchange is not the
-    // binding cost; the extra evaluation barrier + materialization of
-    // the dup dictionary outweigh the shuffled-bytes saving at every
-    // committed tier. Default off (GRAFT_SUBSTR_BLOOM=on re-enables for
-    // corpora with a thin dup tail where the trade reverses; results
-    // are byte-identical either way — bloom FPs only ADD candidates and
-    // the exact semi-join still gates every survivor).
-    import org.apache.spark.sql.catalyst.expressions.{Literal, ScalarSubquery}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.graftbridge.Bridge
-    // dupH is consumed twice (bloom build + join build); without an
-    // explicit materialization the two consumers share only the shuffle
-    // (ReusedExchange) and each re-runs the chars-grain REDUCE-side
-    // aggregation — measured to double the query at sf0.1 (2.98 s →
-    // 5.3 s) and erase the prefilter's win. One checkpoint of the
-    // dup-hash dictionary (8 B/row, content-bounded — it is the join
-    // build side anyway) makes both consumers read the materialized
-    // table, so the heavy aggregate runs exactly once.
-    val dupHC = if (substrBloom) graft.GraftSession.ckpt(dupH) else dupH
-    val preFiltered = if (!substrBloom) fps else {
-      val bloomAgg = Bridge.column(
-        new BloomFilterAggregate(Bridge.expression($"win_h"),
-          Literal(4L * 1024 * 1024), Literal(32L * 1024 * 1024))
-          .toAggregateExpression()).as("bf")
-      val bloomPlan = dupHC.agg(bloomAgg).queryExecution.analyzed
-      fps.filter(Bridge.column(
-        BloomFilterMightContain(ScalarSubquery(bloomPlan),
-          Bridge.expression($"win_h"))))
-    }
-    preFiltered.join(dupHC.hint("shuffle_hash"), Seq("win_h"), "left_semi")
+    // A bloom prefilter over dupH before this probe was measured and
+    // rejected: slower at every tier (OPTIMIZATION_r20.md §2.1)
+    fps.join(dupH.hint("shuffle_hash"), Seq("win_h"), "left_semi")
       .select($"doc_id", $"p")
   }
-
-  /** The measured A/B switch for the candidate bloom prefilter
-    * (GRAFT_SUBSTR_BLOOM=on; env because sbt's forked `run` doesn't
-    * forward -D flags). Off by default — see the measurement note at
-    * the bloom block; results are identical either way. */
-  private def substrBloom: Boolean =
-    sys.env.get("GRAFT_SUBSTR_BLOOM").contains("on")
 
   /** Gaps-islands span assembly over duplicated positions — shared by
     * the string-keyed [[substringDedup]] and the hash-keyed

@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extensions registering graft's custom Catalyst expressions for
-  * SQL use:
+  * SQL use, plus the [[HaversineBoundingBox]] optimizer rule.
+  * [[graft.GraftSession.build]] installs them:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)...
   *   spark.sql("SELECT haversine_km(lat, lon, 41.8781, -87.6298) ...")
   * }}}
   *
@@ -20,90 +20,37 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.haversineEntry)
-    e.injectFunction(GraftExtensions.longArrayDotEntry)
-    e.injectFunction(GraftExtensions.sq8CodeEntry)
-    e.injectFunction(GraftExtensions.jaroWinklerEntry)
-    e.injectFunction(GraftExtensions.sortedContainsEntry)
-    e.injectFunction(GraftExtensions.rollingHashEntry)
+    GraftExtensions.functions.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => HaversineBoundingBox)
   }
 }
 
 object GraftExtensions {
-  private def haversineBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 4, "haversine_km(lat1, lon1, lat2, lon2)")
-    Haversine.ofAny(args(0), args(1), args(2), args(3))
-  }
+  private def fn(name: String, cls: Class[_], usage: String, arity: Int)(
+      make: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => { require(args.length == arity, usage); make(args) })
 
-  val haversineEntry: (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("haversine_km"),
-    new ExpressionInfo(classOf[Haversine].getName, "haversine_km"),
-    haversineBuilder)
-
-  private def longArrayDotBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 2, "long_array_dot(array<bigint>, array<bigint>)")
-    LongArrayDot(args(0), args(1))
-  }
-
-  val longArrayDotEntry: (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("long_array_dot"),
-    new ExpressionInfo(classOf[LongArrayDot].getName, "long_array_dot"),
-    longArrayDotBuilder)
-
-  private def sq8CodeBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 1, "sq8_code(array<float>)")
-    Sq8Code(args(0))
-  }
-
-  val sq8CodeEntry: (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("sq8_code"),
-    new ExpressionInfo(classOf[Sq8Code].getName, "sq8_code"),
-    sq8CodeBuilder)
-
-  private def jaroWinklerBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 2, "jaro_winkler(string, string)")
-    JaroWinkler(args(0), args(1))
-  }
-
-  val jaroWinklerEntry: (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("jaro_winkler"),
-    new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-    jaroWinklerBuilder)
-
-  private def sortedContainsBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 2, "sorted_contains(sorted array<string>, string)")
-    SortedArrayContains(args(0), args(1))
-  }
-
-  val sortedContainsEntry: (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("sorted_contains"),
-    new ExpressionInfo(classOf[SortedArrayContains].getName, "sorted_contains"),
-    sortedContainsBuilder)
-
-  private def rollingHashBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 2, "rolling_hash64(string, window int)")
-    RollingHash64(args(0), args(1))
-  }
-
-  val rollingHashEntry: (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("rolling_hash64"),
-    new ExpressionInfo(classOf[RollingHash64].getName, "rolling_hash64"),
-    rollingHashBuilder)
+  /** graft's SQL functions — the one table both install paths iterate. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder)] = Seq(
+    fn("haversine_km", classOf[Haversine], "haversine_km(lat1, lon1, lat2, lon2)", 4)(
+      a => Haversine.ofAny(a(0), a(1), a(2), a(3))),
+    fn("long_array_dot", classOf[LongArrayDot],
+      "long_array_dot(array<bigint>, array<bigint>)", 2)(a => LongArrayDot(a(0), a(1))),
+    fn("sq8_code", classOf[Sq8Code], "sq8_code(array<float>)", 1)(a => Sq8Code(a(0))),
+    fn("jaro_winkler", classOf[JaroWinkler], "jaro_winkler(string, string)", 2)(
+      a => JaroWinkler(a(0), a(1))),
+    fn("sorted_contains", classOf[SortedArrayContains],
+      "sorted_contains(sorted array<string>, string)", 2)(
+      a => SortedArrayContains(a(0), a(1))),
+    fn("rolling_hash64", classOf[RollingHash64], "rolling_hash64(string, window int)", 2)(
+      a => RollingHash64(a(0), a(1))))
 
   /** Install on an already-built session (idempotent). */
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "haversine_km", haversineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_array_dot", longArrayDotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq8_code", sq8CodeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", jaroWinklerBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_contains", sortedContainsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash64", rollingHashBuilder, "built-in")
-  }
+  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (id, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        id.funcName, builder, "built-in")
+    }
 }

@@ -1,138 +1,27 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.{GraftSession, SparkEntry}
 
-/** Dev scratch: ad-hoc interleaved A/B measurement for the optimization
-  * rounds (full-plan execution like the bench; jobs labeled per §1.5).
-  * Not part of the declared surface; edited freely between measurements.
+/** Dev tool: interleaved A/B timing of declared queries (full-plan
+  * execution like the bench; jobs labeled per arm and rep). Not part of the
+  * declared surface.
   *
-  * Usage: runMain graft.tools.Scratch <dir> <reps> <exp1,exp2,...> [codec]
-  * Arms run INTERLEAVED (a full round of all arms, `reps` times) so box
-  * drift hits every arm equally; per-arm min and all raw times print at
-  * the end. An experiment name that is not registered below is looked up
-  * in SparkEntry.queries, so declared queries can join an A/B directly.
+  * Usage: `runMain graft.tools.Scratch <dir> <reps> <query1,query2,...>`,
+  * session sized by `SPARK_GRAFT_CPUS`. After one untimed warmup round
+  * (codegen, file listing, memo builds), arms run INTERLEAVED — a full
+  * round of all arms, `reps` times — so box drift hits every arm equally;
+  * per-arm min, shuffle bytes and all raw times print at the end. To A/B
+  * an alternative form, declare it as a query; the measurements of past
+  * A/Bs are in the OPTIMIZATION_r*.md files.
   */
 object Scratch {
-  def experiments: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // q_url_parse: r20 string-min form (Sort+SortAggregate rollup) vs the
-    // r21 declared form (digitStrEnc long min, all-hash)
-    "url_old" -> { (s, dir) =>
-      import s.implicits._
-      import org.apache.spark.sql.types.StringType
-      val parsed = graft.Tables.orders(s, dir)
-        .select(concat(
-          lit("https://shop.example.com/"),
-          lower(replace($"o_orderpriority", lit(" "), lit("-"))),
-          lit("/item?cust="), $"o_custkey".cast(StringType),
-          lit("&status="), $"o_orderstatus").as("url"))
-        .select(
-          regexp_extract($"url", "^https://([^/]+)", 1).as("host"),
-          regexp_extract($"url", "^https://[^/]+([^?]*)", 1).as("path"),
-          regexp_extract($"url", "cust=([0-9]+)", 1).as("cust"),
-          regexp_extract($"url", "status=([A-Z]+)", 1).as("status"))
-      val lvl1 = parsed.groupBy($"host", $"path", $"cust", $"status")
-        .agg(count(lit(1)).as("c"))
-      val perCust = lvl1.groupBy($"host", $"path", $"cust")
-        .agg(sum($"c").as("c2"))
-        .groupBy($"host", $"path")
-        .agg(sum($"c2").as("n"), count(lit(1)).as("n_custs"),
-          min($"cust").as("min_cust"))
-      val perStatus = lvl1.select($"host", $"path", $"status").distinct()
-        .groupBy($"host", $"path").agg(count(lit(1)).as("n_statuses"))
-      perCust.join(perStatus, Seq("host", "path"))
-        .select($"host", $"path", $"n", $"n_custs", $"n_statuses", $"min_cust")
-        .orderBy($"path")
-    },
-    // q_dedup_ngram_jaccard: posting lists with / without the
-    // query-shingle admission semi-join
-    "ngram_old" -> { (s, dir) =>
-      graft.ext.DedupQueries.ngramJaccardOf(
-        graft.Tables.documents(s, dir), admitQueryShingles = false) },
-    "ngram_new" -> { (s, dir) =>
-      graft.ext.DedupQueries.ngramJaccardOf(
-        graft.Tables.documents(s, dir), admitQueryShingles = true) },
-    // q_token_ids stage decomposition: fold-only (= tokens_per_doc core),
-    // fold+explode+vocab-join WITHOUT the presentation sort, and the full
-    // declared query (with the corpus-sized range exchange + sort)
-    "tok_nosort" -> { (s, dir) =>
-      import graft.ext.TextQueries
-      TextQueries.tokenIdsOf(graft.Tables.documents(s, dir),
-        TextQueries.bpeMergeTable(s, dir), TextQueries.bpeVocab(s, dir)) },
-    "tok_fold_only" -> { (s, dir) =>
-      import graft.ext.TextQueries
-      TextQueries.tokensPerDocOf(graft.Tables.documents(s, dir),
-        TextQueries.bpeMergeTable(s, dir)) },
-    "tok_ids_ckpt" -> { (s, dir) =>
-      import s.implicits._
-      import graft.ext.TextQueries
-      val t = TextQueries.tokenIdsOf(graft.Tables.documents(s, dir),
-        TextQueries.bpeMergeTable(s, dir), TextQueries.bpeVocab(s, dir))
-      graft.GraftSession.ckpt(t).orderBy($"doc_id", $"pos") },
-    "tok_perdoc_ckpt" -> { (s, dir) =>
-      import s.implicits._
-      import graft.ext.TextQueries
-      val t = TextQueries.tokensPerDocOf(graft.Tables.documents(s, dir),
-        TextQueries.bpeMergeTable(s, dir))
-      graft.GraftSession.ckpt(t).orderBy($"doc_id") },
-    // UnsafeRow field-width probe: does narrowing a shuffled long column
-    // to int shrink shuffle bytes? (UnsafeRow 8-byte-aligns every
-    // fixed-width slot, so the answer pre-compression is no; the codec
-    // may still squeeze the zero bytes — shufW below is post-compression)
-    "narrow_long" -> { (s, _) =>
-      import s.implicits._
-      s.range(5000000L).select($"id",
-        ($"id" % 32768).cast("long").as("p"),
-        xxhash64($"id").as("h")).orderBy($"h") },
-    "narrow_int" -> { (s, _) =>
-      import s.implicits._
-      s.range(5000000L).select($"id",
-        ($"id" % 32768).cast("int").as("p"),
-        xxhash64($"id").as("h")).orderBy($"h") },
-    // q_agg_approx_distinct: the r19 split form (exact multi-distinct via
-    // the Expand rewrite + a SEPARATE raw-stream HLL pass) vs the r20
-    // dedup-first HLL — the verdict r20 item-3 keep-or-revert A/B
-    "apxd_r19" -> { (s, dir) =>
-      import s.implicits._
-      import org.apache.spark.sql.types.LongType
-      val li = graft.Tables.lineitem(s, dir)
-      val exact = li.groupBy($"l_returnflag")
-        .agg(countDistinct($"l_partkey").as("exact_parts"),
-          countDistinct($"l_orderkey").as("exact_orders"))
-      val approx = li.groupBy($"l_returnflag")
-        .agg(approx_count_distinct($"l_partkey", 0.01).as("ap"),
-          approx_count_distinct($"l_orderkey", 0.01).as("ao"))
-      exact.join(approx, "l_returnflag")
-        .select($"l_returnflag", $"exact_parts", $"exact_orders",
-          (abs($"ap" - $"exact_parts") * 100 <= $"exact_parts" * 3 &&
-            abs($"ao" - $"exact_orders") * 100 <= $"exact_orders" * 3)
-            .cast(LongType).as("approx_ok"))
-        .orderBy($"l_returnflag")
-    },
-    // q_profile_lineitem: single wide pass-1 aggregate (string min/max
-    // demote it to SortAggregate) vs split string-min/max aggregate
-    "prof_old" -> { (s, dir) =>
-      graft.analytics.Profiler.profile(
-        graft.Tables.lineitem(s, dir), splitStringMinMax = false) },
-    "prof_new" -> { (s, dir) =>
-      graft.analytics.Profiler.profile(
-        graft.Tables.lineitem(s, dir), splitStringMinMax = true) })
-
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = if (args.length > 1) args(1).toInt else 3
-    val arms = if (args.length > 2) args(2).split(",").toSeq
-      else Seq("prof_old", "prof_new")
-    val codec = if (args.length > 3) Some(args(3)) else None
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    codec.foreach(c => b.config("spark.io.compression.codec", c))
-    val spark = b.getOrCreate()
+    require(args.length == 3, "usage: Scratch <dir> <reps> <query1,query2,...>")
+    val (dir, reps, arms) = (args(0), args(1).toInt, args(2).split(",").toSeq)
+    val spark = GraftSession.buildLocal("graft-scratch")
     spark.sparkContext.setLogLevel("ERROR")
     // cumulative shuffle-byte counters so each arm's exchange volume is
-    // visible next to its wall time (codec and row-width experiments)
+    // visible next to its wall time
     val shufW = new java.util.concurrent.atomic.AtomicLong
     val shufR = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
@@ -147,15 +36,9 @@ object Scratch {
         }
       })
     spark.range(100000L).selectExpr("sum(id)").collect()
-    // "off:<name>" runs <name> with the presort-ckpt kill switch set
-    def armFn(n: String): (SparkSession, String) => DataFrame =
-      if (n.startsWith("off:")) { (s, d) =>
-        s.conf.set("spark.graft.presort.ckpt", "false")
-        try armFn(n.stripPrefix("off:"))(s, d)
-        finally s.conf.set("spark.graft.presort.ckpt", "true")
-      } else experiments.getOrElse(n, graft.SparkEntry.queries(n))
-    // one untimed warmup round (codegen, file listing, memo builds)
-    arms.foreach(n => armFn(n)(spark, dir).queryExecution.toRdd.count())
+    def run(n: String): Unit =
+      SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count()
+    arms.foreach(run)
     val times = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     val bytes = scala.collection.mutable.Map[String, (Long, Long)]()
@@ -163,7 +46,7 @@ object Scratch {
       spark.sparkContext.setJobDescription(s"$n rep$r")
       val (w0, r0) = (shufW.get, shufR.get)
       val t0 = System.nanoTime()
-      armFn(n)(spark, dir).queryExecution.toRdd.count()
+      run(n)
       times(n) :+= (System.nanoTime() - t0) / 1e9
       bytes(n) = (shufW.get - w0, shufR.get - r0)
     }

@@ -1299,4 +1299,25 @@ class CoreQueriesSpec extends AnyFunSuite {
       assert(got(s"/$prio/item") === want, s"min_cust for $prio")
     }
   }
+
+  test("digitStrEnc property: order-preserving inside its contract, null outside") {
+    // contract: "0", or a digit string without a leading zero of at most
+    // 17 digits. Arbitrary digit strings (length 0-22, leading zeros
+    // allowed) exercise both sides; a fixed seed makes a failure replay.
+    import org.scalacheck.{Gen, rng}
+    import graft.analytics.SurfaceQueries.{digitStrEnc, digitStrDec}
+    val gen = Gen.choose(0, 22).flatMap(n => Gen.listOfN(n, Gen.numChar).map(_.mkString))
+    val strs = Iterator.iterate(rng.Seed(2024L))(_.next)
+      .map(seed => gen.pureApply(Gen.Parameters.default, seed))
+      .take(3000).toSeq ++ Seq("", "0", "00", "01", "1" * 17, "1" * 18, "9" * 18)
+    def inContract(x: String) = x.matches("0|[1-9][0-9]{0,16}")
+    val rows = strs.toDF("s")
+      .select($"s", digitStrEnc($"s").as("enc"), digitStrDec(digitStrEnc($"s")).as("back"))
+      .collect()
+    val (in, out) = rows.partition(r => inContract(r.getString(0)))
+    assert(in.length > 1000 && out.length > 500, s"${in.length} in, ${out.length} out")
+    out.foreach(r => assert(r.isNullAt(1) && r.isNullAt(2), s"'${r.getString(0)}' encoded"))
+    in.foreach(r => assert(r.getString(2) === r.getString(0), s"roundtrip ${r.getString(0)}"))
+    assert(in.sortBy(_.getLong(1)).map(_.getString(0)).toSeq === in.map(_.getString(0)).sorted.toSeq)
+  }
 }

@@ -623,6 +623,23 @@ class RegistrySpec extends AnyFunSuite {
     assert(bareCkpt.isEmpty,
       s"bare .localCheckpoint() outside GraftSession.ckpt: $bareCkpt — " +
         "route it through GraftSession.ckpt so the plan auditor sees it")
+    // (1b) one session factory: every main gets its session from
+    // GraftSession.build, so confs and extensions cannot drift per main
+    val builders = mainFiles
+      .filterNot(_.getName == "GraftSession.scala")
+      .filter(f => read(f).contains("SparkSession.builder()"))
+      .map(_.getPath)
+    assert(builders.isEmpty,
+      s"SparkSession.builder() outside GraftSession: $builders — use GraftSession.build")
+    // (1c) query-side code behaves the same on any session: no env knobs
+    val queryPkgs = Seq("analytics", "ext", "ingest", "streaming", "functions", "plans")
+      .map(p => s"src/main/scala/graft/$p/")
+    val envReads = mainFiles
+      .filter(f => queryPkgs.exists(f.getPath.startsWith))
+      .filter(f => read(f).contains("sys.env"))
+      .map(_.getPath)
+    assert(envReads.isEmpty,
+      s"sys.env read in query-side code: $envReads — take it as an argument or a session conf")
     // (2) every GraftSession.memo call site has a forcer below: a new
     // memo family must be added to the roster or this count fails
     // method name alone (r17): the old pattern keyed on the qualified

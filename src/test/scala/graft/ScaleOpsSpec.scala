@@ -66,6 +66,38 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("presentSorted stays a local checkpoint under spark.graft.checkpoint.dir") {
+    // reliable mode is for iterative rounds; a presentation sort's
+    // barrier must not write the query's whole output to durable storage
+    def files(d: String): Long = {
+      val p = java.nio.file.Paths.get(d.stripPrefix("file:"))
+      if (!java.nio.file.Files.exists(p)) 0L
+      else java.nio.file.Files.walk(p)
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+    }
+    val q = SparkEntry.queries("q_join_semi")
+    val want = q(spark, sf).collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_presort").toString
+    // an earlier reliable-mode test may have fixed the context's dir
+    // elsewhere (SparkContext offers no reset); watch that one too
+    val ctxDir = spark.sparkContext.getCheckpointDir
+    val before = ctxDir.map(files).getOrElse(0L)
+    spark.conf.set("spark.graft.checkpoint.dir", dir)
+    try {
+      val got = q(spark, sf).collect().toSeq
+      assert(got === want)
+      assert(files(dir) === 0L, s"presentSorted wrote reliable checkpoint files under $dir")
+      assert(ctxDir.map(files).getOrElse(0L) === before)
+      assert(spark.sparkContext.getCheckpointDir === ctxDir)
+    } finally {
+      spark.conf.unset("spark.graft.checkpoint.dir")
+      val root = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
+
   test("salted join agrees with direct join") {
     val li = Tables.lineitem(spark, sf).select($"l_orderkey", $"l_quantity")
     val o = Tables.orders(spark, sf)

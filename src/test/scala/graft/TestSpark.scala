@@ -4,17 +4,20 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole forked test JVM. */
 object TestSpark {
+  /** [[GraftSession.confs]] on `local[4,2]`, deliberately WITHOUT
+    * GraftExtensions: the suite's session stands in for a session graft
+    * did not build, which the queries must work on (whoever calls them may
+    * own the session), so any function or rule a query needs must install
+    * itself from the query side, as `GraftExtensions.registerOn` does.
+    * local[4,2]: maxFailures=2, so a task's first-attempt failure is
+    * re-driven once — TaskRetrySpec exercises the re-drive contract SURVEY
+    * §4 maps from the reference's retry loop; plain local[N] would fail the
+    * whole job on the first injected task failure. */
   lazy val spark: SparkSession = {
-    // local[4,2]: maxFailures=2, so a task's first-attempt failure is
-    // re-driven once — TaskRetrySpec exercises the re-drive contract
-    // SURVEY §4 maps from the reference's retry loop; plain local[N]
-    // would fail the whole job on the first injected task failure
     val s = SparkSession.builder()
       .master("local[4,2]")
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(GraftSession.confs(4))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
