@@ -87,6 +87,28 @@ object Bench {
   private[graft] def compactLine(m: Measured, sfDir: String): String =
     s"""{"metric":"total","value":${m.total},"unit":"sec","n_failed":${m.failed.size},"sf":"$sfDir"}"""
 
+  /** The regression baseline: the first of `candidates` (file name, JSON
+    * text), in order, that benched the same `sf` dir on the same number of
+    * `cpus`, with its per-query seconds. A candidate that does not parse or
+    * records no `cpus` never matches: absolute times compare only at equal
+    * sf and core count, so with no match there is no baseline at all. */
+  private[graft] def selectBaseline(candidates: Seq[(String, String)], sf: String,
+      cpus: Int): Option[(String, Map[String, Double])] = {
+    import org.json4s._
+    candidates.iterator.flatMap { case (name, txt) =>
+      scala.util.Try(org.json4s.jackson.JsonMethods.parse(txt)).toOption.collect {
+        case j if (j \ "sf") == JString(sf) && (j \ "cpus") == JInt(cpus) =>
+          name -> (j \ "queries" match {
+            case JObject(fields) => fields.collect {
+              case (k, JDouble(v)) => k -> v
+              case (k, JInt(v)) => k -> v.toDouble
+            }.toMap
+            case _ => Map.empty[String, Double]
+          })
+      }
+    }.nextOption()
+  }
+
   def main(args: Array[String]): Unit = {
     // Box-state telemetry (r17): every round's regression triage starts
     // with "was the box busy?" — r11 chased a phantom 13-query cluster
@@ -215,37 +237,28 @@ object Bench {
     val benched = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => subset.forall(_.contains(name)) }
     // Regression-baseline resolution (durable form, round 12): an explicit
-    // env override wins; otherwise the HIGHEST-numbered committed
-    // bench_baseline_r*.json snapshot of a driver-protocol run. Dev sweeps
+    // env override wins; otherwise the committed bench_baseline_r*.json
+    // snapshots of full-sweep runs, highest-numbered first. Dev sweeps
     // write bench_out.json (SPARK_GRAFT_BENCH_OUT) but never a baseline
     // snapshot, so an sf0.01 dev run can no longer clobber the reference
     // the `regressions` field compares against (round-11 failure mode).
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val priorFile = sys.env.get("SPARK_GRAFT_BENCH_BASELINE").getOrElse {
+    val cpus = spark.sparkContext.defaultParallelism
+    val candidates = sys.env.get("SPARK_GRAFT_BENCH_BASELINE").map(Seq(_)).getOrElse {
       val snaps = Option(new java.io.File(".").listFiles()).toSeq.flatten
         .map(_.getName)
         .filter(n => n.matches("bench_baseline_r\\d+\\.json"))
-      if (snaps.isEmpty) outFile
-      else snaps.maxBy(_.replaceAll("\\D+", "").toInt)
+        .sortBy(n => -n.replaceAll("\\D+", "").toInt)
+      if (snaps.isEmpty) Seq(outFile) else snaps
     }
-    val prior: Map[String, Double] = try {
-      import org.json4s._
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(priorFile)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val j = org.json4s.jackson.JsonMethods.parse(txt)
-      j \ "sf" match {
-        case JString(s) if s == sfDir =>
-          j \ "queries" match {
-            case JObject(fields) => fields.collect {
-              case (k, JDouble(v)) => k -> v
-              case (k, JInt(v)) => k -> v.toDouble
-            }.toMap
-            case _ => Map.empty
-          }
-        case _ => Map.empty
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    val baseline = selectBaseline(candidates.flatMap { f =>
+      try Some(f -> new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)),
+        java.nio.charset.StandardCharsets.UTF_8))
+      catch { case scala.util.control.NonFatal(_) => None }
+    }, sfDir, cpus)
+    val prior = baseline.fold(Map.empty[String, Double])(_._2)
+    val baselineName = baseline.fold("none")(_._1.replace("\\", "/"))
     val byName = benched.toMap
     val m = measure(benched.map(_._1), prior)(n => timed(n, byName(n)))
     val (results, total) = (m.results, m.total)
@@ -286,10 +299,11 @@ object Bench {
     // catches ABSOLUTE hogs): compare each query's recorded min (across all
     // passes, including the pass-3 re-check) to the durable baseline's min
     // and flag >1.5x creep. Only flagged when the baseline benched the same
-    // sf dir and the current time is >0.5 s (sub-half-second queries drift
-    // 2x on box noise alone; that band is slow_outliers'/raw's job, not a
-    // regression signal). Anything still listed here survived a third,
-    // post-sweep run — treat it as a real regression, not box noise.
+    // sf dir on the same core count (selectBaseline) and the current time
+    // is >0.5 s (sub-half-second queries drift 2x on box noise alone; that
+    // band is slow_outliers'/raw's job, not a regression signal). Anything
+    // still listed here survived a third, post-sweep run — treat it as a
+    // real regression, not box noise.
     val regressions = results.toSeq
       .flatMap { case (n, cur) => prior.get(n).map(p => (n, cur, p)) }
       .filter { case (_, cur, p) => p > 0 && cur > 0.5 && cur / p > 1.5 }
@@ -327,7 +341,7 @@ object Bench {
         s"\"fetch_wait_ms\":${d(5)},\"n_tasks\":${d(6)}}"
     }.mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","method":"full-plan-execution-min-of-2-plus-recheck","subset_run":${subset.nonEmpty},"subset":$subsetJson,"load_1m_start":$loadStart,"load_1m_end":$loadEnd,"queries":$qs,"raw":$rawJson,"recheck":$recheckJson,"n_failed":${m.failed.size},"failed":$failedJson,"baseline":"${priorFile.replace("\\", "/")}","tiers":$tiers,"warmup_absorbers":$absorbers,"slow_outliers":$slowOutliers,"regressions":$regressions,"task_metrics":$tmJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","method":"full-plan-execution-min-of-2-plus-recheck","subset_run":${subset.nonEmpty},"subset":$subsetJson,"load_1m_start":$loadStart,"load_1m_end":$loadEnd,"cpus":$cpus,"queries":$qs,"raw":$rawJson,"recheck":$recheckJson,"n_failed":${m.failed.size},"failed":$failedJson,"baseline":"$baselineName","tiers":$tiers,"warmup_absorbers":$absorbers,"slow_outliers":$slowOutliers,"regressions":$regressions,"task_metrics":$tmJson,"sf":"$sfDir"}"""
     val compactJson = compactLine(m, sfDir)
     try {
       java.nio.file.Files.write(

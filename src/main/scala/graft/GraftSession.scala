@@ -110,12 +110,23 @@ object GraftSession {
 
   /** Fingerprint a set of tables' parquet files (names/sizes/mtimes) so a
     * regenerated sf dir yields a different cache key — the same staleness
-    * guard dppFactsPath uses. */
+    * guard dppFactsPath uses. Lists through the Hadoop `FileSystem` of the
+    * path (with the active session's Hadoop conf, when there is one), so
+    * `file:`, `hdfs://` and `s3a://` dirs fingerprint their real files; a
+    * missing table fingerprints as `name:0:0`. */
   def contentKey(dir: String, tables: Seq[String]): String = {
+    val hadoopConf = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
     val sig = tables.map { t =>
-      val f = new java.io.File(dir, s"$t.parquet")
-      val parts = if (f.isDirectory) f.listFiles().sortBy(_.getName) else Array(f)
-      parts.map(p => s"${p.getName}:${p.length}:${p.lastModified}").mkString("|")
+      val path = new org.apache.hadoop.fs.Path(dir, s"$t.parquet")
+      val fs = path.getFileSystem(hadoopConf)
+      val parts =
+        if (!fs.exists(path)) Seq(s"${path.getName}:0:0")
+        else fs.listStatus(path).sortBy(_.getPath.getName).toSeq.map(p =>
+          s"${p.getPath.getName}:${p.getLen}:${p.getModificationTime}")
+      parts.mkString("|")
     }.mkString(s"$dir||", "||", "")
     java.security.MessageDigest.getInstance("MD5")
       .digest(sig.getBytes("UTF-8")).take(6)

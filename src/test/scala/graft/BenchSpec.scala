@@ -51,4 +51,28 @@ class BenchSpec extends AnyFunSuite {
     assert(m.results.isEmpty && m.total === 0.0)
     assert(Bench.compactLine(m, "sf").contains("\"n_failed\":1"))
   }
+
+  test("a baseline is taken only when both sf and cpus match") {
+    def snap(sf: String, cpus: Option[Int], sec: Double) =
+      s"""{"sf":"$sf",""" + cpus.fold("")(c => s""""cpus":$c,""") +
+        s""""queries":{"q_join_semi":$sec,"q_join_anti":2}}"""
+    val cands = Seq(
+      "bench_baseline_r30.json" -> snap("/data/sf0.1", Some(32), 1.0),
+      "bench_baseline_r29.json" -> "{not json",
+      "bench_baseline_r28.json" -> snap("/data/sf1", Some(4), 2.0),
+      "bench_baseline_r27.json" -> snap("/data/sf0.1", Some(4), 3.0),
+      "bench_baseline_r26.json" -> snap("/data/sf0.1", Some(4), 4.0),
+      "bench_baseline_r17.json" -> snap("/data/sf0.1", None, 5.0))
+    // the first candidate in order that matches both
+    assert(Bench.selectBaseline(cands, "/data/sf0.1", 4) === Some(
+      "bench_baseline_r27.json" -> Map("q_join_semi" -> 3.0, "q_join_anti" -> 2.0)))
+    assert(Bench.selectBaseline(cands, "/data/sf0.1", 32).map(_._1) ===
+      Some("bench_baseline_r30.json"))
+    // another core count, another sf, or a snapshot that never recorded
+    // its cpus: no baseline at all, never the nearest one
+    assert(Bench.selectBaseline(cands, "/data/sf0.1", 8) === None)
+    assert(Bench.selectBaseline(cands, "/data/sf10", 4) === None)
+    assert(Bench.selectBaseline(cands.takeRight(1), "/data/sf0.1", 4) === None)
+    assert(Bench.selectBaseline(Seq.empty, "/data/sf0.1", 4) === None)
+  }
 }

@@ -640,6 +640,18 @@ class RegistrySpec extends AnyFunSuite {
       .map(_.getPath)
     assert(envReads.isEmpty,
       s"sys.env read in query-side code: $envReads — take it as an argument or a session conf")
+    // (1d) every test-lake table read goes through Tables.load, which
+    // infers each table's schema once per session: a direct
+    // read.parquet of a lake table would pay the inference job per build
+    val lakeReadRe = """read\.parquet\(s"\$(dir|\{dir\})/""".r
+    assert(lakeReadRe.findFirstIn("""spark.read.parquet(s"$dir/orders.parquet")""").nonEmpty &&
+      lakeReadRe.findFirstIn("""s.read.parquet(s"${dir}/documents.parquet")""").nonEmpty)
+    val lakeReads = mainFiles
+      .filterNot(_.getName == "Tables.scala")
+      .filter(f => lakeReadRe.findFirstIn(read(f)).nonEmpty)
+      .map(_.getPath)
+    assert(lakeReads.isEmpty,
+      s"direct read.parquet of a test-lake table: $lakeReads — use Tables.load")
     // (2) every GraftSession.memo call site has a forcer below: a new
     // memo family must be added to the roster or this count fails
     // method name alone (r17): the old pattern keyed on the qualified
@@ -683,7 +695,9 @@ class RegistrySpec extends AnyFunSuite {
       "HierarchyQueries.jumpState [hierarchy_jump]" -> force("q_hierarchy_closure"),
       // r21: the K-growth-law corpus count (a SCALAR, not a plan — the
       // memo holds a boxed Long; no build windows to review)
-      "SimilarityQueries.embCount [emb_count] (scalar, no plan)" -> force("q_sim_knn_ivf"))
+      "SimilarityQueries.embCount [emb_count] (scalar, no plan)" -> force("q_sim_knn_ivf"),
+      // the per-table parquet schema (a StructType, not a plan)
+      "Tables.load [parquet_schema] (schema, no plan)" -> force("q_join_semi"))
     assert(memoSites === memoForcers.size,
       s"$memoSites GraftSession.memo call sites in src/main but " +
         s"${memoForcers.size} forcers here — a new memo family needs a " +

@@ -21,3 +21,10 @@ object StreamBridge {
     se.flatMap(s => Option(s.lastExecution)).map(_.executedPlan)
   }
 }
+
+/** Test-scope accessor for the listener bus (`private[spark]`): job and
+  * stage events reach the status store asynchronously, so a spec that
+  * counts jobs through `statusTracker` drains the bus first. */
+object ListenerBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
