@@ -30,6 +30,7 @@ object GraftSession {
       .config(confs(shufflePartitions))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    plans.GraftExtensions.registerOn(s)
     s
   }
 
@@ -41,8 +42,9 @@ object GraftSession {
     build(s"local[$cpus]", cpus, appName)
   }
 
-  /** Register every test-lake table as a temp view (plus graft functions on
-    * an existing session), enabling the full SQL surface:
+  /** Register every test-lake table as a temp view (plus graft functions
+    * and rules on an existing session), enabling the full SQL surface —
+    * `ORDER BY` included, which the [[plans.PresortBarrier]] serves:
     * {{{ spark.sql("SELECT haversine_km(...) FROM lineitem ...") }}} */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     plans.GraftExtensions.registerOn(spark)
@@ -73,7 +75,7 @@ object GraftSession {
     * [[ckpt]] hands every DataFrame's ANALYZED logical plan to the
     * auditor right before materializing it. ckpt is the repo-wide choke
     * point for memoized/iterative materialization (a source-level test
-    * bans bare `.localCheckpoint()` elsewhere), so an auditor installed
+    * bans `.localCheckpoint(` elsewhere), so an auditor installed
     * here sees every plan that would otherwise hide behind a checkpoint
     * leaf — the one class the declared-plan walks cannot reach. Residual
     * blind spot, documented: builds that materialize through a WRITE or
@@ -205,44 +207,6 @@ object GraftSession {
         df.checkpoint(eager)
       case None => df.localCheckpoint(eager)
     }
-  }
-
-  /** Materialize-then-sort presentation helper. A GLOBAL sort's
-    * RangePartitioner SAMPLES its child to pick partition bounds, so when
-    * nothing below the sort is a shuffle (narrow pipelines, broadcast
-    * joins, memo scans) the ENTIRE upstream executes twice — once for the
-    * sampler, once for the real shuffle. One local checkpoint before the
-    * sort makes both passes read materialized rows instead. Use where the
-    * upstream is expensive per row (decode, regex, folds, joins) and the
-    * sorted relation is the query's own output (which must materialize
-    * anyway); leave plain `orderBy` where the child is already an
-    * aggregate/shuffle (AQE reuses the materialized stage) or a bare
-    * cheap scan. Measured (sf1, local[32]): q_tokens_per_doc 10.95 →
-    * 6.5 s, q_token_ids 28.6 → 20.9 s — the double fold was the whole
-    * difference (OPTIMIZATION_r21.md §1).
-    *
-    * Always a LOCAL checkpoint, even when `spark.graft.checkpoint.dir`
-    * opts [[ckpt]] into reliable mode: the barrier only serves the
-    * sampler and the sort, so writing every query's whole output to
-    * durable storage would buy no recovery. The [[planAuditor]] still
-    * sees the plan, as it would through [[ckpt]]. */
-  def presentSorted(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame = {
-    planAuditor.foreach(_(df.queryExecution.analyzed))
-    // LAZY: the range-sampler's pass is the one that computes and
-    // materializes the blocks, the sort's shuffle re-reads them — two
-    // jobs total, upstream computed once. (An eager checkpoint costs a
-    // third job, which at sub-second query sizes erased the win.)
-    // DISK_ONLY: a corpus-sized sorted output (the tokenized corpus at the
-    // 100× tier is ~10 GB of blocks) stored at the default
-    // MEMORY_AND_DISK level OOMed the 32 g bench JVM — each bench pass
-    // constructs a fresh checkpoint and the old passes' blocks leave
-    // memory only when their RDDs are GC'd, so live copies accumulate in
-    // the storage pool. Disk blocks stream in and out without unroll
-    // memory, are bounded by disk (not heap), and at the small tiers ride
-    // the page cache — the sf0.1/sf1 wins re-measured unchanged.
-    df.localCheckpoint(eager = false,
-      storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      .orderBy(cols: _*)
   }
 
   private val cboLock = new Object

@@ -14,9 +14,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     analytics.CoreQueries.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * first installs graft's functions and rules on the caller's session
+    * (idempotent), so a session graft did not build plans the same way. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Registry.all.map(q => q.name -> q.fn).toMap
+    Registry.all.map(q => q.name -> { (s: SparkSession, dir: String) =>
+      plans.GraftExtensions.registerOn(s)
+      q.fn(s, dir)
+    }).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -190,7 +190,7 @@ object CoreQueries {
         Tables.orders(s, dir).filter($"o_totalprice" > 400000),
         $"c_custkey" === $"o_custkey", "left_semi")
       .select($"c_custkey", $"c_name", $"c_mktsegment")
-      .transform(graft.GraftSession.presentSorted(_, $"c_custkey"))
+      .orderBy($"c_custkey")
   }
 
   val joinSemiSql: String =
@@ -206,7 +206,7 @@ object CoreQueries {
       .join(Tables.orders(s, dir).filter($"o_totalprice" > 300000),
         $"c_custkey" === $"o_custkey", "left_anti")
       .select($"c_custkey", $"c_name", $"c_acctbal")
-      .transform(graft.GraftSession.presentSorted(_, $"c_custkey"))
+      .orderBy($"c_custkey")
   }
 
   val joinAntiSql: String =
@@ -563,7 +563,7 @@ object CoreQueries {
         split($"p_name", " ").getItem(1).as("second_word"),
         length($"p_name").cast(LongType).as("name_len"),
         trim(concat(lit("  "), $"p_brand", lit("  "))).as("brand_trim"))
-      .transform(graft.GraftSession.presentSorted(_, $"p_partkey"))
+      .orderBy($"p_partkey")
   }
 
   val stringSuiteSql: String =
@@ -669,7 +669,7 @@ object CoreQueries {
         least($"o_custkey" % 7, $"o_orderkey" % 5).as("l"),
         ($"o_orderpriority" === "1-URGENT" || $"o_orderpriority" === "2-HIGH")
           .as("is_rush"))
-      .transform(graft.GraftSession.presentSorted(_, $"o_orderkey"))
+      .orderBy($"o_orderkey")
   }
 
   val conditionalSuiteSql: String =

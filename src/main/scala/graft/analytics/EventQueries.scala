@@ -325,7 +325,7 @@ object EventQueries {
       .filter($"event_id" < 100)
       .select($"event_id",
         to_json(struct($"user_id", $"event_type")).as("js"))
-      .transform(graft.GraftSession.presentSorted(_, $"event_id"))
+      .orderBy($"event_id")
   }
 
   val jsonSerializeSql: String =

@@ -95,7 +95,7 @@ object SurfaceQueries {
           lit(0L), (a, x) => a + x).as("top3_sum"),
         aggregate(zip_with($"qv", reverse($"qv"), (x, y) => x * y),
           lit(0L), (a, x) => a + x).as("rev_dot"))
-      .transform(graft.GraftSession.presentSorted(_, $"vec_id"))
+      .orderBy($"vec_id")
   }
 
   val arraySuiteSql: String =

@@ -1060,7 +1060,7 @@ object MultimodalQueries {
           hexAll.substr(((byteLen / 2).cast(LongType) * 2 + 1).cast(IntegerType), lit(2)),
           hexAll.substr(((byteLen * 3 / 4).cast(LongType) * 2 + 1).cast(IntegerType), lit(2)))
           .as("frame_sample"))
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   val mediaMetaSql: String =
@@ -1104,7 +1104,7 @@ object MultimodalQueries {
             .cast("int")): _*).as("nib_hist"),
         expr("concat_ws('', transform(sequence(0, 15), k -> substring(hx, k*16+1, 2)))")
           .as("stride_sig"))
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   val mediaFeaturesSql: String =
@@ -1212,7 +1212,7 @@ object MultimodalQueries {
     MediaDecode.decodePartitioned(media)
       .toDF()
       .select($"doc_id", $"magic_hex", $"byte_len", $"width", $"height")
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   /** Oracle: the expected metadata as pure formula — magic bytes and fixed
@@ -1280,7 +1280,7 @@ object MultimodalQueries {
 
   def mediaPhashRaster(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    rasterHashes(s, dir, 60L).transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+    rasterHashes(s, dir, 60L).orderBy($"doc_id")
   }
 
   /** Oracle: the dHash bit condition as formula. Pixel (x, y) of doc d is
@@ -1489,7 +1489,7 @@ object MultimodalQueries {
           t.flatten.map(_.toLong).sum / 16)
       }
     }.toDF()
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   /** Oracle: thumbnail pixel (i, j) of doc d is the generator formula
@@ -1556,7 +1556,7 @@ object MultimodalQueries {
           peak, sq / n, zc)
       }
     }.toDF()
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   /** Oracle: sample t of doc d is ((t·2917 + d·5081) mod 65536) − 32768;
@@ -1609,7 +1609,7 @@ object MultimodalQueries {
         VideoMeta(id, ts, durU, durU * 1000 / ts, nTr, mb, msum)
       }
     }.toDF()
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   /** Oracle: every feature restated from the fixture formulas (timescale
@@ -1670,7 +1670,7 @@ object MultimodalQueries {
           .map { case (trk, n, sb, du) =>
             TrackSample(id, trk, n, sb, du, mb, msum) }
       }
-    }.toDF().transform(graft.GraftSession.presentSorted(_, $"doc_id", $"track"))
+    }.toDF().orderBy($"doc_id", $"track")
   }
 
   /** Oracle: tracks 0..doc_id%3, n = 3+(doc_id+track)%5, sample k is
@@ -1735,7 +1735,7 @@ object MultimodalQueries {
           mean(frames.head), mean(frames(nf / 2)), mean(frames(nf - 1)))
       }
     }.toDF()
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   /** Oracle: frame f's pixel (x, y) of doc d is

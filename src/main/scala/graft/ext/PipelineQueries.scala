@@ -995,7 +995,7 @@ object PipelineQueries {
           .cast("long").as("chunk_len"),
         md5(expr(s"substring(text, chunk_idx * $STRIDE + 1, $CHUNK)")
           .cast("binary")).as("chunk_md5"))
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id", $"chunk_idx"))
+      .orderBy($"doc_id", $"chunk_idx")
   }
 
   val chunkDocumentsSql: String =

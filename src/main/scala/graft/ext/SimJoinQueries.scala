@@ -235,7 +235,7 @@ object SimJoinQueries {
       .filter($"n_inter" * CDEN >= $"a_n" * CNUM)
       .select($"a_id", $"b_id", $"n_inter", $"a_n", $"b_n",
         ($"n_inter".cast(DoubleType) / $"a_n").as("containment"))
-      .transform(graft.GraftSession.presentSorted(_, $"a_id", $"b_id"))
+      .orderBy($"a_id", $"b_id")
   }
 
   val containJoinSql: String =

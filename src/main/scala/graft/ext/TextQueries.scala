@@ -227,7 +227,7 @@ object TextQueries {
       .filter($"doc_id" < 20)
       .select($"doc_id", posexplode(split($"text", " ")))
       .select($"doc_id", $"pos".cast(LongType).as("pos"), $"col".as("tok"))
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id", $"pos"))
+      .orderBy($"doc_id", $"pos")
   }
 
   val tokenPositionsSql: String =
@@ -271,7 +271,7 @@ object TextQueries {
           .otherwise(array(md5($"norm"))).as("hashes"))
       .select($"doc_id",
         concat_ws("", slice(array_sort($"hashes"), 1, 4)).as("fingerprint"))
-      .transform(graft.GraftSession.presentSorted(_, $"doc_id"))
+      .orderBy($"doc_id")
   }
 
   val textFingerprintSql: String =
@@ -967,18 +967,8 @@ object TextQueries {
     * unbounded feed with zero keyed state. */
   def tokensPerDoc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // r21: the presentation sort is a GLOBAL sort whose RangePartitioner
-    // SAMPLES its child to pick bounds — and this child is the whole
-    // narrow merge-fold pipeline with no exchange in between, so without
-    // a materialization barrier the corpus-grain fold executes TWICE
-    // (measured at sf1/local[32]: 10.95 s with the fold at 5.37 s —
-    // exactly 2×; ckpt'd: 6.5 s). One localCheckpoint of the doc-grain
-    // counts (500·K rows) makes the sample pass and the shuffle both
-    // read the materialized rows. Same move as q_graph_kcore's per-round
-    // ckpt; executes inside the bench's timed region.
-    graft.GraftSession.presentSorted(
-      tokensPerDocOf(Tables.spread(Tables.documents(s, dir)), bpeMergeTable(s, dir)),
-      $"doc_id")
+    tokensPerDocOf(Tables.spread(Tables.documents(s, dir)), bpeMergeTable(s, dir))
+      .orderBy($"doc_id")
   }
 
   /** Shared core of [[tokensPerDoc]] and the streaming twin: works on any
@@ -1191,18 +1181,9 @@ object TextQueries {
     * before the presentation sort. */
   def tokenIds(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // r21: same double-execution fix as [[tokensPerDoc]] — the global
-    // presentation sort's range-sampling pass would re-run the entire
-    // fold + posexplode + vocab join (no exchange below the Sort).
-    // Measured at sf1/local[32]: 28.6 s → 20.9 s with the pre-sort
-    // localCheckpoint (the tokenized corpus materializes once, then the
-    // sampler and the shuffle read blocks). The artifact write path
-    // ([[tokenIdsArtifactFrame]]) keeps its zero-exchange plan — it has
-    // no global sort, so nothing samples there.
-    graft.GraftSession.presentSorted(
-      tokenIdsOf(Tables.spread(Tables.documents(s, dir)),
-        bpeMergeTable(s, dir), bpeVocab(s, dir)),
-      $"doc_id", $"pos")
+    tokenIdsOf(Tables.spread(Tables.documents(s, dir)),
+      bpeMergeTable(s, dir), bpeVocab(s, dir))
+      .orderBy($"doc_id", $"pos")
   }
 
   /** X4r-c — the PRODUCTION write path of the tokenized corpus: lands

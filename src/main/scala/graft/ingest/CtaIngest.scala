@@ -183,27 +183,19 @@ object CtaIngest {
     *
     * Scale: the estimate reads only filesystem metadata (content summary)
     * plus one shuffle-free count of the raw day — both
-    * O(metadata)/O(scan); the write itself is the same partitioned
-    * landing as [[compact]]. IngestSpec pins the derived cap's arithmetic
-    * and that the landed file count per partition is ceil(rows/cap). */
+    * O(metadata)/O(scan); the write itself is [[compact]] with the derived
+    * cap. IngestSpec pins the derived cap's arithmetic and that the landed
+    * file count per partition is ceil(rows/cap). */
   def compactSized(spark: SparkSession, rawDayPath: String, outPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       parquetToRawRatio: Double = 0.25): Long = {
-    val raw = spark.read.schema(CtaSchemas.rawRecord).json(rawDayPath)
-    val deduped = raw.dropDuplicates(Seq("train_id", "current_timestamp"))
-    val fs = new org.apache.hadoop.fs.Path(rawDayPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val inputBytes = fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(rawDayPath)).getLength
-    val nRawRecords = raw.count()
+    val dir = new org.apache.hadoop.fs.Path(rawDayPath)
+    val inputBytes = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(dir).getLength
+    val nRawRecords = spark.read.schema(CtaSchemas.rawRecord).json(rawDayPath).count()
     val cap = targetRecordsPerFile(inputBytes, math.max(1L, nRawRecords),
       targetFileBytes, parquetToRawRatio)
-    deduped
-      .withColumn("load_date", to_date(col("current_timestamp").cast(TimestampType)))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", cap)
-      .partitionBy("load_date")
-      .parquet(outPath)
+    compact(spark, rawDayPath, outPath, cap)
     cap
   }
 

@@ -78,7 +78,7 @@ object IngestQueries {
       epochUs($"next_station_arrival_at").as("arrival_us"),
       $"is_approaching_station", $"is_train_delayed",
       $"lat", $"lon", $"heading")
-      .transform(graft.GraftSession.presentSorted(_, $"train_id"))
+      .orderBy($"train_id")
   }
 
   private val oracleTrains: String =
@@ -256,7 +256,7 @@ object IngestQueries {
         $"lat", $"lon", lit(41.8781), lit(-87.6298)), 3).as("dist_km"),
       round(expr("haversine_km(lat, lon, 41.8781, -87.6298)"), 3)
         .as("dist_km_sql"))
-      .transform(graft.GraftSession.presentSorted(_, $"train_id"))
+      .orderBy($"train_id")
   }
 
   val ingestGeoSql: String = {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * For sessions we don't construct (the driver owns the session in the
   * Verify/Bench contract), [[GraftExtensions.registerOn]] installs the same
-  * functions on an existing session's registry.
+  * functions, plus the [[PresortBarrier]] rule, on an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -47,10 +47,19 @@ object GraftExtensions {
     fn("rolling_hash64", classOf[RollingHash64], "rolling_hash64(string, window int)", 2)(
       a => RollingHash64(a(0), a(1))))
 
-  /** Install on an already-built session (idempotent). */
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Install the functions and the [[PresortBarrier]] rule (through
+    * `experimental.extraOptimizations`, which works on a live session) on
+    * an already-built session, idempotently. */
+  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, builder, "built-in")
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
+    val x = spark.experimental
+    x.synchronized {
+      if (!x.extraOptimizations.contains(PresortBarrier))
+        x.extraOptimizations = x.extraOptimizations :+ PresortBarrier
+    }
+  }
 }

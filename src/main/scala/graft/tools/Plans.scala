@@ -2,9 +2,7 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Dev tool: physical-plan inspection of declared queries. Not part of the
@@ -18,10 +16,6 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   *  - `audit`: one line of operator counts that matter at 100 TB —
   *    exchanges, join strategies, nested-loop/cartesian fallbacks,
   *    generators, windows — and whether filters reached the scan.
-  *  - `sort-sample` (AQE off): every global sort whose range exchange
-  *    samples an exchange-free child. The RangePartitioner's sample pass
-  *    then re-executes the whole upstream down to the scans, so the query
-  *    pays its compute twice; the operator census ranks the offenders.
   *  - `window-keys` (AQE off): every physical window's partition keys —
   *    the inventory RegistrySpec's bounded-window-key dictionary is built
   *    from.
@@ -33,7 +27,6 @@ object Plans {
   private val predicates: Map[String, (Boolean, (String, DataFrame) => Seq[String])] = Map(
     "explain" -> (false, explain),
     "audit" -> (false, audit),
-    "sort-sample" -> (true, sortSample),
     "window-keys" -> (true, windowKeys))
 
   def main(args: Array[String]): Unit = {
@@ -76,20 +69,6 @@ object Plans {
       plan.contains("PushedFilters: [G")) "pushed" else ""
     Seq(f"$name%-28s $flags $pushed")
   }
-
-  private def sortSample(name: String, df: DataFrame): Seq[String] =
-    df.queryExecution.executedPlan.collect {
-      case e: ShuffleExchangeLike
-        if e.outputPartitioning.isInstanceOf[RangePartitioning] &&
-          e.child.collect { case x: ShuffleExchangeLike => x }.isEmpty =>
-        val below = e.child
-        def cnt(p: SparkPlan => Boolean) = below.collect { case x if p(x) => x }.length
-        val gens = cnt(_.nodeName == "Generate")
-        val joins = cnt(_.nodeName.contains("Join"))
-        val scans = cnt(_.nodeName.toLowerCase.contains("scan"))
-        val ops = cnt(_ => true)
-        f"$name%-28s sort-over-no-exchange ops=$ops gens=$gens joins=$joins scans=$scans"
-    }
 
   private def windowKeys(name: String, df: DataFrame): Seq[String] =
     df.queryExecution.executedPlan.collect {

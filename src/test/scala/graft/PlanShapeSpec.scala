@@ -595,4 +595,139 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected the pruned single-leaf ReadSchema, got: $scan")
     assert(q.collect().map(_.getLong(0)).sum === (0L until 100L).map(_ * 3).sum)
   }
+
+  // --- PresortBarrier: where the pre-sort shuffle goes, and where not ---
+
+  /** Every node of an executed plan, through AQE wrappers and stages. */
+  private def nodesOf(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodesOf(a.executedPlan)
+      case q: QueryStageExec => nodesOf(q.plan)
+      case _ => p.children.flatMap(nodesOf)
+    })
+  }
+
+  /** For each range exchange of `df`'s AQE final plan (run first): is its
+    * child a materialized round-robin shuffle stage? */
+  private def barriersBelowRange(df: org.apache.spark.sql.DataFrame): Seq[Boolean] = {
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    df.collect()
+    nodesOf(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        val stage = e.child match {
+          case r: AQEShuffleReadExec => r.child
+          case c => c
+        }
+        stage match {
+          case q: ShuffleQueryStageExec => q.plan match {
+            case rr: ShuffleExchangeExec =>
+              rr.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+            case _ => false
+          }
+          case _ => false
+        }
+    }
+  }
+
+  private def barrierNodes(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    p.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+        if r.partitionExpressions.isEmpty && r.optNumPartitions.isEmpty => r
+    }.size
+
+  test("pre-sort barrier: a round-robin stage sits directly below the range exchange") {
+    graft.plans.GraftExtensions.registerOn(spark)
+    // narrow fold + broadcast join; posexplode; JSON explode over a local
+    // relation; typed mapPartitions decode — each child the sampler
+    // would otherwise run a second time
+    Seq("q_tokens_per_doc", "q_token_positions", "q_ingest_normalize",
+        "q_multimodal_dims").foreach { n =>
+      val got = barriersBelowRange(SparkEntry.queries(n)(spark, sf))
+      assert(got === Seq(true), s"$n: range exchanges over a barrier stage: $got")
+    }
+  }
+
+  test("pre-sort barrier: none over an exchange, a limit, a memo scan, a cheap child or a stream") {
+    import org.apache.spark.sql.functions._
+    graft.plans.GraftExtensions.registerOn(spark)
+    // the sort's child is an aggregate: AQE already reads its stage
+    val agg = SparkEntry.queries("q_agg_grouping_sets")(spark, sf)
+    assert(barrierNodes(agg.queryExecution.optimizedPlan) === 0)
+    assert(!barriersBelowRange(agg).contains(true))
+    // a memo scan: the child is a checkpoint leaf under projections/filters
+    val lsh = SparkEntry.queries("q_dedup_minhash_lsh")(spark, sf)
+    assert(barrierNodes(lsh.queryExecution.optimizedPlan) === 0)
+    // cheap children: codegen'd built-ins over a filtered scan, so the
+    // sampler re-reads the scan rather than the rows being shuffled
+    Seq("q_multimodal_meta", "q_conditional_suite").foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sf)
+      assert(barrierNodes(df.queryExecution.optimizedPlan) === 0, n)
+    }
+    // a child that is one partition (a top-k crossed with a broadcast
+    // total) plans no range exchange, so it gets no barrier either
+    val hh = SparkEntry.queries("q_text_heavyhitters")(spark, sf)
+    assert(barrierNodes(hh.queryExecution.optimizedPlan) === 0)
+    assert(!hh.queryExecution.executedPlan.toString.contains("rangepartitioning"))
+    // the same heavy child fires without a limit, not under one
+    // (TakeOrderedAndProject has no range sampler)
+    val heavy = Tables.documents(spark, sf)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+    assert(barrierNodes(heavy.orderBy("w").queryExecution.optimizedPlan) === 1)
+    val top = heavy.orderBy("w").limit(5)
+    assert(barrierNodes(top.queryExecution.optimizedPlan) === 0)
+    assert(top.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"))
+    // a streaming plan is left alone
+    val stream = spark.readStream.format("rate").load()
+      .select(explode(array(col("value"), col("value"))).as("v")).orderBy("v")
+    assert(stream.isStreaming)
+    assert(barrierNodes(graft.plans.PresortBarrier(stream.queryExecution.analyzed)) === 0)
+    // idempotent: installed twice, re-optimized, still exactly one
+    graft.plans.GraftExtensions.registerOn(spark)
+    assert(spark.experimental.extraOptimizations
+      .count(_ == graft.plans.PresortBarrier) === 1)
+    val once = SparkEntry.queries("q_tokens_per_doc")(spark, sf).queryExecution.optimizedPlan
+    assert(barrierNodes(once) === 1)
+    assert(barrierNodes(graft.plans.PresortBarrier(graft.plans.PresortBarrier(once))) === 1)
+  }
+
+  test("pre-sort barrier: the sorted upstream reads its input once") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-presort").toString
+    val nRows = 2000L
+    spark.range(nRows).repartition(2).write.mode("overwrite").parquet(dir)
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) === 2)
+    // records read by every task of one action, listener bus drained
+    def recordsRead(s: org.apache.spark.sql.SparkSession): Long = {
+      val n = new java.util.concurrent.atomic.AtomicLong
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.recordsRead))
+      }
+      val sc = s.sparkContext
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        // a heavy narrow pipeline: higher-order fold + explode, no exchange
+        val rows = s.read.parquet(dir)
+          .select(col("id"), explode(sequence(lit(1), lit(3))).as("k"))
+          .select(col("id"), col("k"),
+            aggregate(sequence(lit(1L), col("id") % 50 + 1), lit(0L), (a, x) => a + x).as("f"))
+          .orderBy(col("f"), col("id"), col("k"))
+          .collect()
+        assert(rows.length === nRows * 3)
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+        n.get
+      } finally sc.removeSparkListener(l)
+    }
+    // a fresh session carries no extra optimizer rules
+    val bare = spark.newSession()
+    assert(!bare.experimental.extraOptimizations.contains(graft.plans.PresortBarrier))
+    assert(recordsRead(bare) === 2 * nRows, "without the rule the sampler re-reads the input")
+    graft.plans.GraftExtensions.registerOn(spark)
+    assert(recordsRead(spark) === nRows)
+  }
 }

@@ -285,9 +285,10 @@ class RegistrySpec extends AnyFunSuite {
       "q_ann_pruned_recall" -> "cluster-census dictionary",
       // ranks the trained vocabulary (vocab-bounded, ~|merges|+alphabet)
       "q_bpe_vocab" -> "vocabulary",
-      // (q_token_ids left this map in r21: its merge-table window now
-      // sits inside the pre-sort localCheckpoint — the ckpt planAuditor
-      // guard below still walks that plan)
+      // the encoder's vocab: q_bpe_vocab's id ranking over the character
+      // alphabet, extended by the merge table's rounds (vocab-bounded);
+      // visible again since the pre-sort checkpoint leaf is gone
+      "q_token_ids" -> "merge table",
       // the drift audit's running-overlap window runs over the
       // BpeTrainRounds-row merge comparison (merge-table bounded)
       "q_tokenizer_drift" -> "merge table",
@@ -614,14 +615,26 @@ class RegistrySpec extends AnyFunSuite {
     def read(f: java.io.File): String = new String(
       java.nio.file.Files.readAllBytes(f.toPath),
       java.nio.charset.StandardCharsets.UTF_8)
-    // (1) every materialization goes through ckpt: bare localCheckpoint
-    // anywhere else would reopen the blind spot this test closes
-    val bareCkpt = mainFiles
-      .filterNot(_.getName == "GraftSession.scala")
-      .filter(f => read(f).contains(".localCheckpoint()"))
-      .map(_.getPath)
+    // code only: line comments and scaladoc lines stripped, so prose
+    // mentions of a call don't count
+    def code(f: java.io.File): String = read(f).linesIterator
+      .map(_.replaceAll("//.*$", ""))
+      .filterNot(_.trim.startsWith("*"))
+      .mkString("\n")
+    // (1) every materialization goes through ckpt: a localCheckpoint call
+    // anywhere else, in any spelling, would reopen the blind spot this
+    // test closes. GraftSession.scala keeps exactly one: ckpt's own.
+    val ckptRe = """\.localCheckpoint\(""".r
+    assert(Seq("df.localCheckpoint()", "df.localCheckpoint(false)",
+        "df.localCheckpoint(eager = false,\n  storageLevel = DISK_ONLY)")
+      .forall(ckptRe.findFirstIn(_).nonEmpty),
+      "self-check: the pattern must catch every localCheckpoint spelling")
+    val bareCkpt = mainFiles.filter { f =>
+      ckptRe.findAllIn(code(f)).size >
+        (if (f.getName == "GraftSession.scala") 1 else 0)
+    }.map(_.getPath)
     assert(bareCkpt.isEmpty,
-      s"bare .localCheckpoint() outside GraftSession.ckpt: $bareCkpt — " +
+      s"localCheckpoint call outside GraftSession.ckpt: $bareCkpt — " +
         "route it through GraftSession.ckpt so the plan auditor sees it")
     // (1b) one session factory: every main gets its session from
     // GraftSession.build, so confs and extensions cannot drift per main
@@ -663,10 +676,7 @@ class RegistrySpec extends AnyFunSuite {
     // that escapes the census.
     val memoCallRe = """\bmemo\(""".r
     val memoSites = mainFiles.map(f =>
-      memoCallRe.findAllIn(read(f)
-        // strip line comments and scaladoc so prose mentions don't count
-        .linesIterator.map(_.replaceAll("//.*$", ""))
-        .filterNot(_.trim.startsWith("*"))
+      memoCallRe.findAllIn(code(f).linesIterator
         .filterNot(_.matches(""".*\bdef\s+memo\b.*"""))
         .mkString("\n")).size).sum
     // one forcer per memo SOURCE SITE (some queries force several sites)

@@ -66,9 +66,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("presentSorted stays a local checkpoint under spark.graft.checkpoint.dir") {
+  test("the pre-sort barrier writes no reliable checkpoint files") {
     // reliable mode is for iterative rounds; a presentation sort's
-    // barrier must not write the query's whole output to durable storage
+    // barrier (a shuffle placed by PresortBarrier) must not write the
+    // query's whole output to durable storage
     def files(d: String): Long = {
       val p = java.nio.file.Paths.get(d.stripPrefix("file:"))
       if (!java.nio.file.Files.exists(p)) 0L
@@ -86,7 +87,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     try {
       val got = q(spark, sf).collect().toSeq
       assert(got === want)
-      assert(files(dir) === 0L, s"presentSorted wrote reliable checkpoint files under $dir")
+      assert(files(dir) === 0L, s"the pre-sort barrier wrote reliable checkpoint files under $dir")
       assert(ctxDir.map(files).getOrElse(0L) === before)
       assert(spark.sparkContext.getCheckpointDir === ctxDir)
     } finally {
@@ -96,6 +97,21 @@ class ScaleOpsSpec extends AnyFunSuite {
         .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
     }
+  }
+
+  test("repeated pre-sort barrier runs retain no RDD blocks") {
+    // the barrier is a shuffle stage, not a checkpoint: its files belong
+    // to the plan and go with it, so a long-lived session running the
+    // same heavy sorted query again and again holds no more storage than
+    // its memoized builds (here: the BPE merge table)
+    val q = SparkEntry.queries("q_tokens_per_doc")
+    val want = q(spark, sf).collect().toSeq
+    def held: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val memos = held
+    (1 to 10).foreach(_ => assert(q(spark, sf).collect().toSeq === want))
+    assert(held -- memos === Set.empty[Int],
+      "each run left RDD blocks behind: " +
+        spark.sparkContext.getRDDStorageInfo.filterNot(i => memos(i.id)).mkString("; "))
   }
 
   test("salted join agrees with direct join") {

@@ -1,12 +1,11 @@
 package graft
 
-import graft.functions.BottomK
 import graft.sources.{Backoff, RestPoller}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Retry-contract tests (mirroring the reference's pinned retry behavior),
-  * the BottomK typed aggregator, and partitioned-lake pruning. */
+/** Retry-contract tests (mirroring the reference's pinned retry behavior)
+  * and partitioned-lake pruning. */
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf0001
@@ -46,20 +45,6 @@ class SourcesSpec extends AnyFunSuite {
   test("url matches the reference's query-string shape") {
     assert(RestPoller.url("https://api", "KEY", "Org") ===
       "https://api/ttpositions.aspx?key=KEY&rt=Org&outputType=JSON")
-  }
-
-  test("BottomK aggregator equals sort-based bottom-k per group") {
-    val udafCol = udaf(BottomK(4))
-    val got = Tables.documents(spark, sf)
-      .select($"lang", md5($"text").as("h"))
-      .groupBy($"lang").agg(udafCol($"h").as("bk"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    val expected = Tables.documents(spark, sf)
-      .select($"lang", md5($"text").as("h"))
-      .groupBy($"lang").agg(slice(array_sort(collect_set($"h")), 1, 4).as("bk"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    assert(got.keySet === expected.keySet)
-    got.foreach { case (k, v) => assert(v === expected(k)) }
   }
 
   test("partitioned lake write prunes partitions on read") {
