@@ -252,9 +252,12 @@ object SimilarityQueries {
     * dir) — verdict r20 item 6: `knnIvf` ran a fresh `embeddings.count()`
     * action per query build (parquet-metadata cheap, but a driver
     * round-trip per invocation). The count is a property of the lake, so
-    * it rides the session memo like the other trained statics. */
+    * it rides the session memo like the other trained statics, keyed on
+    * the `embeddings` content fingerprint so a rewritten table is counted
+    * afresh. */
   private[graft] def embCount(s: SparkSession, dir: String): Long =
-    graft.GraftSession.memo(s, s"emb_count|$dir")(
+    graft.GraftSession.memo(s,
+        "emb_count|" + graft.GraftSession.contentKey(dir, Seq("embeddings")))(
       java.lang.Long.valueOf(Tables.embeddings(s, dir).count())).longValue
 
   /** DuckDB mirror of [[ivfK]] over a count expression. */

@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   *
   *  - `explain`: the formatted physical plan.
   *  - `audit`: one line of operator counts that matter at 100 TB —
-  *    exchanges, join strategies, nested-loop/cartesian fallbacks,
+  *    exchanges (round-robin ones apart), join strategies,
+  *    nested-loop/cartesian fallbacks,
   *    generators, windows — and whether filters reached the scan.
   *  - `window-keys` (AQE off): every physical window's partition keys —
   *    the inventory RegistrySpec's bounded-window-key dictionary is built
@@ -51,11 +52,15 @@ object Plans {
   private def explain(name: String, df: DataFrame): Seq[String] =
     Seq(s"===== $name =====", df.queryExecution.explainString(FormattedMode))
 
-  private def audit(name: String, df: DataFrame): Seq[String] = {
+  /** `xchg` counts hash, range and single-partition exchanges; `rr`
+    * counts the round-robin ones (`Tables.spread`, the `PresortBarrier`)
+    * apart, so audit lines from before `rr` existed still compare. */
+  private[graft] def audit(name: String, df: DataFrame): Seq[String] = {
     val plan = df.queryExecution.executedPlan.toString
     def n(p: String) = p.r.findAllIn(plan).length
     val flags = Seq(
       "xchg" -> n("Exchange (?:hash|range|Single)"),
+      "rr" -> n("Exchange RoundRobinPartitioning"),
       "bcast" -> n("BroadcastExchange"),
       "bhj" -> n("BroadcastHashJoin"),
       "smj" -> n("SortMergeJoin"),

@@ -730,4 +730,13 @@ class PlanShapeSpec extends AnyFunSuite {
     graft.plans.GraftExtensions.registerOn(spark)
     assert(recordsRead(spark) === nRows)
   }
+
+  test("Plans audit counts round-robin exchanges apart from the others") {
+    val line = graft.tools.Plans.audit("q_tokens_per_doc",
+      SparkEntry.queries("q_tokens_per_doc")(spark, sf)).mkString
+    // the document spread and the pre-sort barrier are round-robin
+    val rr = """\brr=(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toInt)
+    assert(rr.exists(_ >= 1), line)
+    assert("""\bxchg=\d+""".r.findFirstIn(line).nonEmpty, line)
+  }
 }

@@ -706,6 +706,8 @@ class RegistrySpec extends AnyFunSuite {
       // r21: the K-growth-law corpus count (a SCALAR, not a plan — the
       // memo holds a boxed Long; no build windows to review)
       "SimilarityQueries.embCount [emb_count] (scalar, no plan)" -> force("q_sim_knn_ivf"),
+      // the collected hot-span list (an Array[String], not a plan)
+      "PipelineQueries.spanScrub [scrub_hot] (collected array, no plan)" -> force("q_span_scrub"),
       // the per-table parquet schema (a StructType, not a plan)
       "Tables.load [parquet_schema] (schema, no plan)" -> force("q_join_semi"))
     assert(memoSites === memoForcers.size,
@@ -773,6 +775,39 @@ class RegistrySpec extends AnyFunSuite {
     assert(hashOffending.isEmpty,
       s"memoized build windows key on hash/fingerprint-derived columns: " +
         s"$hashOffending — review in hashOriginReviewed or rewrite")
+  }
+
+  test("a second build launches no Spark job outside the build-job census") {
+    // queries whose build still runs a job on every call, each with why;
+    // the open list for later memoization. A query missing here whose
+    // second build launches a job is a hidden per-build cost.
+    val buildJobs: Map[String, String] = Map(
+      "q_ann_delete_eval" -> "each IVF leg's centSrc.count() sizes its K",
+      "q_bpe_encode" -> "applyMerges checkpoints every BPE fold round",
+      "q_dedup_chain_drift" -> "chainStarScored checkpoints the members' shingle arrays",
+      "q_dedup_modal_agreement" -> "chainStarScored's and the quantized embeddings' checkpoints",
+      "q_entity_resolution" -> "clusterLabels checkpoints every connected-components round",
+      "q_epoch_budget" -> "checkpoints the per-stream token weights",
+      "q_geo_density" -> "clusterLabels over the dense-cell pairs",
+      "q_graph_kcore" -> "checkpoints each peel round's survivors and edges",
+      "q_hierarchy_rollup" -> "checkpointed levels and the max-depth head()",
+      "q_join_dpp_pruned" -> "read.parquet infers the memoized fact copy's schema",
+      "q_pipeline_corpus" -> "Tables.spread's partition probe runs the dedup join's shuffles",
+      "q_pipeline_daily" -> "lands fixture JSON and compacts it into a temp lake",
+      "q_rfm_segments" -> "checkpoints the customer-grain aggregate",
+      "q_train_readiness" -> "Tables.spread's probe, then the waterfill base checkpoint")
+    assert(!buildJobs.contains("q_span_scrub"))
+    val sf = TestSpark.sf0001
+    val launched = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, q) =>
+      q(spark, sf)
+      val (_, jobs) = TestSpark.jobsOf(q(spark, sf))
+      if (jobs > 0) Some(n -> jobs) else None
+    }.toMap
+    val hidden = launched -- buildJobs.keySet
+    assert(hidden.isEmpty,
+      s"second builds launching Spark jobs outside the census: $hidden")
+    val stale = buildJobs.keySet -- launched.keySet
+    assert(stale.isEmpty, s"census entries whose second build launches no job: $stale")
   }
 
   test("packed argmax stride: id bound holds and the pack stays inside a long") {

@@ -2,32 +2,25 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.types.{DoubleType, TimestampNTZType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables.load` infers each table's parquet schema once per session, and
   * `GraftSession.contentKey` — the staleness guard of that memo — sees
-  * the real files of any Hadoop path. */
+  * the real files of any Hadoop path. The other content-keyed memos (the
+  * embeddings count, `q_span_scrub`'s hot-span set) follow a table
+  * rewritten within the session the same way. */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** Spark jobs `body` launches on this thread. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    val a = try body finally sc.clearJobGroup()
-    ListenerBridge.drain(sc)
-    (a, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
+  import TestSpark.jobsOf
 
   private def freshDir(): String =
     Files.createTempDirectory("graft-tables-spec").toFile.getAbsolutePath
 
-  private def writeT(dir: String, sql: String): Unit =
-    spark.sql(sql).write.mode("overwrite").parquet(s"$dir/t.parquet")
+  private def writeT(dir: String, sql: String, table: String = "t"): Unit =
+    spark.sql(sql).write.mode("overwrite").parquet(s"$dir/$table.parquet")
 
   test("a second Tables.load of one table launches no Spark job") {
     val dir = freshDir()
@@ -105,5 +98,44 @@ class TablesSpec extends AnyFunSuite {
     // and a table that is not there fingerprints without throwing
     assert(GraftSession.contentKey(uri, Seq("absent")) ===
       GraftSession.contentKey(uri, Seq("absent")))
+  }
+
+  test("a rewritten embeddings table is counted afresh by embCount") {
+    val dir = freshDir()
+    writeT(dir, "SELECT id AS vec_id FROM range(10)", "embeddings")
+    assert(ext.SimilarityQueries.embCount(spark, dir) === 10L)
+    writeT(dir, "SELECT id AS vec_id FROM range(17)", "embeddings")
+    assert(ext.SimilarityQueries.embCount(spark, dir) === 17L,
+      "the IVF K growth law must see the rewritten table's count")
+  }
+
+  test("a second q_span_scrub build launches no Spark job") {
+    val scrub = SparkEntry.queries("q_span_scrub")
+    scrub(spark, TestSpark.sf0001)
+    val (_, jobs) = jobsOf(scrub(spark, TestSpark.sf0001))
+    assert(jobs === 0, "the hot-span set is collected once per documents version")
+  }
+
+  test("a rewritten documents table re-derives q_span_scrub's hot set") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val dir = freshDir()
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    docs.write.parquet(s"$dir/documents.parquet")
+    val scrub = SparkEntry.queries("q_span_scrub")
+    assert(jobsOf(scrub(spark, dir))._2 >= 1)
+    assert(jobsOf(scrub(spark, dir))._2 === 0)
+    // the new first span of every document is hot in the new version and
+    // absent from the old one's hot set
+    docs.withColumn("text", concat(lit("zq zq zq "), col("text")))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // the rewritten table's schema inference runs apart from the build
+    Tables.documents(spark, dir)
+    val (df, jobs) = jobsOf(scrub(spark, dir))
+    assert(jobs >= 1, "a rewritten documents table must collect its hot set again")
+    val rewritten = df.collect().toSeq
+    assert(rewritten.forall(r =>
+      r.getAs[Long]("docs_touched") == r.getAs[Long]("n_docs")), rewritten)
+    GraftSession.clearMemos(spark)
+    assert(rewritten === scrub(spark, dir).collect().toSeq)
   }
 }

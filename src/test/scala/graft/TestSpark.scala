@@ -23,4 +23,16 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The value of `body` and the number of Spark jobs it launched on this
+    * thread: `body` runs under a fresh job group, and the listener bus is
+    * drained before the group's jobs are counted. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val a = try body finally sc.clearJobGroup()
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+    (a, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }
