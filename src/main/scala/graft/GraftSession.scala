@@ -110,6 +110,28 @@ object GraftSession {
     }
   }
 
+  /** Delete a file or directory tree, best effort. */
+  def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(): Unit
+  }
+
+  /** Land data once per (live session, `key`): the first call creates a
+    * fresh temp dir named `prefix…`, runs `write` on its path and
+    * returns it; later calls return the same dir without writing. The dir
+    * is deleted when the JVM exits, so a long-lived session holds one
+    * landing per key however often its consumers are built. A failed
+    * write deletes the dir and records nothing (the next call retries). */
+  def landOnce(s: SparkSession, key: String, prefix: String)(
+      write: String => Unit): String =
+    memo(s, s"landing|$key") {
+      val t = java.nio.file.Files.createTempDirectory(prefix).toFile
+      try write(t.getAbsolutePath)
+      catch { case e: Throwable => deleteRecursively(t); throw e }
+      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(t)))
+      t.getAbsolutePath
+    }
+
   /** Fingerprint a set of tables' parquet files (names/sizes/mtimes) so a
     * regenerated sf dir yields a different cache key — the same staleness
     * guard dppFactsPath uses. Lists through the Hadoop `FileSystem` of the

@@ -124,4 +124,11 @@ object Ops {
 
   /** Timestamp → 'yyyy-MM-dd' string (DuckDB: strftime(ts, '%Y-%m-%d')). */
   def dayStr(c: Column): Column = date_format(c, "yyyy-MM-dd")
+
+  /** Whitespace tokenization (DuckDB: string_split(c, ' ')) — the one
+    * Spark spelling every word-level query shares. */
+  def words(c: Column): Column = split(c, " ")
+
+  /** Whitespace word count as BIGINT (DuckDB: len(string_split(c, ' '))). */
+  def wordCount(c: Column): Column = size(words(c)).cast(LongType)
 }

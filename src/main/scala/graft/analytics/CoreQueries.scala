@@ -560,7 +560,7 @@ object CoreQueries {
         replace($"p_name", lit(" "), lit("_")).as("name_us"),
         regexp_extract($"p_name", "^(\\w+)", 1).as("first_word"),
         ($"p_name" like "%widget%").as("is_widget"),
-        split($"p_name", " ").getItem(1).as("second_word"),
+        Ops.words($"p_name").getItem(1).as("second_word"),
         length($"p_name").cast(LongType).as("name_len"),
         trim(concat(lit("  "), $"p_brand", lit("  "))).as("brand_trim"))
       .orderBy($"p_partkey")

@@ -246,7 +246,7 @@ object StatsQueries {
   def textZipf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val freq = Tables.documents(s, dir)
-      .select($"lang", explode(split($"text", " ")).as("tok"))
+      .select($"lang", explode(Ops.words($"text")).as("tok"))
       .groupBy($"lang", $"tok")
       .agg(count(lit(1)).as("f"))
     val w = Window.partitionBy($"lang").orderBy($"f".desc, $"tok".asc)
@@ -550,6 +550,18 @@ object StatsQueries {
 
   // --- ST4: rolling z-score anomaly flags ---------------------------------
 
+  /** Per-(event_type, day number) value totals in exact integer cents, x:
+    * the one corpus pass of the change-detection queries. */
+  private def dailyCents(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.events(s, dir)
+      .select($"event_type",
+        expr("unix_micros(date_trunc('DAY', ts)) div 86400000000").as("dayn"),
+        expr("cast(round(value * 100) as bigint)").as("cents"))
+      .groupBy($"event_type", $"dayn")
+      .agg(sum($"cents").as("x"))
+  }
+
   /** Trailing-7-day z-score anomaly detection on daily spend per event
     * type: a day is flagged when its total deviates ≥ 2 sample standard
     * deviations from its own trailing week. The moving mean/std come from
@@ -565,12 +577,7 @@ object StatsQueries {
     * Frames shorter than 7 days are warm-up, not anomalies. */
   def rollingZscore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, dir)
-      .select($"event_type",
-        expr("unix_micros(date_trunc('DAY', ts)) div 86400000000").as("dayn"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      .groupBy($"event_type", $"dayn")
-      .agg(sum($"cents").as("x"))
+    val daily = dailyCents(s, dir)
     val w = Window.partitionBy($"event_type").orderBy($"dayn")
       .rowsBetween(-6, Window.currentRow)
     val stats = daily
@@ -784,12 +791,7 @@ object StatsQueries {
     * exchange over |types|·|days| rows. */
   def cusumChangepoint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, dir)
-      .select($"event_type",
-        expr("unix_micros(date_trunc('DAY', ts)) div 86400000000").as("dayn"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      .groupBy($"event_type", $"dayn")
-      .agg(sum($"cents").as("x"))
+    val daily = dailyCents(s, dir)
     val ord = Window.partitionBy($"event_type").orderBy($"dayn")
     val whole = Window.partitionBy($"event_type")
     val scored = daily

@@ -185,21 +185,13 @@ object WarehouseQueries {
         date_format($"l_shipdate", "yyyy-MM-dd").as("ship"))
     // ONE landing per (session, corpus content): repeated invocations —
     // bench passes, plan-shape inspection — reuse the same temp dirs
-    // instead of writing three fresh landings each time (and leaking
-    // them); a shutdown hook reclaims the disk when the JVM exits
-    val tmp = graft.GraftSession.memo(s,
-        s"fmt_roundtrip|${graft.GraftSession.contentKey(dir, Seq("lineitem"))}") {
-      val t = java.nio.file.Files.createTempDirectory("graft-fmt").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(t))
-      }))
+    // instead of writing three fresh landings each time
+    val tmp = graft.GraftSession.landOnce(s,
+        s"fmt_roundtrip|${graft.GraftSession.contentKey(dir, Seq("lineitem"))}",
+        "graft-fmt") { t =>
       slice.write.mode("overwrite").parquet(s"$t/parquet")
       slice.write.mode("overwrite").orc(s"$t/orc")
       slice.write.mode("overwrite").option("header", "true").csv(s"$t/csv")
-      t
     }
     val schema = slice.schema
     val back = Seq(

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{QueryDef, Tables}
+import graft.{Ops, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +42,7 @@ object CurateQueries {
     import s.implicits._
     val base = Tables.documents(s, dir)
       .select($"doc_id", $"lang", $"source",
-        size(split($"text", " ")).cast(LongType).as("token_cnt"),
+        Ops.wordCount($"text").as("token_cnt"),
         TextQueries.qualityCol.as("q"),
         sha2($"text", 256).as("h"))
     // exact-dup canonical: quality-passing docs sort first within a
@@ -148,7 +148,7 @@ object CurateQueries {
     * the streaming scoring twin. */
   private[graft] def nbFeatures(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val toksArr = split($"text", " ")
+    val toksArr = Ops.words($"text")
     val tokenCnt = size(toksArr).cast(LongType)
     val punctCnt = (length($"text") -
       length(regexp_replace($"text", "[.,!?;:]", ""))).cast(LongType)
@@ -163,7 +163,7 @@ object CurateQueries {
         TextQueries.qualityCol.cast(LongType).as("y"),
         tokenCnt.as("tc"), punctCnt.as("pc"), stopCnt.as("sc"))
       .select($"doc_id", $"lang", $"y",
-        explode(concat(split($"text", " "), featArr)).as("tok"))
+        explode(concat(Ops.words($"text"), featArr)).as("tok"))
   }
 
   /** Bias row key inside the trained model table — the model ships as ONE
@@ -648,7 +648,7 @@ object CurateQueries {
     * here is all-pairs; every intermediate row is one document. */
   def prefPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = split($"text", " ")
+    val toks = Ops.words($"text")
     val scored = Tables.documents(s, dir)
       .select($"doc_id", $"lang", $"source",
         size(toks).cast(LongType).as("token_cnt"),
@@ -885,7 +885,7 @@ object CurateQueries {
     import docs.sparkSession.implicits._
     val cnts = docs
       .select($"lang", ($"doc_id" % 2).as("coh"),
-        explode(split($"text", " ")).as("gram"))
+        explode(Ops.words($"text")).as("gram"))
       .withColumn("bucket",
         expr("CAST(conv(substring(md5(gram), 1, 12), 16, 10) AS BIGINT)")
           % DsirBuckets)
@@ -1052,7 +1052,7 @@ object CurateQueries {
   private[graft] def dsirScores(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val grams = docs.select($"lang",
-        explode(split($"text", " ")).as("gram"))
+        explode(Ops.words($"text")).as("gram"))
       .withColumn("bucket",
         expr("CAST(conv(substring(md5(gram), 1, 12), 16, 10) AS BIGINT)")
           % DsirBuckets)

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{QueryDef, Tables}
+import graft.{Ops, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,6 +30,10 @@ object DedupQueries {
       expr("transform(sequence(0, size(toks) - 3), " +
         "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"))
       .otherwise(array(col("text")))
+
+  /** The `toks` column [[shingleArr]] indexes: `text` tokenized once. */
+  private[ext] def withToks(df: DataFrame): DataFrame =
+    df.withColumn("toks", Ops.words(col("text")))
 
   /** DuckDB mirror of [[shingleArr]] (1-based list indexing). */
   // NOTE: keep '||' at end-of-line — a continuation line starting with '||'
@@ -86,7 +90,7 @@ object DedupQueries {
   private[graft] def minhashSigsOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
-      .withColumn("toks", split($"text", " "))
+      .transform(withToks)
       .withColumn("sig0", graft.functions.MinhashSig.minhashSig(shingleArr))
       .select($"doc_id" +:
         (0 until K).map(i => $"sig0".getItem(i).as(s"h$i")): _*)
@@ -98,7 +102,7 @@ object DedupQueries {
   private[graft] def minhashSigsHof(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .withColumn("toks", split($"text", " "))
+      .transform(withToks)
       .withColumn("hf",
         transform(shingleArr, sh => concat(md5(sh), md5(concat(lit("x"), sh)))))
       .select($"doc_id" +:
@@ -485,7 +489,7 @@ object DedupQueries {
     // (doc, shingle) explode shape the plan audit counted 8 scans for
     val shArr = Tables.documents(s, dir)
       .join(ranked.select($"doc_id"), "doc_id")
-      .withColumn("toks", split($"text", " "))
+      .transform(withToks)
       .select($"doc_id", array_distinct(shingleArr).as("sh_arr"))
       .withColumn("n_sh", size($"sh_arr").cast("long"))
       .transform(graft.GraftSession.ckpt(_))
@@ -656,7 +660,7 @@ object DedupQueries {
     // explode) — a row-level distinct here would shuffle the whole
     // (doc, token) relation first
     val tok = docs
-      .select($"doc_id", explode(array_distinct(split($"text", " "))).as("tok"))
+      .select($"doc_id", explode(array_distinct(Ops.words($"text"))).as("tok"))
       .select($"doc_id", md5($"tok").as("h"))
     val bitSums = (0 until SIMHASH_BITS).map { j =>
       sum(when(ascii(substring($"h", j + 1, 1)) % 2 === 1, 1)
@@ -738,7 +742,7 @@ object DedupQueries {
     // r21: shingling is narrow over the raw scan — spread (§2.5)
     val docs = Tables.spread(docs0)
     val sh = docs
-      .withColumn("toks", split($"text", " "))
+      .transform(withToks)
       .select($"doc_id", $"lang", explode(array_distinct(shingleArr)).as("sh"))
     // stop-shingles (df > cap) are usually few, but their cardinality is
     // only bounded by |pairs|/DF_CAP — on an adversarial corpus a forced
@@ -784,11 +788,8 @@ object DedupQueries {
       .join(sizes.toDF("ds_id", "d_n"), $"doc_id" === $"ds_id")
       .select($"q_id", $"doc_id",
         ($"n_inter".cast(DoubleType) / ($"q_n" + $"d_n" - $"n_inter")).as("jaccard"))
-    val w = Window.partitionBy($"q_id").orderBy($"jaccard".desc, $"doc_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"doc_id", $"jaccard")
+    SimilarityQueries.topK(scored, "q_id", 5, $"jaccard".desc, $"doc_id".asc)(
+      "q_id", "rnk", "doc_id", "jaccard")
   }
 
   val dedupNgramJaccardSql: String =
@@ -1352,7 +1353,7 @@ object DedupQueries {
   def sourceNovelty(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pairs = Tables.documents(s, dir)
-      .withColumn("toks", split($"text", " "))
+      .transform(withToks)
       .select($"source", explode(array_distinct(shingleArr)).as("sh"))
       .distinct()
     val first = pairs.groupBy($"sh").agg(min($"source").as("first_src"))
@@ -1404,7 +1405,7 @@ object DedupQueries {
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pairs = Tables.documents(s, dir)
-      .withColumn("toks", split($"text", " "))
+      .transform(withToks)
       .select($"source", explode(array_distinct(shingleArr)).as("sh"))
       .distinct()
     val postings = pairs.groupBy($"sh")

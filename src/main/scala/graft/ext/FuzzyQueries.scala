@@ -10,6 +10,16 @@ import org.apache.spark.sql.functions._
   */
 object FuzzyQueries {
 
+  /** The two sides of the blocked name self-join: the distinct part names
+    * with their row support, as (name_a, parts_a) and (name_b, parts_b). */
+  private def namePairSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val names = Tables.part(s, dir)
+      .groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
+    (names.select($"p_name".as("name_a"), $"n_parts".as("parts_a")),
+      names.select($"p_name".as("name_b"), $"n_parts".as("parts_b")))
+  }
+
   /** Fuzzy self-join of the part-name dictionary: name pairs within
     * Levenshtein distance 3, blocked on (first char, |length delta| ≤ 3).
     *
@@ -23,10 +33,7 @@ object FuzzyQueries {
     * (prefix, suffix, length bucket) the same way. */
   def fuzzyNameJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val names = Tables.part(s, dir)
-      .groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
-    val a = names.select($"p_name".as("name_a"), $"n_parts".as("parts_a"))
-    val b = names.select($"p_name".as("name_b"), $"n_parts".as("parts_b"))
+    val (a, b) = namePairSides(s, dir)
     a.join(b,
         substring($"name_a", 1, 1) === substring($"name_b", 1, 1) &&
           abs(length($"name_a") - length($"name_b")) <= 3 &&
@@ -63,10 +70,7 @@ object FuzzyQueries {
     * BOTH the threshold filter and the output use the rounded value. */
   def fuzzyJaroWinkler(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val names = Tables.part(s, dir)
-      .groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
-    val a = names.select($"p_name".as("name_a"), $"n_parts".as("parts_a"))
-    val b = names.select($"p_name".as("name_b"), $"n_parts".as("parts_b"))
+    val (a, b) = namePairSides(s, dir)
     a.join(b,
         substring($"name_a", 1, 1) === substring($"name_b", 1, 1) &&
           $"name_a" < $"name_b")

@@ -10,6 +10,34 @@ final case class MediaMeta(
     doc_id: Long, byte_len: Long, magic_hex: String,
     width: Int, height: Int, n_frames: Int)
 
+/** Fixed-width integer codecs shared by every container parser in
+  * [[MediaDecode]] ([[ByteCodec.Reader]]) and every builder in
+  * [[MediaFixtures]] (the writers here). */
+private[ext] object ByteCodec {
+  /** Big/little-endian reads at byte offsets of one payload. `be32` is the
+    * SIGNED Int form — a PNG u32 with the top bit set reads negative, which
+    * `decodeHeader`'s positivity check relies on to reject a corrupt
+    * header; `be32u` is the unsigned Long form the ISO-BMFF walks need. */
+  final class Reader(bytes: Array[Byte]) {
+    def u8(i: Int): Int = bytes(i) & 0xff
+    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    def be32(i: Int): Int = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
+    def be32u(i: Int): Long = be32(i) & 0xffffffffL
+    def be64(i: Int): Long = (be32u(i) << 32) | be32u(i + 4)
+    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
+    def le32(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
+    def tag(i: Int): String = new String(bytes, i, 4, "US-ASCII")
+  }
+
+  def be32(v: Int): Array[Byte] = Array(
+    (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
+  def be16(v: Int): Array[Byte] = Array((v >> 8).toByte, v.toByte)
+  def be64(v: Long): Array[Byte] = be32((v >>> 32).toInt) ++ be32(v.toInt)
+  def le32(v: Int): Array[Byte] = Array(
+    v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
+  def le16(v: Int): Array[Byte] = Array(v.toByte, (v >> 8).toByte)
+}
+
 /** Multimodal-column plumbing (SURVEY.md §2.9, builder-prompt multimodal
   * requirement): media as opaque `binary` columns + typed metadata.
   *
@@ -44,10 +72,7 @@ object MediaDecode {
     * for top-down rows), GIF logical screen (little-endian u16 at 6/8).
     * None for anything else. */
   def decodeHeader(bytes: Array[Byte]): Option[(Int, Int, Int)] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
+    val r = new ByteCodec.Reader(bytes); import r._
     val pngMagic = Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt,
       0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
     // Dimensions must be strictly positive; a corrupt header (negative or
@@ -84,8 +109,7 @@ object MediaDecode {
     * None on anything structurally non-JPEG (falls through to the next
     * decode tier). */
   def decodeJpegSof(bytes: Array[Byte]): Option[(Int, Int, Int)] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
+    val r = new ByteCodec.Reader(bytes); import r._
     if (bytes.length < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
     var i = 2
     while (i + 3 < bytes.length) {
@@ -123,6 +147,19 @@ object MediaDecode {
     * whose dimensions sit behind variable-length segments). Returns None
     * for non-image bytes. */
   def decodeImageIO(bytes: Array[Byte]): Option[(Int, Int, Int)] =
+    withImageReader(bytes) { (r, iis) =>
+      r.setInput(iis, true, true)
+      val w = r.getWidth(0)
+      val h = r.getHeight(0)
+      if (w > 0 && h > 0) Some((w, h, 1)) else None
+    }
+
+  /** Run `f` on the first registered ImageIO reader that claims `bytes`
+    * (with the stream it should read), disposing both after; None when no
+    * reader claims the payload or the read throws. */
+  private def withImageReader[A](bytes: Array[Byte])(
+      f: (javax.imageio.ImageReader, javax.imageio.stream.ImageInputStream) => Option[A])
+      : Option[A] =
     try {
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(bytes))
@@ -131,15 +168,24 @@ object MediaDecode {
         if (!readers.hasNext) None
         else {
           val r = readers.next()
-          try {
-            r.setInput(iis, true, true)
-            val w = r.getWidth(0)
-            val h = r.getHeight(0)
-            if (w > 0 && h > 0) Some((w, h, 1)) else None
-          } finally r.dispose()
+          try f(r, iis) finally r.dispose()
         }
       } finally if (iis != null) iis.close()
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Row-major luminance grid of a decoded image, read from the raster
+    * bands directly: band 0 alone for single-band images, integer ITU-R
+    * BT.601 weights over bands 0/1/2 for color. */
+  private def grayGrid(img: java.awt.image.BufferedImage): Array[Array[Int]] = {
+    val r = img.getRaster
+    val bands = r.getNumBands
+    Array.tabulate(img.getHeight, img.getWidth) { (y, x) =>
+      if (bands >= 3)
+        (r.getSample(x, y, 0) * 299 + r.getSample(x, y, 1) * 587 +
+          r.getSample(x, y, 2) * 114) / 1000
+      else r.getSample(x, y, 0)
+    }
+  }
 
   // one-time JVM-wide init: never spool ImageInputStreams to disk
   javax.imageio.ImageIO.setUseCache(false)
@@ -164,9 +210,7 @@ object MediaDecode {
     * uncompressed 24bpp BMP (other formats keep their header-only tiers;
     * this container has no codecs). */
   def decodeBmpGray(bytes: Array[Byte]): Option[Array[Array[Int]]] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
+    val r = new ByteCodec.Reader(bytes); import r._
     if (bytes.length < 54 || u8(0) != 'B' || u8(1) != 'M') return None
     val pixOff = le32(10)
     if (le32(14) < 40) return None // need BITMAPINFOHEADER-or-later
@@ -199,16 +243,7 @@ object MediaDecode {
       val img = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(bytes))
       if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-      else {
-        val r = img.getRaster
-        val bands = r.getNumBands
-        Some(Array.tabulate(img.getHeight, img.getWidth) { (y, x) =>
-          if (bands >= 3)
-            (r.getSample(x, y, 0) * 299 + r.getSample(x, y, 1) * 587 +
-              r.getSample(x, y, 2) * 114) / 1000
-          else r.getSample(x, y, 0)
-        })
-      }
+      else Some(grayGrid(img))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Raster decode tiers: codec-free BMP byte parse (cheap, no reader
@@ -224,33 +259,12 @@ object MediaDecode {
     * frame-sampling primitive of the video-ish multimodal tier. None
     * when no registered reader claims the payload. */
   def decodeFramesGray(bytes: Array[Byte]): Option[Seq[Array[Array[Int]]]] =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val rd = readers.next()
-          rd.setInput(iis)
-          try {
-            val n = rd.getNumImages(true)
-            if (n <= 0) None
-            else Some((0 until n).map { k =>
-              val img = rd.read(k)
-              val r = img.getRaster
-              val bands = r.getNumBands
-              Array.tabulate(img.getHeight, img.getWidth) { (y, x) =>
-                if (bands >= 3)
-                  (r.getSample(x, y, 0) * 299 + r.getSample(x, y, 1) * 587 +
-                    r.getSample(x, y, 2) * 114) / 1000
-                else r.getSample(x, y, 0)
-              }
-            })
-          } finally rd.dispose()
-        }
-      } finally if (iis != null) iis.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    withImageReader(bytes) { (rd, iis) =>
+      rd.setInput(iis)
+      val n = rd.getNumImages(true)
+      if (n <= 0) None
+      else Some((0 until n).map(k => grayGrid(rd.read(k))))
+    }
 
   /** RIFF/WAVE 16-bit PCM mono parse — the audio modality's codec-free
     * byte-arithmetic decode (the BMP tier's discipline applied to
@@ -260,11 +274,7 @@ object MediaDecode {
     * samples. Returns (sample_rate, samples); None unless the payload
     * is RIFF+WAVE with 16-bit mono integer PCM. */
   def decodeWavPcm16(bytes: Array[Byte]): Option[(Int, Array[Int])] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def le32(i: Int) =
-      u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def tag(i: Int) = new String(bytes, i, 4, "US-ASCII")
+    val r = new ByteCodec.Reader(bytes); import r._
     if (bytes.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
     var off = 12
     var rate = -1
@@ -297,21 +307,32 @@ object MediaDecode {
     * for a last box). None on a truncated/undersized header. */
   private def mp4Box(bytes: Array[Byte], off: Int,
       limit: Int): Option[(Int, Int, String)] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
+    val r = new ByteCodec.Reader(bytes); import r._
     if (off + 8 > limit) return None
-    val size = be32(off)
-    val fourcc = new String(bytes, off + 4, 4, "US-ASCII")
+    val size = be32u(off)
+    val fourcc = tag(off + 4)
     if (size == 0) Some((off + 8, limit, fourcc)) // box runs to EOF/enclosure
     else if (size == 1) { // 64-bit largesize after the fourcc
       if (off + 16 > limit) return None
-      val ls = (be32(off + 8) << 32) | be32(off + 12)
+      val ls = be64(off + 8)
       if (ls < 16 || off + ls > limit) None
       else Some((off + 16, off + ls.toInt, fourcc))
     }
     else if (size < 8 || off + size > limit) None
     else Some((off + 8, (off + size).toInt, fourcc))
+  }
+
+  /** The first child box of type `want` inside `[from, to)`:
+    * `(payloadStart, boxEnd)`. None when absent or on a malformed box. */
+  private def mp4Child(bytes: Array[Byte], from: Int, to: Int,
+      want: String): Option[(Int, Int)] = {
+    var io = from
+    while (io + 8 <= to) {
+      val (ip, ie, itag) = mp4Box(bytes, io, to).getOrElse(return None)
+      if (itag == want) return Some((ip, ie))
+      io = ie
+    }
+    None
   }
 
   /** Walk a real ISO-BMFF (MP4) box sequence — the VIDEO container
@@ -328,9 +349,7 @@ object MediaDecode {
     * mdat_bytes, mdat_sum); None on any truncated/undersized box or a
     * missing moov/mvhd. */
   def decodeMp4Meta(bytes: Array[Byte]): Option[(Long, Long, Long, Long, Long)] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
+    val r = new ByteCodec.Reader(bytes); import r._
     var off = 0
     var ts = -1L; var dur = -1L; var traks = 0L
     var mdatB = 0L; var mdatSum = 0L
@@ -344,7 +363,7 @@ object MediaDecode {
             val (ip, ie, itag) = mp4Box(bytes, io, end).getOrElse(return None)
             itag match {
               case "mvhd" if ie - ip >= 24 =>
-                ts = be32(ip + 12); dur = be32(ip + 16)
+                ts = be32u(ip + 12); dur = be32u(ip + 16)
               case "trak" => traks += 1
               case _ => () // skip foreign children by size
             }
@@ -373,19 +392,7 @@ object MediaDecode {
     * metadata alone (the codec/GPU stage remains the declared stub).
     * None when any box is malformed or a trak lacks stsz/stts. */
   def decodeMp4Samples(bytes: Array[Byte]): Option[Seq[(Long, Long, Long, Long)]] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    // first child with the given fourcc inside [from, to)
-    def child(from: Int, to: Int, want: String): Option[(Int, Int)] = {
-      var io = from
-      while (io + 8 <= to) {
-        val (ip, ie, itag) = mp4Box(bytes, io, to).getOrElse(return None)
-        if (itag == want) return Some((ip, ie))
-        io = ie
-      }
-      None
-    }
+    val r = new ByteCodec.Reader(bytes); import r._
     val out = Seq.newBuilder[(Long, Long, Long, Long)]
     var trackIdx = 0L
     var off = 0
@@ -398,29 +405,29 @@ object MediaDecode {
           val (ip, ie, itag) = mp4Box(bytes, io, end).getOrElse(return None)
           if (itag == "trak") {
             val stbl = for {
-              (mp, me) <- child(ip, ie, "mdia")
-              (fp, fe) <- child(mp, me, "minf")
-              s <- child(fp, fe, "stbl")
+              (mp, me) <- mp4Child(bytes, ip, ie, "mdia")
+              (fp, fe) <- mp4Child(bytes, mp, me, "minf")
+              s <- mp4Child(bytes, fp, fe, "stbl")
             } yield s
             val (sp, se) = stbl.getOrElse(return None)
-            val (zp, ze) = child(sp, se, "stsz").getOrElse(return None)
+            val (zp, ze) = mp4Child(bytes, sp, se, "stsz").getOrElse(return None)
             if (ze - zp < 12) return None
-            val uniform = be32(zp + 4)
-            val n = be32(zp + 8)
+            val uniform = be32u(zp + 4)
+            val n = be32u(zp + 8)
             val sampleBytes =
               if (uniform != 0) uniform * n
               else {
                 if (ze - zp < 12 + 4 * n) return None
-                (0L until n).map(k => be32(zp + 12 + 4 * k.toInt)).sum
+                (0L until n).map(k => be32u(zp + 12 + 4 * k.toInt)).sum
               }
-            val (tp, te) = child(sp, se, "stts").getOrElse(return None)
+            val (tp, te) = mp4Child(bytes, sp, se, "stts").getOrElse(return None)
             if (te - tp < 8) return None
-            val entries = be32(tp + 4)
+            val entries = be32u(tp + 4)
             if (te - tp < 8 + 8 * entries) return None
             var durU = 0L; var nTts = 0L
             (0L until entries).foreach { e =>
-              val c = be32(tp + 8 + 8 * e.toInt)
-              val d = be32(tp + 12 + 8 * e.toInt)
+              val c = be32u(tp + 8 + 8 * e.toInt)
+              val d = be32u(tp + 12 + 8 * e.toInt)
               durU += c * d; nTts += c
             }
             if (nTts != n) return None // stsz and stts must agree
@@ -464,19 +471,7 @@ object MediaDecode {
     * sample overrunning the file (a truncated file must fail loudly,
     * not yield short frames). */
   def decodeMp4FrameSlices(bytes: Array[Byte]): Option[Seq[Array[Byte]]] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
-    def child(from: Int, to: Int, want: String): Option[(Int, Int)] = {
-      var io = from
-      while (io + 8 <= to) {
-        val (ip, ie, itag) = mp4Box(bytes, io, to).getOrElse(return None)
-        if (itag == want) return Some((ip, ie))
-        io = ie
-      }
-      None
-    }
+    val r = new ByteCodec.Reader(bytes); import r._
     // (sizes, chunk map) of the selected video track; chunk map is
     // (stsc runs as (firstChunk, samplesPerChunk), absolute chunk offsets)
     var sizes: Option[Seq[Long]] = None
@@ -491,48 +486,48 @@ object MediaDecode {
         while (io + 8 <= end && sizes.isEmpty) {
           val (tp, te, itag) = mp4Box(bytes, io, end).getOrElse(return None)
           if (itag == "trak") {
-            val mdia = child(tp, te, "mdia")
+            val mdia = mp4Child(bytes, tp, te, "mdia")
             val isVideo = mdia.exists { case (mp, me) =>
-              child(mp, me, "hdlr") match {
+              mp4Child(bytes, mp, me, "hdlr") match {
                 case Some((hp, he)) => // handler_type at payload offset 8
                   he - hp >= 12 &&
-                    new String(bytes, hp + 8, 4, "US-ASCII") == "vide"
+                    tag(hp + 8) == "vide"
                 case None => true // legacy single-track fixture: no hdlr
               }
             }
             if (isVideo) {
               val stbl = for {
                 (mp, me) <- mdia
-                (fp, fe) <- child(mp, me, "minf")
-                s <- child(fp, fe, "stbl")
+                (fp, fe) <- mp4Child(bytes, mp, me, "minf")
+                s <- mp4Child(bytes, fp, fe, "stbl")
               } yield s
               val (sp, se) = stbl.getOrElse(return None)
-              val (zp, ze) = child(sp, se, "stsz").getOrElse(return None)
+              val (zp, ze) = mp4Child(bytes, sp, se, "stsz").getOrElse(return None)
               if (ze - zp < 12) return None
-              val uniform = be32(zp + 4)
-              val n = be32(zp + 8)
+              val uniform = be32u(zp + 4)
+              val n = be32u(zp + 8)
               sizes =
                 if (uniform != 0) Some(Seq.fill(n.toInt)(uniform))
                 else {
                   if (ze - zp < 12 + 4 * n) return None
-                  Some((0L until n).map(k => be32(zp + 12 + 4 * k.toInt)))
+                  Some((0L until n).map(k => be32u(zp + 12 + 4 * k.toInt)))
                 }
               chunkMap = for {
-                (cp, ce) <- child(sp, se, "stsc")
-                offs <- child(sp, se, "stco").map { case (op, oe) =>
-                  val m = be32(op + 4)
+                (cp, ce) <- mp4Child(bytes, sp, se, "stsc")
+                offs <- mp4Child(bytes, sp, se, "stco").map { case (op, oe) =>
+                  val m = be32u(op + 4)
                   if (oe - op < 8 + 4 * m) return None
-                  (0L until m).map(c => be32(op + 8 + 4 * c.toInt))
-                }.orElse(child(sp, se, "co64").map { case (op, oe) =>
-                  val m = be32(op + 4)
+                  (0L until m).map(c => be32u(op + 8 + 4 * c.toInt))
+                }.orElse(mp4Child(bytes, sp, se, "co64").map { case (op, oe) =>
+                  val m = be32u(op + 4)
                   if (oe - op < 8 + 8 * m) return None
                   (0L until m).map(c => be64(op + 8 + 8 * c.toInt))
                 })
               } yield {
-                val ne = be32(cp + 4)
+                val ne = be32u(cp + 4)
                 if (ce - cp < 8 + 12 * ne) return None
                 val runs = (0L until ne).map { e =>
-                  (be32(cp + 8 + 12 * e.toInt), be32(cp + 12 + 12 * e.toInt))
+                  (be32u(cp + 8 + 12 * e.toInt), be32u(cp + 12 + 12 * e.toInt))
                 }
                 (runs, offs)
               }
@@ -635,12 +630,22 @@ object MediaFixtures {
     val v = c.getValue
     Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
   }
-  private def be32(v: Int) = Array(
-    (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-  private def be16(v: Int) = Array((v >> 8).toByte, v.toByte)
-  private def le32(v: Int) = Array(
-    v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-  private def le16(v: Int) = Array(v.toByte, (v >> 8).toByte)
+  import ByteCodec.{be16, be32, be64, le16, le32}
+
+  /** One ISO-BMFF box: big-endian 32-bit size, fourcc, body. */
+  private def box(tpe: String, body: Array[Byte]): Array[Byte] =
+    be32(8 + body.length) ++ tpe.getBytes("US-ASCII") ++ body
+  private val ftyp = box("ftyp",
+    "isom".getBytes("US-ASCII") ++ be32(512) ++
+      "isommp42".getBytes("US-ASCII"))
+  /** mvhd v0: timescale + duration at their spec offsets. */
+  private def mvhd(timescale: Int, duration: Int) = box("mvhd",
+    Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
+      be32(timescale) ++ be32(duration) ++ Array.fill[Byte](80)(0))
+  /** tkhd v0: track id + duration. */
+  private def tkhd(id: Int, duration: Int) = box("tkhd",
+    Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++ be32(id) ++
+      be32(0) ++ be32(duration) ++ Array.fill[Byte](60)(0))
 
   /** 45 bytes: signature + IHDR (real CRC32) + IEND. */
   def png(w: Int, h: Int): Array[Byte] = {
@@ -768,21 +773,9 @@ object MediaFixtures {
     * a true box walk, not a fixed-offset read. */
   def mp4Container(timescale: Int, durationUnits: Int, nTracks: Int,
       mdatLen: Int, payload: Int => Int): Array[Byte] = {
-    def box(tpe: String, body: Array[Byte]): Array[Byte] =
-      be32(8 + body.length) ++ tpe.getBytes("US-ASCII") ++ body
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(512) ++
-        "isommp42".getBytes("US-ASCII"))
     val free = box("free", Array.fill[Byte](6)(0))
-    val mvhd = box("mvhd",
-      Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-        be32(timescale) ++ be32(durationUnits) ++ Array.fill[Byte](80)(0))
-    val traks = (1 to nTracks).map { i =>
-      box("trak", box("tkhd",
-        Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++ be32(i) ++
-          be32(0) ++ be32(durationUnits) ++ Array.fill[Byte](60)(0)))
-    }
-    val moov = box("moov", mvhd ++ traks.flatten)
+    val traks = (1 to nTracks).map(i => box("trak", tkhd(i, durationUnits)))
+    val moov = box("moov", mvhd(timescale, durationUnits) ++ traks.flatten)
     val mdat = box("mdat",
       Array.tabulate(mdatLen)(t => (payload(t) & 0xff).toByte))
     ftyp ++ free ++ moov ++ mdat
@@ -800,14 +793,6 @@ object MediaFixtures {
   def mp4ContainerStbl(timescale: Int, durationUnits: Int, nTracks: Int,
       mdatLen: Int, payload: Int => Int, nSamples: Int => Int,
       sSize: (Int, Int) => Int, sDelta: (Int, Int) => Int): Array[Byte] = {
-    def box(tpe: String, body: Array[Byte]): Array[Byte] =
-      be32(8 + body.length) ++ tpe.getBytes("US-ASCII") ++ body
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(512) ++
-        "isommp42".getBytes("US-ASCII"))
-    val mvhd = box("mvhd",
-      Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-        be32(timescale) ++ be32(durationUnits) ++ Array.fill[Byte](80)(0))
     val traks = (0 until nTracks).map { i =>
       val n = nSamples(i)
       val stsz = box("stsz",
@@ -816,12 +801,10 @@ object MediaFixtures {
       val stts = box("stts",
         Array[Byte](0, 0, 0, 0) ++ be32(n) ++
           (0 until n).flatMap(k => be32(1) ++ be32(sDelta(i, k))).toArray)
-      val tkhd = box("tkhd",
-        Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++ be32(i + 1) ++
-          be32(0) ++ be32(durationUnits) ++ Array.fill[Byte](60)(0))
-      box("trak", tkhd ++ box("mdia", box("minf", box("stbl", stsz ++ stts))))
+      box("trak", tkhd(i + 1, durationUnits) ++
+        box("mdia", box("minf", box("stbl", stsz ++ stts))))
     }
-    val moov = box("moov", mvhd ++ traks.flatten.toArray)
+    val moov = box("moov", mvhd(timescale, durationUnits) ++ traks.flatten.toArray)
     // mdat with size==1 + 64-bit largesize (header is 16 bytes)
     val mdatBody = Array.tabulate(mdatLen)(t => (payload(t) & 0xff).toByte)
     val mdat = be32(1) ++ "mdat".getBytes("US-ASCII") ++
@@ -858,26 +841,15 @@ object MediaFixtures {
     * pixels. The moov precedes mdat, so the stsz offsets index straight
     * into the payload ([[MediaDecode.decodeMp4FrameSlices]]). */
   def mp4Mjpeg(timescale: Int, frames: Seq[Array[Byte]]): Array[Byte] = {
-    def box(tpe: String, body: Array[Byte]): Array[Byte] =
-      be32(8 + body.length) ++ tpe.getBytes("US-ASCII") ++ body
     val n = frames.length
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(512) ++
-        "isommp42".getBytes("US-ASCII"))
-    val mvhd = box("mvhd",
-      Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-        be32(timescale) ++ be32(n) ++ Array.fill[Byte](80)(0))
     val stsz = box("stsz",
       Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(n) ++
         frames.flatMap(f => be32(f.length)).toArray)
     val stts = box("stts",
       Array[Byte](0, 0, 0, 0) ++ be32(1) ++ be32(n) ++ be32(1))
-    val tkhd = box("tkhd",
-      Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++ be32(1) ++
-        be32(0) ++ be32(n) ++ Array.fill[Byte](60)(0))
     val trak = box("trak",
-      tkhd ++ box("mdia", box("minf", box("stbl", stsz ++ stts))))
-    val moov = box("moov", mvhd ++ trak)
+      tkhd(1, n) ++ box("mdia", box("minf", box("stbl", stsz ++ stts))))
+    val moov = box("moov", mvhd(timescale, n) ++ trak)
     val mdat = box("mdat", frames.flatten.toArray)
     ftyp ++ moov ++ mdat
   }
@@ -898,12 +870,6 @@ object MediaFixtures {
       aux: Seq[Array[Byte]]): Array[Byte] = {
     require(frames.length >= 2 && aux.length >= 2,
       "chunked layout needs >=2 samples per track")
-    def box(tpe: String, body: Array[Byte]): Array[Byte] =
-      be32(8 + body.length) ++ tpe.getBytes("US-ASCII") ++ body
-    def be64(v: Long): Array[Byte] = be32((v >>> 32).toInt) ++ be32(v.toInt)
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(512) ++
-        "isommp42".getBytes("US-ASCII"))
     // mdat sits right after ftyp; chunk offsets are file-absolute
     val base = ftyp.length + 8L
     val vOff1 = base
@@ -925,9 +891,6 @@ object MediaFixtures {
       Array[Byte](0, 0, 0, 0) ++ be32(2) ++
         be32(1) ++ be32(1) ++ be32(1) ++ // chunk 1: one sample
         be32(2) ++ be32(n - 1) ++ be32(1)) // chunks 2..: the rest
-    def tkhd(id: Int, dur: Int) = box("tkhd",
-      Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++ be32(id) ++
-        be32(0) ++ be32(dur) ++ Array.fill[Byte](60)(0))
     val co64V = box("co64",
       Array[Byte](0, 0, 0, 0) ++ be32(2) ++ be64(vOff1) ++ be64(vOff2))
     val stcoA = box("stco",
@@ -941,10 +904,7 @@ object MediaFixtures {
       hdlr("vide") ++ box("minf",
         box("stbl", stsz(frames) ++ stts(frames.length) ++
           stsc(frames.length) ++ co64V))))
-    val mvhd = box("mvhd",
-      Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-        be32(timescale) ++ be32(frames.length) ++ Array.fill[Byte](80)(0))
-    val moov = box("moov", mvhd ++ trakA ++ trakV)
+    val moov = box("moov", mvhd(timescale, frames.length) ++ trakA ++ trakV)
     ftyp ++ mdat ++ moov
   }
 
@@ -1254,9 +1214,13 @@ object MultimodalQueries {
   /** Decoded-raster dHashes for docs with id < n — the mixed
     * BMP/PNG/GIF fixture synthesis + real container decode shared by the
     * phash census (n = 60) and the near-dup hash join (n = 120). */
-  private def rasterHashes(s: SparkSession, dir: String, n: Long): DataFrame = {
+  /** The synthetic raster corpus of docs `< n`: a (16+3·(id%7)) ×
+    * (9+2·(id%5)) gradient `(7x + 13y + 31·id) % 256`, shipped as BMP, PNG
+    * or GIF by `id % 3` — the pixel formula the raster oracles restate. */
+  private def rasterMedia(s: SparkSession, dir: String,
+      n: Long): Dataset[(Long, Array[Byte])] = {
     import s.implicits._
-    val media = Tables.documents(s, dir).filter($"doc_id" < n)
+    Tables.documents(s, dir).filter($"doc_id" < n)
       .select($"doc_id").as[Long]
       .map { id =>
         val w = 16 + (id % 7).toInt * 3
@@ -1268,7 +1232,11 @@ object MultimodalQueries {
           case _ => MediaFixtures.gifRaster(w, h, pix)
         })
       }
-    media.mapPartitions { it =>
+  }
+
+  private def rasterHashes(s: SparkSession, dir: String, n: Long): DataFrame = {
+    import s.implicits._
+    rasterMedia(s, dir, n).mapPartitions { it =>
       it.map { case (id, bytes) =>
         val g = MediaDecode.decodeRasterGray(bytes).getOrElse(
           sys.error(s"doc $id: fixture did not raster-decode"))
@@ -1465,19 +1433,7 @@ object MultimodalQueries {
     * model instead of packed longs. */
   def mediaResize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = Tables.documents(s, dir).filter($"doc_id" < 60)
-      .select($"doc_id").as[Long]
-      .map { id =>
-        val w = 16 + (id % 7).toInt * 3
-        val h = 9 + (id % 5).toInt * 2
-        val pix = (x: Int, y: Int) => (x * 7 + y * 13 + id.toInt * 31) % 256
-        (id, (id % 3) match {
-          case 0 => MediaFixtures.bmpRaster(w, h, pix)
-          case 1 => MediaFixtures.pngRaster(w, h, pix)
-          case _ => MediaFixtures.gifRaster(w, h, pix)
-        })
-      }
-    media.mapPartitions { it =>
+    rasterMedia(s, dir, 60L).mapPartitions { it =>
       it.map { case (id, bytes) =>
         val g = MediaDecode.decodeRasterGray(bytes).getOrElse(
           sys.error(s"doc $id: fixture did not raster-decode"))
@@ -1575,6 +1531,13 @@ object MultimodalQueries {
        |FROM documents WHERE doc_id < 60 ORDER BY doc_id""".stripMargin
   }
 
+  /** (timescale, duration units, track count) of doc `id`'s video
+    * fixtures: 600·(1+id%3), ts·(2+id%7)+id%97, 1+id%3. */
+  private def videoClock(id: Long): (Int, Int, Int) = {
+    val ts = 600 * (1 + (id % 3).toInt)
+    (ts, ts * (2 + (id % 7).toInt) + (id % 97).toInt, 1 + (id % 3).toInt)
+  }
+
   /** VIDEO-container metadata decode over real ISO-BMFF (MP4) bytes —
     * the modality's honest tier: each doc carries a spec-built
     * [[MediaFixtures.mp4Container]] (true big-endian box framing: ftyp,
@@ -1595,9 +1558,7 @@ object MultimodalQueries {
     val media = Tables.documents(s, dir).filter($"doc_id" < 60)
       .select($"doc_id").as[Long]
       .map { id =>
-        val ts = 600 * (1 + (id % 3).toInt)
-        val durU = ts * (2 + (id % 7).toInt) + (id % 97).toInt
-        val nTr = 1 + (id % 3).toInt
+        val (ts, durU, nTr) = videoClock(id)
         val ml = 50 + (id % 11).toInt * 7
         (id, MediaFixtures.mp4Container(ts, durU, nTr, ml,
           t => (t * 31 + id.toInt * 17) % 256))
@@ -1651,9 +1612,7 @@ object MultimodalQueries {
     val media = Tables.documents(s, dir).filter($"doc_id" < 60)
       .select($"doc_id").as[Long]
       .map { id =>
-        val ts = 600 * (1 + (id % 3).toInt)
-        val durU = ts * (2 + (id % 7).toInt) + (id % 97).toInt
-        val nTr = 1 + (id % 3).toInt
+        val (ts, durU, nTr) = videoClock(id)
         val ml = 40 + (id % 7).toInt * 9
         (id, MediaFixtures.mp4ContainerStbl(ts, durU, nTr, ml,
           t => (t * 13 + id.toInt * 7) % 256,

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{QueryDef, Tables}
+import graft.{Ops, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,11 +17,6 @@ object PipelineQueries {
 
   /** Tokens-per-sequence budget for [[packSequences]]. */
   private[graft] val PACK_BUDGET = 256L
-
-  /** Whitespace WORD count as BIGINT — the unit for scrubbing/quality,
-    * where the denylist and chars-per-word score are word-defined. */
-  private def nWord(c: String): org.apache.spark.sql.Column =
-    size(split(col(c), " ")).cast("long")
 
   /** Sub-word TOKEN count as BIGINT — the unit for packing/mixture
     * budgets, which are tokenizer-defined at 100 TB, not word-defined.
@@ -60,18 +55,40 @@ object PipelineQueries {
     * relation — factored for the ContractAndPropertySpec reference pin. */
   private[graft] def packSequencesOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val toks = docs
-      .select($"lang", $"source", $"doc_id", nTok("text").as("n_tok"))
-    val w = Window.partitionBy($"lang", $"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("cum_before", coalesce(sum($"n_tok").over(w), lit(0L)))
-      .withColumn("bin", expr(s"cum_before div $PACK_BUDGET"))
-      .groupBy($"lang", $"source", $"bin")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("bin_tokens"))
-      .withColumn("fill_bp", expr(s"bin_tokens * 10000 div $PACK_BUDGET"))
-      .orderBy($"lang", $"source", $"bin")
+    binFill(docs.select($"lang", $"source", $"doc_id", nTok("text").as("n_tok")))
   }
+
+  /** Running token count before each doc of its (lang, source) stream, in
+    * doc_id order — the one partitioned window cumsum first-fit packing
+    * needs — over (lang, source, doc_id, n_tok). */
+  private def withCumBefore(toks: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("lang"), col("source")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    toks.withColumn("cum_before", coalesce(sum(col("n_tok")).over(w), lit(0L)))
+  }
+
+  /** [[withCumBefore]] plus the bin each doc starts in. */
+  private def packed(toks: DataFrame): DataFrame =
+    withCumBefore(toks).withColumn("bin", expr(s"cum_before div $PACK_BUDGET"))
+
+  /** Per-bin doc and token counts of [[packed]]. */
+  private def bins(toks: DataFrame): DataFrame =
+    packed(toks).groupBy(col("lang"), col("source"), col("bin"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("bin_tokens"))
+
+  /** [[bins]] with fill ratio in basis points, in (lang, source, bin)
+    * order — the packing census. */
+  private def binFill(toks: DataFrame): DataFrame =
+    bins(toks).withColumn("fill_bp", expr(s"bin_tokens * 10000 div $PACK_BUDGET"))
+      .orderBy(col("lang"), col("source"), col("bin"))
+
+  /** Exact trained-vocab token counts of `docs` (the memoized BPE merge
+    * table as one fused per-row fold, (lang, source) carried through):
+    * (lang, source, doc_id, n_tok). */
+  private def exactToks(s: SparkSession, dir: String, docs: DataFrame): DataFrame =
+    TextQueries.tokensPerDocOf(Tables.spread(docs), TextQueries.bpeMergeTable(s, dir),
+        carry = Seq("lang", "source"))
+      .select(col("lang"), col("source"), col("doc_id"), col("n_tokens").as("n_tok"))
 
   val packSequencesSql: String =
     s"""WITH toks AS (
@@ -103,22 +120,8 @@ object PipelineQueries {
     * Scale: identical to [[packSequences]] — the token counting is a
     * narrow map pass (single-row merge-table broadcast), then one hash
     * exchange on the (lang, source) stream key for the window. */
-  def packExactTokens(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val toks = TextQueries.tokensPerDocOf(
-        Tables.spread(Tables.documents(s, dir)), TextQueries.bpeMergeTable(s, dir),
-        carry = Seq("lang", "source"))
-      .select($"lang", $"source", $"doc_id", $"n_tokens".as("n_tok"))
-    val w = Window.partitionBy($"lang", $"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("cum_before", coalesce(sum($"n_tok").over(w), lit(0L)))
-      .withColumn("bin", expr(s"cum_before div $PACK_BUDGET"))
-      .groupBy($"lang", $"source", $"bin")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("bin_tokens"))
-      .withColumn("fill_bp", expr(s"bin_tokens * 10000 div $PACK_BUDGET"))
-      .orderBy($"lang", $"source", $"bin")
-  }
+  def packExactTokens(s: SparkSession, dir: String): DataFrame =
+    binFill(exactToks(s, dir, Tables.documents(s, dir)))
 
   val packExactTokensSql: String =
     TextQueries.tokensPerDocCteSql + s""",
@@ -158,15 +161,7 @@ object PipelineQueries {
     * the resume-frontier audit ([[resumePosition]]) seeks into. */
   private def manifestRows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = TextQueries.tokensPerDocOf(
-        Tables.spread(Tables.documents(s, dir)), TextQueries.bpeMergeTable(s, dir),
-        carry = Seq("lang", "source"))
-      .select($"lang", $"source", $"doc_id", $"n_tokens".as("n_tok"))
-    val w = Window.partitionBy($"lang", $"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("cum_before", coalesce(sum($"n_tok").over(w), lit(0L)))
-      .withColumn("bin", expr(s"cum_before div $PACK_BUDGET"))
+    packed(exactToks(s, dir, Tables.documents(s, dir)))
       .withColumn("start_off", expr(s"cum_before % $PACK_BUDGET"))
       .withColumn("seq_pos",
         row_number().over(Window.partitionBy($"lang", $"source", $"bin")
@@ -584,19 +579,11 @@ object PipelineQueries {
       count(lit(1)).as("n_docs"),
       sum($"isq".cast("long")).as("n_quality"),
       sum($"keep".cast("long")).as("n_kept"))
-    val toks = TextQueries.tokensPerDocOf(
-        Tables.spread(staged.filter($"keep")
-          .select($"doc_id", $"text", $"lang", $"source")),
-        TextQueries.bpeMergeTable(s, dir), carry = Seq("lang", "source"))
-      .select($"lang", $"source", $"doc_id", $"n_tokens".as("n_tok"))
-    val w = Window.partitionBy($"lang", $"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bins = toks
-      .withColumn("cum_before", coalesce(sum($"n_tok").over(w), lit(0L)))
-      .withColumn("bin", expr(s"cum_before div $PACK_BUDGET"))
+    val pk = packed(exactToks(s, dir,
+        staged.filter($"keep").select($"doc_id", $"text", $"lang", $"source")))
       .groupBy($"lang", $"source", $"bin")
       .agg(sum($"n_tok").as("bin_tokens"))
-    val pk = bins.groupBy($"lang", $"source")
+      .groupBy($"lang", $"source")
       .agg(count(lit(1)).as("n_bins"), sum($"bin_tokens").as("total_tokens"),
         sum(when($"bin_tokens" >= PACK_BUDGET, 1L).otherwise(0L))
           .as("n_full_bins"))
@@ -683,15 +670,8 @@ object PipelineQueries {
     val staged = stagedKeep(Tables.documents(s, dir))
     val census = staged.groupBy($"lang", $"source").agg(
       count(lit(1)).as("n_docs"), sum($"keep".cast("long")).as("n_kept"))
-    val toks = TextQueries.tokensPerDocOf(
-        Tables.spread(staged.filter($"keep")
-          .select($"doc_id", $"text", $"lang", $"source")),
-        TextQueries.bpeMergeTable(s, dir), carry = Seq("lang", "source"))
-      .select($"lang", $"source", $"doc_id", $"n_tokens".as("n_tok"))
-    val w = Window.partitionBy($"lang", $"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pc = toks
-      .withColumn("cum_before", coalesce(sum($"n_tok").over(w), lit(0L)))
+    val pc = withCumBefore(exactToks(s, dir,
+      staged.filter($"keep").select($"doc_id", $"text", $"lang", $"source")))
     val (c1, c2, c3) = crossDocLevels("div")
     val cross = pc
       .selectExpr(Seq("lang", "source", "n_tok", "cum_before") ++ c1: _*)
@@ -889,10 +869,10 @@ object PipelineQueries {
   def scrubDenylist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val deny = array(DENY.map(lit): _*)
-    val kept = filter(split($"text", " "), t => !array_contains(deny, t))
+    val kept = filter(Ops.words($"text"), t => !array_contains(deny, t))
     Tables.documents(s, dir)
       .select($"lang", $"source",
-        nWord("text").as("n_before"),
+        Ops.wordCount($"text").as("n_before"),
         size(kept).cast("long").as("n_after"),
         length(array_join(kept, " ")).cast("long").as("chars_after"))
       .groupBy($"lang", $"source")
@@ -1248,7 +1228,7 @@ object PipelineQueries {
   def spanScrub(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val spans = Tables.spread(Tables.documents(s, dir))
-      .select($"doc_id", $"source", split($"text", " ").as("w"))
+      .select($"doc_id", $"source", Ops.words($"text").as("w"))
       .withColumn("n_spans", expr(s"size(w) div $SCRUB_W"))
       // sequence(0, n_spans) is never empty (n_spans >= 0), so no
       // descending-sequence surprise at n_spans = 0; the slice keeps
@@ -1449,16 +1429,8 @@ object PipelineQueries {
 
   def packShuffle(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = Tables.documents(s, dir)
-      .select($"lang", $"source", $"doc_id", nTok("text").as("n_tok"))
-    val w = Window.partitionBy($"lang", $"source").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bins = toks
-      .withColumn("cum_before", coalesce(sum($"n_tok").over(w), lit(0L)))
-      .withColumn("bin", expr(s"cum_before div $PACK_BUDGET"))
-      .groupBy($"lang", $"source", $"bin")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("bin_tokens"))
-    val keyed = bins
+    val keyed = bins(Tables.documents(s, dir)
+        .select($"lang", $"source", $"doc_id", nTok("text").as("n_tok")))
       .withColumn("epoch", explode(array(EPOCHS.map(lit): _*)))
       .withColumn("shuf_key", md5(concat_ws("_",
         $"epoch", $"lang", $"source", $"bin".cast("string"))))

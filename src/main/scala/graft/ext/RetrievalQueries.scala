@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{QueryDef, Tables}
+import graft.{Ops, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,11 +57,11 @@ object RetrievalQueries {
       terms: Seq[String]): DataFrame = {
     import docs.sparkSession.implicits._
     // doc lengths for every doc (BM25 normalizes by corpus-wide avgdl)
-    val dl = docs.select($"doc_id", size(split($"text", " ")).cast(LongType).as("dl"))
+    val dl = docs.select($"doc_id", Ops.wordCount($"text").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum($"dl").cast(DoubleType) / count(lit(1))).as("avgdl"))
     val tf = docs
-      .select($"doc_id", explode(split($"text", " ")).as("tok"))
+      .select($"doc_id", explode(Ops.words($"text")).as("tok"))
       .filter($"tok".isin(terms: _*))
       .groupBy($"doc_id", $"tok")
       .agg(count(lit(1)).as("tf"))
@@ -129,7 +129,7 @@ object RetrievalQueries {
   def phraseSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val withToks = Tables.documents(s, dir)
-      .withColumn("toks", split($"text", " "))
+      .transform(DedupQueries.withToks)
     // one occurrence-count column per phrase, all from the same scan
     val occCols = PHRASES.map { case (w1, w2) =>
       expr(s"size(filter(sequence(0, size(toks) - 2), " +
@@ -207,11 +207,11 @@ object RetrievalQueries {
       .toDF("q_id", "tok")
 
     // lexical arm: BM25 per query over its own term subset
-    val dl = docs.select($"doc_id", size(split($"text", " ")).cast(LongType).as("dl"))
+    val dl = docs.select($"doc_id", Ops.wordCount($"text").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum($"dl").cast(DoubleType) / count(lit(1))).as("avgdl"))
     val tf = docs
-      .select($"doc_id", explode(split($"text", " ")).as("tok"))
+      .select($"doc_id", explode(Ops.words($"text")).as("tok"))
       .filter($"tok".isin(allTerms: _*))
       .groupBy($"doc_id", $"tok")
       .agg(count(lit(1)).as("tf"))
@@ -396,10 +396,10 @@ object RetrievalQueries {
     val nterms = qrels.groupBy($"query_id").agg(count(lit(1)).as("n_terms"))
     val terms = EVAL_QUERIES.map(_._2).distinct
     val dl = docs.select($"doc_id",
-      size(split($"text", " ")).cast(LongType).as("dl"))
+      Ops.wordCount($"text").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum($"dl").cast(DoubleType) / count(lit(1))).as("avgdl"))
-    val tf0 = docs.select($"doc_id", explode(split($"text", " ")).as("tok"))
+    val tf0 = docs.select($"doc_id", explode(Ops.words($"text")).as("tok"))
       .filter($"tok".isin(terms: _*))
       .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
     val dfs = tf0.groupBy($"tok").agg(count(lit(1)).as("df"))

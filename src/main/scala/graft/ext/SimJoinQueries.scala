@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{QueryDef, Tables}
+import graft.{Ops, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -77,7 +77,7 @@ object SimJoinQueries {
   private[graft] def docIndexOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val sh = docs
-      .withColumn("toks", split($"text", " "))
+      .transform(DedupQueries.withToks)
       .select($"doc_id", explode(array_distinct(DedupQueries.shingleArr)).as("sh"))
     val df_ = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
     sh.join(df_, "sh")

@@ -63,6 +63,35 @@ object SimilarityQueries {
   private def cosine(dot: Column, na: Column, nb: Column): Column =
     dot.cast(DoubleType) / (sqrt(na.cast(DoubleType)) * sqrt(nb.cast(DoubleType)))
 
+  /** Rank each `key` group by `order` (as a BIGINT `rnk`) and keep ranks
+    * ≤ k. */
+  private[graft] def keepTopK(df: DataFrame, key: String, k: Int,
+      order: Column*): DataFrame =
+    df.withColumn("rnk",
+        row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)).cast(LongType))
+      .filter(col("rnk") <= k)
+
+  /** The per-group top-k tail of the ranked queries: [[keepTopK]], then
+    * presented in (key, rnk) order with `cols` projected. */
+  private[graft] def topK(df: DataFrame, key: String, k: Int, order: Column*)(
+      cols: String*): DataFrame =
+    keepTopK(df, key, k, order: _*)
+      .orderBy(col(key), col("rnk"))
+      .select(cols.map(col): _*)
+
+  /** The top-5 surface every k-NN tier emits: (q_id, rnk, vec_id,
+    * cos_sim), ties on vec_id. */
+  private def knnTop5(scored: DataFrame): DataFrame =
+    topK(scored, "q_id", 5, col("cos_sim").desc, col("vec_id").asc)(
+      "q_id", "rnk", "vec_id", "cos_sim")
+
+  /** The unranked top-5 (q_id, vec_id) pairs the recall audits compare. */
+  private def top5Pairs(scored: DataFrame): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id").asc)))
+      .filter(col("rnk") <= 5)
+      .select(col("q_id"), col("vec_id"))
+
   /** DuckDB mirror: exact integer dot via unnested index sum (integer SUM is
     * order-independent). `a`/`b` are embedding list expressions; requires an
     * unnested index `g` in scope. */
@@ -84,20 +113,13 @@ object SimilarityQueries {
     * this is one pass over the corpus per (small) query batch. */
   def knnBrute(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, dir)
-    val withNorm = e
-      .select($"vec_id", q6Arr($"embedding").as("qe"))
-      .select($"vec_id", $"qe", dotQ($"qe", $"qe").as("nrm"))
+    val withNorm = quantized(s, dir)
     val q = withNorm.filter($"vec_id" < 20)
       .toDF("q_id", "q_emb", "q_nrm")
     val scored = withNorm.join(broadcast(q), $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id",
         cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
+    knnTop5(scored)
   }
 
   val knnBruteSql: String =
@@ -156,11 +178,7 @@ object SimilarityQueries {
         $"bucket" === $"q_bucket" && $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id",
         cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
+    knnTop5(scored)
   }
 
   /** DuckDB mirror of [[bucketCol]]: hyperplane-sign bucket per vec_id. */
@@ -275,36 +293,12 @@ object SimilarityQueries {
     * ≈ NPROBE · [[IVF_TARGET_LIST]], flat in the corpus size. */
   def knnIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, dir)
-      .select($"vec_id", q6Arr($"embedding").as("qe"))
-      .select($"vec_id", $"qe", dotQ($"qe", $"qe").as("nrm"))
-    val cents = e
-      .orderBy(md5(concat(lit("ivf_"), $"vec_id".cast(StringType))).asc,
-        $"vec_id".asc)
-      .limit(ivfK(embCount(s, dir)))
-      .toDF("c_id", "c_qe", "c_nrm")
-    val scoredCents = e.join(broadcast(cents), lit(true))
-      .select($"vec_id", $"qe", $"nrm", $"c_id",
-        cosine(dotQ($"qe", $"c_qe"), $"nrm", $"c_nrm").as("c_cos"))
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"c_cos".desc, $"c_id".asc)
-    val ranked = scoredCents
-      .withColumn("crn", row_number().over(wAssign))
-    val assign = ranked.filter($"crn" === 1)
-      .select($"vec_id", $"c_id".as("bucket"))
+    val e = quantized(s, dir)
+    val ranked = kmAssign(e, seedCents(e, ivfK(embCount(s, dir))))
     val probes = ranked.filter($"vec_id" < 20 && $"crn" <= NPROBE)
       .select($"vec_id".as("q_id"), $"qe".as("q_emb"), $"nrm".as("q_nrm"),
         $"c_id".as("bucket"))
-    val scored = probes.join(assign, Seq("bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .join(e, Seq("vec_id"))
-      .select($"q_id", $"vec_id",
-        cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-      .distinct()
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
+    knnTop5(rescore(probes, invLists(ranked), e))
   }
 
   val knnIvfSql: String =
@@ -425,12 +419,44 @@ object SimilarityQueries {
     * the brute-force tier is pinned in ExtSpec. */
   /** Quantized embedding relation (vec_id, qe, nrm) — the input every
     * centroid-based operator shares. */
-  private def quantized(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.embeddings(s, dir)
-      .select($"vec_id", q6Arr($"embedding").as("qe"))
-      .select($"vec_id", $"qe", dotQ($"qe", $"qe").as("nrm"))
+  private def quantized(s: SparkSession, dir: String): DataFrame =
+    quantizeRaw(Tables.embeddings(s, dir))
+
+  /** The md5-picked seed centroids of a quantized relation: the k vectors
+    * with the smallest `md5('ivf_' || vec_id)`, as (c_id, c_qe, c_nrm). */
+  private def seedCents(e: DataFrame, k: Int): DataFrame = {
+    import e.sparkSession.implicits._
+    e.orderBy(md5(concat(lit("ivf_"), $"vec_id".cast(StringType))).asc,
+        $"vec_id".asc)
+      .limit(k)
+      .toDF("c_id", "c_qe", "c_nrm")
   }
+
+  /** The inverted lists of a probe ranking: each vector's nearest
+    * centroid, as (vec_id, bucket). */
+  private def invLists(ranked: DataFrame): DataFrame =
+    ranked.filter(col("crn") === 1).select(col("vec_id"), col("c_id").as("bucket"))
+
+  /** Attach the quantized query vector to probe rows (vec_id, c_id):
+    * (q_id, q_emb, q_nrm, bucket). */
+  private def probeVecs(e: DataFrame)(probed: DataFrame): DataFrame =
+    probed.select(col("vec_id"), col("c_id").as("bucket"))
+      .join(e, Seq("vec_id"))
+      .select(col("vec_id").as("q_id"), col("qe").as("q_emb"),
+        col("nrm").as("q_nrm"), col("bucket"))
+
+  /** Probe → candidate → exact rescore: each probe (q_id, q_emb, q_nrm,
+    * bucket) meets its inverted list in `assign` (vec_id, bucket), drops
+    * itself, and is scored by exact cosine against `e`; one row per
+    * (q_id, vec_id, cos_sim). */
+  private def rescore(probes: DataFrame, assign: DataFrame,
+      e: DataFrame): DataFrame =
+    probes.join(assign, Seq("bucket"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .join(e, Seq("vec_id"))
+      .select(col("q_id"), col("vec_id"),
+        cosine(dotQ(col("q_emb"), col("qe")), col("q_nrm"), col("nrm")).as("cos_sim"))
+      .distinct()
 
   /** md5-seeded + [[KM_ROUNDS]] Lloyd-refined centroid table — shared by
     * the learned-IVF ANN and the semantic-dedup blocker. */
@@ -440,13 +466,7 @@ object SimilarityQueries {
     // one count here runs once per memoized training, and cohort
     // trainings (centroid drift) get a K matched to their own cohort —
     // exactly what the suffix-parameterized oracle chain computes.
-    val k = ivfK(e.count())
-    val seed = e
-      .orderBy(md5(concat(lit("ivf_"), $"vec_id".cast(StringType))).asc,
-        $"vec_id".asc)
-      .limit(k)
-      .toDF("c_id", "c_qe", "c_nrm")
-    (1 to KM_ROUNDS).foldLeft(seed) { (cents, _) =>
+    (1 to KM_ROUNDS).foldLeft(seedCents(e, ivfK(e.count()))) { (cents, _) =>
       kmUpdate(e, kmAssign(e, cents).filter($"crn" === 1)
         .select($"vec_id", $"c_id"))
     }
@@ -535,23 +555,10 @@ object SimilarityQueries {
     import s.implicits._
     val e = quantized(s, dir)
     val ranked = rankedAssign(s, dir)
-    val assign = ranked.filter($"crn" === 1).select($"vec_id", $"c_id".as("bucket"))
+    val assign = invLists(ranked)
     val probes = ranked.filter($"vec_id" < 20 && $"crn" <= NPROBE2)
-      .select($"vec_id", $"c_id".as("bucket"))
-      .join(e, Seq("vec_id"))
-      .select($"vec_id".as("q_id"), $"qe".as("q_emb"), $"nrm".as("q_nrm"),
-        $"bucket")
-    val scored = probes.join(assign, Seq("bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .join(e, Seq("vec_id"))
-      .select($"q_id", $"vec_id",
-        cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-      .distinct()
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
+      .transform(probeVecs(e))
+    knnTop5(rescore(probes, assign, e))
   }
 
   /** X3m — FILTERED ANN: top-5 under a metadata predicate (`label = 1`,
@@ -608,21 +615,8 @@ object SimilarityQueries {
     val probes = ranked.filter($"vec_id" < 20)
       .crossJoin(broadcast(sel))
       .filter($"crn" <= $"nprobe")
-      .select($"vec_id", $"c_id".as("bucket"))
-      .join(e, Seq("vec_id"))
-      .select($"vec_id".as("q_id"), $"qe".as("q_emb"), $"nrm".as("q_nrm"),
-        $"bucket")
-    val scored = probes.join(assign, Seq("bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .join(e, Seq("vec_id"))
-      .select($"q_id", $"vec_id",
-        cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-      .distinct()
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
+      .transform(probeVecs(e))
+    knnTop5(rescore(probes, assign, e))
   }
 
   lazy val knnFilteredSql: String =
@@ -697,15 +691,7 @@ object SimilarityQueries {
       .crossJoin(broadcast(sel))
       .filter($"crn" <= $"nprobe")
       .select($"q_id", $"q_emb", $"q_nrm", $"c_id".as("bucket"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    probes.join(assign, Seq("bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .join(e, Seq("vec_id"))
-      .select($"q_id", $"vec_id",
-        cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-      .distinct()
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
+    keepTopK(rescore(probes, assign, e), "q_id", 5, $"cos_sim".desc, $"vec_id".asc)
       .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
   }
 
@@ -732,7 +718,6 @@ object SimilarityQueries {
     val e = quantized(s, dir)
     val lab = Tables.embeddings(s, dir).select($"vec_id", $"label")
     val ranked = rankedAssign(s, dir)
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
 
     def leg(tag: String, pred: org.apache.spark.sql.Column): DataFrame = {
       val sel = lab.agg(count(lit(1)).as("n_total"),
@@ -745,25 +730,13 @@ object SimilarityQueries {
       val probes = ranked.filter($"vec_id" < 20)
         .crossJoin(broadcast(sel.select($"nprobe")))
         .filter($"crn" <= $"nprobe")
-        .select($"vec_id", $"c_id".as("bucket"))
-        .join(e, Seq("vec_id"))
-        .select($"vec_id".as("q_id"), $"qe".as("q_emb"), $"nrm".as("q_nrm"),
-          $"bucket")
-      val pairs = probes.join(assign, Seq("bucket"))
-        .filter($"vec_id" =!= $"q_id")
-        .join(e, Seq("vec_id"))
-        .select($"q_id", $"vec_id",
-          cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-        .distinct()
-        .withColumn("rnk", row_number().over(w)).filter($"rnk" <= 5)
-        .select($"q_id", $"vec_id")
+        .transform(probeVecs(e))
+      val pairs = top5Pairs(rescore(probes, assign, e))
       val qs = e.filter($"vec_id" < 20).toDF("q_id", "q_emb", "q_nrm")
-      val truth = e.join(matchIds, Seq("vec_id"))
+      val truth = top5Pairs(e.join(matchIds, Seq("vec_id"))
         .join(broadcast(qs), $"vec_id" =!= $"q_id")
         .select($"q_id", $"vec_id",
-          cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-        .withColumn("rnk", row_number().over(w)).filter($"rnk" <= 5)
-        .select($"q_id", $"vec_id")
+          cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim")))
       val stats = pairs
         .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
         .agg(count(lit(1)).as("n_pred"), sum(coalesce($"hit", lit(0L))).as("hits"))
@@ -1009,8 +982,7 @@ object SimilarityQueries {
     import s.implicits._
     val e = quantized(s, dir)
     val ranked = rankedAssign(s, dir)
-    val assign = ranked.filter($"crn" === 1)
-      .select($"vec_id", $"c_id".as("bucket"))
+    val assign = invLists(ranked)
     val depth = semDepth(embCount(s, dir))
     val v0 = e.join(assign, Seq("vec_id"))
     val v =
@@ -1028,12 +1000,8 @@ object SimilarityQueries {
       .filter($"vec_id" < $"b_id")
       .select($"bucket", $"vec_id", $"b_id",
         cosine(dotQ($"qe", $"b_emb"), $"nrm", $"b_nrm").as("cos_sim"))
-    val w = Window.partitionBy($"bucket")
-      .orderBy($"cos_sim".desc, $"vec_id".asc, $"b_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"bucket", $"rnk")
-      .select($"bucket", $"rnk", $"vec_id", $"b_id", $"cos_sim")
+    topK(scored, "bucket", 5, $"cos_sim".desc, $"vec_id".asc, $"b_id".asc)(
+      "bucket", "rnk", "vec_id", "b_id", "cos_sim")
   }
 
   val semanticDedupSql: String =
@@ -1109,11 +1077,7 @@ object SimilarityQueries {
       cosine(decDot($"q_emb", $"embedding"),
         decDot($"q_emb", $"q_emb"),
         decDot($"embedding", $"embedding")).as("cos_sim"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
+    knnTop5(scored)
   }
 
   /** DuckDB mirror of the SQ8 code: floor(x / sc * 127) as BIGINT. */
@@ -1302,11 +1266,8 @@ object SimilarityQueries {
         $"label" === $"b_label" && $"bucket" === $"b_bucket" && $"vec_id" < $"b_id")
       .select($"label", $"vec_id", $"b_id",
         cosine(dotQ($"qe", $"b_emb"), $"nrm", $"b_nrm").as("cos_sim"))
-    val w = Window.partitionBy($"label").orderBy($"cos_sim".desc, $"vec_id".asc, $"b_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 3)
-      .orderBy($"label", $"rnk")
-      .select($"label", $"rnk", $"vec_id", $"b_id", $"cos_sim")
+    topK(scored, "label", 3, $"cos_sim".desc, $"vec_id".asc, $"b_id".asc)(
+      "label", "rnk", "vec_id", "b_id", "cos_sim")
   }
 
   val nearDupByLabelSql: String =
@@ -1516,11 +1477,7 @@ object SimilarityQueries {
     val scored = cand.join(broadcast(q), Seq("q_id")).join(e, Seq("vec_id"))
       .select($"q_id", $"vec_id",
         cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 5)
-      .orderBy($"q_id", $"rnk")
-      .select($"q_id", $"rnk", $"vec_id", $"cos_sim")
+    knnTop5(scored)
   }
 
   /** X3l — the composed 100-TB ANN architecture (IVF-PQ / IndexIVFPQ
@@ -1538,8 +1495,7 @@ object SimilarityQueries {
     import s.implicits._
     val e = quantized(s, dir)
     val ranked = rankedAssign(s, dir)
-    val assign = ranked.filter($"crn" === 1)
-      .select($"vec_id", $"c_id".as("bucket"))
+    val assign = invLists(ranked)
     val probes = ranked.filter($"vec_id" < 20 && $"crn" <= NPROBE2)
       .select($"vec_id".as("q_id"), $"c_id".as("bucket"))
     val cands = probes.join(assign, Seq("bucket"))
@@ -1792,9 +1748,7 @@ object SimilarityQueries {
     * anti-join serving path behaves when the tombstone set broadcasts. */
   def annDeleteEval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, dir)
-      .select($"vec_id", q6Arr($"embedding").as("qe"))
-      .select($"vec_id", $"qe", dotQ($"qe", $"qe").as("nrm"))
+    val e = quantized(s, dir)
     val keep = ($"vec_id" % 7) =!= 3
     val surv = e.filter(keep)
 
@@ -1805,44 +1759,21 @@ object SimilarityQueries {
     // it from the survivors — exactly what retraining does in production.
     def leg(centSrc: DataFrame, rankCorpus: DataFrame,
         keepCond: org.apache.spark.sql.Column): DataFrame = {
-      val cents = centSrc
-        .orderBy(md5(concat(lit("ivf_"), $"vec_id".cast(StringType))).asc,
-          $"vec_id".asc)
-        .limit(ivfK(centSrc.count()))
-        .toDF("c_id", "c_qe", "c_nrm")
-      val scoredCents = rankCorpus.join(broadcast(cents), lit(true))
-        .select($"vec_id", $"qe", $"nrm", $"c_id",
-          cosine(dotQ($"qe", $"c_qe"), $"nrm", $"c_nrm").as("c_cos"))
-      val wAssign = Window.partitionBy($"vec_id")
-        .orderBy($"c_cos".desc, $"c_id".asc)
-      val ranked = scoredCents.withColumn("crn", row_number().over(wAssign))
+      val ranked = kmAssign(rankCorpus, seedCents(centSrc, ivfK(centSrc.count())))
       val assign = ranked.filter($"crn" === 1 && keepCond)
         .select($"vec_id", $"c_id".as("bucket"))
       val probes = ranked.filter($"vec_id" < 20 && keepCond && $"crn" <= NPROBE)
         .select($"vec_id".as("q_id"), $"qe".as("q_emb"), $"nrm".as("q_nrm"),
           $"c_id".as("bucket"))
-      val scored = probes.join(assign, Seq("bucket"))
-        .filter($"vec_id" =!= $"q_id")
-        .join(e, Seq("vec_id"))
-        .select($"q_id", $"vec_id",
-          cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-        .distinct()
-      val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-      scored.withColumn("rnk", row_number().over(w))
-        .filter($"rnk" <= 5)
-        .select($"q_id", $"vec_id")
+      top5Pairs(rescore(probes, assign, e))
     }
     val postDelete = leg(e, e, keep)
     val retrained = leg(surv, surv, lit(true))
 
     val q = surv.filter($"vec_id" < 20).toDF("q_id", "q_emb", "q_nrm")
-    val truthScored = surv.join(broadcast(q), $"vec_id" =!= $"q_id")
+    val truth = top5Pairs(surv.join(broadcast(q), $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id",
-        cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-    val wT = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-    val truth = truthScored.withColumn("rnk", row_number().over(wT))
-      .filter($"rnk" <= 5)
-      .select($"q_id", $"vec_id")
+        cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim")))
 
     val preds = Seq("ivf_post_delete" -> postDelete,
       "ivf_retrained" -> retrained).map { case (nm, df) =>
@@ -1965,8 +1896,7 @@ object SimilarityQueries {
     val maxProbe = 8
     val e = quantized(s, dir)
     val ranked = rankedAssign(s, dir)
-    val assign = ranked.filter($"crn" === 1)
-      .select($"vec_id", $"c_id".as("bucket"))
+    val assign = invLists(ranked)
     val probes = ranked.filter($"vec_id" < 20 && $"crn" <= maxProbe)
       .select($"vec_id", $"c_id".as("bucket"), $"crn".as("probe_rank"))
       .join(e, Seq("vec_id"))
@@ -2383,19 +2313,10 @@ object SimilarityQueries {
       .filter($"cos_sim" >= RANGE_TAU)
       .groupBy($"q_id").agg(count(lit(1)).as("n_true"))
     val ranked = rankedAssign(s, dir)
-    val assign = ranked.filter($"crn" === 1)
-      .select($"vec_id", $"c_id".as("bucket"))
+    val assign = invLists(ranked)
     val probes = ranked.filter($"vec_id" < 20 && $"crn" <= NPROBE2)
-      .select($"vec_id", $"c_id".as("bucket"))
-      .join(e, Seq("vec_id"))
-      .select($"vec_id".as("q_id"), $"qe".as("q_emb"), $"nrm".as("q_nrm"),
-        $"bucket")
-    val found = probes.join(assign, Seq("bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .join(e, Seq("vec_id"))
-      .select($"q_id", $"vec_id",
-        cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-      .distinct()
+      .transform(probeVecs(e))
+    val found = rescore(probes, assign, e)
       .filter($"cos_sim" >= RANGE_TAU)
       .groupBy($"q_id").agg(count(lit(1)).as("n_found"))
     qs.select($"q_id")
@@ -2594,10 +2515,7 @@ object SimilarityQueries {
       val scored = ed.join(broadcast(q), $"vec_id" =!= $"q_id")
         .select($"q_id", $"vec_id",
           cosine(dotQ($"q_qd", $"qd"), $"q_nrm", $"nrm_d").as("cos_sim"))
-      val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-      val preds = scored.withColumn("rnk", row_number().over(w))
-        .filter($"rnk" <= 5).select($"q_id", $"vec_id")
-      preds
+      top5Pairs(scored)
         .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
         .agg(count(lit(1)).as("n_pred"),
           coalesce(sum(coalesce($"hit", lit(0L))), lit(0L)).as("hits"))
@@ -2695,20 +2613,8 @@ object SimilarityQueries {
         .join(broadcast(survive), Seq("c_id"), "left_semi")
         .withColumn("srn", row_number().over(wQ))
         .filter($"srn" <= NPROBE2)
-        .select($"vec_id", $"c_id".as("bucket"))
-        .join(e, Seq("vec_id"))
-        .select($"vec_id".as("q_id"), $"qe".as("q_emb"),
-          $"nrm".as("q_nrm"), $"bucket")
-      val scored = probes.join(assign, Seq("bucket"))
-        .filter($"vec_id" =!= $"q_id")
-        .join(e, Seq("vec_id"))
-        .select($"q_id", $"vec_id",
-          cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim"))
-        .distinct()
-      val w = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
-      val preds = scored.withColumn("rnk", row_number().over(w))
-        .filter($"rnk" <= 5).select($"q_id", $"vec_id")
-      val stat = preds
+        .transform(probeVecs(e))
+      val stat = top5Pairs(rescore(probes, assign, e))
         .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
         .agg(count(lit(1)).as("n_pred"),
           coalesce(sum(coalesce($"hit", lit(0L))), lit(0L)).as("hits"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{QueryDef, Tables}
+import graft.{Ops, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +22,7 @@ object TextQueries {
     * punctuation ratio, stopword floor (the Gopher/C4 rule family).
     * Shared by [[textStats]] and the composed curation pipeline. */
   private[graft] def qualityCol: org.apache.spark.sql.Column = {
-    val toks = split(col("text"), " ")
+    val toks = Ops.words(col("text"))
     val tokenCnt = size(toks).cast(LongType)
     val punctCnt =
       (length(col("text")) - length(regexp_replace(col("text"), "[.,!?;:]", "")))
@@ -45,7 +45,7 @@ object TextQueries {
   // --- X4a: token counting + quality scoring -----------------------------
   def textStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = split($"text", " ")
+    val toks = Ops.words($"text")
     val tokenCnt = size(toks).cast(LongType)
     val wordCnt = size(regexp_extract_all($"text", lit("[a-z]+"), lit(0))).cast(LongType)
     // BPE-style pretokenizer shape: word runs, digit runs, single punctuation
@@ -111,7 +111,7 @@ object TextQueries {
     * query and its X4w metrics view. */
   private def langidConfusion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = split($"text", " ")
+    val toks = Ops.words($"text")
     val scores = langProfiles.map { case (l, ws) =>
       l -> size(filter(toks, t => ws.map(w => t === w).reduce(_ || _))).cast(LongType)
     }
@@ -225,7 +225,7 @@ object TextQueries {
     import s.implicits._
     Tables.documents(s, dir)
       .filter($"doc_id" < 20)
-      .select($"doc_id", posexplode(split($"text", " ")))
+      .select($"doc_id", posexplode(Ops.words($"text")))
       .select($"doc_id", $"pos".cast(LongType).as("pos"), $"col".as("tok"))
       .orderBy($"doc_id", $"pos")
   }
@@ -243,7 +243,7 @@ object TextQueries {
   def textTermFreq(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .select(explode(split($"text", " ")).as("tok"))
+      .select(explode(Ops.words($"text")).as("tok"))
       .filter(length($"tok") > 0)
       .groupBy($"tok").agg(count(lit(1)).as("tf"))
       .orderBy($"tf".desc, $"tok".asc)
@@ -299,7 +299,7 @@ object TextQueries {
   private[graft] def textTfidfOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val terms = docs
-      .select($"doc_id", explode(split($"text", " ")).as("term"))
+      .select($"doc_id", explode(Ops.words($"text")).as("term"))
       .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
     val dfreq = terms.groupBy($"term")
       .agg(countDistinct($"doc_id").as("dfreq"))
@@ -309,12 +309,8 @@ object TextQueries {
       .crossJoin(broadcast(nDocs))
       .select($"doc_id", $"term",
         round($"tf" * log($"n_docs".cast(DoubleType) / $"dfreq"), 6).as("tfidf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"doc_id").orderBy($"tfidf".desc, $"term".asc)
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= 3)
-      .orderBy($"doc_id", $"rnk")
-      .select($"doc_id", $"rnk", $"term", $"tfidf")
+    SimilarityQueries.topK(scored, "doc_id", 3, $"tfidf".desc, $"term".asc)(
+      "doc_id", "rnk", "term", "tfidf")
   }
 
   val textTfidfSql: String =
@@ -347,7 +343,7 @@ object TextQueries {
   def textContamination(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val grams = Tables.documents(s, dir)
-      .withColumn("toks", split($"text", " "))
+      .transform(DedupQueries.withToks)
       .select($"doc_id", $"lang",
         explode(array_distinct(DedupQueries.shingleArr)).as("gram"))
     val bench = grams.filter($"doc_id" % 101 === 0)
@@ -386,7 +382,7 @@ object TextQueries {
   def textRepetition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .withColumn("toks", split($"text", " "))
+      .transform(DedupQueries.withToks)
       .withColumn("grams", DedupQueries.shingleArr)
       .select($"lang", $"source",
         size($"grams").cast(LongType).as("n"),
@@ -430,7 +426,7 @@ object TextQueries {
   def textHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val toks = Tables.documents(s, dir)
-      .select(explode(split($"text", " ")).as("tok"))
+      .select(explode(Ops.words($"text")).as("tok"))
     val exactTop = toks.groupBy($"tok").agg(count(lit(1)).as("exact_n"))
       .orderBy($"exact_n".desc, $"tok".asc).limit(10)
     val cms = udaf(new graft.functions.CountMin(CMS_D, CMS_W),
@@ -481,7 +477,7 @@ object TextQueries {
       .when(cell.isin("2", "3"), "test")
       .otherwise("train")
     val pairs = Tables.documents(s, dir)
-      .withColumn("toks", split($"text", " "))
+      .transform(DedupQueries.withToks)
       .select($"doc_id", $"lang", splitC.as("split"),
         explode(array_distinct(DedupQueries.shingleArr)).as("sh"))
     val flag = pairs.groupBy($"sh")
@@ -595,7 +591,7 @@ object TextQueries {
   def bpePairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val words = Tables.documents(s, dir)
-      .select(explode(split($"text", " ")).as("w"))
+      .select(explode(Ops.words($"text")).as("w"))
       .filter(length($"w") > 0)
       .groupBy($"w").agg(count(lit(1)).as("freq"))
     words
@@ -649,7 +645,7 @@ object TextQueries {
   def bpeMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val words = Tables.documents(s, dir)
-      .select(explode(split($"text", " ")).as("w"))
+      .select(explode(Ops.words($"text")).as("w"))
       .filter(length($"w") > 0 && !$"w".contains("|") && !$"w".contains("+"))
       .groupBy($"w").agg(count(lit(1)).as("freq"))
     val top = words
@@ -768,7 +764,7 @@ object TextQueries {
   private[graft] def bpeDictOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
-      .select(explode(split($"text", " ")).as("w"))
+      .select(explode(Ops.words($"text")).as("w"))
       .filter(length($"w") > 0 && !$"w".contains(BpeSent))
       .groupBy($"w").agg(count(lit(1)).as("freq"))
       .select(concat_ws(BpeSent, split($"w", "")).as("d"), $"freq")
@@ -1128,7 +1124,7 @@ object TextQueries {
   def bpeVocab(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val chars = Tables.documents(s, dir)
-      .select(explode(split($"text", " ")).as("w"))
+      .select(explode(Ops.words($"text")).as("w"))
       .filter(length($"w") > 0 && !$"w".contains(BpeSent))
       .select(explode(split($"w", "")).as("token"))
       .distinct()

@@ -1,8 +1,10 @@
 package graft.ingest
 
 import graft.QueryDef
+import graft.model.CtaSchemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** Deterministic synthetic API-response fixtures (shape per the public CTA
   * Train Tracker API, mirrored by the reference's mock at
@@ -194,15 +196,16 @@ object IngestQueries {
     * is one hash exchange, the census one more). */
   def pipelineDaily(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-daily").toString
-    val rawDir = s"$tmp/raw"
-    val lakeDir = s"$tmp/lake"
-    val feeds = CtaFixtures.feedDf(s)
-    val redriven = feeds.unionByName(feeds.filter($"line" === "Red"))
-    CtaIngest.toRawRecords(CtaIngest.normalize(redriven))
-      .write.mode("overwrite").json(rawDir)
-    CtaIngest.compact(s, rawDir, lakeDir)
-    s.read.parquet(lakeDir)
+    // the fixture lands once per session (deleted at JVM exit) and is
+    // read back with the lake's known schema: raw record + load_date
+    val tmp = graft.GraftSession.landOnce(s, "pipeline_daily", "graft-daily") { t =>
+      val feeds = CtaFixtures.feedDf(s)
+      val redriven = feeds.unionByName(feeds.filter($"line" === "Red"))
+      CtaIngest.toRawRecords(CtaIngest.normalize(redriven))
+        .write.mode("overwrite").json(s"$t/raw")
+      CtaIngest.compact(s, s"$t/raw", s"$t/lake")
+    }
+    s.read.schema(CtaSchemas.rawRecord.add("load_date", DateType)).parquet(s"$tmp/lake")
       .withColumn("line", split($"train_id", "#")(1))
       .groupBy(date_format($"load_date", "yyyy-MM-dd").as("load_date"), $"line")
       .agg(count(lit(1)).as("n_obs"),

@@ -5,24 +5,25 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Session extensions registering graft's custom Catalyst expressions for
-  * SQL use, plus the [[HaversineBoundingBox]] optimizer rule.
-  * [[graft.GraftSession.build]] installs them:
+  * SQL use. [[graft.GraftSession.build]] installs them:
   *
   * {{{
   *   spark.sql("SELECT haversine_km(lat, lon, 41.8781, -87.6298) ...")
   * }}}
   *
-  * For sessions we don't construct (the driver owns the session in the
-  * Verify/Bench contract), [[GraftExtensions.registerOn]] installs the same
-  * functions, plus the [[PresortBarrier]] rule, on an existing session.
+  * graft's optimizer [[GraftExtensions.rules]] arrive through
+  * [[GraftExtensions.registerOn]] only — `build` calls it, and so does
+  * every path onto a session graft did not construct (the driver owns the
+  * session in the Verify/Bench contract) — so each rule runs once per
+  * session whichever way the session was made.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => HaversineBoundingBox)
-  }
 }
 
 object GraftExtensions {
@@ -47,7 +48,10 @@ object GraftExtensions {
     fn("rolling_hash64", classOf[RollingHash64], "rolling_hash64(string, window int)", 2)(
       a => RollingHash64(a(0), a(1))))
 
-  /** Install the functions and the [[PresortBarrier]] rule (through
+  /** graft's optimizer rules — the one list [[registerOn]] installs. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(HaversineBoundingBox, PresortBarrier)
+
+  /** Install the functions and the [[rules]] (through
     * `experimental.extraOptimizations`, which works on a live session) on
     * an already-built session, idempotently. */
   def registerOn(spark: org.apache.spark.sql.SparkSession): Unit = {
@@ -58,8 +62,8 @@ object GraftExtensions {
     }
     val x = spark.experimental
     x.synchronized {
-      if (!x.extraOptimizations.contains(PresortBarrier))
-        x.extraOptimizations = x.extraOptimizations :+ PresortBarrier
+      val missing = rules.filterNot(x.extraOptimizations.contains)
+      if (missing.nonEmpty) x.extraOptimizations = x.extraOptimizations ++ missing
     }
   }
 }

@@ -252,18 +252,14 @@ object StreamJobs {
     merged.write.mode("overwrite").parquet(stage)
     val dir = new java.io.File(stateDir)
     val aside = new java.io.File(stateDir + "_old")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(aside)
+    graft.GraftSession.deleteRecursively(aside)
     if (dir.exists() && !dir.renameTo(aside))
       sys.error(s"state swap: failed to move $dir aside")
     if (!new java.io.File(stage).renameTo(dir)) {
       aside.renameTo(dir) // best-effort restore before failing the batch
       sys.error(s"state swap: failed to publish $stage")
     }
-    rm(aside)
+    graft.GraftSession.deleteRecursively(aside)
   }
 
   /** M7-as-stream — CDC log apply with delete TOMBSTONES: an unbounded
@@ -813,20 +809,8 @@ object StreamJobs {
   def globalIdsUpdate(batch: DataFrame, assignedSoFar: Long): DataFrame =
     graft.analytics.LayoutQueries.globalRowIdsOf(batch, assignedSoFar)
 
-  def followerJoin(events: DataFrame): DataFrame = {
-    val left = events
-      .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      .withWatermark("ts", "1 hour")
-    val right = events
-      .select(col("event_id").as("r_id"), col("user_id").as("r_user"),
-        col("ts").as("r_ts"))
-      .withWatermark("r_ts", "1 hour")
-    left.join(right,
-        col("user_id") === col("r_user") &&
-          col("r_ts") > col("ts") &&
-          col("r_ts") <= col("ts") + expr("INTERVAL 10 MINUTES"))
-      .select(col("event_id"), col("r_id"), col("event_type"))
-  }
+  def followerJoin(events: DataFrame): DataFrame =
+    followerJoinWithType(events, "inner")
 
   /** T7b — the LEFT OUTER form of [[followerJoin]]: the standard
     * enrichment-with-maybe-missing-events pattern (batch anchor: the J3
@@ -877,24 +861,17 @@ object StreamJobs {
     * window; right rows evict exactly as in [[followerJoin]].
     * StreamingSpec pins the emitted set equal to the batch left-semi
     * range join over the same corpus. */
-  def followerJoinSemi(events: DataFrame): DataFrame = {
-    val left = events
-      .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      .withWatermark("ts", "1 hour")
-    val right = events
-      .select(col("event_id").as("r_id"), col("user_id").as("r_user"),
-        col("ts").as("r_ts"))
-      .withWatermark("r_ts", "1 hour")
-    left.join(right,
-        col("user_id") === col("r_user") &&
-          col("r_ts") > col("ts") &&
-          col("r_ts") <= col("ts") + expr("INTERVAL 10 MINUTES"),
-        "left_semi")
-      .select(col("event_id"), col("event_type"))
-  }
+  def followerJoinSemi(events: DataFrame): DataFrame =
+    followerPairs(events, "left_semi").select(col("event_id"), col("event_type"))
 
-  private def followerJoinWithType(events: DataFrame,
-      joinType: String): DataFrame = {
+  private def followerJoinWithType(events: DataFrame, joinType: String): DataFrame =
+    followerPairs(events, joinType)
+      .select(col("event_id"), col("r_id"), col("event_type"))
+
+  /** Each event against the same user's events of the following 10
+    * minutes, both sides watermarked 1 hour — the shared input of every
+    * follower-join form. */
+  private def followerPairs(events: DataFrame, joinType: String): DataFrame = {
     val left = events
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
       .withWatermark("ts", "1 hour")
@@ -907,7 +884,6 @@ object StreamJobs {
           col("r_ts") > col("ts") &&
           col("r_ts") <= col("ts") + expr("INTERVAL 10 MINUTES"),
         joinType)
-      .select(col("event_id"), col("r_id"), col("event_type"))
   }
 
   /** T7e — TRUE two-input keyed stream-stream join: an ORDERS stream and a

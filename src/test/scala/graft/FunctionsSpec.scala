@@ -167,6 +167,22 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("registerOn installs the bounding-box rule on a session graft did not build") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-geo").toString + "/pts"
+    spark.range(1000)
+      .select(($"id" % 100 * 0.05 + 40.0).as("lat"),
+        ($"id" % 97 * 0.06 - 90.0).as("lon"), $"id")
+      .write.parquet(tmp)
+    try {
+      graft.plans.GraftExtensions.registerOn(spark)
+      val physical = spark.read.parquet(tmp)
+        .filter(Haversine.haversineKm($"lat", $"lon", lit(41.8781), lit(-87.6298)) < 50.0)
+        .queryExecution.executedPlan.toString
+      assert(physical.contains("PushedFilters: ") &&
+        physical.contains("GreaterThanOrEqual(lat,41.4"), physical)
+    } finally GraftSession.deleteRecursively(new java.io.File(tmp).getParentFile)
+  }
+
   test("SQL registration via extensions and registerOn") {
     GraftExtensions.registerOn(spark)
     val d = spark.sql(

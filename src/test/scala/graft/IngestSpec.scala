@@ -12,6 +12,19 @@ class IngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("q_pipeline_daily lands its fixture lake once per session") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def landings: Int =
+      Option(tmp.listFiles()).toSeq.flatten.count(_.getName.startsWith("graft-daily"))
+    val before = landings
+    val q = SparkEntry.queries("q_pipeline_daily")
+    val first = q(spark, TestSpark.sf0001).collect().toSeq
+    val second = q(spark, TestSpark.sf0001).collect().toSeq
+    assert(first.nonEmpty && first === second)
+    assert(landings - before <= 1,
+      s"${landings - before} graft-daily landings for two builds in one session")
+  }
+
   test("normalize produces the golden record for the happy path") {
     val out = CtaIngest.normalize(CtaFixtures.feedDf(spark))
       .orderBy($"train_id").collect()

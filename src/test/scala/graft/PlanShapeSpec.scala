@@ -685,10 +685,14 @@ class PlanShapeSpec extends AnyFunSuite {
       .select(explode(array(col("value"), col("value"))).as("v")).orderBy("v")
     assert(stream.isStreaming)
     assert(barrierNodes(graft.plans.PresortBarrier(stream.queryExecution.analyzed)) === 0)
-    // idempotent: installed twice, re-optimized, still exactly one
+    // idempotent: installed twice, re-optimized, still exactly one of
+    // each rule
     graft.plans.GraftExtensions.registerOn(spark)
-    assert(spark.experimental.extraOptimizations
-      .count(_ == graft.plans.PresortBarrier) === 1)
+    assert(graft.plans.GraftExtensions.rules.toSet ===
+      Set(graft.plans.PresortBarrier, graft.plans.HaversineBoundingBox))
+    graft.plans.GraftExtensions.rules.foreach { r =>
+      assert(spark.experimental.extraOptimizations.count(_ == r) === 1, r.ruleName)
+    }
     val once = SparkEntry.queries("q_tokens_per_doc")(spark, sf).queryExecution.optimizedPlan
     assert(barrierNodes(once) === 1)
     assert(barrierNodes(graft.plans.PresortBarrier(graft.plans.PresortBarrier(once))) === 1)

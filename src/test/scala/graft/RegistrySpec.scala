@@ -441,6 +441,26 @@ class RegistrySpec extends AnyFunSuite {
   // crosses one Project/Aggregate; chains across an earlier checkpoint
   // LEAF are invisible here, but that earlier plan was itself audited
   // when IT was built — coverage composes).
+  private def sourceFiles(root: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val fs = walk(new java.io.File(root))
+    assert(fs.nonEmpty, s"source scan found no files under $root (cwd?)")
+    fs
+  }
+
+  private def readSrc(f: java.io.File): String = new String(
+    java.nio.file.Files.readAllBytes(f.toPath),
+    java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Code only: line comments and scaladoc lines stripped, so prose
+    * mentions of a call don't count. */
+  private def codeOf(f: java.io.File): String = readSrc(f).linesIterator
+    .map(_.replaceAll("//.*$", ""))
+    .filterNot(_.trim.startsWith("*"))
+    .mkString("\n")
+
   private def aliasDefs(
       nodes: Seq[org.apache.spark.sql.catalyst.plans.QueryPlan[_]])
       : Map[Long, org.apache.spark.sql.catalyst.expressions.Expression] =
@@ -605,22 +625,7 @@ class RegistrySpec extends AnyFunSuite {
       }.flatten
     }
     // --- source-level invariants that make the choke point complete ---
-    val mainFiles = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-      walk(new java.io.File("src/main/scala"))
-    }
-    assert(mainFiles.nonEmpty, "source scan found no main files (cwd?)")
-    def read(f: java.io.File): String = new String(
-      java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // code only: line comments and scaladoc lines stripped, so prose
-    // mentions of a call don't count
-    def code(f: java.io.File): String = read(f).linesIterator
-      .map(_.replaceAll("//.*$", ""))
-      .filterNot(_.trim.startsWith("*"))
-      .mkString("\n")
+    val mainFiles = sourceFiles("src/main/scala")
     // (1) every materialization goes through ckpt: a localCheckpoint call
     // anywhere else, in any spelling, would reopen the blind spot this
     // test closes. GraftSession.scala keeps exactly one: ckpt's own.
@@ -630,7 +635,7 @@ class RegistrySpec extends AnyFunSuite {
       .forall(ckptRe.findFirstIn(_).nonEmpty),
       "self-check: the pattern must catch every localCheckpoint spelling")
     val bareCkpt = mainFiles.filter { f =>
-      ckptRe.findAllIn(code(f)).size >
+      ckptRe.findAllIn(codeOf(f)).size >
         (if (f.getName == "GraftSession.scala") 1 else 0)
     }.map(_.getPath)
     assert(bareCkpt.isEmpty,
@@ -640,7 +645,7 @@ class RegistrySpec extends AnyFunSuite {
     // GraftSession.build, so confs and extensions cannot drift per main
     val builders = mainFiles
       .filterNot(_.getName == "GraftSession.scala")
-      .filter(f => read(f).contains("SparkSession.builder()"))
+      .filter(f => readSrc(f).contains("SparkSession.builder()"))
       .map(_.getPath)
     assert(builders.isEmpty,
       s"SparkSession.builder() outside GraftSession: $builders — use GraftSession.build")
@@ -649,7 +654,7 @@ class RegistrySpec extends AnyFunSuite {
       .map(p => s"src/main/scala/graft/$p/")
     val envReads = mainFiles
       .filter(f => queryPkgs.exists(f.getPath.startsWith))
-      .filter(f => read(f).contains("sys.env"))
+      .filter(f => readSrc(f).contains("sys.env"))
       .map(_.getPath)
     assert(envReads.isEmpty,
       s"sys.env read in query-side code: $envReads — take it as an argument or a session conf")
@@ -661,10 +666,25 @@ class RegistrySpec extends AnyFunSuite {
       lakeReadRe.findFirstIn("""s.read.parquet(s"${dir}/documents.parquet")""").nonEmpty)
     val lakeReads = mainFiles
       .filterNot(_.getName == "Tables.scala")
-      .filter(f => lakeReadRe.findFirstIn(read(f)).nonEmpty)
+      .filter(f => lakeReadRe.findFirstIn(readSrc(f)).nonEmpty)
       .map(_.getPath)
     assert(lakeReads.isEmpty,
       s"direct read.parquet of a test-lake table: $lakeReads — use Tables.load")
+    // ... and no query-side parquet read infers its schema at all: a
+    // landed copy or fixture lake is read with its known schema
+    val inferReadRe = """\.read\s*\.parquet\(""".r
+    assert(Seq("s.read.parquet(dppFactsPath(s, dir))", "s.read.parquet(lakeDir)",
+        "spark.read\n  .parquet(p)").forall(inferReadRe.findFirstIn(_).nonEmpty) &&
+      inferReadRe.findFirstIn("s.read.schema(schema).parquet(p)").isEmpty,
+      "self-check: the pattern must catch schema-less reads and only those")
+    val inferReads = mainFiles
+      .filter(f => Seq("analytics", "ext", "ingest")
+        .exists(p => f.getPath.startsWith(s"src/main/scala/graft/$p/")))
+      .filter(f => inferReadRe.findFirstIn(codeOf(f)).nonEmpty)
+      .map(_.getPath)
+    assert(inferReads.isEmpty,
+      s"schema-less read.parquet in query-side code: $inferReads — " +
+        "read with the known (or memoized) schema")
     // (2) every GraftSession.memo call site has a forcer below: a new
     // memo family must be added to the roster or this count fails
     // method name alone (r17): the old pattern keyed on the qualified
@@ -676,7 +696,7 @@ class RegistrySpec extends AnyFunSuite {
     // that escapes the census.
     val memoCallRe = """\bmemo\(""".r
     val memoSites = mainFiles.map(f =>
-      memoCallRe.findAllIn(code(f).linesIterator
+      memoCallRe.findAllIn(codeOf(f).linesIterator
         .filterNot(_.matches(""".*\bdef\s+memo\b.*"""))
         .mkString("\n")).size).sum
     // one forcer per memo SOURCE SITE (some queries force several sites)
@@ -700,7 +720,9 @@ class RegistrySpec extends AnyFunSuite {
       "TextQueries.cohortMergeTable [bpe_merges_p*]" -> force("q_tokenizer_drift"),
       "TextQueries.entropyPerDoc [perdoc_ent]" -> force("q_text_entropy"),
       "TextQueries.lmScorePerDoc [perdoc_lm]" -> force("q_text_lmscore"),
-      "WarehouseQueries [fmt_roundtrip] (write-only memo, no plan)" -> force("q_format_roundtrip"),
+      // one site for every once-per-session landing (fmt_roundtrip,
+      // dpp_facts, pipeline_daily): a temp dir path, not a plan
+      "GraftSession.landOnce [landing|*] (write-only, no plan)" -> force("q_format_roundtrip"),
       "StatsQueries.topPairs [basket_top_pairs]" -> force("q_basket_lift"),
       "HierarchyQueries.jumpState [hierarchy_jump]" -> force("q_hierarchy_closure"),
       // r21: the K-growth-law corpus count (a SCALAR, not a plan — the
@@ -777,6 +799,38 @@ class RegistrySpec extends AnyFunSuite {
         s"$hashOffending — review in hashOriginReviewed or rewrite")
   }
 
+  test("whitespace tokenization is spelled once, in Ops.words") {
+    val mainFiles = sourceFiles("src/main/scala")
+    val splitRe = """\bsplit\([^()]*(?:\([^()]*\))?[^()]*,\s*" "\)""".r
+    assert(Seq("""split($"text", " ")""", """split(col("text"), " ")""",
+        """split(col(c), " ")""", """explode(split($"p_name", " "))""")
+        .forall(splitRe.findFirstIn(_).nonEmpty) &&
+      Seq("""split($"w", "")""", "string_split(text, ' ')", """split($"d", BpeSent)""")
+        .forall(splitRe.findFirstIn(_).isEmpty),
+      "self-check: the pattern must catch whitespace splits and only those")
+    val copies = mainFiles.map(f => f.getPath -> splitRe.findAllIn(codeOf(f)).size)
+      .filter { case (p, n) => n > (if (p.endsWith("graft/Tables.scala")) 1 else 0) }
+    assert(copies.isEmpty,
+      s"whitespace split outside Ops.words: $copies — use Ops.words / Ops.wordCount")
+  }
+
+  test("container byte readers are declared once, in ByteCodec") {
+    val src = readSrc(new java.io.File("src/main/scala/graft/ext/MultimodalQueries.scala"))
+    val defRe = """\bdef\s+(u8|be16|be32|le16|le32)\(""".r
+    assert(Seq("def u8(i: Int) = bytes(i) & 0xff", "    def be32(i: Int): Long =",
+        "  private def le16(v: Int) = Array(v.toByte, (v >> 8).toByte)")
+        .forall(defRe.findFirstIn(_).nonEmpty) &&
+      defRe.findFirstIn("def be32u(i: Int): Long").isEmpty,
+      "self-check: the pattern must catch local reader/writer declarations")
+    val start = src.indexOf("object ByteCodec {")
+    val end = if (start < 0) start else src.indexOf("\n}\n", start)
+    val local = defRe.findAllIn(
+      if (start < 0) src else src.substring(0, start) + src.substring(end)).toSeq
+    assert(local.isEmpty, s"byte readers declared outside ByteCodec: $local")
+    assert(defRe.findAllIn(src.substring(start, end)).size >= 5,
+      "self-check: ByteCodec holds the shared readers and writers")
+  }
+
   test("a second build launches no Spark job outside the build-job census") {
     // queries whose build still runs a job on every call, each with why;
     // the open list for later memoization. A query missing here whose
@@ -791,9 +845,7 @@ class RegistrySpec extends AnyFunSuite {
       "q_geo_density" -> "clusterLabels over the dense-cell pairs",
       "q_graph_kcore" -> "checkpoints each peel round's survivors and edges",
       "q_hierarchy_rollup" -> "checkpointed levels and the max-depth head()",
-      "q_join_dpp_pruned" -> "read.parquet infers the memoized fact copy's schema",
       "q_pipeline_corpus" -> "Tables.spread's partition probe runs the dedup join's shuffles",
-      "q_pipeline_daily" -> "lands fixture JSON and compacts it into a temp lake",
       "q_rfm_segments" -> "checkpoints the customer-grain aggregate",
       "q_train_readiness" -> "Tables.spread's probe, then the waterfill base checkpoint")
     assert(!buildJobs.contains("q_span_scrub"))
