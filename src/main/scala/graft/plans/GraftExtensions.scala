@@ -19,7 +19,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * [[GraftExtensions.registerOn]] only — `build` calls it, and so does
   * every path onto a session graft did not construct (the driver owns the
   * session in the Verify/Bench contract) — so each rule runs once per
-  * session whichever way the session was made.
+  * session whichever way the session was made. They run in the last
+  * optimizer batch ("User Provided Optimizers"), after scan push-down:
+  * V1 file scans (graft's parquet reads) still push the bounding box,
+  * because `FileSourceStrategy` collects filters at physical planning,
+  * but a DSv2 scan or catalog partition pruning never sees it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -149,10 +149,16 @@ class FunctionsSpec extends AnyFunSuite {
     val pts = spark.read.parquet(tmp)
     val radius = Haversine.haversineKm($"lat", $"lon",
       lit(41.8781), lit(-87.6298)) < 50.0
-    val noRule = pts.filter(radius).collect().map(_.getLong(2)).sorted
+    // registerOn leaves the rule on the shared session for good, so the
+    // baseline takes it out whatever suite ran first
     val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ HaversineBoundingBox
+    val without = prev.filterNot(_ == HaversineBoundingBox)
     try {
+      spark.experimental.extraOptimizations = without
+      val bare = pts.filter(radius)
+      assert(!bare.queryExecution.optimizedPlan.toString.contains(">= 41.4"))
+      val noRule = bare.collect().map(_.getLong(2)).sorted
+      spark.experimental.extraOptimizations = without :+ HaversineBoundingBox
       val withRule = pts.filter(radius)
       val optimized = withRule.queryExecution.optimizedPlan.toString
       assert(optimized.contains("(lat#") && optimized.contains(">= 41.4"),
@@ -164,6 +170,7 @@ class FunctionsSpec extends AnyFunSuite {
       assert(withRule.collect().map(_.getLong(2)).sorted === noRule)
     } finally {
       spark.experimental.extraOptimizations = prev
+      GraftSession.deleteRecursively(new java.io.File(tmp).getParentFile)
     }
   }
 
@@ -181,6 +188,40 @@ class FunctionsSpec extends AnyFunSuite {
       assert(physical.contains("PushedFilters: ") &&
         physical.contains("GreaterThanOrEqual(lat,41.4"), physical)
     } finally GraftSession.deleteRecursively(new java.io.File(tmp).getParentFile)
+  }
+
+  test("a GraftSession.build session pushes the bounding box of a radius filter above a join") {
+    import org.apache.spark.sql.SparkSession
+    val tmp = java.nio.file.Files.createTempDirectory("graft-geo").toFile
+    val path = new java.io.File(tmp, "pts").toString
+    spark.range(1000)
+      .select(($"id" % 100 * 0.05 + 40.0).as("lat"),
+        ($"id" % 97 * 0.06 - 90.0).as("lon"), $"id")
+      .write.parquet(path)
+    // with no active or default session, build makes a new session (with
+    // GraftExtensions) on the running SparkContext
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val built = try GraftSession.build("local[4,2]", 4, "graft-tests-built")
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    try {
+      assert(built ne spark)
+      assert(built.experimental.extraOptimizations
+        .count(_ == graft.plans.HaversineBoundingBox) === 1)
+      val q = built.read.parquet(path)
+        .join(built.range(1000).select($"id", ($"id" % 7).as("tag")), "id")
+        .filter(Haversine.haversineKm($"lat", $"lon", lit(41.8781), lit(-87.6298)) < 50.0)
+      val physical = q.queryExecution.executedPlan.toString
+      assert(physical.contains("PushedFilters: ") &&
+        physical.contains("GreaterThanOrEqual(lat,41.4"), physical)
+      val expected = (0L until 1000L).filter(i => Haversine.km(
+        i % 100 * 0.05 + 40.0, i % 97 * 0.06 - 90.0, 41.8781, -87.6298) < 50.0)
+      assert(expected.nonEmpty)
+      assert(q.select($"id").as[Long].collect().sorted.toSeq === expected)
+    } finally GraftSession.deleteRecursively(tmp)
   }
 
   test("SQL registration via extensions and registerOn") {
