@@ -110,6 +110,17 @@ object GraftSession {
     }
   }
 
+  /** The memo key of a per-session artifact derived from lake `tables`
+    * under `dir`: `family|` + their [[contentKey]], so a table rewritten
+    * in place keys a fresh build. */
+  def tableKey(family: String, dir: String, tables: String*): String =
+    s"$family|" + contentKey(dir, tables)
+
+  /** [[memo]] under [[tableKey]]`(family, dir, tables)`. */
+  def memoOn[A <: AnyRef](s: SparkSession, family: String, dir: String,
+      tables: String*)(build: => A): A =
+    memo(s, tableKey(family, dir, tables: _*))(build)
+
   /** Delete a file or directory tree, best effort. */
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

@@ -66,20 +66,7 @@ object OracleSql {
     var i = from
     while (i < to) {
       sql.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var closed = false
-          while (i < sql.length && !closed) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 2
-              else closed = true
-            } else i += 1
-          }
-          i += 1
-        case '"' =>
-          i += 1
-          while (i < sql.length && sql.charAt(i) != '"') i += 1
-          i += 1
+        case '\'' | '"' => i = closingQuote(sql, i) + 1
         case ch if isWordChar(ch) =>
           val start = i
           while (i < sql.length && isWordChar(sql.charAt(i))) i += 1
@@ -175,23 +162,24 @@ object OracleSql {
         case ')' =>
           depth -= 1
           if (depth == 0) return i
-        case '\'' => // single-quoted literal; '' escapes a quote
-          i += 1
-          var closed = false
-          while (i < sql.length && !closed) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 2
-              else closed = true
-            } else i += 1
-          }
-        case '"' => // double-quoted identifier
-          i += 1
-          while (i < sql.length && sql.charAt(i) != '"') i += 1
+        case '\'' | '"' => i = closingQuote(sql, i)
         case _ => ()
       }
       i += 1
     }
     -1
+  }
+
+  /** Offset of the quote closing the single-quoted literal ('' escapes a
+    * quote) or double-quoted identifier opened at `open`; `sql.length`
+    * if it never closes. */
+  private def closingQuote(sql: String, open: Int): Int = {
+    val q = sql.charAt(open)
+    var i = open + 1
+    while (i < sql.length && (sql.charAt(i) != q ||
+        q == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\''))
+      i += (if (sql.charAt(i) == q) 2 else 1)
+    i
   }
 
   private def skipWs(sql: String, from: Int): Int = {

@@ -59,15 +59,21 @@ object Tables {
     * exactly — matching DuckDB's epoch_us() over the same file. */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+    normalizeTs(load(s, d, "events"))
   }
+
+  /** `events.ts` as a session-zone TIMESTAMP whichever encoding the
+    * parquet carries: TIMESTAMP(NANOS), read as a long under
+    * `nanosAsLong`, truncates to µs; naive timestamp[us] (TIMESTAMP_NTZ)
+    * casts under the UTC session; TIMESTAMP passes through. The batch
+    * and the streaming read both normalize here, so stream==batch pins
+    * hold. */
+  private[graft] def normalizeTs(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => df
+    }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 

@@ -105,25 +105,30 @@ object BehaviorQueries {
       .orderBy($"dayn")
   }
 
-  val rollingDistinctSql: String =
-    """WITH days AS (
-      |  SELECT DISTINCT user_id,
-      |    epoch_us(date_trunc('day', ts)) // 86400000000 AS dayn
-      |  FROM events),
-      |cal AS (SELECT DISTINCT dayn AS d FROM days),
-      |contrib AS (
-      |  SELECT s.user_id, s.d FROM (
-      |    SELECT user_id,
-      |      CAST(unnest(generate_series(dayn, dayn + 6)) AS BIGINT) AS d
-      |    FROM days) s
-      |  WHERE EXISTS (SELECT 1 FROM cal WHERE cal.d = s.d)),
-      |u7 AS (SELECT d, COUNT(DISTINCT user_id) AS users_7d
-      |  FROM contrib GROUP BY d),
-      |u1 AS (SELECT dayn AS d, COUNT(DISTINCT user_id) AS users_1d
-      |  FROM days GROUP BY dayn)
-      |SELECT u7.d AS dayn, users_1d, users_7d
-      |FROM u7 JOIN u1 ON u7.d = u1.d
-      |ORDER BY dayn""".stripMargin
+  /** DuckDB mirror of [[rollingDistinct]]: distinct users per active day
+    * (`users_1d`) and over its trailing 7 days (`users_7d`), one row per
+    * active day, then `extraCols`. */
+  private def activesSql(extraCols: String): String =
+    s"""WITH days AS (
+       |  SELECT DISTINCT user_id,
+       |    epoch_us(date_trunc('day', ts)) // 86400000000 AS dayn
+       |  FROM events),
+       |cal AS (SELECT DISTINCT dayn AS d FROM days),
+       |contrib AS (
+       |  SELECT s.user_id, s.d FROM (
+       |    SELECT user_id,
+       |      CAST(unnest(generate_series(dayn, dayn + 6)) AS BIGINT) AS d
+       |    FROM days) s
+       |  WHERE EXISTS (SELECT 1 FROM cal WHERE cal.d = s.d)),
+       |u7 AS (SELECT d, COUNT(DISTINCT user_id) AS users_7d
+       |  FROM contrib GROUP BY d),
+       |u1 AS (SELECT dayn AS d, COUNT(DISTINCT user_id) AS users_1d
+       |  FROM days GROUP BY dayn)
+       |SELECT u7.d AS dayn, users_1d, users_7d$extraCols
+       |FROM u7 JOIN u1 ON u7.d = u1.d
+       |ORDER BY dayn""".stripMargin
+
+  val rollingDistinctSql: String = activesSql("")
 
   // --- B2': sliding distinct via HLL sketch merge (the 100-TB form) ------
 
@@ -167,25 +172,7 @@ object BehaviorQueries {
       .orderBy($"dayn")
   }
 
-  val rollingSketchSql: String =
-    """WITH days AS (
-      |  SELECT DISTINCT user_id,
-      |    epoch_us(date_trunc('day', ts)) // 86400000000 AS dayn
-      |  FROM events),
-      |cal AS (SELECT DISTINCT dayn AS d FROM days),
-      |contrib AS (
-      |  SELECT s.user_id, s.d FROM (
-      |    SELECT user_id,
-      |      CAST(unnest(generate_series(dayn, dayn + 6)) AS BIGINT) AS d
-      |    FROM days) s
-      |  WHERE EXISTS (SELECT 1 FROM cal WHERE cal.d = s.d)),
-      |u7 AS (SELECT d, COUNT(DISTINCT user_id) AS users_7d
-      |  FROM contrib GROUP BY d),
-      |u1 AS (SELECT dayn AS d, COUNT(DISTINCT user_id) AS users_1d
-      |  FROM days GROUP BY dayn)
-      |SELECT u7.d AS dayn, users_1d, users_7d, CAST(1 AS BIGINT) AS approx_ok
-      |FROM u7 JOIN u1 ON u7.d = u1.d
-      |ORDER BY dayn""".stripMargin
+  val rollingSketchSql: String = activesSql(", CAST(1 AS BIGINT) AS approx_ok")
 
   // --- B3: bitmap presence aggregation -----------------------------------
 
@@ -692,12 +679,7 @@ object BehaviorQueries {
     * divide the basis points in two stages in BOTH engines. */
   def seasonalIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, dir)
-      .select($"event_type",
-        expr("unix_micros(date_trunc('DAY', ts)) div 86400000000").as("dayn"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      .groupBy($"event_type", $"dayn")
-      .agg(sum($"cents").as("x"))
+    val daily = StatsQueries.dailyCents(s, dir)
       .withColumn("dow", expr("(dayn + 3) % 7 + 1")) // ISO 1=Mon … 7=Sun
     val perDow = daily.groupBy($"event_type", $"dow")
       .agg(count(lit(1)).as("n_dow"), sum($"x").as("dow_sum"))
@@ -710,24 +692,20 @@ object BehaviorQueries {
   }
 
   val seasonalIndexSql: String =
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    epoch_us(date_trunc('day', ts)) // 86400000000 AS dayn,
-      |    CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-      |  FROM events GROUP BY 1, 2),
-      |d2 AS (SELECT event_type, x, (dayn + 3) % 7 + 1 AS dow FROM daily),
-      |per_dow AS (
-      |  SELECT event_type, dow, COUNT(*) AS n_dow,
-      |    CAST(SUM(x) AS BIGINT) AS dow_sum
-      |  FROM d2 GROUP BY 1, 2),
-      |per_type AS (
-      |  SELECT event_type, COUNT(*) AS n_days, CAST(SUM(x) AS BIGINT) AS total
-      |  FROM d2 GROUP BY 1)
-      |SELECT p.event_type, p.dow, p.n_dow,
-      |  CAST(p.dow_sum * t.n_days * 10000 // (p.n_dow * t.total) AS BIGINT)
-      |    AS index_bp
-      |FROM per_dow p JOIN per_type t USING (event_type)
-      |ORDER BY event_type, dow""".stripMargin
+    s"""WITH ${StatsQueries.dailyCentsSql},
+       |d2 AS (SELECT event_type, x, (dayn + 3) % 7 + 1 AS dow FROM daily),
+       |per_dow AS (
+       |  SELECT event_type, dow, COUNT(*) AS n_dow,
+       |    CAST(SUM(x) AS BIGINT) AS dow_sum
+       |  FROM d2 GROUP BY 1, 2),
+       |per_type AS (
+       |  SELECT event_type, COUNT(*) AS n_days, CAST(SUM(x) AS BIGINT) AS total
+       |  FROM d2 GROUP BY 1)
+       |SELECT p.event_type, p.dow, p.n_dow,
+       |  CAST(p.dow_sum * t.n_days * 10000 // (p.n_dow * t.total) AS BIGINT)
+       |    AS index_bp
+       |FROM per_dow p JOIN per_type t USING (event_type)
+       |ORDER BY event_type, dow""".stripMargin
 
   // --- B14: DAU/MAU stickiness ----------------------------------------------
 

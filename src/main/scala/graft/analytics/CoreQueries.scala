@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.{Ops, QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -263,14 +263,19 @@ object CoreQueries {
        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin
 
   // --- A6: distribution stats (exact percentile, stddev, corr) -----------
+  /** `events` per event type: its count `n`, exact p50/p90 of `value`
+    * (rounded at 4), then the aggregates `more`. */
+  private def typeQuantiles(s: SparkSession, dir: String,
+      more: Column*): DataFrame =
+    Tables.events(s, dir)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        Seq(round(expr("percentile(value, 0.5D)"), 4).as("p50"),
+          round(expr("percentile(value, 0.9D)"), 4).as("p90")) ++ more: _*)
+
   def aggStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
-      .groupBy($"event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        round(expr("percentile(value, 0.5D)"), 4).as("p50"),
-        round(expr("percentile(value, 0.9D)"), 4).as("p90"),
+    typeQuantiles(s, dir,
         round(stddev_samp($"value"), 4).as("sd"),
         round(corr($"value", $"user_id".cast(DoubleType)), 4).as("corr_vu"),
         min($"value").as("min_v"),
@@ -300,12 +305,7 @@ object CoreQueries {
     * degrades past it, the driver's hash comparison fails. */
   def aggStatsApprox(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, dir)
-      .groupBy($"event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        round(expr("percentile(value, 0.5D)"), 4).as("p50"),
-        round(expr("percentile(value, 0.9D)"), 4).as("p90"),
+    typeQuantiles(s, dir,
         expr("approx_percentile(value, 0.5D, 1000)").as("ap50"),
         expr("approx_percentile(value, 0.9D, 1000)").as("ap90"),
         expr("percentile(value, 0.49D)").as("lo50"),

@@ -803,7 +803,7 @@ object EventQueries {
     * region. */
   def dppFactsPath(s: SparkSession, dir: String): String =
     graft.GraftSession.landOnce(s,
-        "dpp_facts|" + graft.GraftSession.contentKey(dir, Seq("events")),
+        graft.GraftSession.tableKey("dpp_facts", dir, "events"),
         "graft-dpp") { t =>
       dppFacts(s, dir).write.mode("overwrite").partitionBy("day").parquet(t)
     }

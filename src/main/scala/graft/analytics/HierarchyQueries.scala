@@ -37,8 +37,7 @@ object HierarchyQueries {
     * column costs R1 nothing material (it is Σ depth(n) characters,
     * the same order as the state itself). */
   private def jumpState(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "hierarchy_jump|" +
-        graft.GraftSession.contentKey(dir, Seq("orders"))) {
+    graft.GraftSession.memoOn(s, "hierarchy_jump", dir, "orders") {
       graft.GraftSession.ckpt(jumpStatePlan(s, dir))
     }
 

@@ -35,8 +35,7 @@ object StatsQueries {
     * per (session, lineitem content), the minhashPairs pattern, so the
     * quadratic-in-basket expansion runs once per session. */
   private def topPairs(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "basket_top_pairs|" +
-        graft.GraftSession.contentKey(dir, Seq("lineitem"))) {
+    graft.GraftSession.memoOn(s, "basket_top_pairs", dir, "lineitem") {
       graft.GraftSession.ckpt(topPairsPlan(s, dir))
     }
 
@@ -552,7 +551,7 @@ object StatsQueries {
 
   /** Per-(event_type, day number) value totals in exact integer cents, x:
     * the one corpus pass of the change-detection queries. */
-  private def dailyCents(s: SparkSession, dir: String): DataFrame = {
+  private[analytics] def dailyCents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.events(s, dir)
       .select($"event_type",
@@ -561,6 +560,15 @@ object StatsQueries {
       .groupBy($"event_type", $"dayn")
       .agg(sum($"cents").as("x"))
   }
+
+  /** DuckDB mirror of [[dailyCents]]: the CTE `daily` (event_type, dayn,
+    * x). */
+  private[analytics] val dailyCentsSql: String =
+    """daily AS (
+      |  SELECT event_type,
+      |    epoch_us(date_trunc('day', ts)) // 86400000000 AS dayn,
+      |    CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+      |  FROM events GROUP BY 1, 2)""".stripMargin
 
   /** Trailing-7-day z-score anomaly detection on daily spend per event
     * type: a day is flagged when its total deviates ≥ 2 sample standard
@@ -596,29 +604,25 @@ object StatsQueries {
   }
 
   val rollingZscoreSql: String =
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    epoch_us(date_trunc('day', ts)) // 86400000000 AS dayn,
-      |    CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-      |  FROM events GROUP BY 1, 2),
-      |frames AS (
-      |  SELECT event_type, dayn, x,
-      |    CAST(COUNT(*) OVER w AS BIGINT) AS cnt,
-      |    CAST(SUM(x) OVER w AS BIGINT) AS s1,
-      |    CAST(SUM(x * x) OVER w AS BIGINT) AS s2
-      |  FROM daily
-      |  WINDOW w AS (PARTITION BY event_type ORDER BY dayn
-      |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)),
-      |scored AS (
-      |  SELECT event_type, dayn, x,
-      |    round((CAST(x AS DOUBLE) - CAST(s1 AS DOUBLE) / cnt)
-      |      / sqrt((CAST(s2 AS DOUBLE)
-      |              - CAST(s1 AS DOUBLE) * (CAST(s1 AS DOUBLE) / cnt))
-      |             / (cnt - 1)), 4) AS z
-      |  FROM frames WHERE cnt = 7)
-      |SELECT event_type, dayn, x, z FROM scored
-      |WHERE abs(z) >= 2.0
-      |ORDER BY event_type, dayn""".stripMargin
+    s"""WITH $dailyCentsSql,
+       |frames AS (
+       |  SELECT event_type, dayn, x,
+       |    CAST(COUNT(*) OVER w AS BIGINT) AS cnt,
+       |    CAST(SUM(x) OVER w AS BIGINT) AS s1,
+       |    CAST(SUM(x * x) OVER w AS BIGINT) AS s2
+       |  FROM daily
+       |  WINDOW w AS (PARTITION BY event_type ORDER BY dayn
+       |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)),
+       |scored AS (
+       |  SELECT event_type, dayn, x,
+       |    round((CAST(x AS DOUBLE) - CAST(s1 AS DOUBLE) / cnt)
+       |      / sqrt((CAST(s2 AS DOUBLE)
+       |              - CAST(s1 AS DOUBLE) * (CAST(s1 AS DOUBLE) / cnt))
+       |             / (cnt - 1)), 4) AS z
+       |  FROM frames WHERE cnt = 7)
+       |SELECT event_type, dayn, x, z FROM scored
+       |WHERE abs(z) >= 2.0
+       |ORDER BY event_type, dayn""".stripMargin
 
   // --- ST7: MAD-based robust outlier gate ---------------------------------
 
@@ -811,27 +815,23 @@ object StatsQueries {
   }
 
   val cusumChangepointSql: String =
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    epoch_us(date_trunc('day', ts)) // 86400000000 AS dayn,
-      |    CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-      |  FROM events GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT event_type, dayn,
-      |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY dayn)
-      |      AS BIGINT) AS i,
-      |    CAST(SUM(x) OVER (PARTITION BY event_type ORDER BY dayn
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |      AS BIGINT) AS cum,
-      |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-      |    CAST(SUM(x) OVER (PARTITION BY event_type) AS BIGINT) AS total
-      |  FROM daily)
-      |SELECT event_type, n AS n_days, dayn AS cp_dayn,
-      |  abs(n * cum - i * total) AS max_dev
-      |FROM (SELECT *, row_number() OVER (PARTITION BY event_type
-      |        ORDER BY abs(n * cum - i * total) DESC, dayn ASC) AS rn
-      |      FROM scored)
-      |WHERE rn = 1 ORDER BY event_type""".stripMargin
+    s"""WITH $dailyCentsSql,
+       |scored AS (
+       |  SELECT event_type, dayn,
+       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY dayn)
+       |      AS BIGINT) AS i,
+       |    CAST(SUM(x) OVER (PARTITION BY event_type ORDER BY dayn
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+       |      AS BIGINT) AS cum,
+       |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
+       |    CAST(SUM(x) OVER (PARTITION BY event_type) AS BIGINT) AS total
+       |  FROM daily)
+       |SELECT event_type, n AS n_days, dayn AS cp_dayn,
+       |  abs(n * cum - i * total) AS max_dev
+       |FROM (SELECT *, row_number() OVER (PARTITION BY event_type
+       |        ORDER BY abs(n * cum - i * total) DESC, dayn ASC) AS rn
+       |      FROM scored)
+       |WHERE rn = 1 ORDER BY event_type""".stripMargin
 
   // --- ST8: trimmed (truncated) mean ---------------------------------------
 

@@ -187,7 +187,7 @@ object WarehouseQueries {
     // bench passes, plan-shape inspection — reuse the same temp dirs
     // instead of writing three fresh landings each time
     val tmp = graft.GraftSession.landOnce(s,
-        s"fmt_roundtrip|${graft.GraftSession.contentKey(dir, Seq("lineitem"))}",
+        graft.GraftSession.tableKey("fmt_roundtrip", dir, "lineitem"),
         "graft-fmt") { t =>
       slice.write.mode("overwrite").parquet(s"$t/parquet")
       slice.write.mode("overwrite").orc(s"$t/orc")

@@ -139,8 +139,7 @@ object DedupQueries {
   // ensureStats / dppFactsPath). Session scoping (and death-with-session)
   // comes from GraftSession.memo's weak keying.
   private[ext] def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "minhash_pairs|" +
-        graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    graft.GraftSession.memoOn(s, "minhash_pairs", dir, "documents") {
       graft.GraftSession.ckpt(minhashPairsPlan(s, dir))
     }
 
@@ -148,6 +147,15 @@ object DedupQueries {
     * presentation sort). */
   private def minhashPairsPlan(s: SparkSession, dir: String): DataFrame =
     minhashPairsPlanOf(minhashSigs(s, dir))
+
+  /** One row per (doc, band) of a MinHash signature table: (doc_id, sig,
+    * b, v), `sig` the whole K-hash signature and `v` band `b`'s hash. */
+  private def bandRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"),
+        array((0 until K).map(i => col(s"h$i")): _*).as("sig"),
+        explode(array(
+          (0 until K).map(i => struct(lit(i).as("b"), col(s"h$i").as("v"))): _*)).as("band"))
+      .select(col("doc_id"), col("sig"), col("band.b").as("b"), col("band.v").as("v"))
 
   /** The LSH pair plan over an arbitrary signature relation (doc_id,
     * h0..h{K-1}) — factored so the property pin can run the IDENTICAL
@@ -164,12 +172,7 @@ object DedupQueries {
     // mega-bucket collects cap+1 members and is dropped by the size
     // filter), followed by a local O(cap²) pair expansion — no count
     // pre-pass, no re-join, no self-join.
-    val bands = sigs
-      .select($"doc_id",
-        array((0 until K).map(i => col(s"h$i")): _*).as("sig"),
-        explode(array(
-          (0 until K).map(i => struct(lit(i).as("b"), col(s"h$i").as("v"))): _*)).as("band"))
-      .select($"doc_id", $"sig", $"band.b".as("b"), $"band.v".as("v"))
+    val bands = bandRows(sigs)
     val boundedCollect = udaf(graft.functions.BoundedCollect.docSigs(BUCKET_CAP))
     val members = bands.groupBy($"b", $"v")
       .agg(boundedCollect($"doc_id", $"sig").as("ms"))
@@ -324,8 +327,7 @@ object DedupQueries {
     * it memoizes the checkpointed label run instead of re-running the
     * LSH + CC iteration per consumer. */
   private def memberLabels(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "cc_members|" +
-        graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    graft.GraftSession.memoOn(s, "cc_members", dir, "documents") {
       // nested memo consult (minhashPairs) is fine: the per-session memo
       // lock is reentrant
       clusterLabels(s, minhashPairs(s, dir).select(col("doc_a"), col("doc_b")))
@@ -339,8 +341,7 @@ object DedupQueries {
     * agreement), and without materialization each consumer re-runs the
     * documents join (the session-3 plan audit counted the re-scans). */
   private[ext] def rankedMembers(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "cc_ranked|" +
-        graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    graft.GraftSession.memoOn(s, "cc_ranked", dir, "documents") {
       import s.implicits._
       val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
       val members = memberLabels(s, dir).join(docs, "doc_id")
@@ -399,16 +400,22 @@ object DedupQueries {
       .orderBy($"source")
   }
 
+  /** DuckDB mirror of [[minhashPairs]]: [[lshCandCtesSql]], then the
+    * CTE `name` (doc_a, doc_b) of the candidates whose estimated Jaccard
+    * clears 2/K. */
+  private[ext] def lshPairsCtesSql(name: String): String =
+    s"""$lshCandCtesSql,
+       |$name AS (
+       |  SELECT doc_a, doc_b FROM cpairs
+       |  JOIN sigs sa ON doc_a = sa.doc_id
+       |  JOIN sigs sb ON doc_b = sb.doc_id
+       |  WHERE ${estJaccardSql("sa", "sb")} >= ${2.0 / K})""".stripMargin
+
   /** Shared oracle CTE chain: LSH pairs → symmetric edges → recursive
     * transitive closure → per-node min label → canonical-ranked members.
     * Consumed by both cluster-shaped oracles. */
   private[ext] val ccCtesSql: String =
-    s"""$lshCandCtesSql,
-       |fpairs AS (
-       |  SELECT doc_a, doc_b FROM cpairs
-       |  JOIN sigs sa ON doc_a = sa.doc_id
-       |  JOIN sigs sb ON doc_b = sb.doc_id
-       |  WHERE ${estJaccardSql("sa", "sb")} >= ${2.0 / K}),
+    s"""${lshPairsCtesSql("fpairs")},
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM fpairs
        |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM fpairs),
@@ -838,12 +845,7 @@ object DedupQueries {
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val deltaPred = col("doc_id") % 17 === 0
-    val bands = minhashSigs(s, dir)
-      .select($"doc_id",
-        array((0 until K).map(i => col(s"h$i")): _*).as("sig"),
-        explode(array(
-          (0 until K).map(i => struct(lit(i).as("b"), col(s"h$i").as("v"))): _*)).as("band"))
-      .select($"doc_id", $"sig", $"band.b".as("b"), $"band.v".as("v"))
+    val bands = bandRows(minhashSigs(s, dir))
     val boundedCollect = udaf(graft.functions.BoundedCollect.docSigs(BUCKET_CAP))
     val corpusBuckets = bands.where(!deltaPred)
       .groupBy($"b", $"v")
@@ -1123,17 +1125,22 @@ object DedupQueries {
         Seq("doc_id"))
       .select($"doc_id", $"p",
         $"text".substr($"p".cast("int"), lit(SUBSTR_W)).as("win"))
+    repeatedWinSpans(candWin)
+  }
+
+  /** Spans of the (doc_id, p, win) candidate windows whose content is
+    * seen more than once among the candidates. */
+  private def repeatedWinSpans(candWin: DataFrame): DataFrame = {
+    val dupWin = candWin
+      .groupBy(col("win")).agg(count(lit(1)).as("n"))
+      .filter(col("n") > 1)
+      .select(col("win"))
     // SHUFFLE_HASH: a sort-merge semi join would Tungsten-sort 40-char
     // binaries on BOTH sides; hashing the (already-aggregated, dup-only)
     // build side skips both sorts. AQE still splits skewed probe
     // partitions for SHJ.
-    val dupWin = candWin
-      .groupBy($"win").agg(count(lit(1)).as("n"))
-      .filter($"n" > 1)
-      .select($"win")
-    val dupPos = candWin.join(dupWin.hint("shuffle_hash"), Seq("win"), "left_semi")
-      .select($"doc_id", $"p")
-    spansOf(dupPos)
+    spansOf(candWin.join(dupWin.hint("shuffle_hash"), Seq("win"), "left_semi")
+      .select(col("doc_id"), col("p")))
   }
 
   /** Shared admission stage of both substring-dedup forms: positions
@@ -1243,15 +1250,9 @@ object DedupQueries {
           s"substring(text, CAST(p AS INT), $SUBSTR_W) AS win))")).as("pw"))
       .select($"doc_id", $"pw.p".as("p"), $"pw.win".as("win"))
     // the true-equality verify: window CONTENT seen >1x among the
-    // candidates — same groupBy-count + semi-join shape, because the
-    // duplicated candidates are BY CONSTRUCTION the hot window values
-    val dupWin = candWin
-      .groupBy($"win").agg(count(lit(1)).as("n"))
-      .filter($"n" > 1)
-      .select($"win")
-    val dupPos = candWin.join(dupWin.hint("shuffle_hash"), Seq("win"), "left_semi")
-      .select($"doc_id", $"p")
-    spansOf(dupPos)
+    // candidates — the duplicated candidates are BY CONSTRUCTION the hot
+    // window values
+    repeatedWinSpans(candWin)
   }
 
   val substringDedupSql: String =
@@ -1547,8 +1548,10 @@ object DedupQueries {
       .orderBy($"lang")
   }
 
-  val cdcChunksSql: String =
-    s"""WITH cuts AS (
+  /** DuckDB mirror of [[cdcChunkRows]] over `documents`: the non-empty
+    * chunks as the CTE `nz` (doc_id, lang, chunk). */
+  private def cdcChunkRowsSql: String =
+    s"""cuts AS (
        |  SELECT doc_id, lang, text,
        |    CASE WHEN length(text) >= $CDC_W THEN
        |      list_filter(list_transform(
@@ -1570,7 +1573,10 @@ object DedupQueries {
        |      i -> substring(text, CAST(bounds[i] + 1 AS INTEGER),
        |             CAST(bounds[i + 1] - bounds[i] AS INTEGER)))) AS chunk
        |  FROM bnds),
-       |nz AS (SELECT * FROM chunks WHERE length(chunk) > 0),
+       |nz AS (SELECT * FROM chunks WHERE length(chunk) > 0)""".stripMargin
+
+  val cdcChunksSql: String =
+    s"""WITH $cdcChunkRowsSql,
        |spread AS (
        |  SELECT chunk, COUNT(DISTINCT doc_id) AS n_docs_with
        |  FROM nz GROUP BY chunk)
@@ -1622,29 +1628,7 @@ object DedupQueries {
   }
 
   val cdcChunkGcSql: String =
-    s"""WITH cuts AS (
-       |  SELECT doc_id, lang, text,
-       |    CASE WHEN length(text) >= $CDC_W THEN
-       |      list_filter(list_transform(
-       |        generate_series(1, length(text) - ${CDC_W - 1}),
-       |        p -> CASE WHEN (${cdcPolySql("ord")})
-       |          % $CDC_MOD = 0 THEN p END),
-       |        x -> x IS NOT NULL)
-       |    ELSE [] END AS cut_list
-       |  FROM documents),
-       |bnds AS (
-       |  SELECT doc_id, lang, text,
-       |    list_sort(list_distinct(
-       |      list_concat(list_concat([0], cut_list), [length(text)])))
-       |      AS bounds
-       |  FROM cuts),
-       |chunks AS (
-       |  SELECT doc_id, lang,
-       |    unnest(list_transform(generate_series(1, len(bounds) - 1),
-       |      i -> substring(text, CAST(bounds[i] + 1 AS INTEGER),
-       |             CAST(bounds[i + 1] - bounds[i] AS INTEGER)))) AS chunk
-       |  FROM bnds),
-       |nz AS (SELECT * FROM chunks WHERE length(chunk) > 0),
+    s"""WITH $cdcChunkRowsSql,
        |refs AS (
        |  SELECT chunk,
        |    SUM(CASE WHEN $GC_DEL THEN 0 ELSE 1 END) AS live_refs
@@ -1711,12 +1695,7 @@ object DedupQueries {
   }
 
   val splitLeakageSql: String =
-    s"""WITH $lshCandCtesSql,
-       |fpairs AS (
-       |  SELECT doc_a, doc_b FROM cpairs
-       |  JOIN sigs sa ON doc_a = sa.doc_id
-       |  JOIN sigs sb ON doc_b = sb.doc_id
-       |  WHERE ${estJaccardSql("sa", "sb")} >= ${2.0 / K}),
+    s"""WITH ${lshPairsCtesSql("fpairs")},
        |tagged AS (
        |  SELECT
        |    LEAST(${SamplingQueries.splitSqlOf("doc_a")},

@@ -28,12 +28,18 @@ object GraphQueries {
   /** Shared oracle edge CTE — the SAME candidate+threshold definition the
     * X2 oracles interpolate, so graph and dedup queries cannot diverge. */
   private val edgesCteSql: String =
-    s"""${DedupQueries.lshCandCtesSql},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM cpairs
-       |  JOIN sigs sa ON doc_a = sa.doc_id
-       |  JOIN sigs sb ON doc_b = sb.doc_id
-       |  WHERE ${DedupQueries.estJaccardSql("sa", "sb")} >= ${2.0 / DedupQueries.K})""".stripMargin
+    DedupQueries.lshPairsCtesSql("edges")
+
+  /** Both directions of every undirected edge, as (src, dst). */
+  private def symEdges(e: DataFrame): DataFrame =
+    e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionAll(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+
+  /** DuckDB mirror of [[symEdges]] over the `edges` CTE. */
+  private val symEdgesSql: String =
+    """sym AS (
+      |  SELECT doc_a AS src, doc_b AS dst FROM edges
+      |  UNION ALL SELECT doc_b, doc_a FROM edges)""".stripMargin
 
   // --- G1: degree distribution -------------------------------------------
 
@@ -126,8 +132,7 @@ object GraphQueries {
   /** [[graphPagerank]] over an arbitrary edge relation. */
   private[graft] def graphPagerankOf(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
-    val sym = e.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .unionAll(e.select($"doc_b".as("src"), $"doc_a".as("dst")))
+    val sym = symEdges(e)
     val deg = sym.groupBy($"src").agg(count(lit(1)).as("deg"))
     // r20 optimization note: per-round localCheckpoint of `ranks` (and a
     // one-time checkpoint of `adj`) was implemented and A/B-measured at
@@ -168,9 +173,7 @@ object GraphQueries {
          |  FROM r${i - 1} v LEFT JOIN c$i c ON v.doc_id = c.doc_id)""".stripMargin
     }.mkString(",\n")
     s"""WITH $edgesCteSql,
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM edges
-       |  UNION ALL SELECT doc_b, doc_a FROM edges),
+       |$symEdgesSql,
        |deg AS (SELECT src, COUNT(*) AS deg FROM sym GROUP BY src),
        |adj AS (SELECT s.src, s.dst, d.deg FROM sym s JOIN deg d USING (src)),
        |r0 AS (SELECT src AS doc_id, CAST($RANK_ONE AS BIGINT) AS r FROM deg),
@@ -207,8 +210,7 @@ object GraphQueries {
   /** [[graphKcore]] over an arbitrary edge relation. */
   private[graft] def graphKcoreOf(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
-    val sym = e.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .unionAll(e.select($"doc_b".as("src"), $"doc_a".as("dst")))
+    val sym = symEdges(e)
     var alive = sym.select($"src".as("doc_id")).distinct()
     var cur = sym
     var peeled: Seq[DataFrame] = Nil
@@ -272,9 +274,7 @@ object GraphQueries {
     val peelUnion = (1 to PEEL_ROUNDS).map(r => s"SELECT * FROM p$r")
       .mkString("\n  UNION ALL ")
     s"""WITH $edgesCteSql,
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM edges
-       |  UNION ALL SELECT doc_b, doc_a FROM edges),
+       |$symEdgesSql,
        |a0 AS (SELECT DISTINCT src AS doc_id FROM sym),
        |e0 AS (SELECT src, dst FROM sym),
        |$rounds,
@@ -325,8 +325,7 @@ object GraphQueries {
   /** [[graphLinkPredict]] over an arbitrary edge relation. */
   private[graft] def graphLinkPredictOf(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
-    val sym = e.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .unionAll(e.select($"doc_b".as("src"), $"doc_a".as("dst")))
+    val sym = symEdges(e)
     val deg = sym.groupBy($"src").agg(count(lit(1)).as("deg"))
     val cand = sym.toDF("a", "n").join(sym.toDF("b", "n"), "n")
       .filter($"a" < $"b")
@@ -344,9 +343,7 @@ object GraphQueries {
 
   val graphLinkPredictSql: String =
     s"""WITH $edgesCteSql,
-       |sym AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM edges
-       |  UNION ALL SELECT doc_b, doc_a FROM edges),
+       |$symEdgesSql,
        |deg AS (SELECT src, COUNT(*) AS deg FROM sym GROUP BY src),
        |cand AS (
        |  SELECT x.src AS a, y.src AS b, COUNT(*) AS common_n

@@ -335,6 +335,33 @@ object MediaDecode {
     None
   }
 
+  /** A trak's sample table: the `stbl` payload range `[sp, se)` and its
+    * `stsz` sample count `n`, with either one `uniform` sample size or
+    * (uniform = 0) the `listed` per-sample sizes. */
+  private final case class Mp4SampleTable(sp: Int, se: Int, uniform: Long,
+      n: Long, listed: Seq[Long])
+
+  /** The sample table of the trak whose `mdia` payload is `mdia`
+    * (`mdia → minf → stbl → stsz`); None when a box is missing or
+    * `stsz` is short. */
+  private def mp4SampleTable(bytes: Array[Byte],
+      mdia: Option[(Int, Int)]): Option[Mp4SampleTable] = {
+    val r = new ByteCodec.Reader(bytes); import r._
+    val (sp, se) = (for {
+      (mp, me) <- mdia
+      (fp, fe) <- mp4Child(bytes, mp, me, "minf")
+      s <- mp4Child(bytes, fp, fe, "stbl")
+    } yield s).getOrElse(return None)
+    val (zp, ze) = mp4Child(bytes, sp, se, "stsz").getOrElse(return None)
+    if (ze - zp < 12) return None
+    val uniform = be32u(zp + 4)
+    val n = be32u(zp + 8)
+    if (uniform != 0) Some(Mp4SampleTable(sp, se, uniform, n, Nil))
+    else if (ze - zp < 12 + 4 * n) None
+    else Some(Mp4SampleTable(sp, se, uniform, n,
+      (0L until n).map(k => be32u(zp + 12 + 4 * k.toInt))))
+  }
+
   /** Walk a real ISO-BMFF (MP4) box sequence — the VIDEO container
     * metadata decode: big-endian (size, fourcc) box headers at the top
     * level, `moov` entered one level (its `mvhd` v0 yields timescale +
@@ -404,22 +431,10 @@ object MediaDecode {
         while (io + 8 <= end) {
           val (ip, ie, itag) = mp4Box(bytes, io, end).getOrElse(return None)
           if (itag == "trak") {
-            val stbl = for {
-              (mp, me) <- mp4Child(bytes, ip, ie, "mdia")
-              (fp, fe) <- mp4Child(bytes, mp, me, "minf")
-              s <- mp4Child(bytes, fp, fe, "stbl")
-            } yield s
-            val (sp, se) = stbl.getOrElse(return None)
-            val (zp, ze) = mp4Child(bytes, sp, se, "stsz").getOrElse(return None)
-            if (ze - zp < 12) return None
-            val uniform = be32u(zp + 4)
-            val n = be32u(zp + 8)
-            val sampleBytes =
-              if (uniform != 0) uniform * n
-              else {
-                if (ze - zp < 12 + 4 * n) return None
-                (0L until n).map(k => be32u(zp + 12 + 4 * k.toInt)).sum
-              }
+            val Mp4SampleTable(sp, se, uniform, n, listed) =
+              mp4SampleTable(bytes, mp4Child(bytes, ip, ie, "mdia"))
+                .getOrElse(return None)
+            val sampleBytes = if (uniform != 0) uniform * n else listed.sum
             val (tp, te) = mp4Child(bytes, sp, se, "stts").getOrElse(return None)
             if (te - tp < 8) return None
             val entries = be32u(tp + 4)
@@ -496,22 +511,9 @@ object MediaDecode {
               }
             }
             if (isVideo) {
-              val stbl = for {
-                (mp, me) <- mdia
-                (fp, fe) <- mp4Child(bytes, mp, me, "minf")
-                s <- mp4Child(bytes, fp, fe, "stbl")
-              } yield s
-              val (sp, se) = stbl.getOrElse(return None)
-              val (zp, ze) = mp4Child(bytes, sp, se, "stsz").getOrElse(return None)
-              if (ze - zp < 12) return None
-              val uniform = be32u(zp + 4)
-              val n = be32u(zp + 8)
-              sizes =
-                if (uniform != 0) Some(Seq.fill(n.toInt)(uniform))
-                else {
-                  if (ze - zp < 12 + 4 * n) return None
-                  Some((0L until n).map(k => be32u(zp + 12 + 4 * k.toInt)))
-                }
+              val Mp4SampleTable(sp, se, uniform, n, listed) =
+                mp4SampleTable(bytes, mdia).getOrElse(return None)
+              sizes = Some(if (uniform != 0) Seq.fill(n.toInt)(uniform) else listed)
               chunkMap = for {
                 (cp, ce) <- mp4Child(bytes, sp, se, "stsc")
                 offs <- mp4Child(bytes, sp, se, "stco").map { case (op, oe) =>

@@ -90,19 +90,57 @@ object PipelineQueries {
         carry = Seq("lang", "source"))
       .select(col("lang"), col("source"), col("doc_id"), col("n_tokens").as("n_tok"))
 
-  val packSequencesSql: String =
-    s"""WITH toks AS (
+  /** DuckDB mirror of the estimated-token input of [[packSequencesOf]]:
+    * the CTE `toks` (lang, source, doc_id, n_tok) over `documents`. */
+  private def estToksSql: String =
+    s"""toks AS (
        |  SELECT lang, source, doc_id, ${nTokSql("text")} AS n_tok
-       |  FROM documents),
-       |c AS (
+       |  FROM documents)""".stripMargin
+
+  /** DuckDB mirror of [[exactToks]] over `documents`: the trained-vocab
+    * token counts `tokc`, then the CTE `name` (lang, source, doc_id,
+    * n_tok). */
+  private def exactToksSql(name: String): String =
+    TextQueries.tokensPerDocCteSql + s""",
+       |$name AS (
+       |  SELECT d.lang, d.source, t.doc_id, t.n_tokens AS n_tok
+       |  FROM tokc t JOIN documents d ON t.doc_id = d.doc_id)""".stripMargin
+
+  /** DuckDB mirror of [[withCumBefore]]: the CTE `name` over the
+    * (lang, source, doc_id, n_tok) CTE `from`. */
+  private def withCumBeforeSql(name: String, from: String): String =
+    s"""$name AS (
        |  SELECT lang, source, doc_id, n_tok,
        |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM toks)
-       |SELECT lang, source, CAST(cum_before // $PACK_BUDGET AS BIGINT) AS bin,
+       |  FROM $from)""".stripMargin
+
+  /** DuckDB mirror of [[binFill]] over a [[withCumBeforeSql]] CTE. */
+  private def binFillSql(from: String): String =
+    s"""SELECT lang, source, CAST(cum_before // $PACK_BUDGET AS BIGINT) AS bin,
        |  COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens,
        |  CAST(CAST(SUM(n_tok) AS BIGINT) * 10000 // $PACK_BUDGET AS BIGINT) AS fill_bp
-       |FROM c GROUP BY 1, 2, 3 ORDER BY lang, source, bin""".stripMargin
+       |FROM $from GROUP BY 1, 2, 3 ORDER BY lang, source, bin""".stripMargin
+
+  /** The quality-filtered, md5-deduplicated docs (first doc_id per text
+    * hash) as CTEs `qd` and `kept`, and their trained-vocab token counts
+    * (from `tokc`) as the CTE `toks`. */
+  private def keptToksSql(qd: String, kept: String, toks: String): String =
+    s"""$qd AS (
+       |  SELECT doc_id, lang, source, md5(text) AS h FROM documents
+       |  WHERE ${TextQueries.qualityPredSql}),
+       |$kept AS (
+       |  SELECT doc_id, lang, source FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id) AS rn
+       |    FROM $qd) WHERE rn = 1),
+       |$toks AS (
+       |  SELECT k.lang, k.source, k.doc_id, t.n_tokens AS n_tok
+       |  FROM $kept k JOIN tokc t ON k.doc_id = t.doc_id)""".stripMargin
+
+  val packSequencesSql: String =
+    s"""WITH $estToksSql,
+       |${withCumBeforeSql("c", "toks")}
+       |${binFillSql("c")}""".stripMargin
 
   // --- XP1b: packing budgeted by the TRAINED tokenizer ------------------
 
@@ -124,19 +162,9 @@ object PipelineQueries {
     binFill(exactToks(s, dir, Tables.documents(s, dir)))
 
   val packExactTokensSql: String =
-    TextQueries.tokensPerDocCteSql + s""",
-       |t2 AS (
-       |  SELECT d.lang, d.source, t.doc_id, t.n_tokens AS n_tok
-       |  FROM tokc t JOIN documents d ON t.doc_id = d.doc_id),
-       |c2 AS (
-       |  SELECT lang, source, doc_id, n_tok,
-       |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM t2)
-       |SELECT lang, source, CAST(cum_before // $PACK_BUDGET AS BIGINT) AS bin,
-       |  COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens,
-       |  CAST(CAST(SUM(n_tok) AS BIGINT) * 10000 // $PACK_BUDGET AS BIGINT) AS fill_bp
-       |FROM c2 GROUP BY 1, 2, 3 ORDER BY lang, source, bin""".stripMargin
+    s"""${exactToksSql("t2")},
+       |${withCumBeforeSql("c2", "t2")}
+       |${binFillSql("c2")}""".stripMargin
 
   // --- XP1c: the packing MANIFEST -----------------------------------------
 
@@ -177,15 +205,8 @@ object PipelineQueries {
   }
 
   val packManifestSql: String =
-    TextQueries.tokensPerDocCteSql + s""",
-       |t3 AS (
-       |  SELECT d.lang, d.source, t.doc_id, t.n_tokens AS n_tok
-       |  FROM tokc t JOIN documents d ON t.doc_id = d.doc_id),
-       |c3 AS (
-       |  SELECT lang, source, doc_id, n_tok,
-       |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM t3)
+    s"""${exactToksSql("t3")},
+       |${withCumBeforeSql("c3", "t3")}
        |SELECT lang, source, CAST(cum_before // $PACK_BUDGET AS BIGINT) AS bin,
        |  CAST(ROW_NUMBER() OVER (PARTITION BY lang, source, cum_before // $PACK_BUDGET
        |    ORDER BY doc_id) AS BIGINT) AS seq_pos,
@@ -240,15 +261,8 @@ object PipelineQueries {
   }
 
   val resumePositionSql: String =
-    TextQueries.tokensPerDocCteSql + s""",
-       |t3 AS (
-       |  SELECT d.lang, d.source, t.doc_id, t.n_tokens AS n_tok
-       |  FROM tokc t JOIN documents d ON t.doc_id = d.doc_id),
-       |c3 AS (
-       |  SELECT lang, source, doc_id, n_tok,
-       |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM t3),
+    s"""${exactToksSql("t3")},
+       |${withCumBeforeSql("c3", "t3")},
        |m3 AS (
        |  SELECT lang, source, doc_id, n_tok, cum_before,
        |    CAST(cum_before // $PACK_BUDGET AS BIGINT) AS bin,
@@ -378,9 +392,7 @@ object PipelineQueries {
 
   val packCrossDocSql: String = {
     val (c1, c2, c3) = crossDocLevels("//")
-    s"""WITH toks AS (
-       |  SELECT lang, source, doc_id, ${nTokSql("text")} AS n_tok
-       |  FROM documents),
+    s"""WITH $estToksSql,
        |cum AS (
        |  SELECT lang, source, n_tok,
        |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
@@ -415,6 +427,54 @@ object PipelineQueries {
     * scaling literature. Declared above every interpolation site. */
   private val EPOCH_BUDGET_X = 4L
   private val MAX_EPOCHS = 4L
+
+  /** Round two of the epoch-budget water-fill: each uncapped stream's
+    * share of the budget round one left, capped at its headroom. */
+  private val ALLOC2 = "CASE WHEN alloc1 < cap AND sum_w_open > 0 THEN" +
+    " least((budget - sum_a1) * weight div sum_w_open, cap - alloc1)" +
+    " ELSE 0 END"
+
+  /** DuckDB mirror of [[ALLOC2]]. */
+  private val alloc2Sql =
+    """CASE WHEN alloc1 < cap AND sum_w_open > 0
+      |    THEN least((budget - sum_a1) * weight // sum_w_open, cap - alloc1)
+      |    ELSE 0 END""".stripMargin
+
+  /** Round one of the epoch-budget water-fill over per-stream (tokens,
+    * weight, cap) rows: `budget` = corpus tokens × [[EPOCH_BUDGET_X]],
+    * `alloc1` = the weight-proportional share capped at `cap`, and the
+    * (sum_a1, sum_w_open) totals [[ALLOC2]] reads. */
+  private def waterfill(streams: DataFrame): DataFrame = {
+    val tot = streams.agg(sum(col("tokens")).as("corpus_tokens"),
+      sum(col("weight")).as("sum_w"))
+    val r1 = streams.crossJoin(broadcast(tot))
+      .withColumn("budget", expr(s"corpus_tokens * $EPOCH_BUDGET_X"))
+      .withColumn("alloc1", expr(
+        "least(CASE WHEN sum_w > 0 THEN budget * weight div sum_w" +
+          " ELSE 0 END, cap)"))
+    val tot2 = r1.agg(sum(col("alloc1")).as("sum_a1"),
+      sum(when(col("alloc1") < col("cap"), col("weight")).otherwise(0L)).as("sum_w_open"))
+    r1.crossJoin(broadcast(tot2))
+  }
+
+  /** DuckDB mirror of [[waterfill]] over the CTE `base`: the CTEs
+    * `${p}tot`, `${p}r1` and `${p}tot2`. */
+  private def waterfillSql(p: String, base: String): String =
+    s"""${p}tot AS (
+       |  SELECT CAST(SUM(tokens) AS BIGINT) AS corpus_tokens,
+       |    CAST(SUM(weight) AS BIGINT) AS sum_w
+       |  FROM $base),
+       |${p}r1 AS (
+       |  SELECT $base.*, corpus_tokens * $EPOCH_BUDGET_X AS budget,
+       |    least(CASE WHEN sum_w > 0
+       |        THEN corpus_tokens * $EPOCH_BUDGET_X * weight // sum_w
+       |        ELSE 0 END, cap) AS alloc1
+       |  FROM $base, ${p}tot),
+       |${p}tot2 AS (
+       |  SELECT CAST(SUM(alloc1) AS BIGINT) AS sum_a1,
+       |    CAST(SUM(CASE WHEN alloc1 < cap THEN weight ELSE 0 END)
+       |      AS BIGINT) AS sum_w_open
+       |  FROM ${p}r1)""".stripMargin
 
   /** Epoch-budget planner: given a training-token budget larger than the
     * corpus (here 4 × corpus tokens — exactly the corpus's repeat
@@ -454,20 +514,8 @@ object PipelineQueries {
       .withColumn("weight", expr("tokens * (1 + q_docs * 999 div n_docs)"))
       .withColumn("cap", expr(s"tokens * $MAX_EPOCHS"))
       .transform(graft.GraftSession.ckpt(_))
-    val tot = streams.agg(sum($"tokens").as("corpus_tokens"),
-      sum($"weight").as("sum_w"))
-    val r1 = streams.crossJoin(broadcast(tot))
-      .withColumn("budget", expr(s"corpus_tokens * $EPOCH_BUDGET_X"))
-      .withColumn("alloc1", expr(
-        "least(CASE WHEN sum_w > 0 THEN budget * weight div sum_w" +
-          " ELSE 0 END, cap)"))
-    val tot2 = r1.agg(sum($"alloc1").as("sum_a1"),
-      sum(when($"alloc1" < $"cap", $"weight").otherwise(0L)).as("sum_w_open"))
-    r1.crossJoin(broadcast(tot2))
-      .withColumn("alloc2", expr(
-        "CASE WHEN alloc1 < cap AND sum_w_open > 0 THEN" +
-          " least((budget - sum_a1) * weight div sum_w_open, cap - alloc1)" +
-          " ELSE 0 END"))
+    waterfill(streams)
+      .withColumn("alloc2", expr(ALLOC2))
       .withColumn("final_tokens", expr("alloc1 + alloc2"))
       .withColumn("micro_epochs", expr(
         "CASE WHEN tokens > 0 THEN final_tokens * 1000000 div tokens" +
@@ -494,25 +542,9 @@ object PipelineQueries {
        |    tokens * (1 + q_docs * 999 // n_docs) AS weight,
        |    tokens * $MAX_EPOCHS AS cap
        |  FROM streams),
-       |tot AS (
-       |  SELECT CAST(SUM(tokens) AS BIGINT) AS corpus_tokens,
-       |    CAST(SUM(weight) AS BIGINT) AS sum_w
-       |  FROM s2),
-       |r1 AS (
-       |  SELECT s2.*, corpus_tokens * $EPOCH_BUDGET_X AS budget,
-       |    least(CASE WHEN sum_w > 0
-       |        THEN corpus_tokens * $EPOCH_BUDGET_X * weight // sum_w
-       |        ELSE 0 END, cap) AS alloc1
-       |  FROM s2, tot),
-       |tot2 AS (
-       |  SELECT CAST(SUM(alloc1) AS BIGINT) AS sum_a1,
-       |    CAST(SUM(CASE WHEN alloc1 < cap THEN weight ELSE 0 END)
-       |      AS BIGINT) AS sum_w_open
-       |  FROM r1),
+       |${waterfillSql("", "s2")},
        |r2 AS (
-       |  SELECT r1.*, CASE WHEN alloc1 < cap AND sum_w_open > 0
-       |    THEN least((budget - sum_a1) * weight // sum_w_open, cap - alloc1)
-       |    ELSE 0 END AS alloc2
+       |  SELECT r1.*, $alloc2Sql AS alloc2
        |  FROM r1, tot2)
        |SELECT lang, source, tokens, CAST(q_permille AS BIGINT) AS q_permille,
        |  CAST(cap AS BIGINT) AS cap, CAST(alloc1 AS BIGINT) AS alloc1,
@@ -598,21 +630,8 @@ object PipelineQueries {
 
   val pipelineCorpusSql: String =
     TextQueries.tokensPerDocCteSql + s""",
-       |qd AS (
-       |  SELECT doc_id, lang, source, md5(text) AS h FROM documents
-       |  WHERE ${TextQueries.qualityPredSql}),
-       |kept AS (
-       |  SELECT doc_id, lang, source FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id) AS rn
-       |    FROM qd) WHERE rn = 1),
-       |ptoks AS (
-       |  SELECT k.lang, k.source, k.doc_id, t.n_tokens AS n_tok
-       |  FROM kept k JOIN tokc t ON k.doc_id = t.doc_id),
-       |pc AS (
-       |  SELECT lang, source, doc_id, n_tok,
-       |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM ptoks),
+       |${keptToksSql("qd", "kept", "ptoks")},
+       |${withCumBeforeSql("pc", "ptoks")},
        |bins AS (
        |  SELECT lang, source, cum_before // $PACK_BUDGET AS bin,
        |    CAST(SUM(n_tok) AS BIGINT) AS bin_tokens
@@ -701,20 +720,8 @@ object PipelineQueries {
       .withColumn("weight", expr("tokens * (1 + n_kept * 999 div n_docs)"))
       .withColumn("cap", expr(s"tokens * $MAX_EPOCHS"))
       .transform(graft.GraftSession.ckpt(_))
-    val tot = base.agg(sum($"tokens").as("corpus_tokens"),
-      sum($"weight").as("sum_w"))
-    val r1 = base.crossJoin(broadcast(tot))
-      .withColumn("budget", expr(s"corpus_tokens * $EPOCH_BUDGET_X"))
-      .withColumn("alloc1", expr(
-        "least(CASE WHEN sum_w > 0 THEN budget * weight div sum_w" +
-          " ELSE 0 END, cap)"))
-    val tot2 = r1.agg(sum($"alloc1").as("sum_a1"),
-      sum(when($"alloc1" < $"cap", $"weight").otherwise(0L)).as("sum_w_open"))
-    r1.crossJoin(broadcast(tot2))
-      .withColumn("final_tokens", expr(
-        "alloc1 + CASE WHEN alloc1 < cap AND sum_w_open > 0 THEN" +
-          " least((budget - sum_a1) * weight div sum_w_open, cap - alloc1)" +
-          " ELSE 0 END"))
+    waterfill(base)
+      .withColumn("final_tokens", expr("alloc1 + " + ALLOC2))
       .select($"lang", $"source", $"n_docs", $"n_kept",
         $"tokens".as("kept_tokens"), $"n_bins",
         expr("CASE WHEN attn_pairs > 0" +
@@ -730,21 +737,8 @@ object PipelineQueries {
   val trainReadinessSql: String = {
     val (c1, c2, c3) = crossDocLevels("//")
     TextQueries.tokensPerDocCteSql + s""",
-       |trqd AS (
-       |  SELECT doc_id, lang, source, md5(text) AS h FROM documents
-       |  WHERE ${TextQueries.qualityPredSql}),
-       |trkept AS (
-       |  SELECT doc_id, lang, source FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id) AS rn
-       |    FROM trqd) WHERE rn = 1),
-       |trtoks AS (
-       |  SELECT k.lang, k.source, k.doc_id, t.n_tokens AS n_tok
-       |  FROM trkept k JOIN tokc t ON k.doc_id = t.doc_id),
-       |trpc AS (
-       |  SELECT lang, source, doc_id, n_tok,
-       |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM trtoks),
+       |${keptToksSql("trqd", "trkept", "trtoks")},
+       |${withCumBeforeSql("trpc", "trtoks")},
        |trx1 AS (SELECT lang, source, n_tok, ${c1.mkString(",\n    ")} FROM trpc),
        |trx2 AS (
        |  SELECT lang, source, n_tok, s, l1, nfull, r, ${c2.mkString(",\n    ")}
@@ -778,25 +772,9 @@ object PipelineQueries {
        |  FROM trcensus c
        |  LEFT JOIN trpk p ON c.lang = p.lang AND c.source = p.source
        |  LEFT JOIN trcross x ON c.lang = x.lang AND c.source = x.source),
-       |trtot AS (
-       |  SELECT CAST(SUM(tokens) AS BIGINT) AS corpus_tokens,
-       |    CAST(SUM(weight) AS BIGINT) AS sum_w
-       |  FROM trbase),
-       |trr1 AS (
-       |  SELECT trbase.*, corpus_tokens * $EPOCH_BUDGET_X AS budget,
-       |    least(CASE WHEN sum_w > 0
-       |        THEN corpus_tokens * $EPOCH_BUDGET_X * weight // sum_w
-       |        ELSE 0 END, cap) AS alloc1
-       |  FROM trbase, trtot),
-       |trtot2 AS (
-       |  SELECT CAST(SUM(alloc1) AS BIGINT) AS sum_a1,
-       |    CAST(SUM(CASE WHEN alloc1 < cap THEN weight ELSE 0 END)
-       |      AS BIGINT) AS sum_w_open
-       |  FROM trr1),
+       |${waterfillSql("tr", "trbase")},
        |trr2 AS (
-       |  SELECT trr1.*, alloc1 + CASE WHEN alloc1 < cap AND sum_w_open > 0
-       |    THEN least((budget - sum_a1) * weight // sum_w_open, cap - alloc1)
-       |    ELSE 0 END AS final_tokens
+       |  SELECT trr1.*, alloc1 + $alloc2Sql AS final_tokens
        |  FROM trr1, trtot2)
        |SELECT lang, source, n_docs, n_kept,
        |  CAST(tokens AS BIGINT) AS kept_tokens, n_bins,
@@ -1244,8 +1222,7 @@ object PipelineQueries {
     // the capped hot set is a bounded trained artifact: collected once per
     // (session, documents content), probed as the sorted LITERAL (never a
     // join — see the round-18 lesson in the scaladoc)
-    val hotArr: Array[String] = graft.GraftSession.memo(s,
-        "scrub_hot|" + graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    val hotArr: Array[String] = graft.GraftSession.memoOn(s, "scrub_hot", dir, "documents") {
       hotSpans(spans, SCRUB_MIN_DOCS, SCRUB_MAX_HOT)
         .collect().head.getSeq[String](0).toArray
     }
@@ -1445,14 +1422,8 @@ object PipelineQueries {
 
   val packShuffleSql: String = {
     val epochRows = EPOCHS.map(e => s"('$e')").mkString(", ")
-    s"""WITH toks AS (
-       |  SELECT lang, source, doc_id, ${nTokSql("text")} AS n_tok
-       |  FROM documents),
-       |c AS (
-       |  SELECT lang, source, doc_id, n_tok,
-       |    COALESCE(SUM(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM toks),
+    s"""WITH $estToksSql,
+       |${withCumBeforeSql("c", "toks")},
        |bins AS (
        |  SELECT lang, source, CAST(cum_before // $PACK_BUDGET AS BIGINT) AS bin,
        |    COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens
@@ -1542,9 +1513,7 @@ object PipelineQueries {
   }
 
   val packIncrementalSql: String =
-    s"""WITH toks AS (
-       |  SELECT lang, source, doc_id, ${nTokSql("text")} AS n_tok
-       |  FROM documents),
+    s"""WITH $estToksSql,
        |thr AS (SELECT MAX(doc_id) * 7 // 10 AS thr FROM toks),
        |corpus AS (
        |  SELECT t.lang, t.source, t.doc_id, t.n_tok,

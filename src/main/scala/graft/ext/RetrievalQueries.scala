@@ -56,49 +56,71 @@ object RetrievalQueries {
   private[graft] def bm25ScoredOf(docs: DataFrame,
       terms: Seq[String]): DataFrame = {
     import docs.sparkSession.implicits._
-    // doc lengths for every doc (BM25 normalizes by corpus-wide avgdl)
-    val dl = docs.select($"doc_id", Ops.wordCount($"text").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum($"dl").cast(DoubleType) / count(lit(1))).as("avgdl"))
-    val tf = docs
-      .select($"doc_id", explode(Ops.words($"text")).as("tok"))
-      .filter($"tok".isin(terms: _*))
-      .groupBy($"doc_id", $"tok")
-      .agg(count(lit(1)).as("tf"))
-    val df_ = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
+    val (dl, stats, tf, df_) = bm25Stats(docs, terms)
     tf
       .join(broadcast(df_), "tok")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
-      .select($"doc_id",
-        (log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0) *
-          ($"tf" * 2.2) /
-          ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl"))).as("c"))
+      .select($"doc_id", bm25Term)
       .groupBy($"doc_id")
       .agg(round(sum($"c"), 5).as("score"))
   }
 
-  val textBm25Sql: String =
-    s"""WITH dl AS (
+  /** BM25's corpus statistics over a (doc_id, text) relation: per-doc
+    * lengths `dl` (for every doc — BM25 normalizes by the corpus-wide
+    * avgdl), the one-row (n_docs, avgdl) `stats`, the (doc_id, tok, tf)
+    * frequencies of `terms` and their (tok, df) document frequencies. */
+  private def bm25Stats(docs: DataFrame, terms: Seq[String])
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val dl = docs.select(col("doc_id"), Ops.wordCount(col("text")).as("dl"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"),
+      (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
+    val tf = docs
+      .select(col("doc_id"), explode(Ops.words(col("text"))).as("tok"))
+      .filter(col("tok").isin(terms: _*))
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf"))
+    (dl, stats, tf, tf.groupBy(col("tok")).agg(count(lit(1)).as("df")))
+  }
+
+  /** One term's BM25 contribution `c` (k1 = 1.2, b = 0.75) from the
+    * columns of [[bm25Stats]]. */
+  private def bm25Term: Column =
+    (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+      (col("tf") * 2.2) /
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))).as("c")
+
+  /** DuckDB mirror of [[bm25Stats]] over `documents`: the `dl`, `stats`,
+    * `$tf` and `dfs` CTEs. */
+  private def bm25StatsSql(tf: String, terms: Seq[String]): String =
+    s"""dl AS (
        |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
        |  FROM documents),
        |stats AS (
        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
        |    CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
        |  FROM dl),
-       |tf AS (
+       |$tf AS (
        |  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (
        |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok
        |    FROM documents)
-       |  WHERE tok IN (${QUERY.map(t => s"'$t'").mkString(", ")})
+       |  WHERE tok IN (${terms.map(t => s"'$t'").mkString(", ")})
        |  GROUP BY 1, 2),
-       |dfs AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+       |dfs AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM $tf GROUP BY 1)""".stripMargin
+
+  /** DuckDB mirror of [[bm25Term]], summed per group and rounded at 5
+    * places. */
+  private val bm25ScoreSql: String =
+    """round(SUM(
+      |      ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) *
+      |      (tf * 2.2) /
+      |      (tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl))), 5)""".stripMargin
+
+  val textBm25Sql: String =
+    s"""WITH ${bm25StatsSql("tf", QUERY)},
        |scored AS (
        |  SELECT tf.doc_id,
-       |    round(SUM(
-       |      ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) *
-       |      (tf * 2.2) /
-       |      (tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl))), 5) AS score
+       |    $bm25ScoreSql AS score
        |  FROM tf
        |  JOIN dfs USING (tok)
        |  JOIN dl ON dl.doc_id = tf.doc_id
@@ -207,25 +229,14 @@ object RetrievalQueries {
       .toDF("q_id", "tok")
 
     // lexical arm: BM25 per query over its own term subset
-    val dl = docs.select($"doc_id", Ops.wordCount($"text").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum($"dl").cast(DoubleType) / count(lit(1))).as("avgdl"))
-    val tf = docs
-      .select($"doc_id", explode(Ops.words($"text")).as("tok"))
-      .filter($"tok".isin(allTerms: _*))
-      .groupBy($"doc_id", $"tok")
-      .agg(count(lit(1)).as("tf"))
-    val df_ = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
+    val (dl, stats, tf, df_) = bm25Stats(docs, allTerms)
     val lexScored = tf
       .join(broadcast(qterms), "tok")
       .join(broadcast(df_), "tok")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
       .filter($"doc_id" =!= $"q_id")
-      .select($"q_id", $"doc_id",
-        (log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0) *
-          ($"tf" * 2.2) /
-          ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl"))).as("c"))
+      .select($"q_id", $"doc_id", bm25Term)
       .groupBy($"q_id", $"doc_id")
       .agg(round(sum($"c"), 5).as("score"))
     val wLex = Window.partitionBy($"q_id").orderBy($"score".desc, $"doc_id".asc)
@@ -273,31 +284,13 @@ object RetrievalQueries {
     val qtermRows = HYBRID.flatMap { case (q, ts) =>
       ts.map(t => s"($q, '$t')")
     }.mkString(", ")
-    val allTerms = HYBRID.flatMap(_._2).distinct
-      .map(t => s"'$t'").mkString(", ")
     val qids = HYBRID.map(_._1).mkString(", ")
     def q6Sql(x: String) = s"CAST(floor(CAST($x AS DOUBLE) * 1000000) AS BIGINT)"
     s"""WITH qt(q_id, tok) AS (VALUES $qtermRows),
-       |dl AS (
-       |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-       |  FROM documents),
-       |stats AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |    CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-       |  FROM dl),
-       |tf AS (
-       |  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-       |    FROM documents)
-       |  WHERE tok IN ($allTerms)
-       |  GROUP BY 1, 2),
-       |dfs AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+       |${bm25StatsSql("tf", HYBRID.flatMap(_._2).distinct)},
        |lex_scored AS (
        |  SELECT qt.q_id, tf.doc_id,
-       |    round(SUM(
-       |      ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) *
-       |      (tf * 2.2) /
-       |      (tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl))), 5) AS score
+       |    $bm25ScoreSql AS score
        |  FROM tf
        |  JOIN qt ON qt.tok = tf.tok
        |  JOIN dfs ON dfs.tok = tf.tok
@@ -395,14 +388,7 @@ object RetrievalQueries {
     val qrels = EVAL_QUERIES.toDF("query_id", "term")
     val nterms = qrels.groupBy($"query_id").agg(count(lit(1)).as("n_terms"))
     val terms = EVAL_QUERIES.map(_._2).distinct
-    val dl = docs.select($"doc_id",
-      Ops.wordCount($"text").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum($"dl").cast(DoubleType) / count(lit(1))).as("avgdl"))
-    val tf0 = docs.select($"doc_id", explode(Ops.words($"text")).as("tok"))
-      .filter($"tok".isin(terms: _*))
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
-    val dfs = tf0.groupBy($"tok").agg(count(lit(1)).as("df"))
+    val (dl, stats, tf0, dfs) = bm25Stats(docs, terms)
     val qtf = tf0.join(broadcast(qrels), $"tok" === $"term")
       .select($"query_id", $"doc_id", $"tok", $"tf")
     // graded relevance: distinct query terms the doc contains (tf0 is
@@ -464,20 +450,7 @@ object RetrievalQueries {
        |nterms AS (
        |  SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_terms
        |  FROM qrels GROUP BY 1),
-       |dl AS (
-       |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-       |  FROM documents),
-       |stats AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |    CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-       |  FROM dl),
-       |tf0 AS (
-       |  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-       |    FROM documents)
-       |  WHERE tok IN (${terms.map(t => s"'$t'").mkString(", ")})
-       |  GROUP BY 1, 2),
-       |dfs AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf0 GROUP BY 1),
+       |${bm25StatsSql("tf0", terms)},
        |qtf AS (
        |  SELECT q.query_id, t.doc_id, t.tok, t.tf
        |  FROM tf0 t JOIN qrels q ON t.tok = q.term),
@@ -489,10 +462,7 @@ object RetrievalQueries {
        |  JOIN nterms n ON r.query_id = n.query_id),
        |scored AS (
        |  SELECT qtf.query_id, qtf.doc_id,
-       |    round(SUM(
-       |      ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) *
-       |      (tf * 2.2) /
-       |      (tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl))), 5) AS score
+       |    $bm25ScoreSql AS score
        |  FROM qtf
        |  JOIN dfs USING (tok)
        |  JOIN dl ON dl.doc_id = qtf.doc_id

@@ -46,8 +46,7 @@ object SimJoinQueries {
     * [[DedupQueries.minhashPairs]], so the prefix-join plan executes once
     * per session. */
   private[ext] def exactPairs(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "simjoin_exact_pairs|" +
-        graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    graft.GraftSession.memoOn(s, "simjoin_exact_pairs", dir, "documents") {
       graft.GraftSession.ckpt(simjoinPrefixPlan(s, dir))
     }
 
@@ -66,8 +65,7 @@ object SimJoinQueries {
     * this relation IS the persisted artifact a re-ranking or dedup
     * service ships alongside the corpus. */
   private[ext] def docIndex(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "simjoin_doc_index|" +
-        graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    graft.GraftSession.memoOn(s, "simjoin_doc_index", dir, "documents") {
       docIndexOf(Tables.documents(s, dir))
         .transform(graft.GraftSession.ckpt(_))
     }

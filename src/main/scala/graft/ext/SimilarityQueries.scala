@@ -85,12 +85,28 @@ object SimilarityQueries {
     topK(scored, "q_id", 5, col("cos_sim").desc, col("vec_id").asc)(
       "q_id", "rnk", "vec_id", "cos_sim")
 
+  /** DuckDB mirror of [[knnTop5]] over a `scored` CTE. */
+  private val knnTop5Sql: String =
+    """SELECT q_id, rnk, vec_id, cos_sim FROM (
+      |  SELECT *, row_number() OVER (
+      |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
+      |  FROM scored) WHERE rnk <= 5
+      |ORDER BY q_id, rnk""".stripMargin
+
   /** The unranked top-5 (q_id, vec_id) pairs the recall audits compare. */
   private def top5Pairs(scored: DataFrame): DataFrame =
     scored.withColumn("rnk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("vec_id").asc)))
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("vec_id"))
+
+  /** DuckDB mirror of [[top5Pairs]] over the relation `from`, laid out as
+    * the body of a CTE. */
+  private def top5PairsSql(from: String): String =
+    s"""SELECT q_id, vec_id FROM (
+       |    SELECT *, row_number() OVER (
+       |      PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
+       |    FROM $from) WHERE rnk <= 5""".stripMargin
 
   /** DuckDB mirror: exact integer dot via unnested index sum (integer SUM is
     * order-independent). `a`/`b` are embedding list expressions; requires an
@@ -106,6 +122,16 @@ object SimilarityQueries {
     s"""norms AS (
        |  SELECT vec_id, ${dotSql("embedding", "embedding")} AS nrm
        |  FROM embeddings, $idxSql GROUP BY vec_id)""".stripMargin
+
+  /** The brute scoring CTE `name`: exact cosine of each (q_id, vec_id,
+    * dot) row of the `dots` CTE from the `norms` table. */
+  private def dotsScoredSql(name: String, dots: String): String =
+    s"""$name AS (
+       |  SELECT q_id, $dots.vec_id AS vec_id,
+       |    CAST(dot AS DOUBLE) / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
+       |  FROM $dots
+       |  JOIN norms qn ON q_id = qn.vec_id
+       |  JOIN norms vn ON $dots.vec_id = vn.vec_id)""".stripMargin
 
   // --- X3a: brute-force cosine top-k -------------------------------------
   /** Top-5 cosine neighbors for query vectors (vec_id < 20) against the full
@@ -130,17 +156,8 @@ object SimilarityQueries {
        |  FROM embeddings q JOIN embeddings v ON q.vec_id <> v.vec_id, $idxSql
        |  WHERE q.vec_id < 20
        |  GROUP BY 1, 2),
-       |scored AS (
-       |  SELECT q_id, dots.vec_id AS vec_id,
-       |    CAST(dot AS DOUBLE) / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-       |  FROM dots
-       |  JOIN norms qn ON q_id = qn.vec_id
-       |  JOIN norms vn ON dots.vec_id = vn.vec_id)
-       |SELECT q_id, rnk, vec_id, cos_sim FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5
-       |ORDER BY q_id, rnk""".stripMargin
+       |${dotsScoredSql("scored", "dots")}
+       |$knnTop5Sql""".stripMargin
 
   // --- X3b: LSH-bucketed ANN (the scale path) ----------------------------
   /** md5-derived ±1 hyperplane entries — reproducible in any engine.
@@ -210,17 +227,8 @@ object SimilarityQueries {
        |  JOIN embeddings v ON v.vec_id = vb.vec_id, $idxSql
        |  WHERE q.vec_id < 20
        |  GROUP BY 1, 2),
-       |scored AS (
-       |  SELECT q_id, dots.vec_id AS vec_id,
-       |    CAST(dot AS DOUBLE) / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-       |  FROM dots
-       |  JOIN norms qn ON q_id = qn.vec_id
-       |  JOIN norms vn ON dots.vec_id = vn.vec_id)
-       |SELECT q_id, rnk, vec_id, cos_sim FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5
-       |ORDER BY q_id, rnk""".stripMargin
+       |${dotsScoredSql("scored", "dots")}
+       |$knnTop5Sql""".stripMargin
   }
 
   // --- X3b': IVF-flat ANN (coarse quantizer + probe) ---------------------
@@ -274,8 +282,7 @@ object SimilarityQueries {
     * the `embeddings` content fingerprint so a rewritten table is counted
     * afresh. */
   private[graft] def embCount(s: SparkSession, dir: String): Long =
-    graft.GraftSession.memo(s,
-        "emb_count|" + graft.GraftSession.contentKey(dir, Seq("embeddings")))(
+    graft.GraftSession.memoOn(s, "emb_count", dir, "embeddings")(
       java.lang.Long.valueOf(Tables.embeddings(s, dir).count())).longValue
 
   /** DuckDB mirror of [[ivfK]] over a count expression. */
@@ -323,25 +330,8 @@ object SimilarityQueries {
        |assign AS (SELECT vec_id, c_id AS bucket FROM ranked WHERE crn = 1),
        |probes AS (SELECT vec_id AS q_id, c_id AS bucket FROM ranked
        |  WHERE vec_id < 20 AND crn <= $NPROBE),
-       |cands AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id
-       |  FROM probes p JOIN assign a ON p.bucket = a.bucket
-       |  WHERE a.vec_id <> p.q_id),
-       |scored AS (
-       |  SELECT ca.q_id, ca.vec_id,
-       |    CAST(${dotSql("q.embedding", "v.embedding")} AS DOUBLE)
-       |      / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-       |  FROM cands ca
-       |  JOIN embeddings q ON ca.q_id = q.vec_id
-       |  JOIN embeddings v ON ca.vec_id = v.vec_id
-       |  JOIN norms qn ON ca.q_id = qn.vec_id
-       |  JOIN norms vn ON ca.vec_id = vn.vec_id, $idxSql
-       |  GROUP BY ca.q_id, ca.vec_id, qn.nrm, vn.nrm)
-       |SELECT q_id, rnk, vec_id, cos_sim FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5
-       |ORDER BY q_id, rnk""".stripMargin
+       |${rescoreSql()}
+       |$knnTop5Sql""".stripMargin
 
   // --- X3b''': IVF with LEARNED centroids (bounded k-means) --------------
   /** k-means refinement rounds over the md5-picked seed (a constant). */
@@ -437,6 +427,10 @@ object SimilarityQueries {
   private def invLists(ranked: DataFrame): DataFrame =
     ranked.filter(col("crn") === 1).select(col("vec_id"), col("c_id").as("bucket"))
 
+  /** DuckDB mirror of [[invLists]] over the trained ranking `aranked3`. */
+  private val invListsSql: String =
+    "assign AS (SELECT vec_id, c_id AS bucket FROM aranked3 WHERE crn = 1)"
+
   /** Attach the quantized query vector to probe rows (vec_id, c_id):
     * (q_id, q_emb, q_nrm, bucket). */
   private def probeVecs(e: DataFrame)(probed: DataFrame): DataFrame =
@@ -444,6 +438,14 @@ object SimilarityQueries {
       .join(e, Seq("vec_id"))
       .select(col("vec_id").as("q_id"), col("qe").as("q_emb"),
         col("nrm").as("q_nrm"), col("bucket"))
+
+  /** DuckDB mirror of [[invLists]] plus [[probeVecs]] over the
+    * [[NPROBE2]] nearest lists of each query in `aranked3`: the `assign`
+    * and `probes` CTEs [[rescoreSql]] consumes. */
+  private def probeVecsSql: String =
+    s"""$invListsSql,
+       |probes AS (SELECT vec_id AS q_id, c_id AS bucket FROM aranked3
+       |  WHERE vec_id < 20 AND crn <= $NPROBE2)""".stripMargin
 
   /** Probe → candidate → exact rescore: each probe (q_id, q_emb, q_nrm,
     * bucket) meets its inverted list in `assign` (vec_id, bucket), drops
@@ -457,6 +459,30 @@ object SimilarityQueries {
       .select(col("q_id"), col("vec_id"),
         cosine(dotQ(col("q_emb"), col("qe")), col("q_nrm"), col("nrm")).as("cos_sim"))
       .distinct()
+
+  /** DuckDB mirror of [[rescore]]'s candidate step: `cands$sfx` holds
+    * each (q_id, vec_id) of `probes$sfx` meeting its list in
+    * `assign$sfx`, the query itself dropped. */
+  private def candsSql(sfx: String = ""): String =
+    s"""cands$sfx AS (
+       |  SELECT DISTINCT p.q_id, a.vec_id
+       |  FROM probes$sfx p JOIN assign$sfx a ON p.bucket = a.bucket
+       |  WHERE a.vec_id <> p.q_id)""".stripMargin
+
+  /** DuckDB mirror of [[rescore]]: [[candsSql]], then `scored$sfx` with
+    * the exact cosine of every candidate. */
+  private def rescoreSql(sfx: String = ""): String =
+    s"""${candsSql(sfx)},
+       |scored$sfx AS (
+       |  SELECT ca.q_id, ca.vec_id,
+       |    CAST(${dotSql("q.embedding", "v.embedding")} AS DOUBLE)
+       |      / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
+       |  FROM cands$sfx ca
+       |  JOIN embeddings q ON ca.q_id = q.vec_id
+       |  JOIN embeddings v ON ca.vec_id = v.vec_id
+       |  JOIN norms qn ON ca.q_id = qn.vec_id
+       |  JOIN norms vn ON ca.vec_id = vn.vec_id, $idxSql
+       |  GROUP BY ca.q_id, ca.vec_id, qn.nrm, vn.nrm)""".stripMargin
 
   /** md5-seeded + [[KM_ROUNDS]] Lloyd-refined centroid table — shared by
     * the learned-IVF ANN and the semantic-dedup blocker. */
@@ -487,14 +513,12 @@ object SimilarityQueries {
     * ([[graft.streaming.StreamJobs.annIngestStream]]), and the input
     * [[rankedAssign]] assigns the batch corpus against. */
   private[graft] def trainedCents(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "ivf_cents|" +
-        graft.GraftSession.contentKey(dir, Seq("embeddings"))) {
+    graft.GraftSession.memoOn(s, "ivf_cents", dir, "embeddings") {
       graft.GraftSession.ckpt(learnedCents(quantized(s, dir)))
     }
 
   private[graft] def rankedAssign(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "ivf_ranked|" +
-        graft.GraftSession.contentKey(dir, Seq("embeddings"))) {
+    graft.GraftSession.memoOn(s, "ivf_ranked", dir, "embeddings") {
       import s.implicits._
       graft.GraftSession.ckpt(
         kmAssign(quantized(s, dir), trainedCents(s, dir))
@@ -545,8 +569,7 @@ object SimilarityQueries {
     * checkpointed ONCE and shared by `q_ann_eval` and `q_ann_frontier`
     * (each previously checkpointed its own copy). */
   private[graft] def bruteTruth(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "ann_truth|" +
-        graft.GraftSession.contentKey(dir, Seq("embeddings"))) {
+    graft.GraftSession.memoOn(s, "ann_truth", dir, "embeddings") {
       import s.implicits._
       graft.GraftSession.ckpt(knnBrute(s, dir).select($"q_id", $"vec_id"))
     }
@@ -632,25 +655,8 @@ object SimilarityQueries {
        |  WHERE r.crn = 1 AND l.label = 1),
        |probes AS (SELECT vec_id AS q_id, c_id AS bucket FROM aranked3, np
        |  WHERE vec_id < 20 AND crn <= np.nprobe),
-       |cands AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id
-       |  FROM probes p JOIN assign a ON p.bucket = a.bucket
-       |  WHERE a.vec_id <> p.q_id),
-       |scored AS (
-       |  SELECT ca.q_id, ca.vec_id,
-       |    CAST(${dotSql("q.embedding", "v.embedding")} AS DOUBLE)
-       |      / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-       |  FROM cands ca
-       |  JOIN embeddings q ON ca.q_id = q.vec_id
-       |  JOIN embeddings v ON ca.vec_id = v.vec_id
-       |  JOIN norms qn ON ca.q_id = qn.vec_id
-       |  JOIN norms vn ON ca.vec_id = vn.vec_id, $idxSql
-       |  GROUP BY ca.q_id, ca.vec_id, qn.nrm, vn.nrm)
-       |SELECT q_id, rnk, vec_id, cos_sim FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5
-       |ORDER BY q_id, rnk""".stripMargin
+       |${rescoreSql()}
+       |$knnTop5Sql""".stripMargin
 
   /** Serve FILTERED top-5 for a batch of arriving query vectors against
     * the published index — the per-micro-batch core of the streaming
@@ -772,25 +778,9 @@ object SimilarityQueries {
          |probes_$tag AS (
          |  SELECT vec_id AS q_id, c_id AS bucket FROM aranked3, np_$tag
          |  WHERE vec_id < 20 AND crn <= np_$tag.nprobe),
-         |cands_$tag AS (
-         |  SELECT DISTINCT p.q_id, a.vec_id
-         |  FROM probes_$tag p JOIN assign_$tag a ON p.bucket = a.bucket
-         |  WHERE a.vec_id <> p.q_id),
-         |scored_$tag AS (
-         |  SELECT ca.q_id, ca.vec_id,
-         |    CAST(${dotSql("q.embedding", "v.embedding")} AS DOUBLE)
-         |      / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-         |  FROM cands_$tag ca
-         |  JOIN embeddings q ON ca.q_id = q.vec_id
-         |  JOIN embeddings v ON ca.vec_id = v.vec_id
-         |  JOIN norms qn ON ca.q_id = qn.vec_id
-         |  JOIN norms vn ON ca.vec_id = vn.vec_id, $idxSql
-         |  GROUP BY ca.q_id, ca.vec_id, qn.nrm, vn.nrm),
+         |${rescoreSql(s"_$tag")},
          |p_$tag AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-         |    FROM scored_$tag) WHERE rnk <= 5),
+         |  ${top5PairsSql(s"scored_$tag")}),
          |tdots_$tag AS (
          |  SELECT q.vec_id AS q_id, v.vec_id AS vec_id,
          |    ${dotSql("q.embedding", "v.embedding")} AS dot
@@ -799,17 +789,9 @@ object SimilarityQueries {
          |    AND v.vec_id IN (SELECT vec_id FROM match_$tag), $idxSql
          |  WHERE q.vec_id < 20
          |  GROUP BY 1, 2),
-         |tsc_$tag AS (
-         |  SELECT q_id, tdots_$tag.vec_id AS vec_id,
-         |    CAST(dot AS DOUBLE) / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-         |  FROM tdots_$tag
-         |  JOIN norms qn ON q_id = qn.vec_id
-         |  JOIN norms vn ON tdots_$tag.vec_id = vn.vec_id),
+         |${dotsScoredSql(s"tsc_$tag", s"tdots_$tag")},
          |truth_$tag AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-         |    FROM tsc_$tag) WHERE rnk <= 5)""".stripMargin
+         |  ${top5PairsSql(s"tsc_$tag")})""".stripMargin
     def statSql(tag: String): String =
       s"SELECT '$tag' AS pred,\n" +
         s"  (SELECT n_match FROM np_$tag) AS n_match,\n" +
@@ -892,28 +874,9 @@ object SimilarityQueries {
 
   val knnIvf2Sql: String =
     s"""WITH $kmeansCtesSql,
-       |assign AS (SELECT vec_id, c_id AS bucket FROM aranked3 WHERE crn = 1),
-       |probes AS (SELECT vec_id AS q_id, c_id AS bucket FROM aranked3
-       |  WHERE vec_id < 20 AND crn <= $NPROBE2),
-       |cands AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id
-       |  FROM probes p JOIN assign a ON p.bucket = a.bucket
-       |  WHERE a.vec_id <> p.q_id),
-       |scored AS (
-       |  SELECT ca.q_id, ca.vec_id,
-       |    CAST(${dotSql("q.embedding", "v.embedding")} AS DOUBLE)
-       |      / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-       |  FROM cands ca
-       |  JOIN embeddings q ON ca.q_id = q.vec_id
-       |  JOIN embeddings v ON ca.vec_id = v.vec_id
-       |  JOIN norms qn ON ca.q_id = qn.vec_id
-       |  JOIN norms vn ON ca.vec_id = vn.vec_id, $idxSql
-       |  GROUP BY ca.q_id, ca.vec_id, qn.nrm, vn.nrm)
-       |SELECT q_id, rnk, vec_id, cos_sim FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5
-       |ORDER BY q_id, rnk""".stripMargin
+       |$probeVecsSql,
+       |${rescoreSql()}
+       |$knnTop5Sql""".stripMargin
 
   // --- X2g: semantic (embedding-cosine) near-dup, centroid-blocked -------
 
@@ -1006,7 +969,7 @@ object SimilarityQueries {
 
   val semanticDedupSql: String =
     s"""WITH $kmeansCtesSql,
-       |assign AS (SELECT vec_id, c_id AS bucket FROM aranked3 WHERE crn = 1),
+       |$invListsSql,
        |dsem AS (SELECT $semDepthCaseSql AS d
        |  FROM (SELECT n, ${ivfKSql("n")} AS k
        |        FROM (SELECT COUNT(*) AS n FROM embeddings))),
@@ -1130,11 +1093,7 @@ object SimilarityQueries {
        |  FROM exact
        |  JOIN norms qn ON q_id = qn.vec_id
        |  JOIN norms vn ON exact.vec_id = vn.vec_id)
-       |SELECT q_id, rnk, vec_id, cos_sim FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5
-       |ORDER BY q_id, rnk""".stripMargin
+       |$knnTop5Sql""".stripMargin
 
   // --- X3d: per-dimension feature statistics (the scaling fit) -----------
   /** Per-dimension n/mean/std/min/max over the embedding corpus — the
@@ -1389,15 +1348,13 @@ object SimilarityQueries {
     * would be the same waste [[rankedAssign]] eliminates for IVF. */
   private def pqCbMemo(s: SparkSession, dir: String, tag: String,
       e: => DataFrame): DataFrame =
-    graft.GraftSession.memo(s, s"pq_cb$tag|" +
-        graft.GraftSession.contentKey(dir, Seq("embeddings"))) {
+    graft.GraftSession.memoOn(s, s"pq_cb$tag", dir, "embeddings") {
       graft.GraftSession.ckpt(pqCodebook(e))
     }
 
   private def pqCodesTagMemo(s: SparkSession, dir: String, tag: String,
       e: => DataFrame, cb: => DataFrame): DataFrame =
-    graft.GraftSession.memo(s, s"pq_codes$tag|" +
-        graft.GraftSession.contentKey(dir, Seq("embeddings"))) {
+    graft.GraftSession.memoOn(s, s"pq_codes$tag", dir, "embeddings") {
       graft.GraftSession.ckpt(pqEncode(e, cb))
     }
 
@@ -1415,12 +1372,8 @@ object SimilarityQueries {
     * ints per corpus vector instead of 64 longs, which is the point of
     * PQ; only C×|Q| rows ever touch full vectors again. */
   def knnPq(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val e = quantized(s, dir)
-    val adc = pqCodesMemo(s, dir)
-      .join(pqLut(e, pqCodebookMemo(s, dir)), Seq("m", "cid"))
-      .where($"vec_id" =!= $"q_id")
-      .groupBy($"q_id", $"vec_id").agg(sum($"part").as("adc_dot"))
+    val adc = pqAdc(pqCodesMemo(s, dir), e, pqCodebookMemo(s, dir))
     exactTop5(adcTopC(adc, e), e)
   }
 
@@ -1433,7 +1386,6 @@ object SimilarityQueries {
     * changes. */
   private def knnPqOn(e: DataFrame, cb: DataFrame, codes: DataFrame,
       rerankE: DataFrame = null): DataFrame = {
-    import e.sparkSession.implicits._
     // Permuted layouts leave dots/norms bit-identical, so ranking off the
     // layout itself equals ranking off the original. The SCALED rotation
     // arm must rank and re-rank off the ORIGINAL layout instead (as its
@@ -1442,11 +1394,16 @@ object SimilarityQueries {
     // oracle's scaled-dot/original-norm arithmetic. Monotonicity is
     // unaffected either way — the scale is a per-query constant.
     val re = Option(rerankE).getOrElse(e)
-    val adc = codes.join(pqLut(e, cb), Seq("m", "cid"))
-      .where($"vec_id" =!= $"q_id")
-      .groupBy($"q_id", $"vec_id").agg(sum($"part").as("adc_dot"))
-    exactTop5(adcTopC(adc, re), re)
+    exactTop5(adcTopC(pqAdc(codes, e, cb), re), re)
   }
+
+  /** Asymmetric distance of every (query, other vector) pair: the query's
+    * partial-dot table [[pqLut]] joined to the `codes` table and summed,
+    * as (q_id, vec_id, adc_dot). */
+  private def pqAdc(codes: DataFrame, e: DataFrame, cb: DataFrame): DataFrame =
+    codes.join(pqLut(e, cb), Seq("m", "cid"))
+      .where(col("vec_id") =!= col("q_id"))
+      .groupBy(col("q_id"), col("vec_id")).agg(sum(col("part")).as("adc_dot"))
 
   /** The per-query 8×16 partial-dot lookup table (ADC's query-side half). */
   private[graft] def pqLut(e: DataFrame, cb: DataFrame): DataFrame = {
@@ -1596,19 +1553,20 @@ object SimilarityQueries {
        |  FROM ex
        |  JOIN norms qn ON ex.q_id = qn.vec_id
        |  JOIN norms vn ON ex.vec_id = vn.vec_id)
-       |SELECT q_id, rnk, vec_id, cos_sim FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |  FROM scored) WHERE rnk <= 5
-       |ORDER BY q_id, rnk""".stripMargin
+       |$knnTop5Sql""".stripMargin
 
-  private def pqPipelineSql(qvBlock: String): String =
+  /** DuckDB mirror of [[pqAdc]]: the trained PQ chain over `qvBlock`,
+    * ending in the `adc` CTE. */
+  private def pqAdcSql(qvBlock: String): String =
     s"""WITH $normsCte,
        |${pqTrainCtesSql(qvBlock)},
        |adc AS (
        |  SELECT l.q_id, cd.vec_id, CAST(SUM(l.part) AS BIGINT) AS adc_dot
        |  FROM codes$PQ_ROUNDS cd JOIN lut l ON cd.m = l.m AND cd.cid = l.cid
-       |  WHERE cd.vec_id <> l.q_id GROUP BY 1, 2),
+       |  WHERE cd.vec_id <> l.q_id GROUP BY 1, 2)""".stripMargin
+
+  private def pqPipelineSql(qvBlock: String): String =
+    s"""${pqAdcSql(qvBlock)},
        |$pqRerankTailSql""".stripMargin
 
   val knnPqSql: String = pqPipelineSql(qvIdentitySql)
@@ -1619,13 +1577,8 @@ object SimilarityQueries {
   val knnIvfPqSql: String =
     s"""WITH $kmeansCtesSql,
        |${pqTrainCtesSql(qvIdentitySql)},
-       |assign AS (SELECT vec_id, c_id AS bucket FROM aranked3 WHERE crn = 1),
-       |probes AS (SELECT vec_id AS q_id, c_id AS bucket FROM aranked3
-       |  WHERE vec_id < 20 AND crn <= $NPROBE2),
-       |cands AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id
-       |  FROM probes p JOIN assign a ON p.bucket = a.bucket
-       |  WHERE a.vec_id <> p.q_id),
+       |$probeVecsSql,
+       |${candsSql()},
        |adc AS (
        |  SELECT ca.q_id, ca.vec_id, CAST(SUM(l.part) AS BIGINT) AS adc_dot
        |  FROM cands ca
@@ -1659,20 +1612,43 @@ object SimilarityQueries {
       "ivf" -> knnIvf(s, dir), "ivf2" -> knnIvf2(s, dir),
       "ivfpq" -> knnIvfPq(s, dir), "lsh" -> knnLsh(s, dir),
       "pq" -> knnPq(s, dir), "sq8" -> knnSq8(s, dir))
-    val preds = methods.map { case (nm, df) =>
-      df.select(lit(nm).as("method"), $"q_id", $"vec_id")
-    }.reduce(_.unionByName(_))
-    val perMethod = preds
-      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
-      .groupBy($"method")
-      .agg(count(lit(1)).as("n_pred"),
-        sum(coalesce($"hit", lit(0L))).as("hits"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    perMethod.crossJoin(broadcast(nTruth))
-      .select($"method", $"n_pred", $"hits",
-        expr("(1000000 * hits) div n_truth").as("recall_ppm"))
-      .orderBy($"method")
+    predRecall(methods, truth, "method").orderBy($"method")
   }
+
+  /** Recall@5 of labelled prediction sets (q_id, vec_id) against `truth`:
+    * one (`label`, n_pred, hits, recall_ppm) row per entry of `preds`,
+    * recall in integer ppm of |truth|. */
+  private def predRecall(preds: Seq[(String, DataFrame)], truth: DataFrame,
+      label: String): DataFrame = {
+    val perLabel = preds.map { case (nm, df) =>
+      df.select(lit(nm).as(label), col("q_id"), col("vec_id"))
+    }.reduce(_.unionByName(_))
+      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
+      .groupBy(col(label))
+      .agg(count(lit(1)).as("n_pred"),
+        sum(coalesce(col("hit"), lit(0L))).as("hits"))
+    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
+    perLabel.crossJoin(broadcast(nTruth))
+      .select(col(label), col("n_pred"), col("hits"),
+        expr("(1000000 * hits) div n_truth").as("recall_ppm"))
+  }
+
+  /** DuckDB mirror of [[predRecall]]'s counts: the `stats` CTE with one
+    * (`label`, n_pred, hits) row per (name, prediction CTE) of `preds`,
+    * each counted against the `truth` CTE. */
+  private def recallStatsSql(label: String, preds: Seq[(String, String)]): String =
+    "stats AS (\n" + preds.map { case (nm, cte) =>
+      s"SELECT '$nm' AS $label,\n" +
+        s"  (SELECT COUNT(*) FROM $cte) AS n_pred,\n" +
+        s"  (SELECT COUNT(*) FROM $cte p JOIN truth t" +
+        " ON p.q_id = t.q_id AND p.vec_id = t.vec_id) AS hits"
+    }.mkString("\nUNION ALL\n") + ")"
+
+  /** DuckDB mirror of [[predRecall]]'s ratio over [[recallStatsSql]]. */
+  private def recallPpmSql(label: String): String =
+    s"SELECT $label, n_pred, hits,\n" +
+      "  (1000000 * hits) // (SELECT COUNT(*) FROM truth) AS recall_ppm\n" +
+      "FROM stats"
 
   /** Pre-materialize an oracle fragment EMBEDDED inside another oracle's
     * subquery: [[graft.OracleSql.materializeShared]] (the Registry choke
@@ -1705,17 +1681,10 @@ object SimilarityQueries {
     val ctes = ms.map { case (nm, q) =>
       s"p_$nm AS MATERIALIZED (SELECT q_id, vec_id FROM (\n${matSql(q)}\n) t_$nm)"
     }.mkString(",\n")
-    val stats = ms.map { case (nm, _) =>
-      s"SELECT '$nm' AS method,\n" +
-        s"  (SELECT COUNT(*) FROM p_$nm) AS n_pred,\n" +
-        s"  (SELECT COUNT(*) FROM p_$nm p JOIN truth t" +
-        " ON p.q_id = t.q_id AND p.vec_id = t.vec_id) AS hits"
-    }.mkString("\nUNION ALL\n")
     "WITH truth AS MATERIALIZED (SELECT q_id, vec_id FROM (\n" + matSql(knnBruteSql) +
-      "\n) t_truth),\n" + ctes + ",\nstats AS (\n" + stats + ")\n" +
-      "SELECT method, n_pred, hits,\n" +
-      "  (1000000 * hits) // (SELECT COUNT(*) FROM truth) AS recall_ppm\n" +
-      "FROM stats ORDER BY method"
+      "\n) t_truth),\n" + ctes + ",\n" +
+      recallStatsSql("method", ms.map { case (nm, _) => nm -> s"p_$nm" }) + "\n" +
+      recallPpmSql("method") + " ORDER BY method"
   }
 
   // --- X3n: recall after deletion ------------------------------------------
@@ -1775,20 +1744,8 @@ object SimilarityQueries {
       .select($"q_id", $"vec_id",
         cosine(dotQ($"q_emb", $"qe"), $"q_nrm", $"nrm").as("cos_sim")))
 
-    val preds = Seq("ivf_post_delete" -> postDelete,
-      "ivf_retrained" -> retrained).map { case (nm, df) =>
-      df.select(lit(nm).as("method"), $"q_id", $"vec_id")
-    }.reduce(_.unionByName(_))
-    val perMethod = preds
-      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
-      .groupBy($"method")
-      .agg(count(lit(1)).as("n_pred"),
-        sum(coalesce($"hit", lit(0L))).as("hits"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    perMethod.crossJoin(broadcast(nTruth))
-      .select($"method", $"n_pred", $"hits",
-        expr("(1000000 * hits) div n_truth").as("recall_ppm"))
-      .orderBy($"method")
+    predRecall(Seq("ivf_post_delete" -> postDelete,
+      "ivf_retrained" -> retrained), truth, "method").orderBy($"method")
   }
 
   /** DuckDB mirror of [[annDeleteEval]]: [[knnIvfSql]]'s CTE chain twice
@@ -1820,35 +1777,14 @@ object SimilarityQueries {
          |  WHERE crn = 1 $listWhere),
          |probes_$tag AS (SELECT vec_id AS q_id, c_id AS bucket FROM rk_$tag
          |  WHERE vec_id < 20 AND crn <= $NPROBE $listWhere),
-         |cands_$tag AS (
-         |  SELECT DISTINCT p.q_id, a.vec_id
-         |  FROM probes_$tag p JOIN assign_$tag a ON p.bucket = a.bucket
-         |  WHERE a.vec_id <> p.q_id),
-         |scored_$tag AS (
-         |  SELECT ca.q_id, ca.vec_id,
-         |    CAST(${dotSql("q.embedding", "v.embedding")} AS DOUBLE)
-         |      / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-         |  FROM cands_$tag ca
-         |  JOIN embeddings q ON ca.q_id = q.vec_id
-         |  JOIN embeddings v ON ca.vec_id = v.vec_id
-         |  JOIN norms qn ON ca.q_id = qn.vec_id
-         |  JOIN norms vn ON ca.vec_id = vn.vec_id, $idxSql
-         |  GROUP BY ca.q_id, ca.vec_id, qn.nrm, vn.nrm),
+         |${rescoreSql(s"_$tag")},
          |p_$tag AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-         |    FROM scored_$tag) WHERE rnk <= 5)""".stripMargin
+         |  ${top5PairsSql(s"scored_$tag")})""".stripMargin
     val pd = legSql("pd", "", "", "AND vec_id % 7 <> 3")
     val rt = legSql("rt", "WHERE vec_id % 7 <> 3",
       "WHERE v.vec_id % 7 <> 3", "")
-    val stats = Seq("ivf_post_delete" -> "p_pd", "ivf_retrained" -> "p_rt")
-      .map { case (nm, cte) =>
-        s"SELECT '$nm' AS method,\n" +
-          s"  (SELECT COUNT(*) FROM $cte) AS n_pred,\n" +
-          s"  (SELECT COUNT(*) FROM $cte p JOIN truth t" +
-          " ON p.q_id = t.q_id AND p.vec_id = t.vec_id) AS hits"
-      }.mkString("\nUNION ALL\n")
+    val stats = recallStatsSql("method",
+      Seq("ivf_post_delete" -> "p_pd", "ivf_retrained" -> "p_rt"))
     s"""WITH $normsCte,
        |$pd,
        |$rt,
@@ -1858,22 +1794,11 @@ object SimilarityQueries {
        |  FROM embeddings q JOIN embeddings v ON q.vec_id <> v.vec_id, $idxSql
        |  WHERE q.vec_id < 20 AND q.vec_id % 7 <> 3 AND v.vec_id % 7 <> 3
        |  GROUP BY 1, 2),
-       |scored_t AS (
-       |  SELECT q_id, dots_t.vec_id AS vec_id,
-       |    CAST(dot AS DOUBLE) / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-       |  FROM dots_t
-       |  JOIN norms qn ON q_id = qn.vec_id
-       |  JOIN norms vn ON dots_t.vec_id = vn.vec_id),
+       |${dotsScoredSql("scored_t", "dots_t")},
        |truth AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT *, row_number() OVER (
-       |      PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-       |    FROM scored_t) WHERE rnk <= 5),
-       |stats AS (
-       |$stats)
-       |SELECT method, n_pred, hits,
-       |  (1000000 * hits) // (SELECT COUNT(*) FROM truth) AS recall_ppm
-       |FROM stats ORDER BY method""".stripMargin
+       |  ${top5PairsSql("scored_t")}),
+       |$stats
+       |${recallPpmSql("method")} ORDER BY method""".stripMargin
   }
 
   // --- X3j: nprobe recall/cost frontier -----------------------------------
@@ -1914,20 +1839,45 @@ object SimilarityQueries {
       .select($"q_id", $"vec_id", $"probe_rank", $"cos_sim",
         explode(typedLit(Seq(1, 2, 4, 8))).as("nprobe"))
       .filter($"probe_rank" <= $"nprobe")
-    val w = Window.partitionBy($"nprobe", $"q_id")
-      .orderBy($"cos_sim".desc, $"vec_id".asc)
+    levelRecall(byLevel, "nprobe", truth, "nprobe")
+  }
+
+  /** Recall@5 per sweep level: the top-5 of every (`level`, q_id) group
+    * of `byLevel` scored against `truth`, as (`out`, n_pred, hits,
+    * recall_ppm) in `out` order. */
+  private def levelRecall(byLevel: DataFrame, level: String,
+      truth: DataFrame, out: String): DataFrame = {
+    val w = Window.partitionBy(col(level), col("q_id"))
+      .orderBy(col("cos_sim").desc, col("vec_id").asc)
     val top = byLevel.withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= 5)
+      .filter(col("rnk") <= 5)
     val nTruth = truth.agg(count(lit(1)).as("n_truth"))
     top.join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
-      .groupBy($"nprobe")
+      .groupBy(col(level))
       .agg(count(lit(1)).as("n_pred"),
-        sum(coalesce($"hit", lit(0L))).as("hits"))
+        sum(coalesce(col("hit"), lit(0L))).as("hits"))
       .crossJoin(broadcast(nTruth))
-      .select($"nprobe".cast(LongType).as("nprobe"), $"n_pred", $"hits",
+      .select(col(level).cast(LongType).as(out), col("n_pred"), col("hits"),
         expr("(1000000 * hits) div n_truth").as("recall_ppm"))
-      .orderBy($"nprobe")
+      .orderBy(col(out))
   }
+
+  /** DuckDB mirror of [[levelRecall]] over a `topk` CTE of (`level`,
+    * q_id, vec_id), with the brute truth embedded scoped. */
+  private def levelRecallSql(level: String, out: String): String =
+    s"""truth AS (SELECT q_id, vec_id FROM (
+       |${matSql(knnBruteSql)}
+       |) t_truth),
+       |stats AS (
+       |  SELECT p.$level, COUNT(*) AS n_pred,
+       |    CAST(SUM(CASE WHEN t.q_id IS NOT NULL THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS hits
+       |  FROM topk p
+       |  LEFT JOIN truth t ON p.q_id = t.q_id AND p.vec_id = t.vec_id
+       |  GROUP BY 1)
+       |SELECT CAST($level AS BIGINT) AS $out, n_pred, hits,
+       |  (1000000 * hits) // (SELECT COUNT(*) FROM truth) AS recall_ppm
+       |FROM stats ORDER BY $out""".stripMargin
 
   /** DuckDB mirror: the shared unrolled k-means CTEs provide the trained
     * assignment ranking; candidates join through it, score once, and each
@@ -1964,19 +1914,7 @@ object SimilarityQueries {
        |  JOIN (SELECT unnest([1, 2, 4, 8]) AS nprobe) l
        |    ON sc.probe_rank <= l.nprobe),
        |topk AS (SELECT nprobe, q_id, vec_id FROM byl WHERE rnk <= 5),
-       |truth AS (SELECT q_id, vec_id FROM (
-       |${matSql(knnBruteSql)}
-       |) t_truth),
-       |stats AS (
-       |  SELECT p.nprobe, COUNT(*) AS n_pred,
-       |    CAST(SUM(CASE WHEN t.q_id IS NOT NULL THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS hits
-       |  FROM topk p
-       |  LEFT JOIN truth t ON p.q_id = t.q_id AND p.vec_id = t.vec_id
-       |  GROUP BY 1)
-       |SELECT CAST(nprobe AS BIGINT) AS nprobe, n_pred, hits,
-       |  (1000000 * hits) // (SELECT COUNT(*) FROM truth) AS recall_ppm
-       |FROM stats ORDER BY nprobe""".stripMargin
+       |${levelRecallSql("nprobe", "nprobe")}""".stripMargin
 
   // --- X3q: ADC rerank-depth frontier -------------------------------------
 
@@ -1999,10 +1937,7 @@ object SimilarityQueries {
   def annRerankFrontier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = quantized(s, dir)
-    val adc = pqCodesMemo(s, dir)
-      .join(pqLut(e, pqCodebookMemo(s, dir)), Seq("m", "cid"))
-      .where($"vec_id" =!= $"q_id")
-      .groupBy($"q_id", $"vec_id").agg(sum($"part").as("adc_dot"))
+    val adc = pqAdc(pqCodesMemo(s, dir), e, pqCodebookMemo(s, dir))
     val maxDepth = RERANK_DEPTHS.max
     val ranked = adc.join(e.select($"vec_id", $"nrm"), Seq("vec_id"))
       .withColumn("adc_rn", row_number().over(Window.partitionBy($"q_id")
@@ -2019,29 +1954,11 @@ object SimilarityQueries {
       .select($"q_id", $"vec_id", $"adc_rn", $"cos_sim",
         explode(typedLit(RERANK_DEPTHS)).as("depth"))
       .filter($"adc_rn" <= $"depth")
-    val w = Window.partitionBy($"depth", $"q_id")
-      .orderBy($"cos_sim".desc, $"vec_id".asc)
-    val top = byDepth.withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= 5)
-    val truth = bruteTruth(s, dir)
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    top.join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
-      .groupBy($"depth")
-      .agg(count(lit(1)).as("n_pred"),
-        sum(coalesce($"hit", lit(0L))).as("hits"))
-      .crossJoin(broadcast(nTruth))
-      .select($"depth".cast(LongType).as("rerank_depth"), $"n_pred",
-        $"hits", expr("(1000000 * hits) div n_truth").as("recall_ppm"))
-      .orderBy($"rerank_depth")
+    levelRecall(byDepth, "depth", bruteTruth(s, dir), "rerank_depth")
   }
 
   val annRerankFrontierSql: String =
-    s"""WITH $normsCte,
-       |${pqTrainCtesSql(qvIdentitySql)},
-       |adc AS (
-       |  SELECT l.q_id, cd.vec_id, CAST(SUM(l.part) AS BIGINT) AS adc_dot
-       |  FROM codes$PQ_ROUNDS cd JOIN lut l ON cd.m = l.m AND cd.cid = l.cid
-       |  WHERE cd.vec_id <> l.q_id GROUP BY 1, 2),
+    s"""${pqAdcSql(qvIdentitySql)},
        |ranked AS (
        |  SELECT a.q_id, a.vec_id, ROW_NUMBER() OVER (PARTITION BY a.q_id
        |    ORDER BY CAST(a.adc_dot AS DOUBLE) / sqrt(CAST(n.nrm AS DOUBLE))
@@ -2071,19 +1988,7 @@ object SimilarityQueries {
        |  JOIN (SELECT unnest([${RERANK_DEPTHS.mkString(", ")}]) AS depth) d
        |    ON sc.adc_rn <= d.depth),
        |topk AS (SELECT depth, q_id, vec_id FROM byd WHERE rnk <= 5),
-       |truth AS (SELECT q_id, vec_id FROM (
-       |${matSql(knnBruteSql)}
-       |) t_truth),
-       |stats AS (
-       |  SELECT p.depth, COUNT(*) AS n_pred,
-       |    CAST(SUM(CASE WHEN t.q_id IS NOT NULL THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS hits
-       |  FROM topk p
-       |  LEFT JOIN truth t ON p.q_id = t.q_id AND p.vec_id = t.vec_id
-       |  GROUP BY 1)
-       |SELECT CAST(depth AS BIGINT) AS rerank_depth, n_pred, hits,
-       |  (1000000 * hits) // (SELECT COUNT(*) FROM truth) AS recall_ppm
-       |FROM stats ORDER BY rerank_depth""".stripMargin
+       |${levelRecallSql("depth", "rerank_depth")}""".stripMargin
 
   // --- X3k: OPQ permutation-family search for PQ ---------------------------
 
@@ -2196,19 +2101,7 @@ object SimilarityQueries {
       // ranks + re-ranks on the original (see knnPqOn)
       "opq_rotate" -> knnPqOn(rotated, cbRot,
         pqCodesTagMemo(s, dir, "_rot", rotated, cbRot), rerankE = e))
-    val truth = bruteTruth(s, dir)
-    val preds = variants.map { case (nm, df) =>
-      df.select(lit(nm).as("variant"), $"q_id", $"vec_id")
-    }.reduce(_.unionByName(_))
-    val per = preds
-      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
-      .groupBy($"variant")
-      .agg(count(lit(1)).as("n_pred"),
-        sum(coalesce($"hit", lit(0L))).as("hits"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    val scoredV = per.crossJoin(broadcast(nTruth))
-      .select($"variant", $"n_pred", $"hits",
-        expr("(1000000 * hits) div n_truth").as("recall_ppm"))
+    val scoredV = predRecall(variants, bruteTruth(s, dir), "variant")
     val w = Window.orderBy($"recall_ppm".desc,
       ($"variant" === "pq_identity").desc, $"variant".asc)
     scoredV.withColumn("chosen", row_number().over(w) === 1)
@@ -2260,17 +2153,10 @@ object SimilarityQueries {
     val ctes = variants.map { case (nm, qvBlock) =>
       s"p_$nm AS (SELECT q_id, vec_id FROM (\n${pqPipelineSql(qvBlock)}\n) t_$nm)"
     }.mkString(",\n")
-    val stats = variants.map { case (nm, _) =>
-      s"SELECT '$nm' AS variant,\n" +
-        s"  (SELECT COUNT(*) FROM p_$nm) AS n_pred,\n" +
-        s"  (SELECT COUNT(*) FROM p_$nm p JOIN truth t" +
-        " ON p.q_id = t.q_id AND p.vec_id = t.vec_id) AS hits"
-    }.mkString("\nUNION ALL\n")
     "WITH truth AS (SELECT q_id, vec_id FROM (\n" + matSql(knnBruteSql) +
-      "\n) t_truth),\n" + ctes + ",\nstats AS (\n" + stats + "),\n" +
-      "recs AS (SELECT variant, n_pred, hits,\n" +
-      "  (1000000 * hits) // (SELECT COUNT(*) FROM truth) AS recall_ppm\n" +
-      "FROM stats)\n" +
+      "\n) t_truth),\n" + ctes + ",\n" +
+      recallStatsSql("variant", variants.map { case (nm, _) => nm -> s"p_$nm" }) +
+      ",\nrecs AS (" + recallPpmSql("variant") + ")\n" +
       "SELECT variant, n_pred, hits, recall_ppm,\n" +
       "  ROW_NUMBER() OVER (ORDER BY recall_ppm DESC,\n" +
       "    (variant = 'pq_identity') DESC, variant ASC) = 1 AS chosen\n" +
@@ -2347,13 +2233,8 @@ object SimilarityQueries {
        |truth AS (
        |  SELECT q_id, COUNT(*) AS n_true FROM truthv
        |  WHERE cos_sim >= $RANGE_TAU GROUP BY 1),
-       |assign AS (SELECT vec_id, c_id AS bucket FROM aranked3 WHERE crn = 1),
-       |probes AS (SELECT vec_id AS q_id, c_id AS bucket FROM aranked3
-       |  WHERE vec_id < 20 AND crn <= $NPROBE2),
-       |cands AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id
-       |  FROM probes p JOIN assign a ON p.bucket = a.bucket
-       |  WHERE a.vec_id <> p.q_id),
+       |$probeVecsSql,
+       |${candsSql()},
        |found AS (
        |  SELECT t.q_id, COUNT(*) AS n_found
        |  FROM truthv t JOIN cands c ON t.q_id = c.q_id AND t.vec_id = c.vec_id
@@ -2376,8 +2257,7 @@ object SimilarityQueries {
     * for two index versions trained on successive corpus snapshots.
     * Memoized like [[trainedCents]]. */
   private def cohortCents(s: SparkSession, dir: String, par: Int): DataFrame =
-    graft.GraftSession.memo(s, s"ivf_cents_p$par|" +
-        graft.GraftSession.contentKey(dir, Seq("embeddings"))) {
+    graft.GraftSession.memoOn(s, s"ivf_cents_p$par", dir, "embeddings") {
       import s.implicits._
       graft.GraftSession.ckpt(learnedCents(quantizeRaw(
         Tables.embeddings(s, dir).filter($"vec_id" % 2 === par)
@@ -2647,25 +2527,9 @@ object SimilarityQueries {
          |      row_number() OVER (PARTITION BY a.vec_id ORDER BY a.crn ASC) AS srn
          |    FROM aranked3 a JOIN $surv s ON a.c_id = s.c_id
          |    WHERE a.vec_id < 20) WHERE srn <= $NPROBE2),
-         |cands_$sfx AS (
-         |  SELECT DISTINCT p.q_id, a.vec_id
-         |  FROM probes_$sfx p JOIN assign_$sfx a ON p.bucket = a.bucket
-         |  WHERE a.vec_id <> p.q_id),
-         |scored_$sfx AS (
-         |  SELECT ca.q_id, ca.vec_id,
-         |    CAST(${dotSql("q.embedding", "v.embedding")} AS DOUBLE)
-         |      / (sqrt(CAST(qn.nrm AS DOUBLE)) * sqrt(CAST(vn.nrm AS DOUBLE))) AS cos_sim
-         |  FROM cands_$sfx ca
-         |  JOIN embeddings q ON ca.q_id = q.vec_id
-         |  JOIN embeddings v ON ca.vec_id = v.vec_id
-         |  JOIN norms qn ON ca.q_id = qn.vec_id
-         |  JOIN norms vn ON ca.vec_id = vn.vec_id, $idxSql
-         |  GROUP BY ca.q_id, ca.vec_id, qn.nrm, vn.nrm),
+         |${rescoreSql(s"_$sfx")},
          |preds_$sfx AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-         |    FROM scored_$sfx) WHERE rnk <= 5),
+         |  ${top5PairsSql(s"scored_$sfx")}),
          |row_$sfx AS (
          |  SELECT '$sfx' AS variant,
          |    CAST((SELECT COUNT(*) FROM $surv) AS BIGINT) AS n_clusters,

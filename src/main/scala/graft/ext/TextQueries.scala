@@ -779,8 +779,7 @@ object TextQueries {
     * (which applies it), exactly how a real pipeline trains a tokenizer
     * once and tokenizes with it everywhere. */
   private[graft] def bpeMergeTable(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, "bpe_merges|" +
-        graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    graft.GraftSession.memoOn(s, "bpe_merges", dir, "documents") {
       graft.GraftSession.ckpt(bpeTrainLoop(s, dir))
     }
 
@@ -822,8 +821,7 @@ object TextQueries {
     * like [[bpeMergeTable]]. */
   private def cohortMergeTable(s: SparkSession, dir: String,
       par: Int): DataFrame =
-    graft.GraftSession.memo(s, s"bpe_merges_p$par|" +
-        graft.GraftSession.contentKey(dir, Seq("documents"))) {
+    graft.GraftSession.memoOn(s, s"bpe_merges_p$par", dir, "documents") {
       graft.GraftSession.ckpt(bpeTrainLoopDict(bpeDictOf(
         Tables.documents(s, dir).filter(col("doc_id") % 2 === par))))
     }
@@ -1360,18 +1358,13 @@ object TextQueries {
     * constant-size. Per-doc entropy is rounded at 4 and the low-entropy
     * flag tests the ROUNDED value, pinning the cross-engine cut (same
     * discipline as ST4's z flag). */
-  /** Per-doc scorer tables are consumed by their own band/gate query AND
-    * the XP11 ensemble — memoize per (session, documents-content) like
-    * [[DedupQueries.minhashPairs]] so the corpus passes run once per
-    * session, not once per consumer. */
-  private def cacheKey(dir: String, tag: String): String =
-    s"perdoc_$tag|" +
-      graft.GraftSession.contentKey(dir, Seq("documents"))
-
   /** Per-doc rounded Shannon entropy — shared by the X4k gate and the
-    * XP11 ensemble census. */
+    * XP11 ensemble census. Per-doc scorer tables are consumed by their
+    * own band/gate query AND the XP11 ensemble — memoized per (session,
+    * documents-content) like [[DedupQueries.minhashPairs]] so the corpus
+    * passes run once per session, not once per consumer. */
   private[ext] def entropyPerDoc(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, cacheKey(dir, "ent")) {
+    graft.GraftSession.memoOn(s, "perdoc_ent", dir, "documents") {
       graft.GraftSession.ckpt(entropyPerDocPlan(s, dir))
     }
 
@@ -1451,7 +1444,7 @@ object TextQueries {
     * ensemble census. Docs shorter than 2 chars have no bigrams and are
     * absent (callers left-join and default). */
   private[ext] def lmScorePerDoc(s: SparkSession, dir: String): DataFrame =
-    graft.GraftSession.memo(s, cacheKey(dir, "lm")) {
+    graft.GraftSession.memoOn(s, "perdoc_lm", dir, "documents") {
       graft.GraftSession.ckpt(lmScorePerDocPlan(s, dir))
     }
 

@@ -112,8 +112,9 @@ object StreamJobs {
     * drops sf parquet files in). `ts` has shipped as TIMESTAMP(NANOS)
     * (→ read as long, truncate to µs) and as naive timestamp[us]
     * (→ TIMESTAMP_NTZ, cast under the UTC session) across testdata
-    * generations — sniff the batch-read schema once and normalize exactly
-    * like the batch path (Tables.events), so stream==batch pins hold. */
+    * generations — sniff the batch-read schema once and normalize through
+    * the batch path's [[graft.Tables.normalizeTs]], so stream==batch pins
+    * hold. */
   def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -129,14 +130,7 @@ object StreamJobs {
       StructField("value", DoubleType), StructField("props", StringType)))
     val reader = spark.readStream.schema(raw)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val df = reader.parquet(dir)
-    tsType match {
-      case LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => df
-    }
+    graft.Tables.normalizeTs(reader.parquet(dir))
   }
 
   /** T3 — tumbling daily counts with an explicit 1-hour watermark (T5). */

@@ -24,7 +24,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("trained artifacts round-trip the store byte-equal") {
-    val root = Files.createTempDirectory("graft-artifacts").toString
+    val root = TestSpark.tempDir("graft-artifacts").toString
     val cents = SimilarityQueries.trainedCents(spark, sf)
     val cb = SimilarityQueries.pqCodebookMemo(spark, sf)
     val merges = TextQueries.bpeMergeTable(spark, sf)
@@ -37,7 +37,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("save publishes a new version and load resolves the latest") {
-    val root = Files.createTempDirectory("graft-artifacts-v").toString
+    val root = TestSpark.tempDir("graft-artifacts-v").toString
     val v1 = Seq((1L, "a")).toDF("id", "tag")
     val v2 = Seq((1L, "a"), (2L, "b")).toDF("id", "tag")
     assert(ArtifactStore.save(v1, root, "dim") === 1)
@@ -56,7 +56,7 @@ class ArtifactSpec extends AnyFunSuite {
     // the tokenizer deployment story end-to-end: train, SHIP merge table
     // + vocab through the versioned store, and tokenize off the loaded
     // copies — token-id output must be identical to the in-session path
-    val root = Files.createTempDirectory("graft-artifacts-tok").toString
+    val root = TestSpark.tempDir("graft-artifacts-tok").toString
     assert(ArtifactStore.save(
       TextQueries.bpeMergeTable(spark, sf), root, "bpe_merges") === 1)
     assert(ArtifactStore.save(
@@ -69,7 +69,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("retention keeps the newest Retain versions and the pointer always resolves") {
-    val root = Files.createTempDirectory("graft-artifacts-ret").toString
+    val root = TestSpark.tempDir("graft-artifacts-ret").toString
     (1 to 5).foreach { i =>
       assert(ArtifactStore.save(spark.range(i.toLong).toDF("id"), root, "dim") === i)
       // after EVERY publish: pointer resolves and loads the new version whole
@@ -92,7 +92,7 @@ class ArtifactSpec extends AnyFunSuite {
     // the reason refresh goes through foreachBatch: plan re-execution per
     // micro-batch does NOT re-list a path-backed parquet static — rows
     // landing after query start keep joining the ORIGINAL dim snapshot
-    val tmp = Files.createTempDirectory("graft-pin").toString
+    val tmp = TestSpark.tempDir("graft-pin").toString
     val dimDir = s"$tmp/dim"; val feedDir = s"$tmp/feed"
     Seq((1L, "old")).toDF("k", "tag").write.parquet(dimDir)
     Seq((1L, 100L)).toDF("k", "x").coalesce(1).write.mode("append").parquet(feedDir)
@@ -118,7 +118,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("a re-published version is picked up MID-STREAM via foreachBatch reload") {
-    val tmp = Files.createTempDirectory("graft-flip").toString
+    val tmp = TestSpark.tempDir("graft-flip").toString
     val root = s"$tmp/store"; val feedDir = s"$tmp/feed"
     val cents = SimilarityQueries.trainedCents(spark, sf)
     ArtifactStore.save(cents, root, "cents") // v1
@@ -183,7 +183,7 @@ class ArtifactSpec extends AnyFunSuite {
     assert(corpusShuffles(plan).isEmpty,
       s"shuffle exchange on the corpus path:\n$plan")
     // round-trip: loaded artifact == the oracle query, modulo order
-    val root = Files.createTempDirectory("graft-tokids").toString
+    val root = TestSpark.tempDir("graft-tokids").toString
     val v = TextQueries.tokenIdsArtifact(spark, sf, root)
     assert(v === 1)
     val loaded = ArtifactStore.load(spark, root, "token_ids").collect()
@@ -203,7 +203,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("streaming deletes tombstone the code table; compaction equals rebuild on survivors") {
-    val tmp = Files.createTempDirectory("graft-tomb").toString
+    val tmp = TestSpark.tempDir("graft-tomb").toString
     val root = s"$tmp/store"; val delDir = s"$tmp/deletes"
     val ck = s"$tmp/ck"
     // publish the served artifact: the corpus code table (vec_id -> c_id)
@@ -255,7 +255,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("a consumer off the LOADED index equals the in-session assignment") {
-    val root = Files.createTempDirectory("graft-artifacts-c").toString
+    val root = TestSpark.tempDir("graft-artifacts-c").toString
     ArtifactStore.save(SimilarityQueries.trainedCents(spark, sf), root, "ivf_cents")
     // the streaming ingest twin's static side, resolved from the store —
     // the re-trained-index refresh path made cross-session
@@ -274,7 +274,7 @@ class ArtifactSpec extends AnyFunSuite {
     // publish the corpus's banded dHash index, then admit a feed of NEW
     // images (ids 200..229, same generator family so near-dups exist)
     // against the loaded copy — stream == batch == brute formula truth
-    val root = Files.createTempDirectory("graft-artifacts-img").toString
+    val root = TestSpark.tempDir("graft-artifacts-img").toString
     assert(ArtifactStore.save(
       MultimodalQueries.nearDupIndex(spark, sf), root, "image_dhash_index") === 1)
     def payload(id: Long): Array[Byte] = {
@@ -288,7 +288,7 @@ class ArtifactSpec extends AnyFunSuite {
       }
     }
     val newIds = (200L until 230L).toSeq
-    val tmp = Files.createTempDirectory("graft-img-stream").toString
+    val tmp = TestSpark.tempDir("graft-img-stream").toString
     newIds.grouped(15).zipWithIndex.foreach { case (ids, i) =>
       ids.map(id => (id, payload(id))).toDF("doc_id", "payload")
         .coalesce(1).write.mode("append").parquet(tmp)
@@ -339,7 +339,7 @@ class ArtifactSpec extends AnyFunSuite {
 
   test("substring admission off the LOADED index equals batch, with bp anchors") {
     import graft.ext.DedupQueries
-    val root = Files.createTempDirectory("graft-artifacts-substr").toString
+    val root = TestSpark.tempDir("graft-artifacts-substr").toString
     assert(ArtifactStore.save(
       DedupQueries.substringIndex(spark, sf), root, "substr_index") === 1)
     // feed: one verbatim corpus copy (must probe 10000 bp), one mixed doc
@@ -352,7 +352,7 @@ class ArtifactSpec extends AnyFunSuite {
       (9001L, corpus(0)),
       (9002L, corpus(1).substring(0, 80) + " 0123456789012345678901234567890123456789012345"),
       (9003L, "0123456789!@#$%0123456789!@#$%0123456789!@#$%0123456789!@#$%0123456789!@#$%0123456789"))
-    val tmp = Files.createTempDirectory("graft-substr-stream").toString
+    val tmp = TestSpark.tempDir("graft-substr-stream").toString
     feed.grouped(2).foreach { g =>
       g.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(tmp)
     }
@@ -395,10 +395,10 @@ class ArtifactSpec extends AnyFunSuite {
     // the distilled-filter deployment: train on weak labels, SHIP the one
     // weight relation (bias row included), gate the document feed off the
     // loaded copy via per-batch foreachBatch reload
-    val root = Files.createTempDirectory("graft-artifacts-q").toString
+    val root = TestSpark.tempDir("graft-artifacts-q").toString
     val docs = Tables.documents(spark, sf)
     assert(ArtifactStore.save(CurateQueries.nbTrain(docs), root, "quality_nb") === 1)
-    val tmp = Files.createTempDirectory("graft-qdoc-stream").toString
+    val tmp = TestSpark.tempDir("graft-qdoc-stream").toString
     docs.filter($"doc_id" % 2 === 0).coalesce(1).write.mode("append").parquet(tmp)
     docs.filter($"doc_id" % 2 === 1).coalesce(1).write.mode("append").parquet(tmp)
     val out = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long, Long)]()
@@ -431,9 +431,9 @@ class ArtifactSpec extends AnyFunSuite {
     // standing copy and publishes the merge as the next artifact version
     // (O(|delta| + |dict|), never a corpus replay); the frontier derives
     // from the dictionary on read
-    val root = Files.createTempDirectory("graft-artifacts-sky").toString
+    val root = TestSpark.tempDir("graft-artifacts-sky").toString
     val docs = Tables.documents(spark, sf)
-    val tmp = Files.createTempDirectory("graft-sky-stream").toString
+    val tmp = TestSpark.tempDir("graft-sky-stream").toString
     docs.filter($"doc_id" % 2 === 0).coalesce(1).write.mode("append").parquet(tmp)
     docs.filter($"doc_id" % 2 === 1).coalesce(1).write.mode("append").parquet(tmp)
     // seed version: an empty dictionary with the right schema
@@ -473,7 +473,7 @@ class ArtifactSpec extends AnyFunSuite {
       $"lang", $"source", $"n_chars")
     val ids = docs.select($"doc_id").as[Long].collect().sorted
     val cut = ids(ids.length / 2)
-    val tmp = Files.createTempDirectory("graft-gid-stream").toString
+    val tmp = TestSpark.tempDir("graft-gid-stream").toString
     docs.filter($"doc_id" <= cut).coalesce(1).write.mode("append").parquet(tmp)
     Thread.sleep(1100) // distinct mtimes => deterministic file order
     docs.filter($"doc_id" > cut).coalesce(1).write.mode("append").parquet(tmp)

@@ -77,7 +77,7 @@ class CboSpec extends AnyFunSuite {
     assert(p1 === p2) // memoized: same content, same catalog prefix
     // a copied-then-touched dir must fingerprint differently, so a
     // regenerated lake can never serve stale statistics
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stats_").toFile
+    val tmp = TestSpark.tempDir("graft_stats_").toFile
     val srcFile = new java.io.File(sf, "nation.parquet")
     val dst = new java.io.File(tmp, "nation.parquet")
     java.nio.file.Files.copy(srcFile.toPath, dst.toPath)

@@ -243,8 +243,7 @@ class CoreQueriesSpec extends AnyFunSuite {
     // Synthesize an events.parquet where one user holds 100k events spread
     // over alternating in-session/out-of-session gaps, exercising the
     // documented per-key buffer (16 B/event ≈ 1.6 MB for this key).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hotkey_").toFile.getAbsolutePath
+    val dir = TestSpark.tempDir("graft_hotkey_").toFile.getAbsolutePath
     val n = 100000
     spark.range(n.toLong)
       .select(
@@ -1103,8 +1102,7 @@ class CoreQueriesSpec extends AnyFunSuite {
     // advice r19: max(depth) over zero rows is null; the driver read must
     // not NPE — it short-circuits to an empty frame with the real schema
     import graft.analytics.HierarchyQueries
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_empty_orders_").toFile.getAbsolutePath
+    val dir = TestSpark.tempDir("graft_empty_orders_").toFile.getAbsolutePath
     Tables.orders(spark, sf).limit(0).write.mode("overwrite")
       .parquet(s"$dir/orders.parquet")
     val out = HierarchyQueries.hierarchyRollup(spark, dir)

@@ -133,7 +133,7 @@ class ExtSpec extends AnyFunSuite {
     val planted = (0 until 6).map(i => (i * 97L, 3000L + i))
     val rows = (0L until 3000L).map(v => (v, emb(v))) ++
       planted.map { case (src, dup) => (dup, emb(src)) }
-    val dir = java.nio.file.Files.createTempDirectory("semdedup").toString
+    val dir = TestSpark.tempDir("semdedup").toString
     rows.toDF("vec_id", "embedding").repartition(4)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = SimilarityQueries.semanticDedup(spark, dir)

@@ -141,7 +141,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("bounding-box rule derives pushable range predicates from a radius filter") {
     import graft.plans.HaversineBoundingBox
-    val tmp = java.nio.file.Files.createTempDirectory("graft-geo").toString + "/pts"
+    val tmp = TestSpark.tempDir("graft-geo").toString + "/pts"
     spark.range(1000)
       .select(($"id" % 100 * 0.05 + 40.0).as("lat"),
         ($"id" % 97 * 0.06 - 90.0).as("lon"), $"id")
@@ -175,7 +175,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("registerOn installs the bounding-box rule on a session graft did not build") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-geo").toString + "/pts"
+    val tmp = TestSpark.tempDir("graft-geo").toString + "/pts"
     spark.range(1000)
       .select(($"id" % 100 * 0.05 + 40.0).as("lat"),
         ($"id" % 97 * 0.06 - 90.0).as("lon"), $"id")
@@ -192,7 +192,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("a GraftSession.build session pushes the bounding box of a radius filter above a join") {
     import org.apache.spark.sql.SparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-geo").toFile
+    val tmp = TestSpark.tempDir("graft-geo").toFile
     val path = new java.io.File(tmp, "pts").toString
     spark.range(1000)
       .select(($"id" % 100 * 0.05 + 40.0).as("lat"),

@@ -84,7 +84,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("compact dedups at-least-once duplicates and lands hive partitions") {
-    val tmp = Files.createTempDirectory("graft-compact").toString
+    val tmp = TestSpark.tempDir("graft-compact").toString
     val rawDir = s"$tmp/raw"
     val outDir = s"$tmp/processed"
     // land the normalized fixture as NDJSON raw records, duplicated once
@@ -114,7 +114,7 @@ class IngestSpec extends AnyFunSuite {
     // partition has at least ceil(rows/cap) files (maxRecordsPerFile is a
     // per-task cap, so exact count can exceed the ceiling under
     // parallelism; the INVARIANT is the per-file bound)
-    val tmp = Files.createTempDirectory("graft-compact-sized").toString
+    val tmp = TestSpark.tempDir("graft-compact-sized").toString
     val rawDir = s"$tmp/raw"
     val outDir = s"$tmp/processed"
     import spark.implicits._
@@ -163,7 +163,7 @@ class IngestSpec extends AnyFunSuite {
     // same rows survive a write+read cycle through the two other
     // first-class batch formats (csv needs explicit schema + timestamp
     // format; orc is self-describing like parquet)
-    val tmp = Files.createTempDirectory("graft-formats").toString
+    val tmp = TestSpark.tempDir("graft-formats").toString
     val src = Tables.events(spark, TestSpark.sf0001)
       .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id",
         $"event_type", $"value")
@@ -182,7 +182,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("retention delete drops partitions older than the cutoff") {
-    val tmp = Files.createTempDirectory("graft-retention").toString + "/lake"
+    val tmp = TestSpark.tempDir("graft-retention").toString + "/lake"
     Seq(("2025-06-25", 1), ("2025-06-30", 2)).toDF("load_date", "x")
       .write.partitionBy("load_date").parquet(tmp)
     val deleted = CtaIngest.retentionDelete(spark, tmp,

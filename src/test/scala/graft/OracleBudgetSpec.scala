@@ -32,7 +32,7 @@ class OracleBudgetSpec extends AnyFunSuite {
   test("every declared oracle runs inside the DuckDB budget at sf0.001") {
     assume(duckdbAvailable, "python3+duckdb not on this box; driver gate covers it")
     assume(new java.io.File(TestSpark.sf0001).isDirectory)
-    val tmp = java.nio.file.Files.createTempFile("graft-oracles", ".json")
+    val tmp = TestSpark.tempFile("graft-oracles", ".json")
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -81,12 +81,12 @@ class OracleBudgetSpec extends AnyFunSuite {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val sqlTmp = java.nio.file.Files.createTempFile("graft-oracles", ".json")
+    val sqlTmp = TestSpark.tempFile("graft-oracles", ".json")
     java.nio.file.Files.writeString(sqlTmp,
       SparkEntry.oracleSql.map { case (k, v) => s"${q(k)}: ${q(v)}" }
         .mkString("{", ",", "}"))
     val spark = TestSpark.spark
-    val schemaTmp = java.nio.file.Files.createTempFile("graft-schemas", ".json")
+    val schemaTmp = TestSpark.tempFile("graft-schemas", ".json")
     java.nio.file.Files.writeString(schemaTmp,
       SparkEntry.oracleSql.keys.map { name =>
         val fields = SparkEntry.queries(name)(spark, TestSpark.sf0001)

@@ -579,7 +579,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // with 40 fields read for a 1-field projection is the difference
     // between a column chunk and the whole row group)
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nested").toString
+    val tmp = TestSpark.tempDir("graft-nested").toString
     spark.range(100)
       .select(col("id"),
         struct(col("id").as("a"), (col("id") * 2).as("b"),
@@ -700,7 +700,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("pre-sort barrier: the sorted upstream reads its input once") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-presort").toString
+    val dir = TestSpark.tempDir("graft-presort").toString
     val nRows = 2000L
     spark.range(nRows).repartition(2).write.mode("overwrite").parquet(dir)
     assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) === 2)

@@ -693,10 +693,17 @@ class RegistrySpec extends AnyFunSuite {
     // silently exempt from the forcer roster and the window audit. Any
     // `memo(` call in main counts; only the definition line itself
     // (`def memo`) is excluded, so there is no spelling of a call site
-    // that escapes the census.
-    val memoCallRe = """\bmemo\(""".r
+    // that escapes the census. `memoOn` (memo under a table-content
+    // key) call sites count the same; its own delegation to `memo` is
+    // not a family, so its definition is cut before counting.
+    val memoCallRe = """\bmemo(?:On)?\(""".r
+    val memoOnDefRe = """(?s)\bdef\s+memoOn\b.*?\bmemo\(""".r
+    assert(memoCallRe.findAllIn(memoOnDefRe.replaceAllIn(
+        "def memoOn[A](s: S,\n  t: String*)(b: => A): A =\n  memo(s, k)(b)\n" +
+          "memoOn(s, \"f\", dir, \"t\") {\nmemo(s, \"g|\" + k) {", "")).size == 2,
+      "self-check: memoOn sites count, memoOn's own delegation does not")
     val memoSites = mainFiles.map(f =>
-      memoCallRe.findAllIn(codeOf(f).linesIterator
+      memoCallRe.findAllIn(memoOnDefRe.replaceAllIn(codeOf(f), "").linesIterator
         .filterNot(_.matches(""".*\bdef\s+memo\b.*"""))
         .mkString("\n")).size).sum
     // one forcer per memo SOURCE SITE (some queries force several sites)
@@ -812,6 +819,90 @@ class RegistrySpec extends AnyFunSuite {
       .filter { case (p, n) => n > (if (p.endsWith("graft/Tables.scala")) 1 else 0) }
     assert(copies.isEmpty,
       s"whitespace split outside Ops.words: $copies — use Ops.words / Ops.wordCount")
+  }
+
+  /** Code lines of a source, as (line number, trimmed text): blank,
+    * comment, scaladoc, `package` and `import` lines dropped. */
+  private def codeLines(src: String): Seq[(Int, String)] = {
+    var inBlock = false
+    src.linesIterator.zipWithIndex.flatMap { case (l, i) =>
+      val t = l.trim
+      if (inBlock) { inBlock = !t.contains("*/"); None }
+      else if (t.startsWith("/*")) { inBlock = !t.contains("*/"); None }
+      else if (t.isEmpty || t.startsWith("//") || t.startsWith("*") ||
+        t.startsWith("package ") || t.startsWith("import ")) None
+      else Some((i + 1, t))
+    }.toSeq
+  }
+
+  private val DupRun = 5
+  private val DupChars = 150
+
+  /** Every run of [[DupRun]] consecutive code lines of at least
+    * [[DupChars]] characters that occurs more than once across `srcs`
+    * (path -> source), with each place it occurs as (path, first line). */
+  private def copiedRuns(srcs: Seq[(String, String)])
+      : Map[Seq[String], Seq[(String, Int)]] =
+    srcs.flatMap { case (path, src) =>
+      codeLines(src).sliding(DupRun).filter(_.size == DupRun)
+        .map(w => w.map(_._2) -> (path, w.head._1))
+    }.filter(_._1.map(_.length).sum >= DupChars)
+      .groupBy(_._1).map { case (w, locs) => w -> locs.map(_._2) }
+      .filter(_._2.size > 1)
+
+  test("no run of 5 code lines is copied in src/main outside the reviewed list") {
+    // a copied window passes when one of its lines contains a reviewed key
+    val reviewed: Map[String, String] = Map(
+      "override protected def withNewChildrenInternal(" ->
+        ("Catalyst's per-expression copy boilerplate after a codegen body; " +
+          "each expression class must declare its own override"),
+      "/ (sqrt(CAST(vn.nrm AS DOUBLE)) * sqrt(CAST(cn.nrm AS DOUBLE))) AS c_cos" ->
+        ("knnIvfSql's centroid scores vs annDeleteEvalSql's per-leg copy, " +
+          "which adds a WHERE line: one fragment would branch on its caller"),
+      "|| json_extract_string(t, '$$.rn') || '#'" ->
+        ("the ingest oracles' train-id key continues lines with `||`, which " +
+          "a second stripMargin would eat, so it cannot be shared into them"))
+    val line = "x" * 40
+    val block = (1 to 5).map(i => s"val v$i = $line").mkString("\n")
+    val found = copiedRuns(Seq(
+      "a" -> s"package p\nimport q\n$block\n",
+      "b" -> s"object B {\n  // note\n${block.replace("val v3", "\n  val v3")}\n}",
+      "c" -> (1 to 5).map(i => s"val w$i = 1").mkString("\n"),
+      "d" -> (1 to 5).map(i => s"val w$i = 1").mkString("\n"),
+      "e" -> block.split("\n").take(4).mkString("\n")))
+    assert(found.keySet.map(_.head) == Set(s"val v1 = $line") &&
+        found.values.flatten.map(_._1).toSet == Set("a", "b") &&
+        found.values.flatten.toSet == Set(("a", 3), ("b", 3)),
+      s"self-check: a copied 5-line run (comments and blanks skipped) is " +
+        s"found, a short or 4-line one is not: $found")
+    val runs = copiedRuns(sourceFiles("src/main/scala").map(f => f.getPath -> readSrc(f)))
+    val unreviewed = runs.filterNot { case (w, _) =>
+      reviewed.keys.exists(k => w.exists(_.contains(k)))
+    }
+    assert(unreviewed.isEmpty,
+      s"${unreviewed.size} copied runs of $DupRun code lines in src/main: " +
+        unreviewed.map { case (w, locs) =>
+          locs.map { case (p, l) => s"$p:$l" }.mkString(" = ") + s"  ${w.head}"
+        }.toSeq.sorted.mkString("\n  ", "\n  ", "\n") +
+        "give the fragment one definition, or review it in `reviewed` with a reason")
+    val stale = reviewed.keySet.filterNot(k => runs.keys.exists(_.exists(_.contains(k))))
+    assert(stale.isEmpty, s"stale reviewed copies (no copied run contains them): $stale")
+  }
+
+  test("test temp dirs and files are made by TestSpark, which deletes them") {
+    val rawRe = """\bcreateTemp(?:Directory|File)\(""".r
+    assert(Seq("java.nio.file.Files.createTempDirectory(\"x\")",
+        "Files\n  .createTempFile(\"a\", \".json\")").forall(rawRe.findFirstIn(_).nonEmpty) &&
+      rawRe.findFirstIn("TestSpark.tempDir(\"x\")").isEmpty,
+      "self-check: the pattern must catch raw temp dir and file creation")
+    // TestSpark holds the two sanctioned calls; this spec, the self-check
+    val raw = sourceFiles("src/test/scala")
+      .filterNot(f => Set("TestSpark.scala", "RegistrySpec.scala")(f.getName))
+      .filter(f => rawRe.findFirstIn(codeOf(f)).nonEmpty)
+      .map(_.getPath)
+    assert(raw.isEmpty,
+      s"raw createTempDirectory/createTempFile in tests: $raw — use " +
+        "TestSpark.tempDir / tempFile, which delete at JVM exit")
   }
 
   test("container byte readers are declared once, in ByteCodec") {

@@ -85,7 +85,7 @@ class RestFeedHttpSpec extends AnyFunSuite {
       if (n <= 2) (429, "slow down") else (200, fixtureBody(rt))) {
       (base, counts, lastQuery) =>
         val tmp =
-          java.nio.file.Files.createTempDirectory("graft-http-429").toString
+          TestSpark.tempDir("graft-http-429").toString
         val q = graft.streaming.StreamJobs
           .rawFeedStreamRest(spark, options(base))
           .writeStream.format("memory").queryName("rest_http_ingest")
@@ -121,7 +121,7 @@ class RestFeedHttpSpec extends AnyFunSuite {
   test("real socket: persistent 429 exhausts 3 attempts and fails the task") {
     withServer((_, _) => (429, "nope")) { (base, counts, _) =>
       val tmp =
-        java.nio.file.Files.createTempDirectory("graft-http-429f").toString
+        TestSpark.tempDir("graft-http-429f").toString
       val q = spark.readStream.format("graft-rest")
         .options(options(base) + ("lines" -> "Red")).load()
         .writeStream.format("memory").queryName("rest_http_429_fail")
@@ -139,7 +139,7 @@ class RestFeedHttpSpec extends AnyFunSuite {
   test("real socket: non-retryable HTTP 500 raises after exactly one request") {
     withServer((_, _) => (500, "boom")) { (base, counts, _) =>
       val tmp =
-        java.nio.file.Files.createTempDirectory("graft-http-500").toString
+        TestSpark.tempDir("graft-http-500").toString
       val q = spark.readStream.format("graft-rest")
         .options(options(base) + ("lines" -> "Red")).load()
         .writeStream.format("memory").queryName("rest_http_500_fail")
@@ -164,7 +164,7 @@ class RestFeedHttpSpec extends AnyFunSuite {
     withServer((rt, _) => (RestFeedHttpSpec.Truncate, fixtureBody(rt))) {
       (base, counts, _) =>
         val tmp =
-          java.nio.file.Files.createTempDirectory("graft-http-trunc").toString
+          TestSpark.tempDir("graft-http-trunc").toString
         val q = spark.readStream.format("graft-rest")
           .options(options(base) + ("lines" -> "Red")).load()
           .writeStream.format("memory").queryName("rest_http_trunc")

@@ -66,7 +66,7 @@ class RestFeedSourceSpec extends AnyFunSuite {
 
   test("admission control: maxCyclesPerTrigger bounds each micro-batch to one cycle") {
     RestTransports.register("spec-admission", fixtureTransport)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-adm").toString
+    val tmp = TestSpark.tempDir("graft-rest-adm").toString
     val batches = scala.collection.mutable.ArrayBuffer[Long]()
     val q = spark.readStream.format("graft-rest")
       .options(baseOptions("spec-admission") +
@@ -91,7 +91,7 @@ class RestFeedSourceSpec extends AnyFunSuite {
 
   test("connector ingest == batch q_ingest_normalize over the mock fixtures") {
     RestTransports.register("spec-fixture", fixtureTransport)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-src").toString
+    val tmp = TestSpark.tempDir("graft-rest-src").toString
     val q = graft.streaming.StreamJobs
       .rawFeedStreamRest(spark, baseOptions("spec-fixture"))
       .writeStream.format("memory").queryName("rest_ingest")
@@ -116,7 +116,7 @@ class RestFeedSourceSpec extends AnyFunSuite {
     RestTransports.register("spec-counting", { url =>
       calls.incrementAndGet(); fixtureTransport(url)
     })
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-off").toString
+    val tmp = TestSpark.tempDir("graft-rest-off").toString
     val opts = baseOptions("spec-counting") + ("cycles" -> "2")
     // file sink: the one memory can't do — recover from the checkpoint
     def drain(): Unit = {
@@ -210,7 +210,7 @@ class RestFeedSourceSpec extends AnyFunSuite {
     RestTransports.register("spec-resume-counting", { url =>
       calls.incrementAndGet(); fixtureTransport(url)
     })
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-resume").toString
+    val tmp = TestSpark.tempDir("graft-rest-resume").toString
     // the documented scheduled-drain shape: a long interval, unbounded
     // cycles, one AvailableNow drain per process — each drain must fetch
     // its one fresh cycle even though elapsed wall-clock is ~0
@@ -257,7 +257,7 @@ class RestFeedSourceSpec extends AnyFunSuite {
         RestPoller.HttpResponse(429, "slow down")
       else fixtureTransport(url)
     })
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-429").toString
+    val tmp = TestSpark.tempDir("graft-rest-429").toString
     val q = spark.readStream.format("graft-rest")
       .options(baseOptions("spec-flaky") + ("lines" -> "Red")).load()
       .writeStream.format("memory").queryName("rest_retry")
@@ -275,7 +275,7 @@ class RestFeedSourceSpec extends AnyFunSuite {
     RestTransports.register("spec-throttled", { _ =>
       attempts.incrementAndGet(); RestPoller.HttpResponse(429, "nope")
     })
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-429f").toString
+    val tmp = TestSpark.tempDir("graft-rest-429f").toString
     val q = spark.readStream.format("graft-rest")
       .options(baseOptions("spec-throttled") + ("lines" -> "Red")).load()
       .writeStream.format("memory").queryName("rest_retry_fail")
@@ -296,7 +296,7 @@ class RestFeedSourceSpec extends AnyFunSuite {
     RestTransports.register("spec-hard-error", { _ =>
       attempts.incrementAndGet(); RestPoller.HttpResponse(500, "boom")
     })
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-500").toString
+    val tmp = TestSpark.tempDir("graft-rest-500").toString
     val q = spark.readStream.format("graft-rest")
       .options(baseOptions("spec-hard-error") + ("lines" -> "Red")).load()
       .writeStream.format("memory").queryName("rest_hard_fail")

@@ -41,7 +41,7 @@ class RestartPropertySpec extends AnyFunSuite {
     */
   private def moveIn(df: DataFrame, dir: String, name: String,
       mtime: Long): Unit = {
-    val stage = Files.createTempDirectory("graft-restart-stage").toString + "/o"
+    val stage = TestSpark.tempDir("graft-restart-stage").toString + "/o"
     df.coalesce(1).write.parquet(stage)
     val part = new java.io.File(stage).listFiles()
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -92,7 +92,7 @@ class RestartPropertySpec extends AnyFunSuite {
       StructField("st", StringType), StructField("cents", LongType),
       StructField("op", StringType)))
     samples(genCase, 3).zipWithIndex.foreach { case ((rows, nFiles, kill), ci) =>
-      val tmp = Files.createTempDirectory(s"graft-cdc-prop$ci").toString
+      val tmp = TestSpark.tempDir(s"graft-cdc-prop$ci").toString
       val feed = s"$tmp/feed"; val state = s"$tmp/state"; val ckpt = s"$tmp/ckpt"
       new java.io.File(feed).mkdirs()
       val base = System.currentTimeMillis() - 600000
@@ -163,7 +163,7 @@ class RestartPropertySpec extends AnyFunSuite {
       val slices = bounds.sliding(2).map(b => all.slice(b(0), b(1))).toSeq
         .filter(_.nonEmpty)
       val killAt = math.min(kill, slices.size - 1)
-      val tmp = Files.createTempDirectory(s"graft-pack-prop$ci").toString
+      val tmp = TestSpark.tempDir(s"graft-pack-prop$ci").toString
       val feed = s"$tmp/feed"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       new java.io.File(feed).mkdirs()
       val base = System.currentTimeMillis() - 600000
@@ -290,7 +290,7 @@ class RestartPropertySpec extends AnyFunSuite {
           if (b < nBands - 1 && cutTs(b) - ts <= 3300L * 1000000L) b + 1
           else b
         }
-        val tmp = Files.createTempDirectory(s"graft-asof-prop$ci").toString
+        val tmp = TestSpark.tempDir(s"graft-asof-prop$ci").toString
         val dimDir = s"$tmp/dim"; val factDir = s"$tmp/fact"
         val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
         new java.io.File(dimDir).mkdirs(); new java.io.File(factDir).mkdirs()
@@ -391,7 +391,7 @@ class RestartPropertySpec extends AnyFunSuite {
       kill <- Gen.chooseNum(1, 3).map(k => math.min(k, nFiles - 1))
     } yield (nFiles, salt, kill)
     samples(genCase, 2).zipWithIndex.foreach { case ((nFiles, salt, kill), ci) =>
-      val tmp = Files.createTempDirectory(s"graft-utouch-prop$ci").toString
+      val tmp = TestSpark.tempDir(s"graft-utouch-prop$ci").toString
       val drop = s"$tmp/drop"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       new java.io.File(drop).mkdirs()
       val base = System.currentTimeMillis() - 600000

@@ -32,7 +32,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // setting spark.graft.checkpoint.dir opts iterative operators into
     // RELIABLE checkpoints — the cluster-scale mode where executor loss
     // costs one round's files, not the whole iteration.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = TestSpark.tempDir("graft_ckpt").toString
     spark.conf.set("spark.graft.checkpoint.dir", dir)
     try {
       val st = graft.analytics.HierarchyQueries.jumpStatePlan(spark, sf)
@@ -78,7 +78,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
     val q = SparkEntry.queries("q_join_semi")
     val want = q(spark, sf).collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_presort").toString
+    val dir = TestSpark.tempDir("graft_presort").toString
     // an earlier reliable-mode test may have fixed the context's dir
     // elsewhere (SparkContext offers no reset); watch that one too
     val ctxDir = spark.sparkContext.getCheckpointDir

@@ -48,7 +48,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned lake write prunes partitions on read") {
-    val lake = java.nio.file.Files.createTempDirectory("graft-lake").toString + "/events"
+    val lake = TestSpark.tempDir("graft-lake").toString + "/events"
     Tables.events(spark, sf)
       .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
       .write.partitionBy("day").parquet(lake)

@@ -32,7 +32,7 @@ class StateGrowthSpec extends AnyFunSuite {
       .getOrElse(0L)
 
   test("packStream state is stream-count-bounded: rows track (lang,source), never the corpus") {
-    val feedDir = Files.createTempDirectory("graft-packstate").toString
+    val feedDir = TestSpark.tempDir("graft-packstate").toString
     val docs = Tables.documents(spark, sf)
       .select($"lang", $"source", $"doc_id", $"text")
     val total = docs.count()
@@ -74,8 +74,8 @@ class StateGrowthSpec extends AnyFunSuite {
   }
 
   test("asOfEnrichStream state is key-bounded after maturity: carried dim per key, not the feed") {
-    val dimDir = Files.createTempDirectory("graft-asofstate-dim").toString
-    val factDir = Files.createTempDirectory("graft-asofstate-fact").toString
+    val dimDir = TestSpark.tempDir("graft-asofstate-dim").toString
+    val factDir = TestSpark.tempDir("graft-asofstate-fact").toString
     val ev = Tables.events(spark, sf)
       .select($"user_id", $"ts", $"event_id", $"event_type",
         expr("cast(round(value * 100) as bigint)").as("v_cents"))
@@ -129,8 +129,8 @@ class StateGrowthSpec extends AnyFunSuite {
   }
 
   test("orderShipmentJoin state tracks the interval window, not cumulative input") {
-    val ordDir = Files.createTempDirectory("graft-osjstate-ord").toString
-    val liDir = Files.createTempDirectory("graft-osjstate-li").toString
+    val ordDir = TestSpark.tempDir("graft-osjstate-ord").toString
+    val liDir = TestSpark.tempDir("graft-osjstate-li").toString
     val ord = Tables.orders(spark, sf)
       .select($"o_orderkey", $"o_orderdate", $"o_orderpriority")
     val li = Tables.lineitem(spark, sf)

@@ -136,8 +136,7 @@ class StreamingPlanSpec extends AnyFunSuite {
       StreamJobs.skylineFrontier(dictUpdate.localCheckpoint()))
     guardBatch("global_ids_update",
       StreamJobs.globalIdsUpdate(docs.select($"doc_id", $"lang"), 1000L))
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft-cdc-view").toString
+    val stateDir = TestSpark.tempDir("graft-cdc-view").toString
     Seq((1L, 10L, "a", 5L, "I"), (2L, 11L, "b", 6L, "D"))
       .toDF("k", "seq", "st", "cents", "op")
       .write.mode("overwrite").parquet(stateDir)

@@ -19,7 +19,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("X4q streaming tokenizer equals batch q_tokens_per_doc") {
     import graft.ext.TextQueries
-    val tmp = Files.createTempDirectory("graft-doc-stream").toString
+    val tmp = TestSpark.tempDir("graft-doc-stream").toString
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
     docs.filter($"doc_id" % 2 === 0).coalesce(1)
       .write.mode("append").parquet(tmp)
@@ -44,7 +44,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("X4r streaming token-id emission equals batch q_token_ids") {
     import graft.ext.TextQueries
-    val tmp = Files.createTempDirectory("graft-docid-stream").toString
+    val tmp = TestSpark.tempDir("graft-docid-stream").toString
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
     docs.filter($"doc_id" % 2 === 0).coalesce(1)
       .write.mode("append").parquet(tmp)
@@ -72,7 +72,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("XP23 twin: streaming cross-doc audit sums to the batch census") {
     import graft.streaming.StreamJobs
-    val tmp = Files.createTempDirectory("graft-crossdoc-stream").toString
+    val tmp = TestSpark.tempDir("graft-crossdoc-stream").toString
     val docs = Tables.documents(spark, sf)
       .select($"lang", $"source", $"doc_id", $"text")
     val ids = docs.select($"doc_id").as[Long].collect().sorted
@@ -105,7 +105,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("XP17 streaming packer equals a batch first-fit over the whole corpus") {
     import graft.streaming.StreamJobs
-    val tmp = Files.createTempDirectory("graft-pack-stream").toString
+    val tmp = TestSpark.tempDir("graft-pack-stream").toString
     val docs = Tables.documents(spark, sf)
       .select($"lang", $"source", $"doc_id", $"text")
     // append-only split: the second batch's doc_ids are all LARGER —
@@ -155,7 +155,7 @@ class StreamingSpec extends AnyFunSuite {
   test("X3 streaming ANN ingest equals the batch index assignment") {
     import graft.ext.SimilarityQueries
     // two part files in one drop dir → two micro-batches (maxFiles 1)
-    val tmp = Files.createTempDirectory("graft-emb-stream").toString
+    val tmp = TestSpark.tempDir("graft-emb-stream").toString
     val emb = Tables.embeddings(spark, sf)
     emb.filter($"vec_id" % 2 === 0).coalesce(1)
       .write.mode("append").parquet(tmp)
@@ -181,7 +181,7 @@ class StreamingSpec extends AnyFunSuite {
   test("X3m streaming filtered-ANN serve equals the batch filtered query") {
     import graft.ext.SimilarityQueries
     // the query feed: the 20 query vectors arrive in two micro-batches
-    val tmp = Files.createTempDirectory("graft-fserve-stream").toString
+    val tmp = TestSpark.tempDir("graft-fserve-stream").toString
     val qs = Tables.embeddings(spark, sf).filter($"vec_id" < 20)
     qs.filter($"vec_id" % 2 === 0).coalesce(1)
       .write.mode("append").parquet(tmp)
@@ -224,7 +224,7 @@ class StreamingSpec extends AnyFunSuite {
          else StructField("v_cents", LongType)) :: Nil)
     val ts = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
       tsUs / 1000000L, (tsUs % 1000000L) * 1000L))
-    val stage = Files.createTempDirectory(s"graft-asof-$eventId").toString + "/out"
+    val stage = TestSpark.tempDir(s"graft-asof-$eventId").toString + "/out"
     spark.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(
           userId, ts, eventId, if (isDim) state else vCents)),
@@ -252,7 +252,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.ext.DedupQueries
     val docsT = Tables.documents(spark, sf).select($"doc_id", $"lang", $"text")
     // the standing store: every distinct chunk content of the corpus
-    val storeDir = Files.createTempDirectory("graft-chunk-store").toString
+    val storeDir = TestSpark.tempDir("graft-chunk-store").toString
     DedupQueries.cdcChunkRows(docsT).select($"chunk").distinct()
       .write.mode("overwrite").parquet(storeDir)
     // the feed: a verbatim corpus copy, an alien doc, and a mixed doc
@@ -262,7 +262,7 @@ class StreamingSpec extends AnyFunSuite {
       .select($"text").as[String].head()
     val alien = Seq.tabulate(600)(i =>
       ('À' + (i * 7 + i / 13) % 48).toChar).mkString
-    val feedDir = Files.createTempDirectory("graft-cdc-feed").toString
+    val feedDir = TestSpark.tempDir("graft-cdc-feed").toString
     Seq((9001L, "en", corpusDoc), (9002L, "en", corpusDoc + alien),
         (9003L, "en", alien))
       .toDF("doc_id", "lang", "text")
@@ -304,8 +304,8 @@ class StreamingSpec extends AnyFunSuite {
     // event time: browse@10:00 < cart@10:10 < purchase@10:20 — but the
     // cart row ARRIVES a whole micro-batch after the purchase. The fact
     // must stay buffered (watermark) and enrich with 'cart', not 'browse'.
-    val dimDir = Files.createTempDirectory("graft-asof-dim").toString
-    val factDir = Files.createTempDirectory("graft-asof-fact").toString
+    val dimDir = TestSpark.tempDir("graft-asof-dim").toString
+    val factDir = TestSpark.tempDir("graft-asof-fact").toString
     val h10 = 1735725600000000L // 2025-01-01T10:00:00Z in µs
     def m(min: Long) = h10 + min * 60000000L
     dropAsOfRow(dimDir, "a_dim1.parquet", 42L, m(0), 1L, "browse", 0L)
@@ -340,8 +340,8 @@ class StreamingSpec extends AnyFunSuite {
     val ev = Tables.events(spark, sf)
       .select($"user_id", $"ts", $"event_id", $"event_type",
         expr("cast(round(value * 100) as bigint)").as("v_cents"))
-    val dimDir = Files.createTempDirectory("graft-asof-dim2").toString
-    val factDir = Files.createTempDirectory("graft-asof-fact2").toString
+    val dimDir = TestSpark.tempDir("graft-asof-dim2").toString
+    val factDir = TestSpark.tempDir("graft-asof-fact2").toString
     // split ARBITRARILY across two files per side so facts and their
     // governing dim rows land in different micro-batches both ways
     val dimRows = ev.filter($"event_type" =!= "purchase")
@@ -400,8 +400,8 @@ class StreamingSpec extends AnyFunSuite {
     val ev = Tables.events(spark, sf)
       .select($"user_id", $"ts", $"event_id", $"event_type",
         expr("cast(round(value * 100) as bigint)").as("v_cents"))
-    val dimDir = Files.createTempDirectory("graft-asof-dim3").toString
-    val factDir = Files.createTempDirectory("graft-asof-fact3").toString
+    val dimDir = TestSpark.tempDir("graft-asof-dim3").toString
+    val factDir = TestSpark.tempDir("graft-asof-fact3").toString
     val dimRows = ev.filter($"event_type" =!= "purchase")
       .select($"user_id", $"ts", $"event_id", $"event_type".as("state"))
     val factRows = ev.filter($"event_type" === "purchase")
@@ -471,8 +471,8 @@ class StreamingSpec extends AnyFunSuite {
         case Some(p) => spark.conf.set(key, p)
         case None => spark.conf.unset(key)
       }
-      val dimDir = Files.createTempDirectory(s"graft-asof-dim-$name").toString
-      val factDir = Files.createTempDirectory(s"graft-asof-fact-$name").toString
+      val dimDir = TestSpark.tempDir(s"graft-asof-dim-$name").toString
+      val factDir = TestSpark.tempDir(s"graft-asof-fact-$name").toString
       // the late-dim scenario PLUS a multi-key interleave, re-built per
       // provider so checkpoints/state dirs never cross
       dropAsOfRow(dimDir, "a_dim1.parquet", 42L, m(0), 1L, "browse", 0L)
@@ -518,7 +518,7 @@ class StreamingSpec extends AnyFunSuite {
     // by mtime: purchases in batch 2 must credit touches the ListState
     // buffered from batch 1 — the cross-batch carry path, not just an
     // in-batch fold
-    val tmp = Files.createTempDirectory("graft-utouch-stream").toString
+    val tmp = TestSpark.tempDir("graft-utouch-stream").toString
     val ev = Tables.events(spark, sf)
     val mid = ev.agg(expr("cast(avg(unix_micros(ts)) as bigint)"))
       .head.getLong(0)
@@ -582,7 +582,7 @@ class StreamingSpec extends AnyFunSuite {
     // far-future sentinel batches advance the watermark so every
     // purchase's timer fires (wm advances only AFTER a batch — the
     // TimerSessions two-sentinel discipline).
-    val tmp = Files.createTempDirectory("graft-utouch-timers").toString
+    val tmp = TestSpark.tempDir("graft-utouch-timers").toString
     val ev = Tables.events(spark, sf)
     // split the RAW parquet (not the normalized Tables.events view) so
     // the dropped files keep the testdata's own ts encoding — both the
@@ -654,7 +654,7 @@ class StreamingSpec extends AnyFunSuite {
     // half, STOP the query, drop the late half, restart on the same
     // checkpoint — late purchases can only credit early touches if the
     // RocksDB snapshot restored the per-user buffer
-    val tmp = Files.createTempDirectory("graft-utouch-restart").toString
+    val tmp = TestSpark.tempDir("graft-utouch-restart").toString
     val drop = s"$tmp/drop"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val ev = Tables.events(spark, sf)
     val mid = ev.agg(expr("cast(avg(unix_micros(ts)) as bigint)"))
@@ -716,7 +716,7 @@ class StreamingSpec extends AnyFunSuite {
     // key's buffer is GONE while the sentinel user's own fresh touch is
     // still there (negative control: the reader does see phase-2 state).
     import org.apache.spark.sql.types._
-    val tmp = Files.createTempDirectory("graft-utouch-drain").toString
+    val tmp = TestSpark.tempDir("graft-utouch-drain").toString
     val src = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
     new java.io.File(src).mkdirs()
     val W = 7L * 24 * 3600 * 1000000L // = IncrementalQueries.ATTR_WINDOW_US
@@ -737,7 +737,7 @@ class StreamingSpec extends AnyFunSuite {
             ((ts % 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC),
           u, tpe, 0.0, "{}")
       }
-      val stage = Files.createTempDirectory("graft-drain-stage").toString + "/o"
+      val stage = TestSpark.tempDir("graft-drain-stage").toString + "/o"
       spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
         .coalesce(1).write.parquet(stage)
       val part = new java.io.File(stage).listFiles()
@@ -820,7 +820,7 @@ class StreamingSpec extends AnyFunSuite {
     // input rows, so every credit emitted in phase 2 can only come from
     // RESTORED timers firing over RESTORED ListState. Census equality
     // with batch then proves both survived the restart intact.
-    val tmp = Files.createTempDirectory("graft-utouch-timers-restart").toString
+    val tmp = TestSpark.tempDir("graft-utouch-timers-restart").toString
     val drop = s"$tmp/drop"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     new java.io.File(drop).mkdirs()
     val ev = Tables.events(spark, sf)
@@ -898,7 +898,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   private def eventsDir: String = {
-    val tmp = Files.createTempDirectory("graft-events-stream").toString
+    val tmp = TestSpark.tempDir("graft-events-stream").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$tmp/events.parquet"))
@@ -927,7 +927,7 @@ class StreamingSpec extends AnyFunSuite {
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
-    val stage = Files.createTempDirectory(s"graft-sentinel-$eventId")
+    val stage = TestSpark.tempDir(s"graft-sentinel-$eventId")
       .toString + "/out"
     spark.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(
@@ -1043,7 +1043,7 @@ class StreamingSpec extends AnyFunSuite {
   test("XP7 twin: streaming A-Res reservoir equals the batch weighted sample exactly") {
     // split documents across 4 files / 4 micro-batches: the reservoir must
     // be batch-split-independent (A-Res keys are pure row functions)
-    val tmp = Files.createTempDirectory("graft-docs-stream").toString
+    val tmp = TestSpark.tempDir("graft-docs-stream").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .repartition(4).write.parquet(s"$tmp/docs")
     val q = StreamJobs.weightedSampleStream(
@@ -1073,7 +1073,7 @@ class StreamingSpec extends AnyFunSuite {
     // the admission rule is a pure per-row fold through the broadcast
     // weight map, so arbitrary micro-batch splits must reproduce the
     // batch verdicts row-for-row
-    val tmp = Files.createTempDirectory("graft-dsir-stream").toString
+    val tmp = TestSpark.tempDir("graft-dsir-stream").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .repartition(3).write.parquet(s"$tmp/docs")
     val scores = graft.ext.CurateQueries
@@ -1100,7 +1100,7 @@ class StreamingSpec extends AnyFunSuite {
   test("L3 twin: streaming shard router equals the batch assignment") {
     // the router is a pure per-row function, so arbitrary micro-batch
     // splits must produce exactly the batch audit's assignment
-    val tmp = Files.createTempDirectory("graft-shard-stream").toString
+    val tmp = TestSpark.tempDir("graft-shard-stream").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .repartition(3).write.parquet(s"$tmp/docs")
     val q = StreamJobs.shardRouteStream(
@@ -1124,7 +1124,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("observe() telemetry: per-batch metrics reconcile with the landed parquet") {
-    val tmp = Files.createTempDirectory("graft-stream-observe").toString
+    val tmp = TestSpark.tempDir("graft-stream-observe").toString
     val drop = s"$tmp/drop"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     graft.ingest.CtaFixtures.feedDf(spark).write.json(drop)
     val q = StreamJobs.landObservationsObserved(
@@ -1148,7 +1148,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T1/T7 NDJSON drop-dir stream lands partitioned parquet exactly once") {
-    val tmp = Files.createTempDirectory("graft-stream-ingest").toString
+    val tmp = TestSpark.tempDir("graft-stream-ingest").toString
     val drop = s"$tmp/drop"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     // write the fixture feeds as one NDJSON drop file
     graft.ingest.CtaFixtures.feedDf(spark).write.json(drop)
@@ -1167,7 +1167,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T1/T7 AvailableNow drains, self-stops, and resumes from checkpoint") {
-    val tmp = Files.createTempDirectory("graft-availnow").toString
+    val tmp = TestSpark.tempDir("graft-availnow").toString
     val drop = s"$tmp/drop"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     graft.ingest.CtaFixtures.feedDf(spark).write.json(drop)
     val q = StreamJobs.landObservationsAvailableNow(
@@ -1186,7 +1186,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T2/T7 foreachBatch idempotent sink: re-run overwrites, never duplicates") {
     import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("graft-febatch").toString
+    val tmp = TestSpark.tempDir("graft-febatch").toString
     val drop = s"$tmp/drop"; val out = s"$tmp/out"
     graft.ingest.CtaFixtures.feedDf(spark).write.json(drop)
     def runOnce(ckpt: String): Unit = {
@@ -1350,7 +1350,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("M7-as-stream: CDC upsert with tombstones converges to latest-op-wins") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-cdc-stream").toString
+    val tmp = TestSpark.tempDir("graft-cdc-stream").toString
     val feed = s"$tmp/feed"; val state = s"$tmp/state"; val ckpt = s"$tmp/ckpt"
     // batch 1: inserts, an update, a delete; batch 2: resurrect-after-
     // delete (k=3), a delete of a live key (k=4), a late update (k=1)
@@ -1612,7 +1612,7 @@ class StreamingSpec extends AnyFunSuite {
     // the streaming answer to the reference's at-least-once re-drive: the
     // same event delivered twice within the watermark horizon must land
     // once. Two identical parquet drops simulate a redelivery.
-    val tmp = Files.createTempDirectory("graft-dedup-stream").toString
+    val tmp = TestSpark.tempDir("graft-dedup-stream").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$tmp/events_a.parquet"))
@@ -1679,8 +1679,8 @@ class StreamingSpec extends AnyFunSuite {
     * return (ordersDir, lineitemDir, ordersStream, lineitemStream). */
   private def twoStreamDirs(): (String, String,
       org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val oDir = Files.createTempDirectory("graft-ss-orders").toString
-    val lDir = Files.createTempDirectory("graft-ss-lineitem").toString
+    val oDir = TestSpark.tempDir("graft-ss-orders").toString
+    val lDir = TestSpark.tempDir("graft-ss-lineitem").toString
     Tables.load(spark, sf, "orders")
       .select($"o_orderkey", $"o_orderdate", $"o_orderpriority")
       .coalesce(1).write.mode("append").parquet(oDir)
@@ -1706,7 +1706,7 @@ class StreamingSpec extends AnyFunSuite {
             java.time.ZoneOffset.UTC)
         case _ => ts0
       }
-    val stage1 = Files.createTempDirectory("graft-ss-sent-o").toString + "/o"
+    val stage1 = TestSpark.tempDir("graft-ss-sent-o").toString + "/o"
     spark.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(
           Long.box(999999901L),
@@ -1717,7 +1717,7 @@ class StreamingSpec extends AnyFunSuite {
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(p1.toPath,
       java.nio.file.Paths.get(s"$oDir/zz_sentinel$suffix.parquet"))
-    val stage2 = Files.createTempDirectory("graft-ss-sent-l").toString + "/l"
+    val stage2 = TestSpark.tempDir("graft-ss-sent-l").toString + "/l"
     spark.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(
           Long.box(999999902L), Int.box(1),

@@ -17,7 +17,7 @@ class TablesSpec extends AnyFunSuite {
   import TestSpark.jobsOf
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-tables-spec").toFile.getAbsolutePath
+    TestSpark.tempDir("graft-tables-spec").toFile.getAbsolutePath
 
   private def writeT(dir: String, sql: String, table: String = "t"): Unit =
     spark.sql(sql).write.mode("overwrite").parquet(s"$dir/$table.parquet")

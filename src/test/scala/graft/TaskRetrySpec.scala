@@ -29,7 +29,7 @@ class TaskRetrySpec extends AnyFunSuite {
   import spark.implicits._
 
   test("first-attempt task failures re-drive; the checkpointed sink stays exactly-once") {
-    val tmp = Files.createTempDirectory("graft-task-retry").toString
+    val tmp = TestSpark.tempDir("graft-task-retry").toString
     val drop = s"$tmp/drop"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     graft.ingest.CtaFixtures.feedDf(spark).write.json(drop)
     RetryProbe.fired.set(0)

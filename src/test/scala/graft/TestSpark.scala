@@ -24,6 +24,23 @@ object TestSpark {
   }
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** A fresh temp dir named `prefix…`, deleted with its contents when the
+    * test JVM exits. Every test temp dir and file comes from here or
+    * [[tempFile]] (RegistrySpec bans the raw calls elsewhere), so a suite
+    * run leaves nothing behind in the temp root. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    deleteAtExit(java.nio.file.Files.createTempDirectory(prefix))
+
+  /** A fresh temp file `prefix…suffix`, deleted when the test JVM exits. */
+  def tempFile(prefix: String, suffix: String): java.nio.file.Path =
+    deleteAtExit(java.nio.file.Files.createTempFile(prefix, suffix))
+
+  private def deleteAtExit(p: java.nio.file.Path): java.nio.file.Path = {
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => GraftSession.deleteRecursively(p.toFile)))
+    p
+  }
+
   /** The value of `body` and the number of Spark jobs it launched on this
     * thread: `body` runs under a fresh job group, and the listener bus is
     * drained before the group's jobs are counted. */
