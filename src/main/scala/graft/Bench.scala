@@ -1,5 +1,30 @@
 package graft
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Cumulative task metrics of a session, whose between-queries deltas
+  * localize a regression to the operator class (compute vs shuffle vs
+  * spill vs GC) without re-measuring end to end. Counters are monotonic
+  * totals. Listener delivery is async, so a tail of task-end events can
+  * land after a snapshot: per-query attribution is diagnostic (±a few
+  * tasks), never part of the timing. Bench and `graft.tools.Scratch`
+  * read it. */
+private[graft] class TaskTotals extends SparkListener {
+  val runMs, gcMs, shufReadB, shufWriteB, spillB, fetchWaitMs, nTasks = new AtomicLong
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+    runMs.addAndGet(m.executorRunTime)
+    gcMs.addAndGet(m.jvmGCTime)
+    shufReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+    shufWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+    spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+    fetchWaitMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
+    nTasks.incrementAndGet()
+  }
+  def snap: Seq[Long] = Seq(runMs.get, gcMs.get, shufReadB.get,
+    shufWriteB.get, spillB.get, fetchWaitMs.get, nTasks.get)
+}
+
 object Bench {
   /** One timed run of a query: elapsed seconds, and whether it completed. */
   private[graft] final case class Run(sec: Double, ok: Boolean)
@@ -125,36 +150,8 @@ object Bench {
     // (OPTIMIZATION_r21.md §5)
     val spark = GraftSession.buildLocal("graft-bench")
     // Per-query task-metrics attribution (r21, verdict r20 item 8):
-    // a cumulative SparkListener whose between-queries deltas localize a
-    // regression to the operator class (compute vs shuffle vs spill vs
-    // GC) without re-measuring end to end. Counters are monotonic totals;
-    // timed() snapshots around each run. Listener delivery is async, so a
-    // tail of task-end events can land after the snapshot — per-query
-    // attribution is diagnostic (±a few tasks), never part of the timing.
-    val tm = new org.apache.spark.scheduler.SparkListener {
-      val runMs = new java.util.concurrent.atomic.AtomicLong
-      val gcMs = new java.util.concurrent.atomic.AtomicLong
-      val shufReadB = new java.util.concurrent.atomic.AtomicLong
-      val shufWriteB = new java.util.concurrent.atomic.AtomicLong
-      val spillB = new java.util.concurrent.atomic.AtomicLong
-      val fetchWaitMs = new java.util.concurrent.atomic.AtomicLong
-      val nTasks = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          runMs.addAndGet(m.executorRunTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          shufReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          fetchWaitMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
-          nTasks.incrementAndGet()
-        }
-      }
-      def snap: Seq[Long] = Seq(runMs.get, gcMs.get, shufReadB.get,
-        shufWriteB.get, spillB.get, fetchWaitMs.get, nTasks.get)
-    }
+    // timed() snapshots the cumulative counters around each run.
+    val tm = new TaskTotals
     spark.sparkContext.addSparkListener(tm)
     // JVM/codegen/file-listing warmup so the first timed query doesn't
     // absorb session startup; runs one representative query untimed.

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types._
   * What is not: the DataFrame. Each call still builds a fresh relation —
   * fresh attribute ids and a fresh file listing — so self-joins of one
   * table, filter pushdown and physical plans are exactly those of a plain
-  * `spark.read.parquet`.
+  * `spark.read.parquet`. A scan with fewer splits than the session has
+  * cores under costly per-row work is spread by the optimizer rule
+  * [[graft.plans.PresortBarrier]], not here.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -76,29 +78,6 @@ object Tables {
     }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Round-robin-spread a BATCH relation whose planned scan parallelism
-    * sits below the session's core count (r21, guide §2.5 "input skew …
-    * repartition immediately after the read"). Parquet splits only at
-    * row-group boundaries, so a single-row-group file is ONE scan task no
-    * matter how many cores the session has — the bench's task-metrics
-    * attribution measured the whole marked-fold family running at
-    * parallelism ≈ 1.0 on 32 cores (q_tokens_per_doc 5.8 s wall ≈ 5.6 s
-    * single-task run time at sf1). The spread is conditional and
-    * therefore scale-adaptive: at real scale a corpus scan has thousands
-    * of row groups and this is a no-op; it fires exactly when the scan
-    * under-parallelizes. `repartition(n)` is a user-specified partition
-    * count (AQE will not coalesce it away) and round-robin sorts before
-    * exchanging (SPARK-23207), so retried tasks reproduce the same
-    * row-to-partition assignment. Never applied to streaming relations
-    * (micro-batch parallelism is the source's contract). */
-  def spread(df: DataFrame): DataFrame = {
-    if (df.isStreaming) df
-    else {
-      val want = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < want) df.repartition(want) else df
-    }
-  }
 }
 
 /** Cross-engine determinism helpers.

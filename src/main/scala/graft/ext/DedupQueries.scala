@@ -744,10 +744,8 @@ object DedupQueries {
 
   /** [[dedupNgramJaccard]] over an arbitrary (doc_id, lang, text) relation
     * — factored for the ContractAndPropertySpec reference pin. */
-  private[graft] def ngramJaccardOf(docs0: DataFrame): DataFrame = {
-    import docs0.sparkSession.implicits._
-    // r21: shingling is narrow over the raw scan — spread (§2.5)
-    val docs = Tables.spread(docs0)
+  private[graft] def ngramJaccardOf(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     val sh = docs
       .transform(withToks)
       .select($"doc_id", $"lang", explode(array_distinct(shingleArr)).as("sh"))
@@ -1292,12 +1290,8 @@ object DedupQueries {
     * this replaced did O(n·W) byte work and a 40-char allocation per
     * window). Shared by the published index and the admission probe so
     * both sides hash identically. */
-  private[graft] def windowFingerprints(docs0: DataFrame): DataFrame = {
-    import docs0.sparkSession.implicits._
-    // r21: the rolling-hash pass is narrow over the raw scan — spread a
-    // single-row-group input so it runs on every core (§2.5; no-op at
-    // real scale and on streaming inputs)
-    val docs = Tables.spread(docs0)
+  private[graft] def windowFingerprints(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     docs.filter(length($"text") >= SUBSTR_W)
       .select($"doc_id",
         posexplode(graft.functions.RollingHash64.rollingHash64(
@@ -1516,8 +1510,7 @@ object DedupQueries {
     * content (≈ chars/64 rows), two-phase aggregates above it. */
   def cdcChunks(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables.spread(
-      Tables.documents(s, dir).select($"doc_id", $"lang", $"text"))
+    val docs = Tables.documents(s, dir).select($"doc_id", $"lang", $"text")
     // Single chunker pass: the naive chunks⋈(chunks groupBy chunk)
     // self-join planned the (dominant-cost) chunking lambda TWICE — the
     // two exchange subtrees differ, so ReuseExchange cannot dedup them.
@@ -1613,8 +1606,8 @@ object DedupQueries {
     * classification is a per-group comparison, no joins at all. */
   def cdcChunkGc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val chunks = cdcChunkRows(Tables.spread(
-      Tables.documents(s, dir).select($"doc_id", $"lang", $"text")))
+    val chunks = cdcChunkRows(
+      Tables.documents(s, dir).select($"doc_id", $"lang", $"text"))
     chunks
       .groupBy($"chunk")
       .agg(count(lit(1)).as("refs"),

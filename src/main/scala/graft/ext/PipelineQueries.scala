@@ -86,7 +86,7 @@ object PipelineQueries {
     * table as one fused per-row fold, (lang, source) carried through):
     * (lang, source, doc_id, n_tok). */
   private def exactToks(s: SparkSession, dir: String, docs: DataFrame): DataFrame =
-    TextQueries.tokensPerDocOf(Tables.spread(docs), TextQueries.bpeMergeTable(s, dir),
+    TextQueries.tokensPerDocOf(docs, TextQueries.bpeMergeTable(s, dir),
         carry = Seq("lang", "source"))
       .select(col("lang"), col("source"), col("doc_id"), col("n_tokens").as("n_tok"))
 
@@ -1205,7 +1205,7 @@ object PipelineQueries {
     * scale anti-pattern even when the join itself is "broadcast". */
   def spanScrub(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val spans = Tables.spread(Tables.documents(s, dir))
+    val spans = Tables.documents(s, dir)
       .select($"doc_id", $"source", Ops.words($"text").as("w"))
       .withColumn("n_spans", expr(s"size(w) div $SCRUB_W"))
       // sequence(0, n_spans) is never empty (n_spans >= 0), so no

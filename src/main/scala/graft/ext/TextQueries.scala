@@ -961,7 +961,7 @@ object TextQueries {
     * unbounded feed with zero keyed state. */
   def tokensPerDoc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    tokensPerDocOf(Tables.spread(Tables.documents(s, dir)), bpeMergeTable(s, dir))
+    tokensPerDocOf(Tables.documents(s, dir), bpeMergeTable(s, dir))
       .orderBy($"doc_id")
   }
 
@@ -1083,7 +1083,7 @@ object TextQueries {
     * one hash aggregate. */
   def bpeFertility(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val t = tokensPerDocOf(Tables.spread(Tables.documents(s, dir)),
+    val t = tokensPerDocOf(Tables.documents(s, dir),
       bpeMergeTable(s, dir), carry = Seq("lang", "n_chars"))
     t.groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
@@ -1175,7 +1175,7 @@ object TextQueries {
     * before the presentation sort. */
   def tokenIds(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    tokenIdsOf(Tables.spread(Tables.documents(s, dir)),
+    tokenIdsOf(Tables.documents(s, dir),
       bpeMergeTable(s, dir), bpeVocab(s, dir))
       .orderBy($"doc_id", $"pos")
   }

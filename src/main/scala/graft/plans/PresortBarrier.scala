@@ -1,39 +1,72 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, HigherOrderFunction, ScalaUDF}
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, BuildSide, JoinSelectionHelper}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, PartitionedFileUtil}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
-/** Optimizer rule: `Sort(global, child)` → `Sort(global,
-  * RepartitionByExpression(Nil, child))` when the range sampler would
-  * otherwise run costly work in `child` a second time.
+/** Optimizer rule placing the two round-robin exchanges at the ends of a
+  * costly narrow stage: a pre-sort barrier on top, a scan spread at the
+  * bottom. Never on a streaming plan.
   *
-  * A global sort's `RangePartitioner` samples its child to pick bounds, so
-  * with no exchange between the sort and the scans the upstream runs once
-  * for the sampler and once for the shuffle (`q_tokens_per_doc`'s fold ran
-  * exactly twice, OPTIMIZATION_r21.md §1). The round-robin shuffle gives
-  * AQE a stage that materializes the child once; the sampler and the sort
-  * both read it. Shuffle files keep their lineage, and the ContextCleaner
-  * removes them with the plan. No partition count is given, so AQE
-  * coalesces a small output.
-  *
-  * Fires when the child, down to the leaves or the first operator that
-  * plans its own exchange, holds a `Generate`, a broadcast or nested-loop
-  * join, a `ScalaUDF`, a higher-order function, a `graft.functions`
-  * expression, or object (de)serialization. Never on a streaming plan, a
+  * '''Barrier.''' `Sort(global, child)` → `Sort(global,
+  * RepartitionByExpression(Nil, child, None))` when the range sampler would
+  * otherwise run costly work in `child` a second time. A global sort's
+  * `RangePartitioner` samples its child to pick bounds, so with no exchange
+  * between the sort and the scans the upstream runs once for the sampler
+  * and once for the shuffle (`q_tokens_per_doc`'s fold ran exactly twice,
+  * OPTIMIZATION_r21.md §1). The round-robin shuffle gives AQE a stage that
+  * materializes the child once; the sampler and the sort both read it.
+  * Shuffle files keep their lineage, and the ContextCleaner removes them
+  * with the plan. No partition count is given, so AQE coalesces a small
+  * output. Fires when the child, down to the leaves or the first operator
+  * that plans its own exchange, holds a `Generate`, a broadcast or
+  * nested-loop join, a `ScalaUDF`, a higher-order function, a
+  * `graft.functions` expression, or object (de)serialization. Never on a
   * sort under a limit (TakeOrderedAndProject has no sampler), a child that
   * is a materialized leaf under projections and filters, a child that is
-  * one partition (no range exchange is planned), or a child that is
-  * itself an exchange — which keeps the rule idempotent.
+  * one partition (no range exchange is planned), or a child that is itself
+  * an exchange.
+  *
+  * '''Spread.''' A batch file scan planned as fewer splits than the session
+  * has cores → `RepartitionByExpression(Nil, scan, Some(cores))`. Parquet
+  * splits only at row-group boundaries, so a single-row-group file is one
+  * scan task however many cores there are, and the narrow stage above it
+  * runs serially (q_tokens_per_doc 5.8 s wall ≈ its single-task time at
+  * sf1 on 32 cores, OPTIMIZATION_r21.md §1b). Fires when the narrow chain
+  * from the scan up to its stage's end holds per-row work in its
+  * expressions (`ScalaUDF`, higher-order function, `graft.functions`
+  * expression — a `Generate` counts by what computes its input, so an
+  * explode of a split or a two-element array does not) and that end is
+  * an operator that plans a shuffle: a chain that runs to the
+  * plan's root (a `sortWithinPartitions` write path), under a limit or into
+  * a broadcast build side keeps its scan as is. "The scan" is the relation
+  * with the attribute projections and deterministic filters directly above
+  * it, so pruning and pushed filters stay below the exchange, as Spark
+  * would push them below a hand-written repartition. The split count is
+  * Spark's own sizing (`FilePartition.maxSplitBytes`/`getFilePartitions`)
+  * over the relation's listed files — no Spark job. A user partition count
+  * keeps AQE from coalescing the spread away; at real scale a corpus scan
+  * has many splits and the spread never fires.
+  *
+  * Both exchanges end a stage, so a second pass finds nothing to add: the
+  * rule is idempotent.
   */
 object PresortBarrier extends Rule[LogicalPlan] with JoinSelectionHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (plan.isStreaming) plan else rewrite(plan, underLimit = false)
+  override def apply(plan: LogicalPlan): LogicalPlan = if (plan.isStreaming) plan else {
+    val barriered = rewrite(plan, underLimit = false)
+    spread(barriered, None, refsAbove(barriered) ++ plan.outputSet)
+  }
+
+  /** What the plan references outside its scans: a spread's columns. */
+  private def refsAbove(p: LogicalPlan): AttributeSet =
+    if (scanOf(p).isDefined) AttributeSet.empty
+    else p.children.foldLeft(p.references)(_ ++ refsAbove(_))
 
   private def rewrite(p: LogicalPlan, underLimit: Boolean): LogicalPlan = {
     val limits = p match {
@@ -47,6 +80,51 @@ object PresortBarrier extends Rule[LogicalPlan] with JoinSelectionHelper {
         s.copy(child = RepartitionByExpression(Nil, child, None))
       case other => other
     }
+  }
+
+  /** `heavy`: `Some(w)` when a shuffle ends `p`'s stage, `w` telling whether
+    * the operators between that shuffle and `p` do per-row work; `None`
+    * when the stage ends at the root, a limit or a broadcast. `used`: the
+    * attributes a spread must carry. */
+  private def spread(p: LogicalPlan, heavy: Option[Boolean], used: AttributeSet): LogicalPlan =
+    scanOf(p) match {
+      case Some(r) if heavy.contains(true) && splits(r) < r.sparkSession.sparkContext.defaultParallelism =>
+        val keep = p.output.filter(used.contains)
+        RepartitionByExpression(Nil, if (keep.size == p.output.size) p else Project(keep, p),
+          Some(r.sparkSession.sparkContext.defaultParallelism))
+      case Some(_) => p
+      case None =>
+        val below = p match {
+          case _: GlobalLimit | _: LocalLimit | _: Tail | _: Offset => None
+          case _ if exchange(p) => Some(false)
+          case _ => heavy.map(_ || perRow(p))
+        }
+        p match {
+          case j: Join if !exchange(j) => // a broadcast build side ends in no shuffle
+            val b = broadcastSide(j)
+            j.copy(left = spread(j.left, below.filter(_ => b.contains(BuildRight)), used),
+              right = spread(j.right, below.filter(_ => b.contains(BuildLeft)), used))
+          case _ => p.mapChildren(spread(_, below, used))
+        }
+    }
+
+  /** The file relation under attribute projections and deterministic
+    * filters — what Spark would push below a repartition written over it. */
+  private def scanOf(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+    case Project(list, c) if list.forall(_.isInstanceOf[Attribute]) => scanOf(c)
+    case Filter(cond, c) if cond.deterministic => scanOf(c)
+    case LogicalRelation(r: HadoopFsRelation, _, _, false, _) if r.bucketSpec.isEmpty => Some(r)
+    case _ => None
+  }
+
+  /** The scan's planned partition count, sized as `FileSourceScanExec` does. */
+  private def splits(r: HadoopFsRelation): Int = {
+    val (s, dirs) = (r.sparkSession, r.location.listFiles(Nil, Nil))
+    val max = FilePartition.maxSplitBytes(s,
+      dirs.flatMap(_.files).map(_.getLen + conf.filesOpenCostInBytes).sum)
+    FilePartition.getFilePartitions(s, dirs.flatMap(d => d.files.flatMap(f =>
+      PartitionedFileUtil.splitFiles(f, f.getPath, r.fileFormat.isSplitable(s, r.options, f.getPath),
+        max, d.values))).sortBy(-_.length), max).size
   }
 
   /** One partition: a barrier would add two exchanges where none is. */
@@ -89,16 +167,23 @@ object PresortBarrier extends Rule[LogicalPlan] with JoinSelectionHelper {
     case _ => false
   }
 
+  // a shuffle strategy hint outranks the size test, as in JoinSelection
   private def broadcastSide(j: Join): Option[BuildSide] =
-    getBroadcastBuildSide(j, hintOnly = true, conf)
-      .orElse(getBroadcastBuildSide(j, hintOnly = false, conf))
+    getBroadcastBuildSide(j, hintOnly = true, conf).orElse(
+      if (Seq(j.hint.leftHint, j.hint.rightHint).flatten
+          .exists(_.strategy.exists(_ != BROADCAST))) None
+      else getBroadcastBuildSide(j, hintOnly = false, conf))
 
   private def work(p: LogicalPlan): Boolean = p match {
     case _: Generate | _: Join | _: ObjectProducer | _: ObjectConsumer => true
     case r: LogicalRDD => !persisted(r)
-    case _ => p.expressions.exists(_.exists {
-      case _: ScalaUDF | _: HigherOrderFunction => true
-      case e => e.getClass.getName.startsWith("graft.functions.")
-    })
+    case _ => perRow(p)
   }
+
+  /** Per-row work in an operator's expressions — a generator counts by
+    * what computes its input, not by the fan-out itself. */
+  private def perRow(p: LogicalPlan): Boolean = p.expressions.exists(_.exists {
+    case _: ScalaUDF | _: HigherOrderFunction => true
+    case e => e.getClass.getName.startsWith("graft.functions.")
+  })
 }

@@ -5,13 +5,14 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import graft.model.CtaSchemas
+import graft.streaming.StreamJobs
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -69,18 +70,10 @@ import org.apache.spark.unsafe.types.UTF8String
 class RestFeedProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-rest"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    RestFeedSource.schema
+    StreamJobs.rawFeedSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new RestFeedTable(RestFeedConfig(new CaseInsensitiveStringMap(properties)))
-}
-
-object RestFeedSource {
-  /** `(line, poll_ts, json)` — [[graft.streaming.StreamJobs.rawFeedSchema]]. */
-  val schema: StructType = StructType(Seq(
-    StructField("line", StringType),
-    StructField("poll_ts", StringType),
-    StructField("json", StringType)))
 }
 
 /** Immutable, serializable poll configuration (everything a partition
@@ -123,13 +116,13 @@ object RestFeedConfig {
 
 class RestFeedTable(conf: RestFeedConfig) extends Table with SupportsRead {
   override def name(): String = s"graft-rest(${conf.lines.mkString(",")})"
-  override def schema(): StructType = RestFeedSource.schema
+  override def schema(): StructType = StreamJobs.rawFeedSchema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with Scan {
       override def build(): Scan = this
-      override def readSchema(): StructType = RestFeedSource.schema
+      override def readSchema(): StructType = StreamJobs.rawFeedSchema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
         new RestFeedMicroBatch(conf)
     }

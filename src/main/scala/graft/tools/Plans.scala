@@ -53,8 +53,8 @@ object Plans {
     Seq(s"===== $name =====", df.queryExecution.explainString(FormattedMode))
 
   /** `xchg` counts hash, range and single-partition exchanges; `rr`
-    * counts the round-robin ones (`Tables.spread`, the `PresortBarrier`)
-    * apart, so audit lines from before `rr` existed still compare. */
+    * counts the round-robin ones (`PresortBarrier`'s barriers and scan
+    * spreads) apart, so audit lines from before `rr` existed still compare. */
   private[graft] def audit(name: String, df: DataFrame): Seq[String] = {
     val plan = df.queryExecution.executedPlan.toString
     def n(p: String) = p.r.findAllIn(plan).length

@@ -22,33 +22,23 @@ object Scratch {
     spark.sparkContext.setLogLevel("ERROR")
     // cumulative shuffle-byte counters so each arm's exchange volume is
     // visible next to its wall time
-    val shufW = new java.util.concurrent.atomic.AtomicLong
-    val shufR = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          }
-        }
-      })
+    val tm = new graft.TaskTotals
+    spark.sparkContext.addSparkListener(tm)
     spark.range(100000L).selectExpr("sum(id)").collect()
-    def run(n: String): Unit =
-      SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count()
+    // the registry is assembled once, outside the timed region
+    val reg = SparkEntry.queries
+    def run(n: String): Unit = reg(n)(spark, dir).queryExecution.toRdd.count()
     arms.foreach(run)
     val times = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     val bytes = scala.collection.mutable.Map[String, (Long, Long)]()
     for (r <- 1 to reps; n <- arms) {
       spark.sparkContext.setJobDescription(s"$n rep$r")
-      val (w0, r0) = (shufW.get, shufR.get)
+      val (w0, r0) = (tm.shufWriteB.get, tm.shufReadB.get)
       val t0 = System.nanoTime()
       run(n)
       times(n) :+= (System.nanoTime() - t0) / 1e9
-      bytes(n) = (shufW.get - w0, shufR.get - r0)
+      bytes(n) = (tm.shufWriteB.get - w0, tm.shufReadB.get - r0)
     }
     arms.foreach { n =>
       val ts = times(n)

@@ -743,4 +743,80 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(rr.exists(_ >= 1), line)
     assert("""\bxchg=\d+""".r.findFirstIn(line).nonEmpty, line)
   }
+
+  // --- the scan spread: PresortBarrier's bottom exchange ---
+
+  /** Scans (by file name) that sit under a round-robin exchange with a
+    * partition count, through filters and projections only. */
+  private def spreadScans(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def scanUnder(p: SparkPlan): Option[String] = p match {
+      case f: FilterExec => scanUnder(f.child)
+      case pr: ProjectExec => scanUnder(pr.child)
+      case s: FileSourceScanExec => s.relation.location.rootPaths.headOption.map(_.getName)
+      case _ => None
+    }
+    nodesOf(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] &&
+          e.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM =>
+        scanUnder(e.child)
+    }.flatten
+  }
+
+  private def spreadNodes(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    p.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+        if r.partitionExpressions.isEmpty && r.optNumPartitions.nonEmpty => r
+    }.size
+
+  test("scan spread: q_tokens_per_doc spreads its documents scan on a built and a driver-owned session") {
+    import org.apache.spark.sql.SparkSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val built = try GraftSession.build("local[4,2]", 4, "graft-tests-spread")
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    assert(built ne spark)
+    // a session graft did not build gets the rule from registerOn
+    val driver = spark.newSession()
+    assert(!driver.experimental.extraOptimizations.contains(graft.plans.PresortBarrier))
+    graft.plans.GraftExtensions.registerOn(driver)
+    Seq("built" -> built, "driver" -> driver).foreach { case (label, s) =>
+      assert(s.sparkContext.defaultParallelism === 4)
+      val q = ext.TextQueries.tokensPerDoc(s, sf)
+      assert(spreadScans(q) === Seq("documents.parquet"), s"$label:\n${q.queryExecution.executedPlan}")
+    }
+  }
+
+  test("scan spread: none without the rule, on a stream, or on the zero-shuffle write path; idempotent") {
+    import org.apache.spark.sql.functions.col
+    // no rule: the same query plans no spread
+    val bare = spark.newSession()
+    assert(!bare.experimental.extraOptimizations.contains(graft.plans.PresortBarrier))
+    assert(spreadScans(ext.TextQueries.tokensPerDoc(bare, sf)).isEmpty)
+    graft.plans.GraftExtensions.registerOn(spark)
+    // a stream is left alone; the same batch shape spreads its scan
+    val feed = TestSpark.tempDir("graft-spread-stream").toFile
+    java.nio.file.Files.copy(new java.io.File(s"$sf/documents.parquet").toPath,
+      new java.io.File(feed, "part-0.parquet").toPath)
+    def shingled(docs: org.apache.spark.sql.DataFrame) =
+      ext.DedupQueries.windowFingerprints(docs).groupBy(col("win_h")).count()
+    val stream = shingled(streaming.StreamJobs.docsStream(spark, feed.toString))
+    assert(stream.isStreaming)
+    val analyzed = stream.queryExecution.analyzed
+    assert(graft.plans.PresortBarrier(analyzed) fastEquals analyzed)
+    assert(spreadNodes(shingled(Tables.documents(spark, sf)).queryExecution.optimizedPlan) === 1)
+    // the narrow chain of the artifact write path ends at the root, not
+    // at an exchange: no spread (ArtifactSpec pins its zero shuffles)
+    assert(spreadNodes(ext.TextQueries.tokenIdsArtifactFrame(spark, sf)
+      .queryExecution.optimizedPlan) === 0)
+    // idempotent: a second application changes nothing
+    val once = SparkEntry.queries("q_tokens_per_doc")(spark, sf).queryExecution.optimizedPlan
+    assert(spreadNodes(once) === 1)
+    assert(graft.plans.PresortBarrier(once) fastEquals once)
+  }
 }

@@ -936,9 +936,8 @@ class RegistrySpec extends AnyFunSuite {
       "q_geo_density" -> "clusterLabels over the dense-cell pairs",
       "q_graph_kcore" -> "checkpoints each peel round's survivors and edges",
       "q_hierarchy_rollup" -> "checkpointed levels and the max-depth head()",
-      "q_pipeline_corpus" -> "Tables.spread's partition probe runs the dedup join's shuffles",
       "q_rfm_segments" -> "checkpoints the customer-grain aggregate",
-      "q_train_readiness" -> "Tables.spread's probe, then the waterfill base checkpoint")
+      "q_train_readiness" -> "checkpoints the waterfill base")
     assert(!buildJobs.contains("q_span_scrub"))
     val sf = TestSpark.sf0001
     val launched = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, q) =>
