@@ -28,18 +28,28 @@ object CtaSchemas {
     StructField("train", ArrayType(trainStruct))))
 
   val apiResponse: StructType = StructType(Seq(
-    StructField("ctatt", StructType(Seq("tmst", "errCd", "errNm").map(StructField(_, StringType))
-      :+ StructField("route", ArrayType(routeStruct))))))
+    StructField("ctatt", StructType(Seq(
+      StructField("tmst", StringType),
+      StructField("errCd", StringType),
+      StructField("errNm", StringType),
+      StructField("route", ArrayType(routeStruct)))))))
 
   /** D2/D3 — the landed raw record, all strings, exactly the 8 fields the
     * reference keeps (get_train_status.py:111-122) plus the geo fields it
     * drops (we keep them for analytics — SURVEY.md §1.2).
     */
-  val rawRecord: StructType = StructType(
-    Seq("train_id", "current_timestamp", "prediction_generated_timestamp",
-      "destination_station", "next_station", "next_station_arrival_time",
-      "is_approaching_station", "is_train_delayed", "lat", "lon",
-      "heading").map(StructField(_, StringType)))
+  val rawRecord: StructType = StructType(Seq(
+    StructField("train_id", StringType),
+    StructField("current_timestamp", StringType),
+    StructField("prediction_generated_timestamp", StringType),
+    StructField("destination_station", StringType),
+    StructField("next_station", StringType),
+    StructField("next_station_arrival_time", StringType),
+    StructField("is_approaching_station", StringType),
+    StructField("is_train_delayed", StringType),
+    StructField("lat", StringType),
+    StructField("lon", StringType),
+    StructField("heading", StringType)))
 
   /** D4 — typed observation: timestamps/booleans/doubles cast once at the
     * ingest edge (SURVEY.md §7.4), composite key kept decomposed. */

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{LogicalRDD, PartitionedFileUtil}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Optimizer rule placing the two round-robin exchanges at the ends of a
   * costly narrow stage: a pre-sort barrier on top, a scan spread at the
@@ -38,35 +39,35 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * scan task however many cores there are, and the narrow stage above it
   * runs serially (q_tokens_per_doc 5.8 s wall ≈ its single-task time at
   * sf1 on 32 cores, OPTIMIZATION_r21.md §1b). Fires when the narrow chain
-  * from the scan up to its stage's end holds per-row work in its
-  * expressions (`ScalaUDF`, higher-order function, `graft.functions`
-  * expression — a `Generate` counts by what computes its input, so an
-  * explode of a split or a two-element array does not) and that end is
-  * an operator that plans a shuffle: a chain that runs to the
-  * plan's root (a `sortWithinPartitions` write path), under a limit or into
-  * a broadcast build side keeps its scan as is. "The scan" is the relation
-  * with the attribute projections and deterministic filters directly above
-  * it, so pruning and pushed filters stay below the exchange, as Spark
-  * would push them below a hand-written repartition. The split count is
-  * Spark's own sizing (`FilePartition.maxSplitBytes`/`getFilePartitions`)
-  * over the relation's listed files — no Spark job. A user partition count
-  * keeps AQE from coalescing the spread away; at real scale a corpus scan
-  * has many splits and the spread never fires.
+  * from the scan up to its stage's end holds per-row work on text in its
+  * expressions (a `ScalaUDF`, higher-order function or `graft.functions`
+  * expression with a string or string-array input — a `Generate` counts by
+  * what computes its input, so an explode of a split or a two-element
+  * array does not) and that end is an operator that plans a shuffle: a
+  * chain that runs to the plan's root (a `sortWithinPartitions` write
+  * path), under a limit or into a broadcast build side keeps its scan as
+  * is. Text work (splitting, shingle hashing, span probes) costs many
+  * times the shuffle that moves its input; numeric array work over
+  * embedding vectors costs about what shipping the vectors costs, and
+  * spreading it measured slower (q_ann_opq +35% at sf0.1 on 4 cores).
+  * "The scan" is the relation with the attribute projections and
+  * deterministic filters directly above it, so pruning and pushed filters
+  * stay below the exchange, as Spark would push them below a hand-written
+  * repartition. The split count is Spark's own sizing
+  * (`FilePartition.maxSplitBytes`/`getFilePartitions`) over the relation's
+  * listed files — no Spark job. It is taken before partition pruning: a
+  * partitioned relation counts the splits of every partition, so a pruned
+  * scan may go unspread. A user partition count keeps AQE from coalescing
+  * the spread away; at real scale a corpus scan has many splits and the
+  * spread never fires.
   *
   * Both exchanges end a stage, so a second pass finds nothing to add: the
   * rule is idempotent.
   */
 object PresortBarrier extends Rule[LogicalPlan] with JoinSelectionHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = if (plan.isStreaming) plan else {
-    val barriered = rewrite(plan, underLimit = false)
-    spread(barriered, None, refsAbove(barriered) ++ plan.outputSet)
-  }
-
-  /** What the plan references outside its scans: a spread's columns. */
-  private def refsAbove(p: LogicalPlan): AttributeSet =
-    if (scanOf(p).isDefined) AttributeSet.empty
-    else p.children.foldLeft(p.references)(_ ++ refsAbove(_))
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (plan.isStreaming) plan else spread(rewrite(plan, underLimit = false), None, None)
 
   private def rewrite(p: LogicalPlan, underLimit: Boolean): LogicalPlan = {
     val limits = p match {
@@ -83,13 +84,17 @@ object PresortBarrier extends Rule[LogicalPlan] with JoinSelectionHelper {
   }
 
   /** `heavy`: `Some(w)` when a shuffle ends `p`'s stage, `w` telling whether
-    * the operators between that shuffle and `p` do per-row work; `None`
-    * when the stage ends at the root, a limit or a broadcast. `used`: the
-    * attributes a spread must carry. */
-  private def spread(p: LogicalPlan, heavy: Option[Boolean], used: AttributeSet): LogicalPlan =
+    * the operators between that shuffle and `p` do per-row work on text;
+    * `None` when the stage ends at the root, a limit or a broadcast.
+    * `read`: the columns `p`'s parent reads when that parent is a
+    * `Project`, which names each one — a spread carries only those. Any
+    * other parent keeps every column: a `Union` matches its legs by
+    * position and a `Generate` its child's unrequired columns by index (an
+    * `Aggregate` ends the stage, so no spread sits under one). */
+  private def spread(p: LogicalPlan, heavy: Option[Boolean], read: Option[AttributeSet]): LogicalPlan =
     scanOf(p) match {
       case Some(r) if heavy.contains(true) && splits(r) < r.sparkSession.sparkContext.defaultParallelism =>
-        val keep = p.output.filter(used.contains)
+        val keep = read.fold(p.output)(c => p.output.filter(c.contains))
         RepartitionByExpression(Nil, if (keep.size == p.output.size) p else Project(keep, p),
           Some(r.sparkSession.sparkContext.defaultParallelism))
       case Some(_) => p
@@ -97,14 +102,18 @@ object PresortBarrier extends Rule[LogicalPlan] with JoinSelectionHelper {
         val below = p match {
           case _: GlobalLimit | _: LocalLimit | _: Tail | _: Offset => None
           case _ if exchange(p) => Some(false)
-          case _ => heavy.map(_ || perRow(p))
+          case _ => heavy.map(_ || perRow(p, textOnly = true))
+        }
+        val named = p match {
+          case _: Project => Some(p.references)
+          case _ => None
         }
         p match {
           case j: Join if !exchange(j) => // a broadcast build side ends in no shuffle
             val b = broadcastSide(j)
-            j.copy(left = spread(j.left, below.filter(_ => b.contains(BuildRight)), used),
-              right = spread(j.right, below.filter(_ => b.contains(BuildLeft)), used))
-          case _ => p.mapChildren(spread(_, below, used))
+            j.copy(left = spread(j.left, below.filter(_ => b.contains(BuildRight)), None),
+              right = spread(j.right, below.filter(_ => b.contains(BuildLeft)), None))
+          case _ => p.mapChildren(spread(_, below, named))
         }
     }
 
@@ -181,9 +190,13 @@ object PresortBarrier extends Rule[LogicalPlan] with JoinSelectionHelper {
   }
 
   /** Per-row work in an operator's expressions — a generator counts by
-    * what computes its input, not by the fan-out itself. */
-  private def perRow(p: LogicalPlan): Boolean = p.expressions.exists(_.exists {
-    case _: ScalaUDF | _: HigherOrderFunction => true
-    case e => e.getClass.getName.startsWith("graft.functions.")
+    * what computes its input, not by the fan-out itself. `textOnly`: only
+    * work with a string or string-array input counts. */
+  private def perRow(p: LogicalPlan, textOnly: Boolean = false): Boolean = p.expressions.exists(_.exists { e =>
+    (e.isInstanceOf[ScalaUDF] || e.isInstanceOf[HigherOrderFunction] ||
+      e.getClass.getName.startsWith("graft.functions.")) && (!textOnly || e.children.exists(_.dataType match {
+        case _: StringType | ArrayType(_: StringType, _) => true
+        case _ => false
+      }))
   })
 }

@@ -23,8 +23,10 @@ import org.apache.spark.sql.types._
 object StreamJobs {
 
   /** Schema of the raw poll-drop NDJSON: one line per API poll. */
-  val rawFeedSchema: StructType =
-    StructType(Seq("line", "poll_ts", "json").map(StructField(_, StringType)))
+  val rawFeedSchema: StructType = StructType(Seq(
+    StructField("line", StringType),
+    StructField("poll_ts", StringType),
+    StructField("json", StringType)))
 
   /** S1-as-stream: watch a drop directory of NDJSON poll files, normalize
     * with the same narrow pipeline as batch (CtaIngest.normalize works

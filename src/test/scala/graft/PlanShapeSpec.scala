@@ -792,7 +792,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("scan spread: none without the rule, on a stream, or on the zero-shuffle write path; idempotent") {
+  test("scan spread: none without the rule, on a stream, on the zero-shuffle write path or over vectors; idempotent") {
     import org.apache.spark.sql.functions.col
     // no rule: the same query plans no spread
     val bare = spark.newSession()
@@ -814,9 +814,34 @@ class PlanShapeSpec extends AnyFunSuite {
     // at an exchange: no spread (ArtifactSpec pins its zero shuffles)
     assert(spreadNodes(ext.TextQueries.tokenIdsArtifactFrame(spark, sf)
       .queryExecution.optimizedPlan) === 0)
+    // numeric array work over embedding vectors (quantizing transforms,
+    // long_array_dot) is no reason to spread: it measured slower
+    assert(spreadNodes(SparkEntry.queries("q_ann_opq")(spark, sf).queryExecution.optimizedPlan) === 0)
     // idempotent: a second application changes nothing
     val once = SparkEntry.queries("q_tokens_per_doc")(spark, sf).queryExecution.optimizedPlan
     assert(spreadNodes(once) === 1)
     assert(graft.plans.PresortBarrier(once) fastEquals once)
+  }
+
+  test("scan spread: every leg of a Union keeps its columns, and the rows match the unruled plan") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions.{col, explode, filter, length, split}
+    // a Union names its legs' columns by position, so no node above it
+    // references the second leg's attributes: a spread pruned to what the
+    // plan references would drop every column of that leg
+    def words(s: SparkSession): DataFrame = {
+      def leg = Tables.documents(s, sf).select(col("doc_id"), col("text"))
+      leg.union(leg)
+        .select(explode(filter(split(col("text"), " "), w => length(w) > 0)).as("w"))
+        .groupBy(col("w")).count()
+    }
+    val ruled = spark.newSession()
+    graft.plans.GraftExtensions.registerOn(ruled)
+    val q = words(ruled)
+    assert(spreadScans(q) === Seq("documents.parquet", "documents.parquet"),
+      q.queryExecution.executedPlan.toString)
+    val bare = words(spark.newSession())
+    assert(spreadScans(bare).isEmpty)
+    assert(q.collect().toSeq.map(_.toString).sorted === bare.collect().toSeq.map(_.toString).sorted)
   }
 }
