@@ -1,8 +1,12 @@
 package graft.sources
 
+import java.time.Instant
+import java.time.format.DateTimeFormatter
 import java.util
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
 
 import graft.model.CtaSchemas
 import graft.streaming.StreamJobs
@@ -39,9 +43,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Design:
   *  - '''Offsets = completed poll cycles''' (a monotone long). Batch
-  *    `(start, end]` plans one [[RestFeedPartition]] per (cycle, line):
-  *    parallelism is route-level, the same per-invocation parallelism the
-  *    reference gets from 7 concurrent Lambda invocations (SURVEY.md §3).
+  *    `(start, end]` plans one [[RestFeedPartition]] per cycle, carrying
+  *    every route: tasks are cycle-level, so a one-cycle landing batch runs
+  *    one task and writes one file. Inside the task the routes are fetched
+  *    concurrently, one request in flight per route — the per-invocation
+  *    parallelism the reference gets from 7 concurrent Lambda invocations
+  *    (SURVEY.md §3). A task retry re-fetches every route of its cycle.
   *  - '''Rate limiting lives in `latestOffset`''': a new cycle becomes
   *    available only when `pollIntervalMs` wall-clock has elapsed since the
   *    stream started (cycle k at start + k·interval), so a hot trigger loop
@@ -53,7 +60,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    retried up to 3 attempts with exponential backoff, any other non-2xx
   *    raised immediately (reference tests/unit/test_get_train_status.py:
   *    83-106, 247-280). The retry runs INSIDE the partition reader, on the
-  *    executor — a poisoned route fails its own task, not the driver.
+  *    executor, per route — a poisoned route fails its cycle's task, not
+  *    the driver, and the cycle admits no row.
   *  - '''At-least-once at the edge, exactly-once downstream''': a batch
   *    replayed after a crash-before-commit re-fetches (the API is a live
   *    feed; the reference's Firehose edge has the same property,
@@ -224,11 +232,8 @@ class RestFeedMicroBatch(conf: RestFeedConfig,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[CycleOffset].cycle
     val e = end.asInstanceOf[CycleOffset].cycle
-    (for {
-      cycle <- s until e
-      line <- conf.lines
-    } yield RestFeedPartition(cycle, line, conf.base, conf.apiKey,
-      conf.transportId, conf.fixedPollTs): InputPartition).toArray
+    (s until e).map(cycle => RestFeedPartition(cycle, conf.lines, conf.base,
+      conf.apiKey, conf.transportId, conf.fixedPollTs): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -241,40 +246,69 @@ class RestFeedMicroBatch(conf: RestFeedConfig,
   override def stop(): Unit = ()
 }
 
-/** One (poll cycle, route) fetch — the unit of parallelism and of task
-  * retry. Plain-string payload: serializes to executors with no closure. */
+/** One poll cycle's fetch of every route — the unit of parallelism and of
+  * task retry. Plain-string payload: serializes to executors with no
+  * closure. */
 final case class RestFeedPartition(
     cycle: Long,
-    line: String,
+    lines: Seq[String],
     base: String,
     apiKey: String,
     transportId: String,
     fixedPollTs: Option[String]) extends InputPartition
 
-/** Executor-side reader: ONE fetch through the pinned Backoff contract,
-  * one output row. */
+/** Executor-side reader: fetches the cycle's routes concurrently, each
+  * through the pinned Backoff contract, and emits one row per route in
+  * `lines` order once every fetch has returned. Any failed route fails the
+  * task (the first failure in `lines` order is raised), so a cycle lands
+  * whole or not at all. */
 class RestFeedReader(p: RestFeedPartition) extends PartitionReader[InternalRow] {
-  private var done = false
+  private lazy val rows = RestFeedReader.fetchCycle(p).iterator
   private var row: InternalRow = _
 
-  override def next(): Boolean = {
-    if (done) return false
-    val transport = RestTransports.get(p.transportId)
-    val body = RestPoller.fetchLine(p.base, p.apiKey, p.line, transport)
-    val ts = p.fixedPollTs.getOrElse(
-      java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
-        .withZone(java.time.ZoneOffset.UTC)
-        .format(java.time.Instant.now()))
-    row = InternalRow(
-      UTF8String.fromString(p.line),
-      UTF8String.fromString(ts),
-      UTF8String.fromString(body))
-    done = true
-    true
-  }
-
+  override def next(): Boolean = rows.hasNext && { row = rows.next(); true }
   override def get(): InternalRow = row
   override def close(): Unit = ()
+}
+
+object RestFeedReader {
+  private val PollTsFormat = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+    .withZone(java.time.ZoneOffset.UTC)
+
+  // Unbounded on purpose: each route of each running cycle gets its own
+  // thread, so all of a cycle's fetches are in flight at once (a bounded
+  // pool smaller than the route count would serialize them). Idle threads
+  // exit after 60 s.
+  private val fetchPool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-rest-fetch")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Each row's `poll_ts` is taken when its own fetch returns. */
+  def fetchCycle(p: RestFeedPartition): Seq[InternalRow] = {
+    val transport = RestTransports.get(p.transportId)
+    val fetches = p.lines.map { line =>
+      fetchPool.submit(new Callable[InternalRow] {
+        override def call(): InternalRow = {
+          val body = RestPoller.fetchLine(p.base, p.apiKey, line, transport)
+          val ts = p.fixedPollTs.getOrElse(PollTsFormat.format(Instant.now()))
+          InternalRow(UTF8String.fromString(line), UTF8String.fromString(ts),
+            UTF8String.fromString(body))
+        }
+      })
+    }
+    // wait for every route before raising: a retried task must not overlap
+    // requests its failed attempt left in flight
+    val results =
+      try fetches.map(f => Try(f.get()))
+      catch { case e: InterruptedException =>
+        fetches.foreach(_.cancel(true)); throw e }
+    results.map {
+      case Failure(e: ExecutionException) => throw e.getCause
+      case r => r.get
+    }
+  }
 }
 
 /** Reader-side HTTP transport registry.

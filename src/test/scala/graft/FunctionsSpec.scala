@@ -190,7 +190,12 @@ class FunctionsSpec extends AnyFunSuite {
     } finally GraftSession.deleteRecursively(new java.io.File(tmp).getParentFile)
   }
 
-  test("a GraftSession.build session pushes the bounding box of a radius filter above a join") {
+  /** A fresh `GraftSession.build` session on the running SparkContext
+    * (with no active or default session, build makes a new one), and a
+    * parquet point set under a temp dir; `body` gets both, and the ids
+    * inside the 50 km radius the tests filter on. */
+  private def withBuiltSession(appName: String)(
+      body: (org.apache.spark.sql.SparkSession, String, Seq[Long]) => Unit): Unit = {
     import org.apache.spark.sql.SparkSession
     val tmp = TestSpark.tempDir("graft-geo").toFile
     val path = new java.io.File(tmp, "pts").toString
@@ -198,30 +203,59 @@ class FunctionsSpec extends AnyFunSuite {
       .select(($"id" % 100 * 0.05 + 40.0).as("lat"),
         ($"id" % 97 * 0.06 - 90.0).as("lon"), $"id")
       .write.parquet(path)
-    // with no active or default session, build makes a new session (with
-    // GraftExtensions) on the running SparkContext
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val built = try GraftSession.build("local[4,2]", 4, "graft-tests-built")
+    val built = try GraftSession.build("local[4,2]", 4, appName)
       finally {
         SparkSession.setDefaultSession(spark)
         SparkSession.setActiveSession(spark)
       }
-    try {
+    val expected = (0L until 1000L).filter(i => Haversine.km(
+      i % 100 * 0.05 + 40.0, i % 97 * 0.06 - 90.0, 41.8781, -87.6298) < 50.0)
+    assert(expected.nonEmpty)
+    try body(built, path, expected)
+    finally GraftSession.deleteRecursively(tmp)
+  }
+
+  private def inRadius =
+    Haversine.haversineKm($"lat", $"lon", lit(41.8781), lit(-87.6298)) < 50.0
+
+  test("a GraftSession.build session pushes the bounding box of a radius filter above a join") {
+    withBuiltSession("graft-tests-built") { (built, path, expected) =>
       assert(built ne spark)
       assert(built.experimental.extraOptimizations
         .count(_ == graft.plans.HaversineBoundingBox) === 1)
       val q = built.read.parquet(path)
         .join(built.range(1000).select($"id", ($"id" % 7).as("tag")), "id")
-        .filter(Haversine.haversineKm($"lat", $"lon", lit(41.8781), lit(-87.6298)) < 50.0)
+        .filter(inRadius)
       val physical = q.queryExecution.executedPlan.toString
       assert(physical.contains("PushedFilters: ") &&
         physical.contains("GreaterThanOrEqual(lat,41.4"), physical)
-      val expected = (0L until 1000L).filter(i => Haversine.km(
-        i % 100 * 0.05 + 40.0, i % 97 * 0.06 - 90.0, 41.8781, -87.6298) < 50.0)
-      assert(expected.nonEmpty)
       assert(q.select($"id").as[Long].collect().sorted.toSeq === expected)
-    } finally GraftSession.deleteRecursively(tmp)
+    }
+  }
+
+  test("a DSv2 parquet scan does not receive the bounding box in PushedFilters") {
+    withBuiltSession("graft-tests-v2") { (built, path, expected) =>
+      // an empty V1 list reads parquet through the DSv2 ParquetTable
+      built.conf.set("spark.sql.sources.useV1SourceList", "")
+      val q = built.read.parquet(path).filter(inRadius)
+      // the rule fires: the box is in the optimized plan ...
+      val optimized = q.queryExecution.optimizedPlan.toString
+      assert(optimized.contains(">= 41.4"), optimized)
+      // ... but not in the scan: extraOptimizations run in Spark's last
+      // optimizer batch, after V2ScanRelationPushDown has already fixed
+      // the DSv2 scan's pushed filters, so the box only filters rows above
+      // the scan. A V1 scan gets it (the tests above). When the rule moves
+      // ahead of V2 push-down, this assertion flips on purpose.
+      val physical = q.queryExecution.executedPlan.toString
+      assert(physical.contains("BatchScan"), physical)
+      val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(physical).toSeq
+      assert(pushed.nonEmpty, physical)
+      assert(pushed.forall(f => !f.contains("GreaterThanOrEqual(lat") &&
+        !f.contains("LessThanOrEqual(lat")), pushed)
+      assert(q.select($"id").as[Long].collect().sorted.toSeq === expected)
+    }
   }
 
   test("SQL registration via extensions and registerOn") {

@@ -154,6 +154,32 @@ class RestFeedHttpSpec extends AnyFunSuite {
     }
   }
 
+  test("real socket: a 500 on one route fails the whole cycle's task, admits none of its rows") {
+    // the routes of a cycle share one task: Blue's non-retryable 500 fails
+    // it, so the memory sink sees no row of the cycle — not even the
+    // routes that answered 200
+    withServer((rt, _) =>
+      if (rt == "Blue") (500, "boom") else (200, fixtureBody(rt))) {
+      (base, counts, _) =>
+        val tmp = TestSpark.tempDir("graft-http-500-route").toString
+        val q = spark.readStream.format("graft-rest")
+          .options(options(base)).load()
+          .writeStream.format("memory").queryName("rest_http_500_route")
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", s"$tmp/ckpt")
+          .start()
+        intercept[StreamingQueryException] { q.awaitTermination(120000) }
+        // every route is requested once per task attempt — the failing
+        // one too (no HTTP retry) — times local[4,2]'s 2 task attempts
+        CtaFixtures.feeds.map(_._1).foreach { line =>
+          assert(counts.get(line).get() === 1 * 2,
+            s"route $line: expected one request per task attempt")
+        }
+        assert(spark.table("rest_http_500_route").count() === 0,
+          "no row of a failed cycle may be admitted")
+    }
+  }
+
   test("real socket: truncated 200 body fails the task, admits NO partial batch") {
     // a poll whose connection dies mid-body is a transport failure, not a
     // 429: it must fail the task after its one request (no silent retry

@@ -56,12 +56,69 @@ class RestFeedSourceSpec extends AnyFunSuite {
     assert(fast.latestOffset().asInstanceOf[CycleOffset].cycle === 7L)
     // offset JSON round-trips through the checkpoint log representation
     assert(fast.deserializeOffset(CycleOffset(41L).json()) === CycleOffset(41L))
-    // batch (start, end] plans one partition per (cycle, line)
+    // batch (start, end] plans one partition per cycle, carrying every
+    // route in `lines` order
     val parts = slow.planInputPartitions(CycleOffset(3L), CycleOffset(5L))
-    assert(parts.length === 4) // 2 cycles x 2 lines
-    val keys = parts.map(_.asInstanceOf[RestFeedPartition])
-      .map(p => (p.cycle, p.line)).toSet
-    assert(keys === Set((3L, "Red"), (3L, "Blue"), (4L, "Red"), (4L, "Blue")))
+      .map(_.asInstanceOf[RestFeedPartition])
+    assert(parts.map(p => (p.cycle, p.lines)).toSeq ===
+      Seq((3L, Seq("Red", "Blue")), (4L, Seq("Red", "Blue"))))
+  }
+
+  test("a one-cycle landing batch writes one parquet file, rows equal batch normalize") {
+    RestTransports.register("spec-land", fixtureTransport)
+    val tmp = TestSpark.tempDir("graft-rest-land").toString
+    val q = graft.streaming.StreamJobs.landObservations(
+        graft.streaming.StreamJobs.rawFeedStreamRest(spark,
+          baseOptions("spec-land") + ("cycles" -> "3") +
+            ("maxCyclesPerTrigger" -> "1")),
+        s"$tmp/lake", s"$tmp/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000))
+    // one task per cycle: 3 one-cycle batches land 3 data files (one per
+    // route with trains would be 6: Red and Blue each cycle)
+    val lake = spark.read.parquet(s"$tmp/lake")
+    assert(lake.inputFiles.length === 3, lake.inputFiles.mkString("\n"))
+    val cols = Seq($"train_id", $"line", $"observed_at", $"next_station",
+      $"is_train_delayed")
+    def sorted(rows: Seq[org.apache.spark.sql.Row]) = rows.map(_.toSeq.mkString("|")).sorted
+    val got = sorted(lake.select(cols: _*).collect().toSeq)
+    val once = CtaIngest.normalize(CtaFixtures.feedDf(spark)).select(cols: _*)
+      .collect().toSeq
+    assert(once.nonEmpty)
+    assert(got === sorted(Seq.fill(3)(once).flatten))
+  }
+
+  test("a cycle's routes are fetched concurrently, more routes than task slots") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // every call waits until all 7 reference routes are in flight at once;
+    // a reader that fetches fewer at a time (sequentially, or one route
+    // per task on local[4,2]'s 4 slots) times out and answers 500
+    val lines = graft.model.CtaSchemas.trainLines.map(_._1)
+    assert(lines.size === 7)
+    val inFlight = new CountDownLatch(lines.size)
+    val calls = new AtomicInteger(0)
+    val timeouts = new AtomicInteger(0)
+    RestTransports.register("spec-latch", { _ =>
+      calls.incrementAndGet()
+      inFlight.countDown()
+      if (inFlight.await(10, TimeUnit.SECONDS))
+        RestPoller.HttpResponse(200, CtaFixtures.noRoute)
+      else { timeouts.incrementAndGet(); RestPoller.HttpResponse(500, "timeout") }
+    })
+    val tmp = TestSpark.tempDir("graft-rest-latch").toString
+    val q = spark.readStream.format("graft-rest")
+      .options(baseOptions("spec-latch") - "lines").load()
+      .writeStream.format("memory").queryName("rest_latch")
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .start()
+    assert(q.awaitTermination(120000))
+    assert(timeouts.get() === 0)
+    assert(calls.get() === lines.size, "each route fetched exactly once")
+    // one row per route, in `lines` order
+    assert(spark.table("rest_latch").select($"line").as[String].collect()
+      .toSeq === lines)
   }
 
   test("admission control: maxCyclesPerTrigger bounds each micro-batch to one cycle") {
