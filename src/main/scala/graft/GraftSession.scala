@@ -12,12 +12,32 @@ object GraftSession {
   /** The session confs graft runs under — the one place they live.
     * [[build]] applies them; the test session applies them without the
     * extensions. `shufflePartitions` should match cluster parallelism
-    * (cores × executors in real deployments). */
+    * (cores × executors in real deployments).
+    *
+    * `checkpointFileManagerClass` applies to every checkpoint path a
+    * streaming query on the session writes: offset and commit logs, a
+    * file sink's `_spark_metadata`, state-store checkpoints. Spark's
+    * default manager renames each log entry through `FileContext.rename`,
+    * which on `file:` paths without native Hadoop IO reads link status
+    * through a forked `readlink`: 24 forks per one-cycle landing batch
+    * (offsets, commits and sink log, each with its `.crc`), 0 under the
+    * FileSystem manager. Its `renameTempFile` refuses an existing
+    * destination (an `exists` check), then calls `FileSystem.rename`, so
+    * a replayed batch id never overwrites its first entry. On HDFS that
+    * rename also refuses an existing file (it returns false, which the
+    * manager raises). On object stores rename is a copy and a delete,
+    * neither atomic nor exclusive, so the check does not fence two
+    * writers racing on one checkpoint. Spark's `CheckpointFileManager.create`
+    * already falls back to this manager wherever `FileContext` is
+    * unavailable. A session graft did not build keeps Spark's default and
+    * stays correct; it opts in by setting the same conf. */
   def confs(shufflePartitions: Int): Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   /** Recommended session for this library: [[confs]] plus
     * [[plans.GraftExtensions]] (SQL functions and optimizer rules). */

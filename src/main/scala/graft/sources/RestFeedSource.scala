@@ -98,17 +98,30 @@ final case class RestFeedConfig(
 
 object RestFeedConfig {
   def apply(o: CaseInsensitiveStringMap): RestFeedConfig = {
+    // numeric options parse tolerantly: surrounding whitespace is trimmed,
+    // and a value that is not a long names its option
+    def long(key: String, default: Long): Long =
+      Option(o.get(key)).map(_.trim).fold(default) { v =>
+        Try(v.toLong).getOrElse(throw new IllegalArgumentException(
+          s"graft-rest: option '$key' must be a whole number, got '$v'"))
+      }
     val c = RestFeedConfig(
       base = o.getOrDefault("base", ""),
       apiKey = o.getOrDefault("apikey", ""),
       lines = Option(o.get("lines"))
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(CtaSchemas.trainLines.map(_._1)),
-      pollIntervalMs = o.getLong("pollintervalms", 60000L),
-      maxCycles = o.getLong("cycles", Long.MaxValue),
+      pollIntervalMs = long("pollIntervalMs", 60000L),
+      maxCycles = long("cycles", Long.MaxValue),
       transportId = o.getOrDefault("transport", RestTransports.JavaNetHttp),
       fixedPollTs = Option(o.get("pollts")),
-      maxCyclesPerTrigger = o.getLong("maxcyclespertrigger", Long.MaxValue))
+      maxCyclesPerTrigger = long("maxCyclesPerTrigger", Long.MaxValue))
+    // a negative step would walk the offset backwards (latestOffset
+    // returns start + step) and a zero step admits nothing, ever
+    require(c.maxCyclesPerTrigger >= 1,
+      s"graft-rest: option 'maxCyclesPerTrigger' must be >= 1, got ${c.maxCyclesPerTrigger}")
+    require(c.maxCycles >= 0,
+      s"graft-rest: option 'cycles' must be >= 0, got ${c.maxCycles}")
     // pollIntervalMs <= 0 disables the rate limit, making "all cycles the
     // config allows" available at once; with unbounded cycles AND an
     // unbounded per-trigger step, latestOffset would return Long.MaxValue

@@ -89,6 +89,44 @@ class RestFeedSourceSpec extends AnyFunSuite {
     assert(got === sorted(Seq.fill(3)(once).flatten))
   }
 
+  test("landing logs go through the FileSystem checkpoint manager, which never overwrites an entry") {
+    import java.nio.file.{Files, Paths}
+    import graft.sources.CycleOffset
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.graftbridge.CheckpointBridge
+    RestTransports.register("spec-ckpt", fixtureTransport)
+    val tmp = TestSpark.tempDir("graft-rest-ckpt").toString
+    val q = graft.streaming.StreamJobs.landObservations(
+        graft.streaming.StreamJobs.rawFeedStreamRest(spark,
+          baseOptions("spec-ckpt") + ("cycles" -> "2") +
+            ("maxCyclesPerTrigger" -> "1")),
+        s"$tmp/lake", s"$tmp/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000))
+    // the offset, commit and file-sink logs the query wrote resolve to the
+    // manager GraftSession.confs names, not Spark's FileContext default
+    for (log <- Seq(s"$tmp/ckpt/offsets", s"$tmp/ckpt/commits",
+        s"$tmp/lake/_spark_metadata")) {
+      assert(Files.exists(Paths.get(log, "1")), s"$log holds no batch 1")
+      assert(CheckpointBridge.fileManager(spark, log).getClass.getSimpleName ===
+        "FileSystemBasedCheckpointFileManager", log)
+    }
+    // adding an existing batch id again fails and keeps the first entry
+    val offsets = s"$tmp/ckpt/offsets"
+    val entry = Paths.get(offsets, "1")
+    val first = Files.readAllBytes(entry)
+    assert(!CheckpointBridge.addOffsets(spark, offsets, 1L, CycleOffset(99L)))
+    // below the log's own exists check (a second writer that passed it):
+    // the manager's rename refuses the existing destination on close
+    val out = CheckpointBridge.fileManager(spark, offsets)
+      .createAtomic(new Path(entry.toUri), false)
+    out.write("v1\n{}\n99".getBytes("UTF-8"))
+    intercept[FileAlreadyExistsException](out.close())
+    assert(Files.readAllBytes(entry).sameElements(first),
+      "an existing log entry was rewritten")
+  }
+
   test("a cycle's routes are fetched concurrently, more routes than task slots") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     // every call waits until all 7 reference routes are in flight at once;
@@ -305,6 +343,26 @@ class RestFeedSourceSpec extends AnyFunSuite {
       Map("pollIntervalMs" -> "0", "cycles" -> "5").asJava))
     RestFeedConfig(new CaseInsensitiveStringMap(
       Map("pollIntervalMs" -> "0", "maxCyclesPerTrigger" -> "2").asJava))
+    // out-of-range bounds: a step of -1 walked the offset backwards
+    // (latestOffset returned start - 1), a step of 0 admits nothing ever,
+    // and a negative cycle bound is no bound
+    def rejected(opts: (String, String)*): String =
+      intercept[IllegalArgumentException] {
+        RestFeedConfig(new CaseInsensitiveStringMap(opts.toMap.asJava))
+      }.getMessage
+    for (step <- Seq("-1", "0"))
+      assert(rejected("cycles" -> "5", "maxCyclesPerTrigger" -> step)
+        .contains("'maxCyclesPerTrigger' must be >= 1"))
+    assert(rejected("cycles" -> "-1").contains("'cycles' must be >= 0"))
+    assert(rejected("cycles" -> "five").contains("'cycles'"))
+    // numeric options parse tolerantly: whitespace around them is trimmed
+    val trimmed = RestFeedConfig(new CaseInsensitiveStringMap(Map(
+      "pollIntervalMs" -> " 0 ", "cycles" -> " 3", "maxCyclesPerTrigger" -> "1 ")
+      .asJava))
+    assert((trimmed.pollIntervalMs, trimmed.maxCycles,
+      trimmed.maxCyclesPerTrigger) === ((0L, 3L, 1L)))
+    assert(RestFeedConfig(new CaseInsensitiveStringMap(
+      Map("cycles" -> "0").asJava)).maxCycles === 0L)
   }
 
   test("HTTP 429 retries up to 3 attempts through the source, then succeeds") {

@@ -28,3 +28,25 @@ object StreamBridge {
 object ListenerBridge {
   def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
+
+/** Test-scope accessor for the checkpoint file manager a session resolves
+  * for a path, and for a streaming offset log over a checkpoint's
+  * `offsets` directory: `sessionState` lives on the classic session, and
+  * the checkpoint log classes are Spark internals. */
+object CheckpointBridge {
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, OffsetSeq, OffsetSeqLog}
+  import org.apache.spark.sql.connector.read.streaming.Offset
+
+  def fileManager(spark: SparkSession, dir: String): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir), spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf())
+
+  /** `OffsetSeqLog.add(batchId, offsets)` on the log in `dir`: false when
+    * the batch id already has an entry. */
+  def addOffsets(spark: SparkSession, dir: String, batchId: Long,
+      offsets: Offset*): Boolean =
+    new OffsetSeqLog(spark, dir).add(batchId, OffsetSeq.fill(offsets: _*))
+}
